@@ -307,21 +307,6 @@ def u_shift_pre(
     return pd.DataFrame({"wkt": out_w, "cx": out_x, "cy": out_y})
 
 
-def u_hex_cell_at(res: int):
-    """Factory: aperture-7 hex cell encode at ``res`` (index/hexgrid.py,
-    banker's-rounding kernel — the oracle-parity path)."""
-
-    @F.pandas_udf(T.LongType())
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from fagi_gis_spark.index.hexgrid import hex_cell_np
-
-        return pd.Series(
-            hex_cell_np(lon.to_numpy("float64"), lat.to_numpy("float64"), res)
-        )
-
-    return _enc
-
-
 def u_s2_cell_at(level: int):
     """Factory: S2 cell encode at an arbitrary level (index/s2.py:
     face/uv/quadratic-ST/Hilbert per the published s2geometry scheme),
@@ -360,5 +345,3 @@ def u_s2_disk_at(level: int):
 
 #: fixed-level instances used by the registry queries
 u_s2_cell12 = u_s2_cell_at(12)
-u_hex_cell9 = u_hex_cell_at(9)
-u_hex_cell8 = u_hex_cell_at(8)

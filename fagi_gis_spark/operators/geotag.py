@@ -44,10 +44,9 @@ def geotag_images(
 
         out = out.withColumn("cell_s2", u_s2_cell12(F.col("lon"), F.col("lat")))
     if "hex" in cell_indexes:
-        from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+        from fagi_gis_spark.index.hexgrid import hex_cell_col
 
-        q, r = _hex_qr_cols(F.col("lon"), F.col("lat"), 9)
-        out = out.withColumn("cell_hex7", _hex_pack(q, r, 9))
+        out = out.withColumn("cell_hex7", hex_cell_col(F.col("lon"), F.col("lat"), 9))
     return out
 
 
@@ -130,12 +129,11 @@ def burst_groups(parsed: DataFrame, res: int = 9, gap_s: int = 300) -> DataFrame
     arithmetic after the one header-parse pass."""
     from pyspark.sql import Window as W
 
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col
 
     lon = F.col("lon_microdeg") / F.lit(1e6)
     lat = F.col("lat_microdeg") / F.lit(1e6)
-    q, r = _hex_qr_cols(lon, lat, res)
-    g = parsed.withColumn("cell_hex7", _hex_pack(q, r, res)).withColumn(
+    g = parsed.withColumn("cell_hex7", hex_cell_col(lon, lat, res)).withColumn(
         "ts_key", exif_time_key(F.col("exif_datetime"))
     )
     w = W.partitionBy("cell_hex7").orderBy("ts_key", "image_id")

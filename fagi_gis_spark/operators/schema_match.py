@@ -9,7 +9,8 @@ behind a flag here — heavy external dict, SURVEY.md §7 risk 4).
 
 The property universe is tiny (schemas, not data), so the cross join of
 chains is a small broadcast job; the link SAMPLE is the only data-sized
-input and it is `limit(5)` exactly like the reference.
+input: the SAMPLE_SIZE lowest-keyed links, so the sample (and every score
+built on it) does not depend on how the stored layers are partitioned.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ def chain_profiles(links: DataFrame, triples: DataFrame, side: str) -> list[dict
     """M1: property chains present on a 5-link sample, with an inferred
     value type per chain (driver-side tiny result)."""
     key = "node_a" if side == "a" else "node_b"
-    sample = links.select(F.col(key).alias("subject")).limit(SAMPLE_SIZE)
+    sample = links.select(F.col(key).alias("subject")).orderBy("subject").limit(SAMPLE_SIZE)
     chains = (
         expand_chains(triples)
         .join(sample, "subject", "left_semi")

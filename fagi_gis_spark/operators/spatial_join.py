@@ -9,14 +9,20 @@ Spark-first replacements:
 
 * bbox       -> range predicates on lon/lat columns (partition pruning —
                with cell-partitioned storage the scan skips files).
-* radius     -> cell-bucket equi-join: probe side explodes to its cell's
-               ring-1 neighborhood at a resolution chosen so one ring
-               covers the radius; build side keys by its single cell;
-               refine with the exact planar-degree distance (the
-               reference's own metric). One shuffle, no loop, AQE-tunable.
-* skew       -> explicit salted hot-cell splitting (north rule): cells
-               whose build-side count exceeds a threshold are split into
-               ``salt`` sub-keys; probe rows fan out only for hot cells.
+* radius     -> ONE cell-bucket equi-join (``radius_join``) over a
+               pluggable ``CellScheme``: the build side keys by its single
+               cell, the probe side explodes to every cell that can hold
+               a build row within the radius, and the exact planar-degree
+               distance (the reference's own metric) refines.  One
+               shuffle, no loop, AQE-tunable.  Schemes: ``TILE``
+               (WebMercator z-tiles, ring-1 3x3), ``HEX`` (aperture-7
+               gridDisk, index/hexgrid.py), ``S2`` (real S2 cells, 3x3
+               cross-face neighborhood, index/s2.py).  All three are
+               output-identical, so the scheme is purely a cost choice.
+* skew       -> explicit salted hot-cell splitting (north rule), shared
+               by every scheme: cells whose build-side count exceeds a
+               threshold are split into ``N_SALT`` sub-keys; probe rows
+               fan out only for hot cells.
 * PIP        -> polygon layer is the small side: built into a broadcast
                grid index, probed per Arrow batch with vectorized ray
                casting; the point table never shuffles.
@@ -25,16 +31,32 @@ Spark-first replacements:
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fagi_gis_spark.functions.geo_udfs import u_s2_cell_at, u_s2_disk_at
 from fagi_gis_spark.geometry.measures import DEG_TO_M
 from fagi_gis_spark.geometry.pip import PolygonIndex
 from fagi_gis_spark.geometry.wkt import parse_wkt
-from fagi_gis_spark.index.tiles import _X_MULT, _Z_MULT, cell_id_col, tile_x_col, tile_y_col
+from fagi_gis_spark.index import hexgrid
+from fagi_gis_spark.index.s2 import K_MIN_WIDTH_RAD
+from fagi_gis_spark.index.s2 import MAX_LEVEL as S2_MAX_LEVEL
+from fagi_gis_spark.index.tiles import (
+    _X_MULT,
+    _Z_MULT,
+    cell_id_col,
+    parent_cell_col,
+    tile_x_col,
+    tile_y_col,
+)
+
+#: sub-keys per hot cell in the salted join
+N_SALT = 8
 
 
 def bbox_filter(
@@ -47,6 +69,11 @@ def bbox_filter(
         & (F.col("lat") >= min_lat)
         & (F.col("lat") <= max_lat)
     )
+
+
+# --------------------------------------------------------------------------
+# Completeness-bound resolutions, one per cell scheme
+# --------------------------------------------------------------------------
 
 
 def join_res_for_radius(radius_m: float, max_abs_lat_deg: float = 60.0, max_z: int = 22) -> int:
@@ -65,17 +92,236 @@ def join_res_for_radius(radius_m: float, max_abs_lat_deg: float = 60.0, max_z: i
     return 1
 
 
-def _ring1_offsets():
-    return [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+def hex_res_for_radius(radius_m: float) -> int:
+    """Finest hex res whose cell CIRCUMRADIUS still covers the radius.
+
+    Hexagons make the ring-1 completeness bound stronger than square
+    tiles: cells at hex distance 2 have centers >= 3R apart, so any two
+    points within R (circumradius) of each other sit in cells at hex
+    distance <= 1 — the 7-cell gridDisk(1) is a complete candidate set
+    (squares need radius <= tile INradius and scan 9 cells)."""
+    radius_deg = radius_m / DEG_TO_M
+    res = 0
+    while res < hexgrid.MAX_RES and hexgrid.S0 / (7.0**0.5) ** (res + 1) >= radius_deg:
+        res += 1
+    return res
 
 
+def hex_disk_k_for(radius_m: float, res: int) -> int:
+    """Smallest gridDisk radius k that keeps the candidate set COMPLETE
+    at hex resolution ``res`` for a given search radius.
+
+    Bound: cells at hex distance m >= 2 have centers >= 1.5*R*m apart
+    (the tightest spacing is the (1,1)-type diagonal; edge neighbors sit
+    at sqrt(3)*R > 1.5*R, so the bound holds for all m >= 1), and any
+    point lies within R of its cell center, so two cells can hold points
+    within d of each other only if 1.5*R*m - 2*R <= d, i.e.
+    m <= d/(1.5R) + 4/3.  Including every cell with hexdist <= k where
+    k = ceil(d/(1.5R) + 1/3) therefore covers all pairs (the m = k+1
+    shell is provably farther than d).  For d < R this gives k = 1 —
+    the gridDisk(1) case.  A 1e-12 guard rounds the knife-edge d == R*
+    boundary (corner-exact point pairs) up to the safe side."""
+    radius_deg = radius_m / DEG_TO_M
+    R = hexgrid.S0 / (7.0**0.5) ** res
+    return max(1, math.ceil(radius_deg / (1.5 * R) + 1.0 / 3.0 + 1e-12))
+
+
+def hex_res_auto(radius_m: float, density_rows_per_deg2: float, max_k: int = 6) -> int:
+    """Density-aware resolution choice: per probe, cost ~ disk_size(k) *
+    (1 + rho * cell_area) — probe fan-out rows plus expected candidate
+    pairs.  Finer cells shrink the pair term by 7x per res while the
+    disk term grows ~quadratically in k; the optimum shifts finer as
+    density rises.  One number (rho = build rows / bbox area) drives the
+    closed-form argmin — at cluster scale that's a single tiny agg over
+    the build side, not a planning loop."""
+    base = hex_res_for_radius(radius_m)
+    best_res, best_cost = base, None
+    for res in range(base, min(base + 6, hexgrid.MAX_RES) + 1):
+        k = hex_disk_k_for(radius_m, res)
+        if k > max_k:
+            break
+        R = hexgrid.S0 / (7.0**0.5) ** res
+        disk = 1 + 3 * k * (k + 1)
+        cell_area = 2.598076211353316 * R * R  # (3*sqrt(3)/2) R^2
+        cost = disk * (1.0 + density_rows_per_deg2 * cell_area)
+        if best_cost is None or cost < best_cost:
+            best_res, best_cost = res, cost
+    return best_res
+
+
+def s2_level_for_radius(radius_m: float) -> int:
+    """Finest S2 level whose minimum cell ground width still covers the
+    radius (published kMinWidth metric, quadratic projection): pairs
+    within the radius then sit in 3x3-adjacent cells — the same segment
+    argument as square tiles, but valid across face edges because S2
+    cell edges align between faces at every level."""
+    radius_rad = math.radians(radius_m / DEG_TO_M)
+    if K_MIN_WIDTH_RAD < radius_rad:
+        # even level-0 cells are narrower than the radius: the fixed
+        # 9-cell neighborhood cannot be complete — refuse loudly rather
+        # than silently dropping pairs (TILE/HEX, whose ring/disk widths
+        # scale, serve continental radii)
+        raise ValueError(
+            f"radius {radius_m} m exceeds the level-0 S2 min cell width; "
+            "the S2 3x3 neighborhood cannot be complete"
+        )
+    level = 0
+    while level < S2_MAX_LEVEL and K_MIN_WIDTH_RAD / (1 << (level + 1)) >= radius_rad:
+        level += 1
+    return level
+
+
+# --------------------------------------------------------------------------
+# Cell schemes: how one scheme keys the build side and explodes the probe
+# --------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class CellScheme:
+    """One cell space for the bucketed radius join.
+
+    * ``resolve(radius_m, res, build)`` -> the resolution to join at:
+      ``res`` if given (validated), else the finest one whose candidate
+      neighborhood is provably complete for ``radius_m``.  ``build`` is
+      the keyed build side (``r_lon``/``r_lat``), read only by data-
+      driven choices (HEX ``res="auto"``).
+    * ``build_cell(lon, lat, res)`` -> the single cell id of a point.
+    * ``explode_probe(l, res, radius_m)`` -> the keyed probe side
+      (``l_key``/``l_lon``/``l_lat``), one row per candidate ``cell``.
+    """
+
+    name: str
+    resolve: Callable[[float, "int | str | None", DataFrame], int]
+    build_cell: Callable[[Column, Column, int], Column]
+    explode_probe: Callable[[DataFrame, int, float], DataFrame]
+
+    def __repr__(self) -> str:
+        return f"CellScheme({self.name})"
+
+
+def _tile_resolve(radius_m: float, z: int | None, build: DataFrame) -> int:
+    return join_res_for_radius(radius_m) if z is None else z
+
+
+_RING1 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+
+
+def _tile_probe(l: DataFrame, z: int, radius_m: float) -> DataFrame:
+    """Ring-1 (3x3) neighborhood, 9 rows per probe point.  x wraps modulo
+    2^z so probes in the first/last tile column still see build rows
+    across the antimeridian; y never wraps (the poles are not adjacent —
+    out-of-range y cells simply match nothing)."""
+    neigh = F.array(
+        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _RING1]
+    )
+    tx = tile_x_col(F.col("l_lon"), z)
+    ty = tile_y_col(F.col("l_lat"), z)
+    x = F.pmod(tx + F.col("__o.dx"), F.lit(2**z).cast("long"))
+    y = ty + F.col("__o.dy")
+    cell = F.lit(z * _Z_MULT).cast("long") + x * F.lit(_X_MULT).cast("long") + y
+    return l.withColumn("__o", F.explode(neigh)).withColumn("cell", cell).drop("__o")
+
+
+def _hex_resolve(radius_m: float, res: int | str | None, build: DataFrame) -> int:
+    """``None`` keeps the base res with the provable gridDisk(1) bound;
+    an int forces a finer res (the disk widens via hex_disk_k_for);
+    ``"auto"`` picks the cost-optimal res from a one-row density agg
+    over the build side (hex_res_auto) — it pays off where density is
+    high and a finer res with a wider disk passes fewer candidate pairs
+    than the base res (measured ~1.35x the tile join's pair volume at
+    sf0.1 uniform density)."""
+    if res == "auto":
+        # one tiny planning agg (count + bbox of the build side) -> rho;
+        # the collect is a single row, the scale analog of AQE statistics
+        stats = build.agg(
+            F.count("*").alias("n"),
+            F.min("r_lon").alias("lo1"), F.max("r_lon").alias("lo2"),
+            F.min("r_lat").alias("la1"), F.max("r_lat").alias("la2"),
+        ).first()
+        if stats.n == 0 or stats.lo1 is None:
+            res = None  # empty build side: any complete res joins to nothing
+        else:
+            area = max((stats.lo2 - stats.lo1) * (stats.la2 - stats.la1), 1e-9)
+            res = hex_res_auto(radius_m, stats.n / area)
+    return hex_res_for_radius(radius_m) if res is None else res
+
+
+def _hex_probe(l: DataFrame, res: int, radius_m: float) -> DataFrame:
+    """gridDisk(k) around the probe's cell (7 cells at k = 1).  Probes
+    within 2x the radius of the +-180 seam also emit their disk in the
+    lon-+360-shifted frame (array_union keeps ids distinct, so no pair
+    can double-match)."""
+    k = hex_disk_k_for(radius_m, res)
+    radius_deg = radius_m / DEG_TO_M
+    # materialize the probe's axial coords ONCE per frame: inlining them
+    # into the disk array would duplicate the whole rounding expression
+    # tree (6 rounds + conditionals) per candidate cell — measured 10.4s
+    # -> ~4.5s at sf0.1 with this projection + floor-based rounding
+    lq, lr = hexgrid.hex_axial_cols(F.col("l_lon"), F.col("l_lat"), res)
+    shifted_lon = F.when(F.col("l_lon") > 0, F.col("l_lon") - 360.0).otherwise(
+        F.col("l_lon") + 360.0
+    )
+    near_seam = F.abs(F.col("l_lon")) > F.lit(180.0 - 2.0 * radius_deg)
+    sq, sr = hexgrid.hex_axial_cols(shifted_lon, F.col("l_lat"), res)
+    l = l.withColumns(
+        {"__q": lq, "__r": lr, "__sq": F.when(near_seam, sq), "__sr": F.when(near_seam, sr)}
+    )
+    base = hexgrid.hex_disk_col(F.col("__q"), F.col("__r"), res, k)
+    cells = F.when(
+        F.col("__sq").isNotNull(),
+        F.array_union(base, hexgrid.hex_disk_col(F.col("__sq"), F.col("__sr"), res, k)),
+    ).otherwise(base)
+    return l.withColumn("cell", F.explode(cells)).drop("__q", "__r", "__sq", "__sr")
+
+
+def _s2_resolve(radius_m: float, level: int | None, build: DataFrame) -> int:
+    max_level = s2_level_for_radius(radius_m)
+    if level is None:
+        return max_level
+    if level > max_level:
+        # the S2 neighborhood is fixed at 3x3 by design, so a level finer
+        # than the kMinWidth bound cannot be covered — refuse instead of
+        # silently dropping pairs (HEX widens its disk instead)
+        raise ValueError(
+            f"level {level} is finer than the completeness bound "
+            f"{max_level} for radius {radius_m} m"
+        )
+    return level
+
+
+def _s2_probe(l: DataFrame, level: int, radius_m: float) -> DataFrame:
+    """Own cell + 8 cross-face-wrapped neighbors from the Arrow kernel;
+    array_distinct drops the duplicates cube corners produce.  Sphere-
+    native: no antimeridian frame and no polar case."""
+    disk = u_s2_disk_at(level)(F.col("l_lon"), F.col("l_lat"))
+    return l.withColumn("cell", F.explode(F.array_distinct(disk)))
+
+
+TILE = CellScheme("tile", _tile_resolve, cell_id_col, _tile_probe)
+HEX = CellScheme("hex", _hex_resolve, hexgrid.hex_cell_col, _hex_probe)
+S2 = CellScheme("s2", _s2_resolve, lambda lon, lat, level: u_s2_cell_at(level)(lon, lat), _s2_probe)
+
+
+# --------------------------------------------------------------------------
+# The radius join
+# --------------------------------------------------------------------------
+
+
+def _keyed(df: DataFrame, cols: tuple[str, str, str], side: str) -> DataFrame:
+    key, lon, lat = cols
+    return df.select(
+        F.col(key).alias(f"{side}_key"),
+        F.col(lon).alias(f"{side}_lon"),
+        F.col(lat).alias(f"{side}_lat"),
+    )
 
 
 def _refine_and_select(joined: DataFrame, radius_m: float) -> DataFrame:
-    """Shared exact-distance refine + output projection of all three
-    radius-join strategies (square tile / hex / S2): wrapped-dlon
+    """Exact-distance refine + output projection shared by every scheme:
     planar-degree metric x DEG_TO_M, <= radius filter, canonical output
-    columns. The strategies' output-identical contract lives here."""
+    columns.  The lon delta wraps at the antimeridian (|dlon| <= 180);
+    identical to the reference's planar formula everywhere away from the
+    seam, where the reference (degree-space FILTER) finds nothing."""
     dlon_abs = F.abs(F.col("l_lon") - F.col("r_lon"))
     dlon = F.least(dlon_abs, F.lit(360.0) - dlon_abs)
     dist_deg = F.sqrt(
@@ -93,81 +339,27 @@ def radius_join(
     left: DataFrame,
     right: DataFrame,
     radius_m: float,
+    cells: CellScheme = TILE,
+    res: int | str | None = None,
     left_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
     right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    z: int | None = None,
     salt_threshold: int | str | None = "auto",
-    n_salt: int = 8,
     hot_cells: "DataFrame | None | str" = "detect",
 ) -> DataFrame:
     """J5 as one distributed join. Output: left keys + right keys + dist_m
     (planar degree distance x 111195 — identical numbers to the reference).
 
-    ``salt_threshold``: build-side cells holding more than this many rows
-    are split into ``n_salt`` sub-keys (explicit skew handling); probe
-    rows replicate only for those hot cells. The default ``"auto"``
-    derives the threshold from the build-side cell-count distribution
-    (max(256, 8x mean)): one materialized cell-count pass (a pruned
-    two-column scan + tiny agg), then an adaptive decision — an EMPTY
-    hot set (uniform data) short-circuits to the plain cell join, so
-    the only auto cost is the detection pass; a non-empty hot set
-    engages the salted two-key join with probe fan-out limited to hot
-    cells. ``None`` disables salting (AQE skew-join remains the only
-    protection).  ``hot_cells`` accepts a PRECOMPUTED detection result
-    (``detect_hot_cells`` output, or explicit ``None`` for known-uniform
-    data) so suites/pipelines sharing a build layer pay the detection
-    pass once — see ``_salted_cell_join``.
-    """
-    lk, llon, llat = left_cols
-    rk, rlon, rlat = right_cols
-    if z is None:
-        z = join_res_for_radius(radius_m)
-
-    r = right.select(
-        F.col(rk).alias("r_key"), F.col(rlon).alias("r_lon"), F.col(rlat).alias("r_lat")
-    ).withColumn("cell", cell_id_col(F.col("r_lon"), F.col("r_lat"), z))
-
-    l = _ring1_probe(left, left_cols, z)
-
-    joined = _salted_cell_join(l, r, salt_threshold, n_salt, hot_cells)
-
-    # lon delta wraps at the antimeridian (|dlon| <= 180); identical to the
-    # reference's planar formula everywhere away from the seam, where the
-    # reference (degree-space FILTER) silently finds nothing.
+    ``cells`` picks the cell space (TILE / HEX / S2) and ``res`` its
+    resolution (default: the scheme's completeness bound for
+    ``radius_m``; see ``CellScheme``).  ``salt_threshold`` and
+    ``hot_cells`` steer the shared hot-cell salting — see
+    ``_salted_cell_join``."""
+    r = _keyed(right, right_cols, "r")
+    res = cells.resolve(radius_m, res, r)
+    r = r.withColumn("cell", cells.build_cell(F.col("r_lon"), F.col("r_lat"), res))
+    l = cells.explode_probe(_keyed(left, left_cols, "l"), res, radius_m)
+    joined = _salted_cell_join(l, r, salt_threshold, hot_cells)
     return _refine_and_select(joined, radius_m)
-
-
-def _ring1_probe(
-    left: DataFrame, left_cols: tuple[str, str, str], z: int
-) -> DataFrame:
-    """Probe side of the square-tile strategies: each point explodes to
-    its ring-1 (3x3) cell neighborhood.  x wraps modulo 2^z so probes in
-    the first/last tile column still see build rows across the
-    antimeridian; y never wraps (the poles are not adjacent —
-    out-of-range y cells simply match nothing). 9 rows per probe point."""
-    lk, llon, llat = left_cols
-    l = left.select(
-        F.col(lk).alias("l_key"), F.col(llon).alias("l_lon"), F.col(llat).alias("l_lat")
-    )
-    neigh = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _ring1_offsets()
-        ]
-    )
-    n_x = 2**z
-    tx = tile_x_col(F.col("l_lon"), z)
-    ty = tile_y_col(F.col("l_lat"), z)
-    return (
-        l.withColumn("__o", F.explode(neigh))
-        .withColumn(
-            "cell",
-            F.lit(z * _Z_MULT).cast("long")
-            + F.pmod(tx + F.col("__o.dx"), F.lit(n_x).cast("long")) * F.lit(_X_MULT).cast("long")
-            + (ty + F.col("__o.dy")),
-        )
-        .drop("__o")
-    )
 
 
 def radius_join_bucketed(
@@ -175,7 +367,6 @@ def radius_join_bucketed(
     build_table: DataFrame,
     radius_m: float,
     left_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    z: int | None = None,
 ) -> DataFrame:
     """J5 against a PRE-BUCKETED build table — the 100 TB storage-aware
     variant: ``build_table`` must already carry
@@ -184,22 +375,19 @@ def radius_join_bucketed(
     ``.write.bucketBy(n, "cell").sortBy("cell").saveAsTable(...)``).
     Joining on the STORED cell column lets Spark use the bucket
     HashPartitioning directly: the build side reads shuffle-free
-    (SelectedBucketsCount in the plan, zero build-side Exchange —
-    asserted in test_cell_bucketed_radius_join_build_side_no_exchange);
-    only the exploded probe side shuffles to align.  No salting here:
-    the bucket layout already fixes the build-side placement, so hot
-    cells should be handled at WRITE time (finer z or more buckets)."""
-    if z is None:
-        z = join_res_for_radius(radius_m)
-    l = _ring1_probe(probe, left_cols, z)
+    (SelectedBucketsCount in the plan, zero build-side Exchange); only
+    the exploded probe side shuffles to align.  No salting here: the
+    bucket layout fixes build-side placement, so hot cells are handled
+    at WRITE time (finer z or more buckets)."""
+    z = join_res_for_radius(radius_m)
+    l = TILE.explode_probe(_keyed(probe, left_cols, "l"), z, radius_m)
     joined = l.join(build_table, ["cell"], "inner")
     return _refine_and_select(joined, radius_m)
 
 
 def cell_counts(build: DataFrame) -> DataFrame:
     """One MATERIALIZED (cell, count) pass over a cell-keyed build
-    frame — the input to skew detection.  Tiny output (one row per
-    occupied cell, no driver collect), eager ``localCheckpoint`` so
+    frame — the input to skew detection.  Eager ``localCheckpoint`` so
     every consumer (threshold agg, hot filter, per-round rollups)
     reuses the single scan instead of re-running it."""
     return build.groupBy("cell").count().localCheckpoint()
@@ -212,11 +400,8 @@ def hot_cells_from_counts(
     (``cell_counts`` output, or a rollup of one).  ``"auto"`` uses the
     max(256, 8x mean) rule; an int is an explicit row-count threshold.
     Returns ``None`` for an empty hot set — the adaptive short-circuit:
-    on uniform data the whole salting apparatus (two broadcast joins, a
-    per-probe explode, a wider join key) is pure overhead, so callers
-    fall back to the plain cell join.  The check is a filter + limit-1
-    over the already-materialized tiny counts table — cheap at any
-    scale."""
+    on uniform data the whole salting apparatus is pure overhead, so
+    callers fall back to the plain cell join."""
     if salt_threshold == "auto":
         # uniform data pays one cheap aggregation and zero fan-out,
         # skewed data is protected without tuning
@@ -244,8 +429,7 @@ def detect_hot_cells(
     threshold rule.  Public so a SUITE (or a real pipeline) can detect
     skew ONCE per (layer, cell space) and hand the result to every join
     that shares the build side via ``hot_cells=...`` — instead of each
-    join re-running its own detection scan (the r4 bench showed three
-    J5 strategies each paying this pass on the same layer)."""
+    join re-running its own detection scan."""
     if salt_threshold is None:
         return None
     return hot_cells_from_counts(cell_counts(build), salt_threshold)
@@ -254,45 +438,24 @@ def detect_hot_cells(
 def build_hot_cells(
     right: DataFrame,
     radius_m: float,
-    strategy: str = "tile",
+    cells: CellScheme = TILE,
     right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
     salt_threshold: int | str | None = "auto",
-    z: int | None = None,
-    res: int | None = None,
-    level: int | None = None,
+    res: int | str | None = None,
 ) -> DataFrame | None:
-    """Run the hot-cell skew-detection pass for a build layer in the
-    named strategy's cell space ("tile" | "hex" | "s2"), at the SAME
-    default resolution the corresponding join would pick for
-    ``radius_m`` — the shareable precomputation for the joins'
-    ``hot_cells=`` argument.  A suite or pipeline running several
-    radius joins / kNN queries against one layer calls this once per
-    strategy and passes the result everywhere, instead of each join
-    paying its own detection scan (the r4 bench had three J5 strategies
-    each re-scanning the same layer).  Returns ``None`` when the layer
-    is uniform (empty hot set)."""
-    rk, rlon, rlat = right_cols
-    if strategy == "tile":
-        z = z if z is not None else join_res_for_radius(radius_m)
-        cells = right.select(
-            cell_id_col(F.col(rlon), F.col(rlat), z).alias("cell")
-        )
-    elif strategy == "hex":
-        res = res if res is not None else hex_res_for_radius(radius_m)
-        q, r_ = _hex_qr_cols(F.col(rlon), F.col(rlat), res)
-        cells = right.select(F.col(rlon), F.col(rlat)).select(
-            _hex_pack(q, r_, res).alias("cell")
-        )
-    elif strategy == "s2":
-        from fagi_gis_spark.functions.geo_udfs import u_s2_cell_at
-
-        level = level if level is not None else s2_level_for_radius(radius_m)
-        cells = right.select(
-            u_s2_cell_at(level)(F.col(rlon), F.col(rlat)).alias("cell")
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return detect_hot_cells(cells, salt_threshold)
+    """The hot-cell skew-detection pass for a build layer in ``cells``'
+    cell space, at the SAME resolution ``radius_join`` would pick —
+    the shareable precomputation for its ``hot_cells=`` argument.  A
+    suite or pipeline running several radius joins / kNN queries
+    against one layer calls this once per scheme and passes the result
+    everywhere.  Returns ``None`` when the layer is uniform (empty hot
+    set)."""
+    r = _keyed(right, right_cols, "r")
+    res = cells.resolve(radius_m, res, r)
+    return detect_hot_cells(
+        r.select(cells.build_cell(F.col("r_lon"), F.col("r_lat"), res).alias("cell")),
+        salt_threshold,
+    )
 
 
 def _prefer_build_side(r: DataFrame) -> DataFrame:
@@ -325,38 +488,33 @@ def _salted_cell_join(
     l: DataFrame,
     r: DataFrame,
     salt_threshold: int | str | None,
-    n_salt: int,
     hot_cells: "DataFrame | None | str" = "detect",
 ) -> DataFrame:
-    """Hot-cell salting for the cell-equi-join step, shared by ALL
-    radius-join strategies (square tile, hex, S2): ``l`` is the probe
-    side already exploded to its candidate ``cell`` ids, ``r`` the
-    build side keyed by its single ``cell``.
+    """Hot-cell salting for the cell-equi-join step of every scheme:
+    ``l`` is the probe side already exploded to its candidate ``cell``
+    ids, ``r`` the build side keyed by its single ``cell``.
 
-    Build-side cells above the threshold split into ``n_salt`` sub-keys;
+    Build-side cells above the threshold split into ``N_SALT`` sub-keys;
     probe rows replicate only for those hot cells.  ``"auto"`` derives
     the threshold (max(256, 8x mean)) from one materialized cell-count
-    pass; an empty hot set short-circuits to the plain cell join.
+    pass; an empty hot set short-circuits to the plain cell join.  An
+    int is an explicit row-count threshold; ``None`` disables salting
+    (AQE skew-join remains the only protection).
 
     ``hot_cells`` overrides detection: the default sentinel
     ``"detect"`` runs ``detect_hot_cells`` here; a precomputed hot-cell
-    DataFrame (``(cell, __hot)``) or an explicit ``None`` (caller
-    already knows the data is uniform / detection happened elsewhere)
-    skips the counts pass entirely.  Salting never changes OUTPUT —
-    only placement — so a stale or approximate hot set degrades
-    performance, never correctness.
+    DataFrame (``(cell, __hot)``, e.g. from ``build_hot_cells``) or an
+    explicit ``None`` (caller already knows the data is uniform) skips
+    the counts pass entirely.  Salting never changes OUTPUT — only
+    placement — so a stale or approximate hot set degrades performance,
+    never correctness.
 
-    The counts pass is an eager ``localCheckpoint`` — it runs two Spark
-    jobs at DataFrame-CONSTRUCTION time (checkpoint + isEmpty), so
-    composing the join into a larger lazy plan triggers that scan
-    early, and the checkpoint blocks are unreplicated: an executor loss
-    after materialization makes the counts unrecoverable (lineage is
-    truncated) and the query must be resubmitted.  Accepted tradeoff:
-    without materialization every downstream branch re-runs the
-    build-side scan (measured ~40% steady-state overhead at sf0.1), and
-    a resubmit-on-loss matches what AQE skew stats cost anyway.  Pass
-    ``salt_threshold=None`` for a fully lazy plan (AQE skew-join then
-    remains the only protection)."""
+    The counts pass is an eager ``localCheckpoint``: two Spark jobs run
+    at DataFrame-CONSTRUCTION time, and its blocks are unreplicated, so
+    an executor loss after materialization means resubmitting the query.
+    Accepted tradeoff: without it every downstream branch re-runs the
+    build-side scan (measured ~40% steady-state overhead at sf0.1).
+    Pass ``salt_threshold=None`` for a fully lazy plan."""
     if isinstance(hot_cells, str):
         if hot_cells != "detect":
             raise ValueError(
@@ -373,7 +531,7 @@ def _salted_cell_join(
         r.join(F.broadcast(hot), "cell", "left")
         .withColumn(
             "salt",
-            F.when(F.col("__hot"), F.pmod(F.crc32(F.col("r_key").cast("string")), n_salt))
+            F.when(F.col("__hot"), F.pmod(F.crc32(F.col("r_key").cast("string")), N_SALT))
             .otherwise(F.lit(0))
             .cast("int"),
         )
@@ -385,7 +543,7 @@ def _salted_cell_join(
             "salt",
             F.explode(
                 F.when(
-                    F.col("__hot"), F.sequence(F.lit(0), F.lit(n_salt - 1))
+                    F.col("__hot"), F.sequence(F.lit(0), F.lit(N_SALT - 1))
                 ).otherwise(F.array(F.lit(0)))
             ),
         )
@@ -400,37 +558,15 @@ def knn_join(
     k: int,
     radius_m: float,
     exclude_self: bool = False,
-    strategy: str = "tile",
+    cells: CellScheme = TILE,
     **kwargs,
 ) -> DataFrame:
     """kNN conflation (bounded by a search radius, like the reference's
     discovery loop): radius join -> per-probe top-k by distance. Ties are
     broken by the neighbor key for determinism. ``exclude_self`` drops
     same-key pairs for self-joins (kNN of a layer against itself).
-    ``strategy`` selects the candidate-generation physical plan —
-    "tile" (square z-tiles, the default), "hex" (aperture-7 gridDisk),
-    or "s2" (real S2 cells, sphere-native) — all output-identical with
-    shared auto hot-cell salting, so the choice is purely a cost
-    decision.  Tuning kwargs that belong to a DIFFERENT strategy's
-    resolution knob (``z``/``res``/``level``) are dropped when
-    switching strategies, so e.g. ``z=12, strategy="s2"`` is legal and
-    simply ignores ``z``; kwargs no strategy accepts still raise."""
-    import inspect
-
-    from pyspark.sql import Window
-
-    strategies = {"tile": radius_join, "hex": hex_radius_join, "s2": s2_radius_join}
-    if strategy not in strategies:
-        raise ValueError(f"strategy must be one of {sorted(strategies)}, got {strategy!r}")
-    fn = strategies[strategy]
-    accepted = set(inspect.signature(fn).parameters)
-    all_accepted = {
-        p for f in strategies.values() for p in inspect.signature(f).parameters
-    }
-    unknown = set(kwargs) - all_accepted
-    if unknown:
-        raise TypeError(f"knn_join got kwargs no strategy accepts: {sorted(unknown)}")
-    cand = fn(left, right, radius_m, **{k: v for k, v in kwargs.items() if k in accepted})
+    ``cells`` and ``**kwargs`` go to ``radius_join``."""
+    cand = radius_join(left, right, radius_m, cells=cells, **kwargs)
     if exclude_self:
         cand = cand.filter(F.col("l_key") != F.col("r_key"))
     w = Window.partitionBy("l_key").orderBy(F.col("dist_m").asc(), F.col("r_key").asc())
@@ -439,6 +575,14 @@ def knn_join(
         .filter(F.col("knn_rank") <= k)
         .select("l_key", "r_key", "dist_m", "knn_rank")
     )
+
+
+def _broadcast_polygon_index(points: DataFrame, polygons_pdf: pd.DataFrame):
+    idx = PolygonIndex(
+        polygons_pdf["polygon_id"].tolist(),
+        [parse_wkt(w) for w in polygons_pdf["geom_wkt"]],
+    )
+    return points.sparkSession.sparkContext.broadcast(idx)
 
 
 def pip_join(
@@ -452,12 +596,7 @@ def pip_join(
     row per (point, containing polygon) — overlaps produce several rows.
     """
     pk, plon, plat = point_cols
-    spark = points.sparkSession
-    idx = PolygonIndex(
-        polygons_pdf["polygon_id"].tolist(),
-        [parse_wkt(w) for w in polygons_pdf["geom_wkt"]],
-    )
-    bidx = spark.sparkContext.broadcast(idx)
+    bidx = _broadcast_polygon_index(points, polygons_pdf)
 
     def probe(batches):
         index = bidx.value
@@ -498,12 +637,7 @@ def zonal_stats(
     zone drop out, overlapping zones each aggregate the point.
     """
     pk, plon, plat = point_cols
-    spark = points.sparkSession
-    idx = PolygonIndex(
-        polygons_pdf["polygon_id"].tolist(),
-        [parse_wkt(w) for w in polygons_pdf["geom_wkt"]],
-    )
-    bidx = spark.sparkContext.broadcast(idx)
+    bidx = _broadcast_polygon_index(points, polygons_pdf)
 
     def probe(batches):
         index = bidx.value
@@ -588,44 +722,32 @@ def knn_join_adaptive(
     ``knn_exhausted = true`` so callers can distinguish a genuine < k
     neighborhood bound from an exhausted search radius.
 
-    Each round's inner ``radius_join`` inherits ``**kwargs`` — including
-    the default-on auto salting.  For the tile strategy (the default)
-    the build side is SCANNED FOR SKEW ONCE: cell counts materialize at
-    round 0's (finest) resolution, and every later round derives its
-    counts by an exact quadtree parent rollup over that tiny table
-    (``tiles.parent_cell_col`` — codegen arithmetic on one row per
-    occupied cell), so doubling the radius never re-reads the layer.
-    Other strategies (hex/S2 ancestors don't make this rollup exact)
-    keep per-round detection; on known-uniform data pass
-    ``salt_threshold=None`` to skip detection entirely.  The default
-    stays skew-safe either way — the hot set only steers placement,
-    never output.
+    Each round's inner ``knn_join`` inherits ``**kwargs`` — including
+    the default-on auto salting.  For ``TILE`` (the default) the build
+    side is SCANNED FOR SKEW ONCE: cell counts materialize at round 0's
+    (finest) z, and every later round derives its counts by an exact
+    quadtree parent rollup over that tiny table (``parent_cell_col``),
+    so doubling the radius never re-reads the layer.  HEX/S2 ancestors
+    don't make this rollup exact, so they keep per-round detection.
     """
     if max_doublings < 1:
         raise ValueError("knn_join_adaptive requires max_doublings >= 1")
     lk = left_cols[0]
 
-    # One skew scan for all rounds (tile strategy): counts at the finest
-    # z, rolled up per round.  Only when the caller didn't already fix
-    # the resolution or supply a hot set themselves.
+    # One skew scan for all rounds (TILE): counts at the finest z, rolled
+    # up per round.  Only when the caller didn't already fix the
+    # resolution or supply a hot set themselves.
     reuse_counts = (
-        kwargs.get("strategy", "tile") == "tile"
+        kwargs.get("cells", TILE) is TILE
         and kwargs.get("salt_threshold", "auto") is not None
         and "hot_cells" not in kwargs
-        and "z" not in kwargs
+        and "res" not in kwargs
     )
-    base_counts = None
-    z0 = None
+    z0 = join_res_for_radius(init_radius_m)
     if reuse_counts:
-        from fagi_gis_spark.index.tiles import parent_cell_col
-
         _, rlon, rlat = right_cols
-        z0 = join_res_for_radius(init_radius_m)
-        base_counts = cell_counts(
-            right.select(
-                cell_id_col(F.col(rlon), F.col(rlat), z0).alias("cell")
-            )
-        )
+        cell0 = cell_id_col(F.col(rlon), F.col(rlat), z0)
+        base_counts = cell_counts(right.select(cell0.alias("cell")))
     # localCheckpoint (eager) truncates lineage every round: the frontier
     # would otherwise accumulate one anti-join + one knn plan per round
     # and Catalyst re-optimizes the whole stack each iteration
@@ -681,333 +803,3 @@ def knn_join_adaptive(
     for part in finished_parts[1:]:
         out = out.unionByName(part)
     return out
-
-
-# --------------------------------------------------------------------------
-# Hex-bucketed radius join (aperture-7 grid, index/hexgrid.py)
-# --------------------------------------------------------------------------
-
-from fagi_gis_spark.index.hexgrid import grid_disk as _hex_grid_disk
-
-_HEX_RING1 = tuple(_hex_grid_disk(0, 0, 1))  # the 7-cell gridDisk(1)
-_HEX_OFF = 1 << 27
-
-
-def _cube_round_cols(qf, rf):
-    """floor(x+0.5) cube rounding as JVM columns — the same half-up
-    rule as hexgrid.hex_round_np and the DuckDB replay (one rule for
-    every exported hex id; see hex_round_np)."""
-    sf = -qf - rf
-    q0, r0, s0 = (F.floor(c + F.lit(0.5)).cast("double") for c in (qf, rf, sf))
-    dq, dr, ds = F.abs(q0 - qf), F.abs(r0 - rf), F.abs(s0 - sf)
-    q_fix = (dq > dr) & (dq > ds)
-    r_fix = (~q_fix) & (dr > ds)
-    q1 = F.when(q_fix, -r0 - s0).otherwise(q0).cast("long")
-    r1 = F.when(r_fix, -q0 - s0).otherwise(r0).cast("long")
-    return q1, r1
-
-
-def hex_res_for_radius(radius_m: float) -> int:
-    """Finest hex res whose cell CIRCUMRADIUS still covers the radius.
-
-    Hexagons make the ring-1 completeness bound stronger than square
-    tiles: cells at hex distance 2 have centers >= 3R apart, so any two
-    points within R (circumradius) of each other sit in cells at hex
-    distance <= 1 — the 7-cell gridDisk(1) is a complete candidate set
-    (squares need radius <= tile INradius and scan 9 cells)."""
-    from fagi_gis_spark.index.hexgrid import MAX_RES, S0
-
-    radius_deg = radius_m / DEG_TO_M
-    res = 0
-    while res < MAX_RES and S0 / (7.0**0.5) ** (res + 1) >= radius_deg:
-        res += 1
-    return res
-
-
-def hex_disk_k_for(radius_m: float, res: int) -> int:
-    """Smallest gridDisk radius k that keeps the candidate set COMPLETE
-    at hex resolution ``res`` for a given search radius.
-
-    Bound: cells at hex distance m >= 2 have centers >= 1.5*R*m apart
-    (the tightest spacing is the (1,1)-type diagonal; edge neighbors sit
-    at sqrt(3)*R > 1.5*R, so the bound holds for all m >= 1), and any
-    point lies within R of its cell center, so two cells can hold points
-    within d of each other only if 1.5*R*m - 2*R <= d, i.e.
-    m <= d/(1.5R) + 4/3.  Including every cell with hexdist <= k where
-    k = ceil(d/(1.5R) + 1/3) therefore covers all pairs (the m = k+1
-    shell is provably farther than d).  For d < R this gives k = 1 —
-    the gridDisk(1) case.  A 1e-12 guard rounds the knife-edge d == R*
-    boundary (corner-exact point pairs) up to the safe side."""
-    import math as _math
-
-    from fagi_gis_spark.index.hexgrid import S0
-
-    radius_deg = radius_m / DEG_TO_M
-    R = S0 / (7.0**0.5) ** res
-    return max(1, _math.ceil(radius_deg / (1.5 * R) + 1.0 / 3.0 + 1e-12))
-
-
-def hex_res_auto(radius_m: float, density_rows_per_deg2: float, max_k: int = 6) -> int:
-    """Density-aware resolution choice: per probe, cost ~ disk_size(k) *
-    (1 + rho * cell_area) — probe fan-out rows plus expected candidate
-    pairs.  Finer cells shrink the pair term by 7x per res while the
-    disk term grows ~quadratically in k; the optimum shifts finer as
-    density rises.  One number (rho = build rows / bbox area) drives the
-    closed-form argmin — at cluster scale that's a single tiny agg over
-    the build side, not a planning loop."""
-    from fagi_gis_spark.index.hexgrid import MAX_RES, S0
-
-    base = hex_res_for_radius(radius_m)
-    best_res, best_cost = base, None
-    for res in range(base, min(base + 6, MAX_RES) + 1):
-        k = hex_disk_k_for(radius_m, res)
-        if k > max_k:
-            break
-        R = S0 / (7.0**0.5) ** res
-        disk = 1 + 3 * k * (k + 1)
-        cell_area = 2.598076211353316 * R * R  # (3*sqrt(3)/2) R^2
-        cost = disk * (1.0 + density_rows_per_deg2 * cell_area)
-        if best_cost is None or cost < best_cost:
-            best_res, best_cost = res, cost
-    return best_res
-
-
-def _hex_qr_cols(lon, lat, res: int):
-    """Axial hex coords as JVM column math, fully inside whole-stage
-    codegen.  Rounding is floor(x + 0.5) (half-up), NOT bround():
-    Spark's bround routes every call through BigDecimal — measured ~45%
-    slower end-to-end with 6 rounds per row.  Half-up is the single
-    rounding rule shared with hex_cell_np and the DuckDB oracle replay
-    (see hex_round_np), so join-side, geotag, streaming, and oracle hex
-    ids agree for every point including exact-tie boundaries."""
-    from fagi_gis_spark.index.hexgrid import _basis_inv
-
-    inv = _basis_inv(res)
-    qf = F.lit(float(inv[0, 0])) * lon + F.lit(float(inv[0, 1])) * lat
-    rf = F.lit(float(inv[1, 0])) * lon + F.lit(float(inv[1, 1])) * lat
-    return _cube_round_cols(qf, rf)
-
-
-def _hex_pack(q, r, res: int):
-    return (
-        F.lit(res << 56).cast("long")
-        + (q + F.lit(_HEX_OFF)) * F.lit(1 << 28).cast("long")
-        + (r + F.lit(_HEX_OFF))
-    )
-
-
-def hex_radius_join(
-    left: DataFrame,
-    right: DataFrame,
-    radius_m: float,
-    left_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    res: int | str | None = None,
-    salt_threshold: int | str | None = "auto",
-    n_salt: int = 8,
-    hot_cells: "DataFrame | None | str" = "detect",
-) -> DataFrame:
-    """J5 over the aperture-7 hex grid: build rows key by their single
-    hex cell, probe rows explode gridDisk(1) — 7 candidate cells per
-    probe vs 9 for square ring-1, with the same planar-degree refine as
-    ``radius_join`` (output-identical; differential-tested).
-
-    Cost profile vs the square-tile join (measured sf0.1, component
-    A/B): probe/build sides are equal-cost, but hex passes ~1.35x the
-    candidate-pair volume through the refine at mid-latitude — the res
-    that satisfies completeness (circumradius >= radius; aperture-7
-    steps are sqrt(7) apart) yields cells ~35% larger in area than the
-    z-tile the square join picks, whose y-extent also shrinks by
-    cos(lat).  Net ~1.5x wall at sf0.1 uniform density.  The crossover
-    favors hex where density is high and a finer ``res`` with a wider
-    disk wins: pass ``res="auto"`` to pick the cost-optimal (res, k)
-    from a one-row density agg over the build side (hex_res_auto's
-    closed-form cost model), or an explicit int ``res`` — the disk
-    radius k always comes from the completeness bound hex_disk_k_for.
-    The default (None) keeps the base res with the provable gridDisk(1)
-    bound.
-
-    Antimeridian: probes within 2x the radius of the +-180 seam also
-    emit their cells in the lon-+360-shifted frame (array_union keeps
-    ids distinct, so no pair can double-match). Hot-cell salting is the
-    same shared machinery as ``radius_join`` (``_salted_cell_join``) —
-    see its docstring for the auto threshold and the eager-counts
-    tradeoff.
-    """
-    lk, llon, llat = left_cols
-    rk, rlon, rlat = right_cols
-    if res == "auto":
-        # one tiny planning agg (count + bbox of the build side) -> rho;
-        # the collect is a single row, the scale analog of AQE statistics
-        stats = right.agg(
-            F.count("*").alias("n"),
-            F.min(rlon).alias("lo1"), F.max(rlon).alias("lo2"),
-            F.min(rlat).alias("la1"), F.max(rlat).alias("la2"),
-        ).first()
-        if stats.n == 0 or stats.lo1 is None:
-            res = None  # empty build side: any complete res joins to nothing
-        else:
-            area = max((stats.lo2 - stats.lo1) * (stats.la2 - stats.la1), 1e-9)
-            res = hex_res_auto(radius_m, stats.n / area)
-    if res is None:
-        res = hex_res_for_radius(radius_m)
-    k = hex_disk_k_for(radius_m, res)
-    if k == 1:
-        disk_offsets = _HEX_RING1
-    else:
-        from fagi_gis_spark.index.hexgrid import grid_disk
-
-        disk_offsets = grid_disk(0, 0, k)
-    radius_deg = radius_m / DEG_TO_M
-
-    r = right.select(
-        F.col(rk).alias("r_key"), F.col(rlon).alias("r_lon"), F.col(rlat).alias("r_lat")
-    )
-    rq, rr = _hex_qr_cols(F.col("r_lon"), F.col("r_lat"), res)
-    r = r.withColumn("cell", _hex_pack(rq, rr, res))
-
-    l = left.select(
-        F.col(lk).alias("l_key"), F.col(llon).alias("l_lon"), F.col(llat).alias("l_lat")
-    )
-
-    # materialize the probe's axial coords ONCE per frame: inlining them
-    # into the 7-element array would duplicate the whole rounding
-    # expression tree (6 rounds + conditionals) per candidate cell —
-    # measured 10.4s -> ~4.5s at sf0.1 with this projection + the
-    # floor-based rounding above
-    lq, lr = _hex_qr_cols(F.col("l_lon"), F.col("l_lat"), res)
-    shifted_lon = F.when(F.col("l_lon") > 0, F.col("l_lon") - 360.0).otherwise(
-        F.col("l_lon") + 360.0
-    )
-    near_seam = F.abs(F.col("l_lon")) > F.lit(180.0 - 2.0 * radius_deg)
-    sq, sr = _hex_qr_cols(shifted_lon, F.col("l_lat"), res)
-    l = l.withColumns(
-        {
-            "__q": lq,
-            "__r": lr,
-            "__sq": F.when(near_seam, sq),
-            "__sr": F.when(near_seam, sr),
-        }
-    )
-
-    def disk_cells(qc, rc):
-        return F.array(
-            *[_hex_pack(qc + F.lit(dq), rc + F.lit(dr), res) for dq, dr in disk_offsets]
-        )
-
-    base = disk_cells(F.col("__q"), F.col("__r"))
-    cells = F.when(
-        F.col("__sq").isNotNull(),
-        F.array_union(base, disk_cells(F.col("__sq"), F.col("__sr"))),
-    ).otherwise(base)
-    l = l.withColumn("cell", F.explode(cells)).drop("__q", "__r", "__sq", "__sr")
-
-    joined = _salted_cell_join(l, r, salt_threshold, n_salt, hot_cells)
-    return _refine_and_select(joined, radius_m)
-
-
-def hex_parent_cols(cell, parent_res: int):
-    """Parent hex cell id as JVM column math (one aperture-7 level up:
-    axial Ainv = [[2,-1],[1,3]]/7, then cube rounding).  Unlike S2's
-    bit-truncation ancestors, aperture-7 parents don't nest, so the
-    rollup is genuine arithmetic.  Exact-tie-free: the pre-round
-    fractions are m/7 (7 odd, never exactly .5), so floor(x+0.5)
-    equals round-nearest under ANY tie rule — bit-identical to
-    hexgrid.hex_parent_np and to the DuckDB oracle replay."""
-    mask = F.lit((1 << 28) - 1).cast("long")
-    q = F.shiftright(cell, 28).bitwiseAND(mask) - F.lit(_HEX_OFF)
-    r = cell.bitwiseAND(mask) - F.lit(_HEX_OFF)
-    qf = (F.lit(2.0) * q - r) / F.lit(7.0)
-    rf = (q + F.lit(3.0) * r) / F.lit(7.0)
-    q1, r1 = _cube_round_cols(qf, rf)
-    return _hex_pack(q1, r1, parent_res)
-
-
-# --------------------------------------------------------------------------
-# S2-bucketed radius join (real S2 curve, index/s2.py)
-# --------------------------------------------------------------------------
-
-
-def s2_level_for_radius(radius_m: float) -> int:
-    """Finest S2 level whose minimum cell ground width still covers the
-    radius (published kMinWidth metric, quadratic projection): pairs
-    within the radius then sit in 3x3-adjacent cells — the same segment
-    argument as square tiles, but valid across face edges because S2
-    cell edges align between faces at every level."""
-    import math
-
-    from fagi_gis_spark.index.s2 import K_MIN_WIDTH_RAD, MAX_LEVEL
-
-    radius_rad = math.radians(radius_m / DEG_TO_M)
-    if K_MIN_WIDTH_RAD < radius_rad:
-        # even level-0 cells are narrower than the radius: the fixed
-        # 9-cell neighborhood cannot be complete — refuse loudly rather
-        # than silently dropping pairs (use radius_join/hex_radius_join,
-        # whose ring/disk widths scale, for continental radii)
-        raise ValueError(
-            f"radius {radius_m} m exceeds the level-0 S2 min cell width; "
-            "s2_radius_join's 3x3 neighborhood cannot be complete"
-        )
-    level = 0
-    while level < MAX_LEVEL and K_MIN_WIDTH_RAD / (1 << (level + 1)) >= radius_rad:
-        level += 1
-    return level
-
-
-def s2_radius_join(
-    left: DataFrame,
-    right: DataFrame,
-    radius_m: float,
-    left_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    level: int | None = None,
-    salt_threshold: int | str | None = "auto",
-    n_salt: int = 8,
-    hot_cells: "DataFrame | None | str" = "detect",
-) -> DataFrame:
-    """J5 over the real S2 curve: build rows key by their S2 cell, probe
-    rows explode their 9-cell neighborhood (8 neighbors cross-face
-    wrapped in the Arrow kernel).  Sphere-native: no antimeridian shift
-    frames and no polar special case — the cube covering has no seam.
-    Refine is the same planar-degree metric as ``radius_join``
-    (output-identical; planar-degree distance upper-bounds ground angle,
-    so the ground-width completeness level suffices).  Hot-cell salting
-    is the shared ``_salted_cell_join`` machinery — see its docstring
-    for the auto threshold and the eager-counts tradeoff."""
-    from fagi_gis_spark.functions.geo_udfs import u_s2_cell_at, u_s2_disk_at
-
-    lk, llon, llat = left_cols
-    rk, rlon, rlat = right_cols
-    max_level = s2_level_for_radius(radius_m)
-    if level is None:
-        level = max_level
-    elif level > max_level:
-        # a finer level than the kMinWidth bound cannot be covered by
-        # the fixed 3x3 neighborhood — refuse instead of silently
-        # dropping pairs (hex_radius_join widens its disk instead; the
-        # S2 neighborhood is fixed by design)
-        raise ValueError(
-            f"level {level} is finer than the completeness bound "
-            f"{max_level} for radius {radius_m} m"
-        )
-
-    r = right.select(
-        F.col(rk).alias("r_key"), F.col(rlon).alias("r_lon"), F.col(rlat).alias("r_lat")
-    ).withColumn("cell", u_s2_cell_at(level)(F.col("r_lon"), F.col("r_lat")))
-
-    l = (
-        left.select(
-            F.col(lk).alias("l_key"),
-            F.col(llon).alias("l_lon"),
-            F.col(llat).alias("l_lat"),
-        )
-        .withColumn(
-            "cell",
-            F.explode(
-                F.array_distinct(u_s2_disk_at(level)(F.col("l_lon"), F.col("l_lat")))
-            ),
-        )
-    )
-
-    joined = _salted_cell_join(l, r, salt_threshold, n_salt, hot_cells)
-    return _refine_and_select(joined, radius_m)

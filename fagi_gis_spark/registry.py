@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fagi_gis_spark.index import tiles
+from fagi_gis_spark.index.hexgrid import hex_cell_col, hex_parent_col
 from fagi_gis_spark.operators.dedup_precedence import gtype_col
 from fagi_gis_spark.operators.fusion import (
     FusionParams,
@@ -30,6 +31,14 @@ from fagi_gis_spark.operators.fusion import (
     fused_centroids,
     linked_pairs,
     with_scores,
+)
+from fagi_gis_spark.operators.spatial_join import (
+    HEX,
+    S2,
+    TILE,
+    CellScheme,
+    build_hot_cells,
+    radius_join,
 )
 from fagi_gis_spark.sources.layers import (
     admin_assign_oracle_sql,
@@ -54,175 +63,44 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Long-stable oracle-backed queries rotated OUT of the driver's 50-slot
-# gate window for round 4 (r3 VERDICT ask #9): these r1-era fusion/
-# metadata queries have been gate-green since round 1 and are unchanged,
-# so their slots go to the 14 oracle-backed queries that sat past the
-# window (late_fetch_metadata, knn_adaptive, clean_corpus, ...) and were
-# only replay-verified.  Demoted queries stay fully oracle-backed —
-# tools/driver_sim.py replays the complete set every round.
+# Only the first 50 entries of queries() are gated, so this list moves
+# these oracle-backed queries behind the rest of the oracle-backed group
+# to give those slots to others.  A demoted query stays oracle-backed:
+# tools/driver_sim.py still replays its oracle.
 _GATE_DEMOTED = [
-    # Round-5 rotation (VERDICT r4 ask #9, round-robin windows): the 15
-    # r1-era fusion/metadata queries demoted in r4 RETURN to the gate so
-    # CORRECTNESS_r05 re-certifies them driver-side; their slots come
-    # from queries gate-green in BOTH r3 and r4 whose code did not
-    # change this round.  Everything this round touched (radius joins,
-    # hex ids, dedup_embedding_cosine, knn_*, image_hex_rollup) stays
-    # gated.  Demoted queries remain fully oracle-backed —
-    # tools/driver_sim.py replays the complete set every round.
     "tile_assign", "pip_assign", "unlinked_anti_join", "bbox_filter",
     "discover_links_exact", "discover_links_fuzzy", "doc_stats",
     "doc_quality", "dedup_exact", "dedup_ngram_jaccard",
     "dedup_minhash_lsh", "dedup_simhash", "morton_cells", "s2_cells",
     "events_topk_users", "wgs_point_synthesis",
-    # demoted when dedup_incremental_minhash, doc_pack_sequences, and
-    # doc_pretrain_pack (new, need driver certification) took
-    # oracle-backed slots: all stable since r1, untouched this round
     "literal_typing", "update_position", "materialize_links",
-    # demoted when dedup_substring and corpus_stratified_sample (new,
-    # need driver certification) took oracle-backed slots: both below
-    # were driver-green in r3 AND r4 and their code is untouched in r5
     "owl_class_insertion", "link_name_jw",
-    # demoted when image_exif_geotag (new, needs driver certification)
-    # took an oracle-backed slot: stable since r1, driver-green in r4,
-    # code untouched this round
     "writeback_geometries",
-    # demoted when image_exif_tile_assign (new, needs driver
-    # certification) took an oracle-backed slot: stable since r1,
-    # driver-green in r4, code untouched this round
     "doc_token_budget",
-    # demoted when image_burst_dedup (new, needs driver certification)
-    # took an oracle-backed slot: stable since r1, driver-green in r4,
-    # code untouched this round
     "doc_langid",
-    # demoted when image_exif_poi_join (new, needs driver certification)
-    # took an oracle-backed slot: stable since r1, driver-green in r4,
-    # code untouched this round
     "events_sessionize",
-    # demoted when doc_repetition, doc_decontaminate, and tile_heatmap
-    # (new, need driver certification) took oracle-backed slots: all
-    # three below were driver-green in BOTH r3 and r4 and their
-    # implementation files (filters.py, fusion.py, metadata.py) are
-    # untouched this round
     "links_type_filter", "fuse_cluster_keep_b", "metadata_rest_properties",
-    # demoted when tile_heatmap_pyramid (new, needs driver certification)
-    # took an oracle-backed slot: driver-green in r3 AND r4, importer.py
-    # untouched this round
     "import_geometries_linked",
-    # demoted when doc_filter_funnel (new, needs driver certification)
-    # took an oracle-backed slot: driver-green in r3 AND r4, fusion.py
-    # untouched this round
     "fusion_scores",
-    # demoted when geohash_cells and geohash_rollup (new, need driver
-    # certification) took oracle-backed slots: both below driver-green
-    # in r3 AND r4, their implementation files (dedup_precedence.py,
-    # metadata.py) untouched this round
     "dedup_precedence", "metadata_flattened",
-    # demoted when doc_lm_score (new, needs driver certification) took
-    # an oracle-backed slot: driver-green in r3 AND r4, index/s2.py and
-    # its registry query untouched this round
     "s2_rollup",
-    # demoted when events_user_travel, events_od_matrix, and
-    # events_grid_dbscan (new, need driver certification) took
-    # oracle-backed slots: all three below were driver-green in r3 AND
-    # r4 and their implementation files (filters.py, metadata.py) are
-    # untouched this round
     "user_filter_links", "metadata_keep_both", "metadata_keep_concat_a",
-    # demoted when events_colocation and events_stay_points (new, need
-    # driver certification) took oracle-backed slots: both below were
-    # driver-green in r3 AND r4; events_windowed_agg's batch path is
-    # registry-only code untouched since r1, and knn_conflation's
-    # machinery stays certified through the three gated radius joins +
-    # gated knn_adaptive (same spatial_join.py internals)
     "events_windowed_agg", "knn_conflation",
-    # demoted when events_hotspot_gi (new, needs driver certification)
-    # took an oracle-backed slot: dedup_components (label propagation)
-    # was driver-green in r3 AND r4 and the label-prop code is untouched
-    # this round; the r5-touched star-contraction variant keeps its own
-    # gated slot (dedup_components_star, same oracle)
     "dedup_components",
-    # demoted when events_cell_trend (new, needs driver certification)
-    # took an oracle-backed slot: hex_cells was driver-green in r3 AND
-    # r4; its r5 half-up unification is certified by the still-gated
-    # hex_rollup + image_hex_rollup + hex_radius_join_150m (same id
-    # surface, same round)
     "hex_cells",
-    # demoted when doc_pii_scrub (new, needs driver certification) took
-    # an oracle-backed slot: late_fetch_metadata was newly gated and
-    # driver-green in r4, its registry-only implementation is untouched
-    # this round, and driver_sim replays its oracle every round
     "late_fetch_metadata",
-    # demoted when zonal_stats (new, needs driver certification) took an
-    # oracle-backed slot: fuse_avg_points was driver-green r1-r3,
-    # replay-exact in r4, fusion.py untouched this round; 14 of the 15
-    # r4-demoted fusion/metadata queries still re-certify in this
-    # round's window (>= 10 per the r4 ask)
     "fuse_avg_points",
-    # demoted when ripleys_k (new, needs driver certification) took an
-    # oracle-backed slot: fuse_shift_poly_avg_dist was driver-green
-    # r1-r3, replay-exact in r4, fusion.py untouched this round; 13 of
-    # the 15 r4-demoted fusion/metadata re-certs remain in the window
-    # (>= 10 per the r4 ask)
     "fuse_shift_poly_avg_dist",
-    # demoted when events_local_morans_i (new, needs driver
-    # certification) took an oracle-backed slot: fuse_shift_b_to_a was
-    # driver-green r1-r3, replay-exact in r4, fusion.py untouched this
-    # round; 12 of the 15 r4-demoted fusion/metadata re-certs remain in
-    # the window (>= 10 per the r4 ask)
     "fuse_shift_b_to_a",
-    # demoted when events_emerging_hotspots (new, needs driver
-    # certification) took an oracle-backed slot: fuse_keep_both was
-    # driver-green r1-r3, replay-exact in r4, fusion.py untouched this
-    # round; 11 of the 15 r4-demoted fusion/metadata re-certs remain in
-    # the window (>= 10 per the r4 ask)
     "fuse_keep_both",
-    # Window rebalance so the round's NEW oracle-backed queries
-    # (video_fp_neardup, doc_filter_funnel, doc_pretrain_pack) and the
-    # r5-touched knn_adaptive all sit inside the 50-slot gate; every
-    # demotion below keeps a gated proxy for the code it shares:
-    #  - fuse_keep_a_offset: 11th fusion/metadata re-cert — 10 remain
-    #    in the window (>= 10 per the r4 ask), fusion.py untouched
     "fuse_keep_a_offset",
-    #  - clean_corpus: driver-green r3+r4; its four component gates
-    #    (doc_quality path, dedup components, token cap) are certified
-    #    through the gated doc_* and dedup_components_star slots
     "clean_corpus",
-    #  - hex_rollup: the r5 half-up hex-id unification is certified by
-    #    the still-gated image_hex_rollup + events_cell_trend +
-    #    hex_radius_join_150m (same id surface, same round)
     "hex_rollup",
-    #  - s2_radius_join_150m: index/s2.py untouched this round; the
-    #    shared salting/cell_counts change is certified by the two
-    #    gated sibling strategies that must (and do) produce the
-    #    identical 14,931-row result on the same oracle
     "s2_radius_join_150m",
-    #  - ann_cosine_topk: the touched _qmatrix kernel is certified by
-    #    the gated dedup_embedding_cosine (same quantized matmul);
-    #    _block_topk's top-k heap keeps its pytest differential vs the
-    #    SQL brute force and driver_sim replays the oracle every round
     "ann_cosine_topk",
-    # demoted when overlay_area_join (new, needs driver certification)
-    # took an oracle-backed slot: doc_pack_sequences' pack_documents
-    # kernel runs INSIDE the gated doc_pretrain_pack with the same
-    # (budget=512, group=100) parameters and a stricter end-to-end
-    # oracle, so the machinery stays driver-certified
     "doc_pack_sequences",
-    # demoted when icetable_lifecycle (new, needs driver certification)
-    # took an oracle-backed slot: idw_sites_150m shares its ENTIRE
-    # machinery (site grid, 150m neighborhood radius join, shared skew
-    # pass) with the still-gated kde_sites_150m — only the final weight
-    # formula differs — and driver_sim replays its oracle every round
     "idw_sites_150m",
-    # demoted when events_trajectory_hausdorff (new, needs driver
-    # certification) took an oracle-backed slot: geohash_cells' encode
-    # runs INSIDE the still-gated geohash_rollup (the rollup groups the
-    # same per-row cell ids), plus published-test-vector pytest anchors
     "geohash_cells",
-    # demoted when image_shard_pack (new, needs driver certification)
-    # took an oracle-backed slot: tile_heatmap's z9 raster IS the base
-    # level of the still-gated tile_heatmap_pyramid (the pyramid derives
-    # z8/z7 from it, so a wrong base level hash-mismatches the gated
-    # query), and driver_sim replays its oracle every round
     "tile_heatmap",
 ]
 
@@ -258,36 +136,34 @@ def layers(spark: SparkSession, sf_dir: str):
     return materialized_layers(spark, sf_dir)
 
 
-# One skew-detection pass per (session, dataset, strategy) for the whole
-# suite: the r4 bench showed each J5 strategy query re-running its own
-# hot-cell counts scan over the same build layer ON EVERY invocation
-# (bench repeats each query 5x).  Salting only steers placement — a
-# cached hot set can never change output — so the memo is purely the
-# amortization VERDICT r4 asked for (spatial_join.build_hot_cells).
+# One skew-detection pass per (session, dataset, cell scheme) for the
+# whole suite: without it each J5 query re-runs its own hot-cell counts
+# scan over the same build layer ON EVERY invocation (bench repeats each
+# query 5x).  Salting only steers placement — a cached hot set can never
+# change output — so the memo is pure amortization
+# (spatial_join.build_hot_cells).
 _HOT_CACHE: dict = {}
 
 
 def _hot_for(
     spark,
     sf_dir: str,
-    strategy: str,
+    cells: CellScheme,
     build: DataFrame,
     radius_m: float,
     layer: str = "poi_b",
 ):
-    from fagi_gis_spark.operators.spatial_join import build_hot_cells
-
     app = spark.sparkContext.applicationId
     # evict entries from stopped sessions: their DataFrames reference dead
     # contexts and would otherwise pin memory for the process lifetime
     for k in [k for k in _HOT_CACHE if k[0] != app]:
         del _HOT_CACHE[k]
     # ``layer`` names the build side in the key — two queries sharing a
-    # (strategy, radius) but building on different layers must not read
+    # (scheme, radius) but building on different layers must not read
     # each other's hot sets
-    key = (app, sf_dir, strategy, radius_m, layer)
+    key = (app, sf_dir, cells.name, radius_m, layer)
     if key not in _HOT_CACHE:
-        _HOT_CACHE[key] = build_hot_cells(build, radius_m, strategy=strategy)
+        _HOT_CACHE[key] = build_hot_cells(build, radius_m, cells=cells)
     return _HOT_CACHE[key]
 
 
@@ -627,22 +503,20 @@ _DIST = (
 )
 
 
-@register(
-    "radius_join_150m",
-    _o(
-        "SELECT a.subject AS node_a, b.subject AS node_b,\n"
-        f"       round({_DIST}, 4) AS dist_m_r\n"
-        "FROM poi_a a, poi_b b\n"
-        f"WHERE {_DIST} <= 150.0"
-    ),
+# One oracle for all three cell schemes: they are output-identical.
+_RADIUS_150M_ORACLE = _o(
+    "SELECT a.subject AS node_a, b.subject AS node_b,\n"
+    f"       round({_DIST}, 4) AS dist_m_r\n"
+    "FROM poi_a a, poi_b b\n"
+    f"WHERE {_DIST} <= 150.0"
 )
-def radius_join_150m(spark, sf_dir):
-    from fagi_gis_spark.operators.spatial_join import radius_join
 
+
+def _radius_join_150m(spark, sf_dir, cells: CellScheme):
     L = layers(spark, sf_dir)
     out = radius_join(
-        L["poi_a"], L["poi_b"], 150.0,
-        hot_cells=_hot_for(spark, sf_dir, "tile", L["poi_b"], 150.0),
+        L["poi_a"], L["poi_b"], 150.0, cells=cells,
+        hot_cells=_hot_for(spark, sf_dir, cells, L["poi_b"], 150.0),
     )
     return out.select(
         F.col("l_key").alias("node_a"),
@@ -651,63 +525,27 @@ def radius_join_150m(spark, sf_dir):
     )
 
 
-@register(
-    "hex_radius_join_150m",
-    _o(
-        "SELECT a.subject AS node_a, b.subject AS node_b,\n"
-        f"       round({_DIST}, 4) AS dist_m_r\n"
-        "FROM poi_a a, poi_b b\n"
-        f"WHERE {_DIST} <= 150.0"
-    ),
-)
+@register("radius_join_150m", _RADIUS_150M_ORACLE)
+def radius_join_150m(spark, sf_dir):
+    """J5 over square WebMercator z-tiles (ring-1, 9 candidate cells)."""
+    return _radius_join_150m(spark, sf_dir, TILE)
+
+
+@register("hex_radius_join_150m", _RADIUS_150M_ORACLE)
 def hex_radius_join_150m(spark, sf_dir):
-    """J5 via the aperture-7 hex grid (operators/spatial_join.py
-    hex_radius_join): 7-cell gridDisk(1) candidates instead of 9 square
-    ring-1 tiles, hex assignment entirely in whole-stage codegen
-    (floor(x+0.5) half-up — the one rounding rule shared by every hex
-    surface, see hexgrid.hex_round_np). Output-identical to
-    radius_join_150m — same brute-force DuckDB oracle."""
-    from fagi_gis_spark.operators.spatial_join import hex_radius_join
-
-    L = layers(spark, sf_dir)
-    out = hex_radius_join(
-        L["poi_a"], L["poi_b"], 150.0,
-        hot_cells=_hot_for(spark, sf_dir, "hex", L["poi_b"], 150.0),
-    )
-    return out.select(
-        F.col("l_key").alias("node_a"),
-        F.col("r_key").alias("node_b"),
-        F.round(F.col("dist_m"), 4).alias("dist_m_r"),
-    )
+    """J5 via the aperture-7 hex grid: 7-cell gridDisk(1) candidates
+    instead of 9 square ring-1 tiles, hex assignment entirely in
+    whole-stage codegen (the half-up rule every hex surface shares, see
+    hexgrid.hex_round_np)."""
+    return _radius_join_150m(spark, sf_dir, HEX)
 
 
-@register(
-    "s2_radius_join_150m",
-    _o(
-        "SELECT a.subject AS node_a, b.subject AS node_b,\n"
-        f"       round({_DIST}, 4) AS dist_m_r\n"
-        "FROM poi_a a, poi_b b\n"
-        f"WHERE {_DIST} <= 150.0"
-    ),
-)
+@register("s2_radius_join_150m", _RADIUS_150M_ORACLE)
 def s2_radius_join_150m(spark, sf_dir):
-    """J5 over the real S2 curve (spatial_join.s2_radius_join): build
-    keys by S2 cell at the kMinWidth-derived level, probes explode the
-    9-cell cross-face-wrapped neighborhood — sphere-native (no seam or
-    polar cases). Output-identical to radius_join_150m; same brute-force
-    DuckDB oracle."""
-    from fagi_gis_spark.operators.spatial_join import s2_radius_join
-
-    L = layers(spark, sf_dir)
-    out = s2_radius_join(
-        L["poi_a"], L["poi_b"], 150.0,
-        hot_cells=_hot_for(spark, sf_dir, "s2", L["poi_b"], 150.0),
-    )
-    return out.select(
-        F.col("l_key").alias("node_a"),
-        F.col("r_key").alias("node_b"),
-        F.round(F.col("dist_m"), 4).alias("dist_m_r"),
-    )
+    """J5 over the real S2 curve: build keys by S2 cell at the
+    kMinWidth-derived level, probes explode the 9-cell cross-face-wrapped
+    neighborhood — sphere-native (no seam or polar cases)."""
+    return _radius_join_150m(spark, sf_dir, S2)
 
 
 @register(
@@ -728,7 +566,7 @@ def knn_conflation(spark, sf_dir):
     L = layers(spark, sf_dir)
     out = knn_join(
         L["poi_a"], L["poi_b"], k=3, radius_m=300.0,
-        hot_cells=_hot_for(spark, sf_dir, "tile", L["poi_b"], 300.0),
+        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], 300.0),
     )
     return out.select(
         F.col("l_key").alias("node_a"),
@@ -1877,13 +1715,11 @@ def hex_cells(spark, sf_dir):
     but NOT H3 ids, hence the ``cell_hex7_r*`` column names;
     index/hexgrid.py) at res 9 and res 8 — closed-form DuckDB oracle
     replays the exact basis constants and the unified half-up rounding."""
-    from fagi_gis_spark.functions.geo_udfs import u_hex_cell8, u_hex_cell9
-
     L = layers(spark, sf_dir)
     return L["poi_a"].select(
         "subject",
-        u_hex_cell9(F.col("lon"), F.col("lat")).alias("cell_hex7_r9"),
-        u_hex_cell8(F.col("lon"), F.col("lat")).alias("cell_hex7_r8"),
+        hex_cell_col(F.col("lon"), F.col("lat"), 9).alias("cell_hex7_r9"),
+        hex_cell_col(F.col("lon"), F.col("lat"), 8).alias("cell_hex7_r8"),
     )
 
 
@@ -2035,17 +1871,14 @@ def _hex_rollup_oracle() -> str:
 def hex_rollup(spark, sf_dir):
     """Hierarchical rollup on the aperture-7 hierarchy: res-9 cells
     aggregated to their TRUE res-8 parents (hex children don't nest, so
-    the parent is real arithmetic — spatial_join.hex_parent_cols, all
-    JVM) with a partial-agg -> exchange -> final-agg count."""
-    from fagi_gis_spark.functions.geo_udfs import u_hex_cell9
-    from fagi_gis_spark.operators.spatial_join import hex_parent_cols
-
+    the parent is real arithmetic — hexgrid.hex_parent_col, all JVM)
+    with a partial-agg -> exchange -> final-agg count."""
     L = layers(spark, sf_dir)
     cells = L["poi_a"].select(
-        u_hex_cell9(F.col("lon"), F.col("lat")).alias("cell_hex7_r9")
+        hex_cell_col(F.col("lon"), F.col("lat"), 9).alias("cell_hex7_r9")
     )
     return (
-        cells.withColumn("parent_cell", hex_parent_cols(F.col("cell_hex7_r9"), 8))
+        cells.withColumn("parent_cell", hex_parent_col(F.col("cell_hex7_r9"), 8))
         .groupBy("parent_cell")
         .agg(F.count("*").alias("n"))
     )
@@ -2384,14 +2217,12 @@ def image_hex_rollup(spark, sf_dir):
     a parquet both engines read, so DuckDB replays geotag pmods + the
     unified half-up hex assignment end-to-end."""
     from fagi_gis_spark.operators.geotag import geotag_cols
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
 
     imgs = _ensure_images_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
     geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
-    q, r = _hex_qr_cols(F.col("lon"), F.col("lat"), 9)
     return (
-        geo.withColumn("cell_hex7", _hex_pack(q, r, 9))
+        geo.withColumn("cell_hex7", hex_cell_col(F.col("lon"), F.col("lat"), 9))
         .groupBy("cell_hex7")
         .agg(F.count("*").alias("n"))
     )
@@ -2484,14 +2315,12 @@ def image_shard_pack(spark, sf_dir):
     (image_id, phash, nbytes) parquet."""
     from fagi_gis_spark.operators.geotag import geotag_cols
     from fagi_gis_spark.operators.multimodal import shard_pack
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
 
     imgs = _ensure_images_shard_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
     geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
-    q, r = _hex_qr_cols(F.col("lon"), F.col("lat"), 4)
-    cells = geo.withColumn("cell_hex7", _hex_pack(q, r, 4)).select(
-        "cell_hex7", "image_id", "nbytes"
+    cells = geo.select(
+        hex_cell_col(F.col("lon"), F.col("lat"), 4).alias("cell_hex7"), "image_id", "nbytes"
     )
     return shard_pack(cells, budget_bytes=8192)
 
@@ -2553,15 +2382,13 @@ def image_exif_geotag(spark, sf_dir):
     VirtuosoImporter.java); here the coordinate rides inside the image
     payload, as a real image+caption corpus would deliver it."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
     from fagi_gis_spark.sources.images import generate_images
 
     _ensure_images_oracle(spark)  # the oracle replays from (id, phash)
     parsed = exif_geotags(generate_images(spark, 1000, partitions=8))
     lon = F.col("lon_microdeg") / F.lit(1e6)
     lat = F.col("lat_microdeg") / F.lit(1e6)
-    q, r = _hex_qr_cols(lon, lat, 9)
-    return parsed.withColumn("cell_hex7", _hex_pack(q, r, 9))
+    return parsed.withColumn("cell_hex7", hex_cell_col(lon, lat, 9))
 
 
 @register("image_quality_filter")  # codec-side decode: rows-only
@@ -2664,7 +2491,6 @@ def image_exif_poi_join(spark, sf_dir):
     side); the oracle replays the probe coordinates from (id, phash)
     and the full cross-distance filter in SQL."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.operators.spatial_join import radius_join
     from fagi_gis_spark.sources.images import generate_images
 
     _ensure_images_oracle(spark)
@@ -2680,7 +2506,7 @@ def image_exif_poi_join(spark, sf_dir):
         L["poi_a"],
         1500.0,
         left_cols=("image_id", "lon", "lat"),
-        hot_cells=_hot_for(spark, sf_dir, "tile", L["poi_a"], 1500.0, layer="poi_a"),
+        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_a"], 1500.0, layer="poi_a"),
     )
     return out.select(
         F.col("l_key").alias("image_id"),
@@ -3784,12 +3610,11 @@ def kde_sites_150m(spark, sf_dir):
     aggregation — the continuous-surface companion to the cell-binned
     Gi*/LISA statistics.  Zero-neighbor sites emit density 0."""
     from fagi_gis_spark.operators.interpolate import kde_at_sites
-    from fagi_gis_spark.operators.spatial_join import radius_join
 
     L = layers(spark, sf_dir)
     pairs = radius_join(
         L["poi_a"], L["poi_b"], _INTERP_RADIUS_M,
-        hot_cells=_hot_for(spark, sf_dir, "tile", L["poi_b"], _INTERP_RADIUS_M),
+        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], _INTERP_RADIUS_M),
     )
     return kde_at_sites(pairs, L["poi_b"], _INTERP_RADIUS_M)
 
@@ -3819,12 +3644,11 @@ def idw_sites_150m(spark, sf_dir):
     engines aggregate exact integers in any order; the weighted mean is
     one division of the two sums."""
     from fagi_gis_spark.operators.interpolate import idw_at_sites
-    from fagi_gis_spark.operators.spatial_join import radius_join
 
     L = layers(spark, sf_dir)
     pairs = radius_join(
         L["poi_a"], L["poi_b"], _INTERP_RADIUS_M,
-        hot_cells=_hot_for(spark, sf_dir, "tile", L["poi_b"], _INTERP_RADIUS_M),
+        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], _INTERP_RADIUS_M),
     )
     vals = L["poi_a"].select(
         F.col("subject").alias("l_key"), (F.col("k") % 100).alias("v")
@@ -4984,14 +4808,12 @@ def _image_shard_cells(spark) -> "DataFrame":
     """(cell_hex7, image_id, nbytes, is_new) of the whole corpus — the
     geotag + res-4 hex assignment both shard-pack queries run."""
     from fagi_gis_spark.operators.geotag import geotag_cols
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
 
     imgs = _ensure_images_shard_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
     geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
-    q, r = _hex_qr_cols(F.col("lon"), F.col("lat"), 4)
     return geo.select(
-        _hex_pack(q, r, 4).alias("cell_hex7"),
+        hex_cell_col(F.col("lon"), F.col("lat"), 4).alias("cell_hex7"),
         "image_id",
         F.col("nbytes").cast("long").alias("nbytes"),
         (F.pmod(F.col("phash"), F.lit(_SHARD_SPLIT_MOD)) == 0).alias("is_new"),

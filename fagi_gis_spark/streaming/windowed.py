@@ -106,17 +106,16 @@ def stream_hex_cell_counts(
 ) -> DataFrame:
     """Live spatial rollup: watermarked tumbling-window counts per
     aperture-7 hex cell.  The hex assignment is the same whole-stage-
-    codegen column math the batch join uses (spatial_join._hex_qr_cols),
+    codegen column math the batch join uses (hexgrid.hex_cell_col),
     so it applies unchanged to a readStream source; state is bounded by
     the watermark x occupied-cell count.  Hex rounding is the single
     half-up rule every surface shares (hexgrid.hex_round_np), so ids
     from this stream equi-join safely against batch/Arrow/oracle hex
     ids, exact-tie boundary points included."""
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col
 
-    q, r = _hex_qr_cols(F.col(lon_col), F.col(lat_col), res)
     s = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
-        "cell_hex7", _hex_pack(q, r, res)
+        "cell_hex7", hex_cell_col(F.col(lon_col), F.col(lat_col), res)
     )
     return (
         s.withWatermark(ts_col, watermark)

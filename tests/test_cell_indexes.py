@@ -349,14 +349,13 @@ def test_hex_rounding_single_rule_on_exact_ties(spark):
     """One half-up rule for every hex surface (VERDICT r4 ask #3): on
     EXACT .5-residue axial ties — the inputs where banker's and half-up
     disagree — the numpy path (hex_cell_np family), the JVM column path
-    (_cube_round_cols, used by joins/geotag/streaming), and the DuckDB
+    (hex_round_cols, used by joins/geotag/streaming), and the DuckDB
     oracle replay (hex_round_sql) all produce the same rounded axial
     pair."""
     import duckdb
     import numpy as np
 
-    from fagi_gis_spark.index.hexgrid import hex_round_np, hex_round_sql
-    from fagi_gis_spark.operators.spatial_join import _cube_round_cols
+    from fagi_gis_spark.index.hexgrid import hex_round_cols, hex_round_np, hex_round_sql
 
     ties = [
         (0.5, 0.25), (1.5, 0.25), (2.5, 0.25), (-0.5, 0.25), (-1.5, 0.25),
@@ -369,7 +368,7 @@ def test_hex_rounding_single_rule_on_exact_ties(spark):
     nq, nr = hex_round_np(qf, rf)
 
     df = spark.createDataFrame(list(ties), "qf double, rf double")
-    jq, jr = _cube_round_cols(F.col("qf"), F.col("rf"))
+    jq, jr = hex_round_cols(F.col("qf"), F.col("rf"))
     jvm = df.select(jq.alias("q"), jr.alias("r")).toPandas()
 
     con = duckdb.connect()
@@ -383,13 +382,12 @@ def test_hex_rounding_single_rule_on_exact_ties(spark):
 
 
 def test_hex_id_equality_across_surfaces(spark):
-    """End-to-end: the geotag/stream JVM hex id (_hex_qr_cols+_hex_pack)
+    """End-to-end: the geotag/stream JVM hex id (hexgrid.hex_cell_col)
     equals the Arrow/numpy id (hex_cell_np) for a dense point sweep
     crossing many cell boundaries — the two id families are now ONE."""
     import numpy as np
 
-    from fagi_gis_spark.index.hexgrid import hex_cell_np
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col, hex_cell_np
 
     rng = np.random.default_rng(11)
     lon = np.concatenate([rng.uniform(-179, 179, 4000), np.linspace(4.99, 5.01, 1000)])
@@ -399,8 +397,8 @@ def test_hex_id_equality_across_surfaces(spark):
         df = spark.createDataFrame(
             [(float(a), float(b)) for a, b in zip(lon, lat)], "lon double, lat double"
         )
-        q, r = _hex_qr_cols(F.col("lon"), F.col("lat"), res)
-        got = df.select(_hex_pack(q, r, res).alias("cell")).toPandas()["cell"].to_numpy()
+        cell = hex_cell_col(F.col("lon"), F.col("lat"), res)
+        got = df.select(cell.alias("cell")).toPandas()["cell"].to_numpy()
         assert (want == got).all(), res
 
 

@@ -31,7 +31,7 @@ def test_salted_radius_join_equals_unsalted(spark):
     )
 
     plain = radius_join(left, right, 50.0).select("l_key", "r_key").toPandas()
-    salted = radius_join(left, right, 50.0, salt_threshold=100, n_salt=8).select(
+    salted = radius_join(left, right, 50.0, salt_threshold=100).select(
         "l_key", "r_key"
     ).toPandas()
     a = set(map(tuple, plain.itertuples(index=False)))
@@ -75,17 +75,14 @@ def test_auto_salting_is_adaptive(spark):
 
 @pytest.mark.parametrize("strategy", ["tile", "hex", "s2"])
 def test_salting_shared_across_strategies(spark, strategy):
-    """Hot-cell salting is wired into ALL three radius-join strategies
-    (r3 gap: hex/S2 had none): on a skewed fixture (one cell >10x the
-    mean) each strategy's salted join equals its unsalted join row-for-
-    row, and the executed plan really contains the salt key."""
-    from fagi_gis_spark.operators.spatial_join import (
-        hex_radius_join,
-        radius_join,
-        s2_radius_join,
-    )
+    """Hot-cell salting is wired into ALL three cell schemes: on a
+    skewed fixture (one cell >10x the mean) each scheme's salted join
+    equals its unsalted join row-for-row, and the executed plan really
+    contains the salt key."""
+    from fagi_gis_spark.operators import spatial_join
+    from fagi_gis_spark.operators.spatial_join import radius_join
 
-    fn = {"tile": radius_join, "hex": hex_radius_join, "s2": s2_radius_join}[strategy]
+    cells = getattr(spatial_join, strategy.upper())
     # hot pile in one cell + singleton-cell tail so mean << max
     left = spark.range(2000).select(
         F.concat(F.lit("h"), F.col("id")).alias("subject"),
@@ -100,8 +97,8 @@ def test_salting_shared_across_strategies(spark, strategy):
     )
     right = left.withColumn("lon", F.col("lon") + 0.00002)
 
-    plain = fn(left, right, 50.0, salt_threshold=None)
-    salted = fn(left, right, 50.0, salt_threshold=100, n_salt=8)
+    plain = radius_join(left, right, 50.0, cells=cells, salt_threshold=None)
+    salted = radius_join(left, right, 50.0, cells=cells, salt_threshold=100)
     assert "salt" in salted._jdf.queryExecution().executedPlan().toString()
     a = set(map(tuple, plain.select("l_key", "r_key").toPandas().itertuples(index=False)))
     b = set(map(tuple, salted.select("l_key", "r_key").toPandas().itertuples(index=False)))
@@ -110,10 +107,10 @@ def test_salting_shared_across_strategies(spark, strategy):
 
 
 def test_knn_join_strategy_kwarg_routing(spark):
-    """knn_join drops resolution kwargs that belong to a different
-    strategy (z/res/level) instead of raising, and still rejects kwargs
-    no strategy accepts."""
-    from fagi_gis_spark.operators.spatial_join import knn_join
+    """knn_join forwards ``cells`` and its kwargs to radius_join: the S2
+    scheme returns the tile result, and a kwarg radius_join does not
+    accept still raises."""
+    from fagi_gis_spark.operators.spatial_join import S2, knn_join
 
     pts = spark.range(50).select(
         F.concat(F.lit("p"), F.col("id")).alias("subject"),
@@ -122,11 +119,10 @@ def test_knn_join_strategy_kwarg_routing(spark):
     )
     base = knn_join(pts, pts, k=2, radius_m=100.0, exclude_self=True)
     routed = knn_join(
-        pts, pts, k=2, radius_m=100.0, exclude_self=True, strategy="s2",
-        z=12, salt_threshold=None,  # z is tile-only: dropped for s2
+        pts, pts, k=2, radius_m=100.0, exclude_self=True, cells=S2, salt_threshold=None
     )
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, routed.collect()))
-    with pytest.raises(TypeError, match="no strategy accepts"):
+    with pytest.raises(TypeError, match="bogus_knob"):
         knn_join(pts, pts, k=2, radius_m=100.0, bogus_knob=1)
 
 
@@ -191,12 +187,16 @@ def test_stateful_streaming_sessionize(spark, tmp_path):
     assert g == e
 
 
-def test_radius_join_antimeridian_and_polar(spark):
+@pytest.mark.parametrize("scheme", ["tile", "hex", "s2"])
+def test_radius_join_antimeridian_and_polar(spark, scheme):
     """Points straddling lon ±180 (and near the WebMercator lat clamp)
     must round-trip the cell-bucketed radius join against a brute-force
-    wrapped-distance oracle — the ring-1 x offset wraps modulo 2^z and
-    tile_y is clamped, so the seam behaves like any other meridian."""
+    wrapped-distance oracle in every cell scheme — the tile ring-1 x
+    offset wraps modulo 2^z and tile_y is clamped, the hex probe adds
+    its lon-shifted frame near the seam, and the S2 cube has no seam,
+    so the seam behaves like any other meridian."""
     from fagi_gis_spark.geometry.measures import DEG_TO_M
+    from fagi_gis_spark.operators import spatial_join
     from fagi_gis_spark.operators.spatial_join import radius_join
 
     rows = []
@@ -208,7 +208,8 @@ def test_radius_join_antimeridian_and_polar(spark):
     rows += [("c1", 10.0, 10.0), ("c2", 10.00005, 10.0), ("far", 90.0, 0.0)]
     df = spark.createDataFrame(rows, "subject string, lon double, lat double")
 
-    got = radius_join(df, df, 50.0).select("l_key", "r_key").toPandas()
+    cells = getattr(spatial_join, scheme.upper())
+    got = radius_join(df, df, 50.0, cells=cells).select("l_key", "r_key").toPandas()
     got_pairs = {(a, b) for a, b in got.itertuples(index=False) if a != b}
 
     import math
@@ -433,7 +434,7 @@ def test_hex_radius_join_randomized_equals_bruteforce(spark):
     across the antimeridian seam and at high latitude."""
     import numpy as np
 
-    from fagi_gis_spark.operators.spatial_join import hex_radius_join
+    from fagi_gis_spark.operators.spatial_join import HEX, radius_join
 
     rng = np.random.default_rng(77)
     windows = [(rng.uniform(-170, 170), rng.uniform(-55, 55)) for _ in range(3)]
@@ -448,7 +449,7 @@ def test_hex_radius_join_randomized_equals_bruteforce(spark):
         df = spark.createDataFrame(rows, "subject string, lon double, lat double")
         got = {
             (a, b)
-            for a, b in hex_radius_join(df, df, radius)
+            for a, b in radius_join(df, df, radius, cells=HEX)
             .select("l_key", "r_key")
             .toPandas()
             .itertuples(index=False)
@@ -467,7 +468,7 @@ def test_hex_radius_join_equals_square_cell_join(spark):
     square ring-1 produce identical (pair, dist) outputs."""
     import numpy as np
 
-    from fagi_gis_spark.operators.spatial_join import hex_radius_join, radius_join
+    from fagi_gis_spark.operators.spatial_join import HEX, radius_join
 
     rng = np.random.default_rng(5150)
     n = 250
@@ -475,7 +476,7 @@ def test_hex_radius_join_equals_square_cell_join(spark):
     lats = 37.9 + rng.uniform(0, 0.05, n)
     rows = [(f"p{i}", float(lons[i]), float(lats[i])) for i in range(n)]
     df = spark.createDataFrame(rows, "subject string, lon double, lat double")
-    hexed = hex_radius_join(df, df, 150.0).select("l_key", "r_key", "dist_m").toPandas()
+    hexed = radius_join(df, df, 150.0, cells=HEX).select("l_key", "r_key", "dist_m").toPandas()
     squared = radius_join(df, df, 150.0).select("l_key", "r_key", "dist_m").toPandas()
     key = lambda t: (t.l_key, t.r_key, round(t.dist_m, 9))  # noqa: E731
     assert {key(t) for t in hexed.itertuples()} == {key(t) for t in squared.itertuples()}
@@ -488,9 +489,10 @@ def test_hex_radius_join_wider_disk_still_complete(spark):
     import numpy as np
 
     from fagi_gis_spark.operators.spatial_join import (
+        HEX,
         hex_disk_k_for,
-        hex_radius_join,
         hex_res_for_radius,
+        radius_join,
     )
 
     rng = np.random.default_rng(99)
@@ -510,7 +512,7 @@ def test_hex_radius_join_wider_disk_still_complete(spark):
         assert hex_disk_k_for(radius, res) >= 2
         got = {
             (a, b)
-            for a, b in hex_radius_join(df, df, radius, res=res)
+            for a, b in radius_join(df, df, radius, cells=HEX, res=res)
             .select("l_key", "r_key")
             .toPandas()
             .itertuples(index=False)
@@ -525,9 +527,10 @@ def test_hex_res_auto_scales_with_density(spark):
     import numpy as np
 
     from fagi_gis_spark.operators.spatial_join import (
-        hex_radius_join,
+        HEX,
         hex_res_auto,
         hex_res_for_radius,
+        radius_join,
     )
 
     base = hex_res_for_radius(150.0)
@@ -545,7 +548,7 @@ def test_hex_res_auto_scales_with_density(spark):
     expect = {(f"p{i}", f"p{j}") for i, j in zip(*np.nonzero(d <= 150.0))}
     got = {
         (a, b)
-        for a, b in hex_radius_join(df, df, 150.0, res="auto")
+        for a, b in radius_join(df, df, 150.0, cells=HEX, res="auto")
         .select("l_key", "r_key")
         .toPandas()
         .itertuples(index=False)
@@ -560,7 +563,7 @@ def test_s2_radius_join_randomized_completeness(spark):
     the kMinWidth level bound carry the completeness proof."""
     import numpy as np
 
-    from fagi_gis_spark.operators.spatial_join import s2_radius_join
+    from fagi_gis_spark.operators.spatial_join import S2, radius_join
 
     rng = np.random.default_rng(31)
     windows = [
@@ -579,7 +582,7 @@ def test_s2_radius_join_randomized_completeness(spark):
         df = spark.createDataFrame(rows, "subject string, lon double, lat double")
         got = {
             (a, b)
-            for a, b in s2_radius_join(df, df, radius)
+            for a, b in radius_join(df, df, radius, cells=S2)
             .select("l_key", "r_key")
             .toPandas()
             .itertuples(index=False)
@@ -698,6 +701,7 @@ def test_knn_join_strategy_equivalence(spark):
     output-identical contract carried through the top-k consumer."""
     import numpy as np
 
+    from fagi_gis_spark.operators import spatial_join
     from fagi_gis_spark.operators.spatial_join import knn_join
 
     rng = np.random.default_rng(41)
@@ -709,7 +713,8 @@ def test_knn_join_strategy_equivalence(spark):
     df = spark.createDataFrame(rows, "subject string, lon double, lat double")
     results = {}
     for strat in ("tile", "hex", "s2"):
-        out = knn_join(df, df, k=3, radius_m=400.0, exclude_self=True, strategy=strat)
+        cells = getattr(spatial_join, strat.upper())
+        out = knn_join(df, df, k=3, radius_m=400.0, exclude_self=True, cells=cells)
         results[strat] = {
             (r.l_key, r.r_key, r.knn_rank) for r in out.collect()
         }
@@ -740,7 +745,7 @@ def test_precomputed_hot_cells_matches_detection(spark):
     """build_hot_cells run ONCE and passed via hot_cells= must produce
     the same salted plan and identical rows as per-join detection — the
     suite-level amortization contract (VERDICT r4 ask #1)."""
-    from fagi_gis_spark.operators.spatial_join import build_hot_cells, radius_join
+    from fagi_gis_spark.operators.spatial_join import TILE, build_hot_cells, radius_join
 
     left = spark.range(2000).select(
         F.concat(F.lit("h"), F.col("id")).alias("subject"),
@@ -755,7 +760,7 @@ def test_precomputed_hot_cells_matches_detection(spark):
     )
     right = left.withColumn("lon", F.col("lon") + 0.00002)
 
-    hot = build_hot_cells(right, 50.0, strategy="tile", salt_threshold=100)
+    hot = build_hot_cells(right, 50.0, cells=TILE, salt_threshold=100)
     assert hot is not None  # the pile really registers as hot
     pre = radius_join(left, right, 50.0, salt_threshold=100, hot_cells=hot)
     det = radius_join(left, right, 50.0, salt_threshold=100)
@@ -771,7 +776,7 @@ def test_precomputed_hot_cells_matches_detection(spark):
         (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
         (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
     )
-    assert build_hot_cells(uniform, 50.0, strategy="tile") is None
+    assert build_hot_cells(uniform, 50.0, cells=TILE) is None
     plain = radius_join(uniform, uniform, 50.0, hot_cells=None)
     assert "salt" not in plain._jdf.queryExecution().executedPlan().toString()
 

@@ -246,7 +246,7 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
 def test_stream_hex_cell_counts_matches_batch(spark, tmp_path):
     """Streaming hex-cell rollup == batch groupBy on the same events
     (coords hash-synthesized from event_id, the layers' lattice trick)."""
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col
     from fagi_gis_spark.streaming.windowed import (
         start_memory_sink,
         stream_hex_cell_counts,
@@ -273,10 +273,9 @@ def test_stream_hex_cell_counts_matches_batch(spark, tmp_path):
             "SELECT cell_hex7, sum(n) AS n FROM hex_out GROUP BY cell_hex7"
         ).collect()
     }
-    qc, rc = _hex_qr_cols(F.col("lon"), F.col("lat"), 9)
     expect = {
         (r.cell_hex7, r.n)
-        for r in batch.withColumn("cell_hex7", _hex_pack(qc, rc, 9))
+        for r in batch.withColumn("cell_hex7", hex_cell_col(F.col("lon"), F.col("lat"), 9))
         .groupBy("cell_hex7")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -289,7 +288,7 @@ def test_stream_image_hex_rollup_matches_batch(spark, tmp_path):
     pHash-geotagged hex rollup over a readStream of input_hint image
     rows equals the batch geotag + groupBy on the same rows."""
     from fagi_gis_spark.operators.geotag import geotag_cols
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col
     from fagi_gis_spark.sources.images import generate_images
     from fagi_gis_spark.streaming.windowed import (
         start_memory_sink,
@@ -320,10 +319,9 @@ def test_stream_image_hex_rollup_matches_batch(spark, tmp_path):
     }
     lon, lat = geotag_cols(F.col("phash"))
     geo = batch.withColumn("lon", lon).withColumn("lat", lat)
-    qc, rc = _hex_qr_cols(F.col("lon"), F.col("lat"), 9)
     expect = {
         (r.cell_hex7, r.n)
-        for r in geo.withColumn("cell_hex7", _hex_pack(qc, rc, 9))
+        for r in geo.withColumn("cell_hex7", hex_cell_col(F.col("lon"), F.col("lat"), 9))
         .groupBy("cell_hex7")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -505,7 +503,7 @@ def test_stream_exif_hex_rollup_matches_batch(spark, tmp_path):
     path on the same rows — and equals the pHash-geotag rollup, since
     the generator embeds the pHash-seeded coordinate as the EXIF GPS."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.operators.spatial_join import _hex_pack, _hex_qr_cols
+    from fagi_gis_spark.index.hexgrid import hex_cell_col
     from fagi_gis_spark.sources.images import generate_images
     from fagi_gis_spark.streaming.windowed import (
         start_memory_sink,
@@ -538,10 +536,9 @@ def test_stream_exif_hex_rollup_matches_batch(spark, tmp_path):
     parsed = exif_geotags(batch.select("image_id", "bytes"))
     lon = F.col("lon_microdeg") / F.lit(1e6)
     lat = F.col("lat_microdeg") / F.lit(1e6)
-    qc, rc = _hex_qr_cols(lon, lat, 9)
     expect = {
         (r.cell_hex7, r.n)
-        for r in parsed.withColumn("cell_hex7", _hex_pack(qc, rc, 9))
+        for r in parsed.withColumn("cell_hex7", hex_cell_col(lon, lat, 9))
         .groupBy("cell_hex7")
         .agg(F.count("*").alias("n"))
         .collect()

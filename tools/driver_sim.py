@@ -8,13 +8,15 @@ Usage: python tools/driver_sim.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -51,7 +53,8 @@ def main():
     import __spark_entry__ as E
     from fagi_gis_spark.session import get_spark
 
-    spark = get_spark("driver-sim", cores=8, shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark("driver-sim", cores=cores, shuffle_partitions=8)
 
     t0 = time.time()
     edf = E.entry(spark)

@@ -9,10 +9,12 @@ Usage: python tools/explain_audit.py [sf_dir] [out_md]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 AUDIT = [
     ("radius_join_150m", "cell-bucketed radius join (ring-1 + plan-internal auto salting)"),
@@ -69,16 +71,17 @@ AUDIT = [
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLANS.md"
+    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PLANS.md")
 
     from fagi_gis_spark import registry
     from fagi_gis_spark.session import get_spark
 
-    spark = get_spark("plan-audit", cores=8, shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark("plan-audit", cores=cores, shuffle_partitions=8)
     qs = registry.queries()
     sections = [
         "# PLANS — physical plan audit of flagship queries\n",
-        f"Formatted plans at `{sf_dir}` (8 cores). What to check per plan:",
+        f"Formatted plans at `{sf_dir}` ({cores} cores). What to check per plan:",
         "`ReadSchema` is pruned to used columns; filters show under",
         "`PushedFilters`; small sides broadcast; Python appears only as",
         "`ArrowEvalPython`/`MapInPandas` refine/transform stages;",
