@@ -53,7 +53,7 @@ def run(sf_dir: str | None = None, cores: str | None = None, names=None) -> dict
     from fagi_gis_spark.session import get_spark
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = cores or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     spark = get_spark("bench", cores=cores)
 
     qs = registry.queries()

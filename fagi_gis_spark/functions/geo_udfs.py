@@ -9,7 +9,7 @@ assignment are pure JVM column expressions (see ``index.tiles``), so the
 PostGIS surface covered (SURVEY.md §2.8): ST_NPoints, ST_Centroid,
 ST_X/Y, ST_Translate, ST_Scale, GeomRotate/GeomResize (rotate/scale about
 centroid, /root/reference/fagi-gis/src/main/resources/schema.sql:97-104),
-GeometryType, ST_AsText canonicalization.
+GeometryType.
 """
 
 from __future__ import annotations
@@ -30,11 +30,6 @@ _CENTROID_SCHEMA = T.StructType(
 )
 
 
-@F.pandas_udf(T.LongType())
-def u_npoints(wkt: pd.Series) -> pd.Series:
-    return wkt.map(lambda s: npoints(parse_wkt(s)) if s is not None else 0).astype("int64")
-
-
 @F.pandas_udf(_CENTROID_SCHEMA)
 def u_centroid(wkt: pd.Series) -> pd.DataFrame:
     cx = np.full(len(wkt), np.nan)
@@ -49,22 +44,6 @@ def u_centroid(wkt: pd.Series) -> pd.DataFrame:
 
 
 @F.pandas_udf(T.StringType())
-def u_canon(wkt: pd.Series) -> pd.Series:
-    return wkt.map(lambda s: format_wkt(parse_wkt(s)) if s is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def u_gtype(wkt: pd.Series) -> pd.Series:
-    def _gt(s):
-        if not s:
-            return None
-        g = parse_wkt(s)  # None for EMPTY / unparseable input
-        return g.gtype if g is not None else None
-
-    return wkt.map(_gt)
-
-
-@F.pandas_udf(T.StringType())
 def u_translate(wkt: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
     out = []
     for s, a, b in zip(wkt, dx, dy):
@@ -72,30 +51,6 @@ def u_translate(wkt: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
             out.append(None)
             continue
         out.append(format_wkt(translate(parse_wkt(s), float(a), float(b)), prec=9))
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.StringType())
-def u_affine_about_centroid(
-    wkt: pd.Series, rot_deg: pd.Series, fscale: pd.Series, dx: pd.Series, dy: pd.Series
-) -> pd.Series:
-    """GeomRotate(rot) -> GeomResize(f) -> ST_Translate(dx,dy): the exact
-    pipeline of ShiftAToB/ShiftBToA (ShiftAToB.java:200-213; rotation is
-    degrees->radians as in schema.sql:103)."""
-    out = []
-    for s, r, f, a, b in zip(wkt, rot_deg, fscale, dx, dy):
-        if s is None:
-            out.append(None)
-            continue
-        g = parse_wkt(s)
-        r = float(r)
-        f = float(f)
-        if r != 0.0:
-            g = rotate_about(g, math.radians(r))
-        if f != 1.0:
-            g = scale_about(g, f, f)
-        g = translate(g, float(a), float(b))
-        out.append(format_wkt(g, prec=9))
     return pd.Series(out)
 
 
@@ -109,65 +64,6 @@ def u_scale_origin(wkt: pd.Series, f: pd.Series) -> pd.Series:
             out.append(None)
             continue
         out.append(format_wkt(scale_about(parse_wkt(s), float(ff), float(ff), origin=(0.0, 0.0)), prec=9))
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.StringType())
-def u_most_points(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """CASE WHEN ST_NPoints(a) >= ST_NPoints(b) THEN a ELSE b — one parse
-    pass over both geometries (KeepMostPointsTransformation.java:62-84)."""
-    out = []
-    for a, b in zip(wkt_a, wkt_b):
-        if a is None or b is None:
-            out.append(a if b is None else b)
-            continue
-        out.append(a if npoints(parse_wkt(a)) >= npoints(parse_wkt(b)) else b)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.StringType())
-def u_shift_pair(
-    wkt_src: pd.Series, wkt_dst: pd.Series,
-    shift_frac: pd.Series, rot_deg: pd.Series, fscale: pd.Series,
-) -> pd.Series:
-    """The full ShiftAToB/ShiftBToA pipeline in ONE Arrow pass: centroids
-    of both geometries, rotate/resize the source about its centroid, then
-    translate by shift_frac x centroid displacement
-    (ShiftAToB.java:190-232). Arithmetic is written to match the oracle's
-    expression tree exactly (s * (c_dst - c_src) per coordinate).
-
-    DELIBERATE DIVERGENCE (like the distance metric in with_scores): the
-    reference rotates AFTER ST_Transform to projected SRID 2249 (meters,
-    ShiftAToB.java:141), so its rotation is shape-preserving on the
-    ground; this engine rotates in lon/lat degree space, which is
-    anisotropic by ~cos(lat). For the test window (lat ~50-52°, geometries
-    <= ~30 m across) the shape difference is sub-centimeter; with no
-    projection library in the sandbox (pyproj absent, SURVEY §7 risk 2)
-    the degree-space rotation is the documented engine semantics, and the
-    differential tests replay THIS kernel, not the reference's."""
-    out = []
-    for s_w, d_w, s, r, f in zip(wkt_src, wkt_dst, shift_frac, rot_deg, fscale):
-        if s_w is None or d_w is None:
-            out.append(None)
-            continue
-        g = parse_wkt(s_w)
-        g_dst = parse_wkt(d_w)
-        if g is None or g_dst is None:
-            # EMPTY / unparseable WKT: emit a null row instead of letting
-            # centroid(None) kill the whole Spark task
-            out.append(None)
-            continue
-        cs = centroid(g)
-        cd = centroid(g_dst)
-        r = float(r)
-        f = float(f)
-        if r != 0.0:
-            g = rotate_about(g, math.radians(r))
-        if f != 1.0:
-            g = scale_about(g, f, f)
-        s = float(s)
-        g = translate(g, s * (cd[0] - cs[0]), s * (cd[1] - cs[1]))
-        out.append(format_wkt(g, prec=9))
     return pd.Series(out)
 
 
@@ -253,8 +149,16 @@ def u_shift_pre(
     re-parse. Also returns the fused centroid directly:
     rotate/scale about the source centroid leave it fixed, so
     c_out = c_src + s * (c_dst - c_src) — the oracle's exact expression
-    tree (ShiftAToB.java:190-232; see u_shift_pair for the degree-space
-    rotation note).
+    tree (ShiftAToB.java:190-232).
+
+    DELIBERATE DIVERGENCE by default (like the distance metric in
+    fusion.with_scores): the reference rotates AFTER ST_Transform to
+    projected SRID 2249 (meters, ShiftAToB.java:141), so its rotation is
+    shape-preserving on the ground; with ``metric`` false this kernel
+    rotates in lon/lat degree space, which is anisotropic by ~cos(lat).
+    For the test window (lat ~50-52°, geometries <= ~30 m across) the
+    shape difference is sub-centimeter, and the differential tests
+    replay the degree-space rotation.
 
     ``metric`` selects the reference's FULL GeomRotate semantics:
     rotation about the centroid in projected EPSG 2249 (schema.sql:103,

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fagi_gis_spark.geometry.measures import DEG_TO_M
-from fagi_gis_spark.operators.fusion import _with_centroids, linked_pairs
+from fagi_gis_spark.operators.fusion import linked_pairs
 
 
 @F.pandas_udf(T.DoubleType())
@@ -51,10 +51,8 @@ def displacement_features(pairs: DataFrame, metric_srid: int | None = None) -> D
     ST_Intersects bit: pairs whose envelopes are disjoint short-circuit
     to 0 in pure JVM column math (disjoint envelopes => disjoint
     geometries), and only the remaining candidates run the relate
-    kernel. Pairs from ``linked_pairs(..., feature_primitives=True)``
-    carry the envelopes; ad-hoc pair tables fall back to running the
-    kernel on every row."""
-    c = _with_centroids(pairs)
+    kernel. Requires ``linked_pairs(..., feature_primitives=True)``
+    pairs, which carry the centroids and the envelopes."""
     dx = F.col("cbx") - F.col("cax")
     dy = F.col("cby") - F.col("cay")
     dist = F.sqrt(dx * dx + dy * dy)
@@ -66,21 +64,18 @@ def displacement_features(pairs: DataFrame, metric_srid: int | None = None) -> D
         dist_m_col = u_metric_centroid_dist(metric_srid)(F.col("wkt_a"), F.col("wkt_b"))
     else:
         dist_m_col = dist * F.lit(DEG_TO_M)
-    if "__pa" in c.columns:
-        env_disjoint = (
-            (F.col("__pa.maxx") < F.col("__pb.minx"))
-            | (F.col("__pb.maxx") < F.col("__pa.minx"))
-            | (F.col("__pa.maxy") < F.col("__pb.miny"))
-            | (F.col("__pb.maxy") < F.col("__pa.miny"))
-        )
-        coverage = F.when(
-            env_disjoint | F.col("__pa.gtype").isNull() | F.col("__pb.gtype").isNull(),
-            F.lit(0.0),
-        ).otherwise(u_intersects(F.col("wkt_a"), F.col("wkt_b")))
-    else:
-        coverage = u_intersects(F.col("wkt_a"), F.col("wkt_b"))
+    env_disjoint = (
+        (F.col("__pa.maxx") < F.col("__pb.minx"))
+        | (F.col("__pb.maxx") < F.col("__pa.minx"))
+        | (F.col("__pa.maxy") < F.col("__pb.miny"))
+        | (F.col("__pb.maxy") < F.col("__pa.miny"))
+    )
+    coverage = F.when(
+        env_disjoint | F.col("__pa.gtype").isNull() | F.col("__pb.gtype").isNull(),
+        F.lit(0.0),
+    ).otherwise(u_intersects(F.col("wkt_a"), F.col("wkt_b")))
     return (
-        c.withColumn("dist_m", dist_m_col)
+        pairs.withColumn("dist_m", dist_m_col)
         .withColumn("dir_x", F.when(dist > 0, dx / dist).otherwise(F.lit(0.0)))
         .withColumn("dir_y", F.when(dist > 0, dy / dist).otherwise(F.lit(0.0)))
         .withColumn("coverage", coverage)

@@ -15,6 +15,17 @@ Here the whole family is ONE parameterized join + column pipeline:
 ``fuse_cluster`` is the same pipeline with the links input swapped for the
 cluster subset (fuseCluster, KeepLeftTransformation.java:62-73).
 
+Pair-summary contract: ``linked_pairs`` is the ONLY code that attaches
+per-geometry data to a pair — ``cax/cay/cbx/cby`` (centroids),
+``npa/npb`` (npoints), ``gta/gtb`` (geometry type), and with
+``feature_primitives=True`` the ``__pa/__pb`` primitives structs — the
+reference's import-time typed PostGIS columns (Importer.java:306-379).
+Every consumer (``fuse``, ``fused_centroids``, ``scores_quantized``,
+``with_scores``, clustering and the learning/tag feature extractors)
+reads those columns directly; a pair table that lacks them fails at
+analysis time with Spark's own ``AnalysisException`` instead of being
+re-parsed row by row.
+
 Transformation ids (string + integer) follow the reference registry
 (gui/FuserPanel.java:139-173, AbstractFusionTransformation.getIntegerID).
 """
@@ -27,12 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fagi_gis_spark.functions.geo_udfs import (
-    u_affine_about_centroid,
-    u_centroid,
     u_geo_summary,
-    u_gtype,
     u_midpoint_wkt,
-    u_npoints,
+    u_shift_pre,
     u_translate,
 )
 from fagi_gis_spark.geometry.measures import DEG_TO_M
@@ -94,7 +102,13 @@ def linked_pairs(
     ONE WKT parse per row) attached BEFORE the join — the ingest-time
     typed-column pattern: a geometry linked N times is parsed once, not N
     times, and the downstream fusion/scoring expressions become pure JVM
-    column math over the summary columns.
+    column math over the summary columns.  This is the one place pairs
+    get their per-geometry data (the module's pair-summary contract):
+    output columns are ``links.*`` plus, per side ``a``/``b``,
+    ``subject_*``, ``wkt_*``, ``lon_*``, ``lat_*``, ``c*x``/``c*y``,
+    ``np*`` and ``gt*``.  A layer that already stores the summary
+    (``cx``/``cy``/``npts``/``gtype``, sources.layers) is read as is;
+    any other layer gets it from one summary-UDF pass.
 
     At 100 TB the links table and both POI layers are bucketed by
     subject/node key so these two joins co-locate without a shuffle; in
@@ -110,7 +124,8 @@ def linked_pairs(
     feature-primitives struct (learning.u_feat_primitives — a superset:
     + area, edge stats, rectangle bit, envelope), kept as ``__pa``/``__pb``
     for the vectorized feature extractors, in the SAME projection — still
-    one parse per POI row and zero additional shuffles.
+    one parse per POI row and zero additional shuffles.  Clustering and
+    the learning/tag feature extractors require these structs.
     """
     n_shuffle = int(poi_a.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
@@ -167,41 +182,6 @@ def linked_pairs(
     )
 
 
-def _with_centroids(pairs: DataFrame) -> DataFrame:
-    """Attach exact centroids of both geometries. Pairs from linked_pairs
-    already carry the layer-level summary columns (no re-parse); the UDF
-    fallback covers ad-hoc inputs."""
-    if "cax" in pairs.columns:
-        return pairs
-    return (
-        pairs.withColumn("__ca", u_centroid(F.col("wkt_a")))
-        .withColumn("__cb", u_centroid(F.col("wkt_b")))
-        .withColumn("cax", F.col("__ca.cx"))
-        .withColumn("cay", F.col("__ca.cy"))
-        .withColumn("cbx", F.col("__cb.cx"))
-        .withColumn("cby", F.col("__cb.cy"))
-        .drop("__ca", "__cb")
-    )
-
-
-def _gtype_col(pairs: DataFrame, side: str):
-    """Geometry type: precomputed summary column when present."""
-    col = "gta" if side == "a" else "gtb"
-    if col in pairs.columns:
-        return F.col(col)
-    return u_gtype(F.col(f"wkt_{side}"))
-
-
-def _npoints_col(pairs: DataFrame, side: str):
-    col = "npa" if side == "a" else "npb"
-    if col in pairs.columns:
-        return F.col(col)
-    return u_npoints(F.col(f"wkt_{side}"))
-
-
-_OUT = ["subject_a", "subject_b", "geom_wkt"]
-
-
 def fuse(pairs: DataFrame, transformation: str, params: FusionParams | None = None) -> DataFrame:
     """Apply one fusion transformation to linked pairs -> fused rows.
 
@@ -214,12 +194,12 @@ def fuse(pairs: DataFrame, transformation: str, params: FusionParams | None = No
         raise ValueError(f"unknown transformation {t!r}; known: {sorted(TRANSFORMATIONS)}")
 
     if t == "most_points":  # KeepMostPointsTransformation.java:62-84
-        # with summary columns this is pure JVM (CASE on precomputed
-        # npoints — whole-stage codegen, no Python at all)
+        # pure JVM: CASE on the summary npoints (whole-stage codegen, no
+        # Python at all)
         return pairs.select(
             "subject_a",
             "subject_b",
-            F.when(_npoints_col(pairs, "a") >= _npoints_col(pairs, "b"), F.col("wkt_a"))
+            F.when(F.col("npa") >= F.col("npb"), F.col("wkt_a"))
             .otherwise(F.col("wkt_b"))
             .alias("geom_wkt"),
         )
@@ -233,62 +213,43 @@ def fuse(pairs: DataFrame, transformation: str, params: FusionParams | None = No
         )
     if t in ("shift_a_to_b", "shift_b_to_a"):
         # rotate -> resize -> translate shift%% of centroid displacement
-        # (ShiftAToB.java:190-232 / ShiftBToA.java:190-232). With the
-        # destination centroid precomputed (summary column) only the
-        # SOURCE geometry is parsed — and the fused centroid comes out of
-        # the same pass (fused_cx/fused_cy), so downstream consumers never
+        # (ShiftAToB.java:190-232 / ShiftBToA.java:190-232). The
+        # destination centroid is a summary column, so only the SOURCE
+        # geometry is parsed — and the fused centroid comes out of the
+        # same pass (fused_cx/fused_cy), so downstream consumers never
         # re-parse the output WKT.
         if t == "shift_a_to_b":
             src, cdx, cdy = "wkt_a", "cbx", "cby"
         else:
             src, cdx, cdy = "wkt_b", "cax", "cay"
-        if cdx in pairs.columns:
-            from fagi_gis_spark.functions.geo_udfs import u_shift_pre
-
-            shifted = pairs.withColumn(
-                "__sh",
-                u_shift_pre(
-                    F.col(src),
-                    F.col(cdx),
-                    F.col(cdy),
-                    F.lit(p.shift_pct / 100.0),
-                    F.lit(float(p.rotate_deg)),
-                    F.lit(float(p.scale_f)),
-                    F.lit(bool(p.metric_rotation)),
-                ),
-            )
-            return shifted.select(
-                "subject_a",
-                "subject_b",
-                F.col("__sh.wkt").alias("geom_wkt"),
-                F.col("__sh.cx").alias("fused_cx"),
-                F.col("__sh.cy").alias("fused_cy"),
-            )
-        from fagi_gis_spark.functions.geo_udfs import u_shift_pair
-
-        dst = "wkt_b" if t == "shift_a_to_b" else "wkt_a"
-        return pairs.select(
-            "subject_a",
-            "subject_b",
-            u_shift_pair(
+        shifted = pairs.withColumn(
+            "__sh",
+            u_shift_pre(
                 F.col(src),
-                F.col(dst),
+                F.col(cdx),
+                F.col(cdy),
                 F.lit(p.shift_pct / 100.0),
                 F.lit(float(p.rotate_deg)),
                 F.lit(float(p.scale_f)),
-            ).alias("geom_wkt"),
+                F.lit(bool(p.metric_rotation)),
+            ),
+        )
+        return shifted.select(
+            "subject_a",
+            "subject_b",
+            F.col("__sh.wkt").alias("geom_wkt"),
+            F.col("__sh.cx").alias("fused_cx"),
+            F.col("__sh.cy").alias("fused_cy"),
         )
     if t == "avg_points":  # AvgTwoPointsTransformation.java:18-65 (POINTs only)
-        c = _with_centroids(pairs)
-        both_pts = (_gtype_col(c, "a") == "POINT") & (_gtype_col(c, "b") == "POINT")
-        return c.filter(both_pts).select(
+        both_pts = (F.col("gta") == "POINT") & (F.col("gtb") == "POINT")
+        return pairs.filter(both_pts).select(
             "subject_a",
             "subject_b",
             u_midpoint_wkt(F.col("cax"), F.col("cay"), F.col("cbx"), F.col("cby")).alias("geom_wkt"),
         )
     if t == "shift_poly_to_point":  # ShiftPolygonToPoint.java:98-117
-        c = _with_centroids(pairs)
-        return c.select(
+        return pairs.select(
             "subject_a",
             "subject_b",
             u_translate(
@@ -296,8 +257,7 @@ def fuse(pairs: DataFrame, transformation: str, params: FusionParams | None = No
             ).alias("geom_wkt"),
         )
     if t == "shift_poly_avg_dist":  # ShiftPolygonToAverageDistance.java:98-116
-        c = _with_centroids(pairs)
-        return c.select(
+        return pairs.select(
             "subject_a",
             "subject_b",
             u_translate(
@@ -307,9 +267,7 @@ def fuse(pairs: DataFrame, transformation: str, params: FusionParams | None = No
             ).alias("geom_wkt"),
         )
     if t == "most_points_translate":  # KeepMostPointsAndTranslateTransformation.java:130-155
-        c = _with_centroids(pairs).withColumn(
-            "__a_wins", _npoints_col(pairs, "a") >= _npoints_col(pairs, "b")
-        )
+        c = pairs.withColumn("__a_wins", F.col("npa") >= F.col("npb"))
         kept = F.when(F.col("__a_wins"), F.col("wkt_a")).otherwise(F.col("wkt_b"))
         dx = F.when(F.col("__a_wins"), F.col("cbx") - F.col("cax")).otherwise(
             F.col("cax") - F.col("cbx")
@@ -370,11 +328,11 @@ def fused_centroids(
 ) -> DataFrame:
     """Fused centroid WITHOUT materializing the fused geometry — for
     consumers that only read the centroid (the ``*_e9`` query family).
-    Requires the precomputed summary columns (linked_pairs over stored
-    summary layers); output (subject_a, subject_b, fused_cx, fused_cy)
-    carries the identical values the full fuse() + centroid pass
-    produces, because every transformation here moves the centroid by a
-    closed-form linear map of (ca, cb):
+    Reads only the summary columns linked_pairs attaches; output
+    (subject_a, subject_b, fused_cx, fused_cy) carries the identical
+    values the full fuse() + centroid pass produces, because every
+    transformation here moves the centroid by a closed-form linear map
+    of (ca, cb):
 
     * shift_a_to_b / shift_b_to_a — c_src + s*(c_dst - c_src): the
       kernel's own emission (rotate/resize are about c_src, translate
@@ -387,11 +345,8 @@ def fused_centroids(
     """
     p = params or FusionParams()
     t = transformation
-    need = {"cax", "cay", "cbx", "cby"}
-    if t not in _CENTROID_CLOSED_FORMS or not need <= set(pairs.columns):
-        raise ValueError(
-            f"no closed-form centroid for {t!r} (or summary columns missing)"
-        )
+    if t not in _CENTROID_CLOSED_FORMS:
+        raise ValueError(f"no closed-form centroid for {t!r}")
     ca_x, ca_y, cb_x, cb_y = (F.col(c) for c in ("cax", "cay", "cbx", "cby"))
     if t in ("shift_a_to_b", "shift_b_to_a"):
         s = F.lit(p.shift_pct / 100.0)
@@ -404,7 +359,7 @@ def fused_centroids(
     elif t == "shift_poly_avg_dist":
         cx, cy = cb_x + (ca_x - cb_x) / 2.0, cb_y + (ca_y - cb_y) / 2.0
     elif t == "most_points_translate":
-        a_wins = _npoints_col(pairs, "a") >= _npoints_col(pairs, "b")
+        a_wins = F.col("npa") >= F.col("npb")
         cx = F.when(a_wins, cb_x).otherwise(ca_x)
         cy = F.when(a_wins, cb_y).otherwise(ca_y)
     else:  # scale_a / scale_b about the origin
@@ -459,7 +414,6 @@ def scores_quantized(pairs: DataFrame, threshold_m: float = 500.0) -> DataFrame:
     flips on half-boundaries). Output:
     (subject_a, subject_b, dist2_e12, score) with score computed from the
     quantized value by the same expression the oracle uses."""
-    c = _with_centroids(pairs)
     dx = F.col("cax") - F.col("cbx")
     dy = F.col("cay") - F.col("cby")
     dist2_e12 = F.round((dx * dx + dy * dy) * F.lit(1e12)).cast("long")
@@ -467,12 +421,12 @@ def scores_quantized(pairs: DataFrame, threshold_m: float = 500.0) -> DataFrame:
     t_e12 = int(t_deg * t_deg * 1e12)  # same integer literal in the oracle
     dist_m = F.sqrt(F.col("dist2_e12").cast("double") / F.lit(1e12)) * F.lit(DEG_TO_M)
     gate = (
-        (_gtype_col(c, "a") == "POINT")
-        & (_gtype_col(c, "b") == "POLYGON")
+        (F.col("gta") == "POINT")
+        & (F.col("gtb") == "POLYGON")
         & (F.col("dist2_e12") <= F.lit(t_e12))
     )
     return (
-        c.withColumn("dist2_e12", dist2_e12)
+        pairs.withColumn("dist2_e12", dist2_e12)
         .withColumn(
             "score",
             F.when(
@@ -546,7 +500,6 @@ def with_scores(
     the engine's documented fast path with the same gating behavior, and
     the oracle-parity semantics.
     """
-    c = _with_centroids(pairs)
     if metric_srid is not None:
         dist_m = u_metric_centroid_dist(metric_srid)(F.col("wkt_a"), F.col("wkt_b"))
     else:
@@ -563,7 +516,7 @@ def with_scores(
         # the reference checks the POINT/POLYGON gate BEFORE the
         # threshold==-1 shortcut (ShiftAToB.score:138-177), so mismatched
         # types score 0 even with no threshold.
-        type_gate = (_gtype_col(c, "a") == "POINT") & (_gtype_col(c, "b") == "POLYGON")
+        type_gate = (F.col("gta") == "POINT") & (F.col("gtb") == "POLYGON")
         if threshold_m < 0:
             score = F.when(type_gate, F.lit(1.0)).otherwise(F.lit(0.0))
         else:
@@ -573,8 +526,8 @@ def with_scores(
             ).otherwise(F.lit(0.0))
     elif transformation == "avg_points":
         score = F.when(
-            (_gtype_col(c, "a") == "POINT") & (_gtype_col(c, "b") == "POINT"), 1.0
+            (F.col("gta") == "POINT") & (F.col("gtb") == "POINT"), 1.0
         ).otherwise(0.0)
     else:
         score = F.lit(0.0)
-    return c.withColumn("dist_m", dist_m).withColumn("score", score)
+    return pairs.withColumn("dist_m", dist_m).withColumn("score", score)

@@ -287,15 +287,12 @@ def pair_features(
     MapPair.getOWLClassA wire form) and the OWL class-count slice is
     appended (195 dims); otherwise geometry features only (175 dims).
 
-    Production path: per-layer primitives structs (one parse per DISTINCT
-    geometry) + the vectorized numpy bin kernel; WKT is re-parsed only
-    for the envelope-overlapping pairs that can have nonzero relate bits.
-    Pairs from ``linked_pairs(..., feature_primitives=True)`` already
-    carry the ``__pa``/``__pb`` structs (zero extra shuffles); ad-hoc
-    pair tables get them via a distinct-geometry join.
+    Production path: per-layer primitives structs (one parse per POI
+    row) + the vectorized numpy bin kernel; WKT is re-parsed only for the
+    envelope-overlapping pairs that can have nonzero relate bits.
+    Requires ``linked_pairs(..., feature_primitives=True)`` pairs, which
+    carry the ``__pa``/``__pb`` structs (zero extra shuffles).
     """
-    if "__pa" not in pairs.columns or "__pb" not in pairs.columns:
-        pairs = with_side_primitives(with_side_primitives(pairs, "a"), "b")
     if triples_a is None or triples_b is None:
         return pairs.select(
             "subject_a",
@@ -591,27 +588,3 @@ def u_pair_features_owl_fast(
     geo = pair_feature_matrix(pa, pb, wkt_a, wkt_b)
     return pd.Series(list(np.hstack([geo, owl_feature_matrix(owl_a, owl_b)])))
 
-
-def with_side_primitives(pairs: DataFrame, side: str) -> DataFrame:
-    """Join the primitives struct for one side of a pair table, computing
-    it once per DISTINCT geometry (not once per pair). The distinct +
-    repartition by subject gives the parse stage full shuffle parallelism
-    and lets the join reuse the partitioning (same recipe as
-    linked_pairs' summary join)."""
-    subj, wkt, out_col = f"subject_{side}", f"wkt_{side}", f"__p{side}"
-    n_shuffle = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # join back on BOTH (subject, wkt): a subject carrying two distinct
-    # WKTs (possible in a malformed or multi-version layer) must not fan
-    # out the pair table or attach one geometry's primitives to the
-    # other's wkt column.  The wkt key is null-coalesced to "" so rows
-    # with a missing geometry keep their (all-zero-primitives) feature
-    # row instead of vanishing through null-unsafe join equality —
-    # u_feat_primitives("") takes the same empty-input path as NULL.
-    keyed = pairs.withColumn("__wk", F.coalesce(F.col(wkt), F.lit("")))
-    prim = (
-        keyed.select(subj, "__wk")
-        .distinct()
-        .repartition(n_shuffle, subj, "__wk")
-        .select(subj, "__wk", u_feat_primitives(F.col("__wk")).alias(out_col))
-    )
-    return keyed.join(prim, [subj, "__wk"]).drop("__wk")

@@ -42,12 +42,7 @@ from pyspark.sql import types as T
 
 from fagi_gis_spark.geometry.measures import area, npoints
 from fagi_gis_spark.geometry.wkt import Geom, parse_wkt
-from fagi_gis_spark.operators.learning import (
-    _edge_bin,
-    _edge_stats,
-    _is_rectangle,
-    with_side_primitives,
-)
+from fagi_gis_spark.operators.learning import _edge_bin, _edge_stats, _is_rectangle
 
 _NPTS_EDGES = [10, 20, 30, 40, 50, 75, 100, 150, 200, 300, 500, 1000]  # +else = 13
 _AREA_EDGES = [
@@ -145,12 +140,9 @@ def pair_tag_features(pairs: DataFrame) -> DataFrame:
     """TagFeatures for a linked pair: A slice ++ B slice (210 dims), the
     input the reference's tag predictor trains on.
 
-    Production path: primitives once per DISTINCT geometry per layer
-    (learning.with_side_primitives), then one fully-vectorized numpy pass
-    — zero per-pair WKT parsing. Pairs from ``linked_pairs(...,
-    feature_primitives=True)`` already carry the structs."""
-    if "__pa" not in pairs.columns or "__pb" not in pairs.columns:
-        pairs = with_side_primitives(with_side_primitives(pairs, "a"), "b")
+    Production path: the ``__pa``/``__pb`` primitives structs that
+    ``linked_pairs(..., feature_primitives=True)`` attaches (required),
+    then one fully-vectorized numpy pass — zero per-pair WKT parsing."""
     return pairs.select(
         "subject_a",
         "subject_b",

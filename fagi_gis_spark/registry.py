@@ -30,7 +30,6 @@ from fagi_gis_spark.operators.fusion import (
     fuse_all,
     fused_centroids,
     linked_pairs,
-    with_scores,
 )
 from fagi_gis_spark.operators.spatial_join import (
     HEX,
@@ -40,6 +39,7 @@ from fagi_gis_spark.operators.spatial_join import (
     build_hot_cells,
     radius_join,
 )
+from fagi_gis_spark.session import session_memo
 from fagi_gis_spark.sources.layers import (
     admin_assign_oracle_sql,
     admin_polygons_pdf,
@@ -142,9 +142,6 @@ def layers(spark: SparkSession, sf_dir: str):
 # query 5x).  Salting only steers placement — a cached hot set can never
 # change output — so the memo is pure amortization
 # (spatial_join.build_hot_cells).
-_HOT_CACHE: dict = {}
-
-
 def _hot_for(
     spark,
     sf_dir: str,
@@ -153,18 +150,14 @@ def _hot_for(
     radius_m: float,
     layer: str = "poi_b",
 ):
-    app = spark.sparkContext.applicationId
-    # evict entries from stopped sessions: their DataFrames reference dead
-    # contexts and would otherwise pin memory for the process lifetime
-    for k in [k for k in _HOT_CACHE if k[0] != app]:
-        del _HOT_CACHE[k]
     # ``layer`` names the build side in the key — two queries sharing a
     # (scheme, radius) but building on different layers must not read
     # each other's hot sets
-    key = (app, sf_dir, cells.name, radius_m, layer)
-    if key not in _HOT_CACHE:
-        _HOT_CACHE[key] = build_hot_cells(build, radius_m, cells=cells)
-    return _HOT_CACHE[key]
+    return session_memo(
+        spark,
+        ("hot_cells", sf_dir, cells.name, radius_m, layer),
+        lambda: build_hot_cells(build, radius_m, cells=cells),
+    )
 
 
 def _o(select: str) -> str:
@@ -175,32 +168,20 @@ _E9 = 1000000000.0
 
 
 def _centroid_e9(df: DataFrame) -> DataFrame:
-    if "fused_cx" in df.columns:
-        # the shift kernel emits the fused centroid in the same Arrow pass
-        # (c_src + s*(c_dst - c_src) — the oracle's exact expression), so
-        # no re-parse of the output WKT is needed
-        return df.select(
-            "subject_a",
-            "subject_b",
-            F.round(F.col("fused_cx") * _E9).cast("long").alias("cx_e9"),
-            F.round(F.col("fused_cy") * _E9).cast("long").alias("cy_e9"),
-        )
-    from fagi_gis_spark.functions.geo_udfs import u_centroid
-
-    c = df.withColumn("__c", u_centroid(F.col("geom_wkt")))
-    return c.select(
+    """Nano-degree fused centroid from ``fused_cx``/``fused_cy``
+    (fusion.fused_centroids, or the shift kernel's own emission)."""
+    return df.select(
         "subject_a",
         "subject_b",
-        F.round(F.col("__c.cx") * _E9).cast("long").alias("cx_e9"),
-        F.round(F.col("__c.cy") * _E9).cast("long").alias("cy_e9"),
+        F.round(F.col("fused_cx") * _E9).cast("long").alias("cx_e9"),
+        F.round(F.col("fused_cy") * _E9).cast("long").alias("cy_e9"),
     )
 
 
 def _L3(L):
-    """J3 inputs with the ingest-time summary layers when stored (falls
-    back to the classic frames, where linked_pairs re-derives the
-    summary with the Arrow UDF)."""
-    return L["links"], L.get("poi_a_sum", L["poi_a"]), L.get("poi_b_sum", L["poi_b"])
+    """J3 inputs over the ingest-time summary layers
+    (materialized_layers stores them under ``<layer>_sum``)."""
+    return L["links"], L["poi_a_sum"], L["poi_b_sum"]
 
 
 # --------------------------------------------------------------------------
@@ -3791,14 +3772,22 @@ def fuse_scale_b(spark, sf_dir):
 def fuse_keep_a_offset(spark, sf_dir):
     """Geometry offset nudge (BatchFusionServlet.offsetGeometriesA:3110-3148):
     in-place translate of the linked A geometries BEFORE a keep-A fusion."""
-    from fagi_gis_spark.functions.geo_udfs import u_translate
+    from fagi_gis_spark.functions.geo_udfs import u_centroid, u_translate
 
     L = layers(spark, sf_dir)
     poi_a_off = L["poi_a"].withColumn(
         "geom_wkt", u_translate(F.col("geom_wkt"), F.lit(0.000157), F.lit(-0.000233))
     )
     fused = fuse_all(L["links"], poi_a_off, L["poi_b"], "keep_a")
-    return _centroid_e9(fused)
+    c = fused.withColumn("__c", u_centroid(F.col("geom_wkt")))
+    return _centroid_e9(
+        c.select(
+            "subject_a",
+            "subject_b",
+            F.col("__c.cx").alias("fused_cx"),
+            F.col("__c.cy").alias("fused_cy"),
+        )
+    )
 
 
 # --------------------------------------------------------------------------

@@ -10,8 +10,13 @@ DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
+
+#: (applicationId, key) -> memoized value; see session_memo
+_MEMO: dict = {}
 
 
 def get_spark(
@@ -58,3 +63,19 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
+    """Driver-side memo scoped to the running Spark application: returns
+    the value stored under ``key`` for this session, calling ``build()``
+    once on a miss.  Entries of any other (stopped) application are
+    evicted first — their DataFrames reference dead contexts and would
+    otherwise pin memory for the process lifetime.  Callers namespace
+    ``key`` with a leading tag (e.g. ``("hot_cells", ...)``)."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[k]
+    full = (app, key)
+    if full not in _MEMO:
+        _MEMO[full] = build()
+    return _MEMO[full]

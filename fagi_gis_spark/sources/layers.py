@@ -32,6 +32,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fagi_gis_spark.session import session_memo
+
 #: printf-style fixed 6-decimal formatting — Spark: format_string (JVM),
 #: DuckDB: printf. Inputs are lattice values (never halfway), so the two
 #: engines' rounding agrees.
@@ -294,11 +296,6 @@ MATERIALIZED_LAYER_KEYS = (
 SUMMARY_LAYER_KEYS = ("poi_a", "poi_b")
 
 
-#: (applicationId, cache dir) -> layer DataFrames, so one session reads
-#: each materialized import's schemas and registers its views once
-_SESSION_LAYERS: dict = {}
-
-
 def _layers_cache_tag(sf_dir: str) -> str:
     """Cache key for a materialized import: input identity (path + the
     orders.parquet file stats) x layer-definition identity (source text
@@ -339,9 +336,10 @@ def materialized_layers(
     first call in another session either wins the rename or reads the
     winner's tables.  The ``orders``/``poi_base`` temp views are still
     registered (lazy) for queries that phrase themselves in SQL.  The
-    returned DataFrames are memoized per (session, cache dir): repeated
-    calls in one session skip the parquet schema-discovery jobs and the
-    view re-registration.
+    returned DataFrames are memoized per (session, cache dir) through
+    ``session.session_memo``: repeated calls in one session skip the
+    parquet schema-discovery jobs and the view re-registration; each call
+    returns a fresh ``dict``.
     """
     from fagi_gis_spark.operators.dedup_precedence import precedence_dedup
 
@@ -355,77 +353,71 @@ def materialized_layers(
     )
     os.makedirs(root, exist_ok=True)
     base = os.path.join(root, _layers_cache_tag(sf_dir))
-    app = spark.sparkContext.applicationId
-    # evict memos from stopped sessions (their DataFrames reference dead
-    # contexts and would pin memory for the process lifetime)
-    for k in [k for k in _SESSION_LAYERS if k[0] != app]:
-        del _SESSION_LAYERS[k]
-    memo_key = (app, base)
-    hit = _SESSION_LAYERS.get(memo_key)
-    if hit is not None:
-        return dict(hit)
-    if not os.path.isdir(base):
-        from pyspark.sql import functions as F
 
-        from fagi_gis_spark.functions.geo_udfs import u_geo_summary
+    def _import() -> dict[str, DataFrame]:
+        if not os.path.isdir(base):
+            from pyspark.sql import functions as F
 
-        L = spark_layers(spark, sf_dir)
-        L["poi_a"] = precedence_dedup(L["poi_a_raw"])
-        # ingest-time geometry summary (cx/cy/npts/gtype): the reference
-        # Importer parses each WKT ONCE into typed PostGIS columns at
-        # import; storing the parse here means the whole fusion/scoring
-        # family reads typed columns and never re-parses per query (the
-        # r5 tree re-ran the summary UDF over both layers on every
-        # fuse_* invocation).  Deterministic per-row derivation — the
-        # same amortization contract as the import itself.
-        for k in SUMMARY_LAYER_KEYS:
-            L[k] = (
-                L[k]
-                .select("*", u_geo_summary(F.col("geom_wkt")).alias("__s"))
-                .select(
-                    "*",
-                    F.col("__s.cx").alias("cx"),
-                    F.col("__s.cy").alias("cy"),
-                    F.col("__s.npts").alias("npts"),
-                    F.col("__s.gtype").alias("gtype"),
+            from fagi_gis_spark.functions.geo_udfs import u_geo_summary
+
+            L = spark_layers(spark, sf_dir)
+            L["poi_a"] = precedence_dedup(L["poi_a_raw"])
+            # ingest-time geometry summary (cx/cy/npts/gtype): the reference
+            # Importer parses each WKT ONCE into typed PostGIS columns at
+            # import; storing the parse here means the whole fusion/scoring
+            # family reads typed columns and never re-parses per query (the
+            # r5 tree re-ran the summary UDF over both layers on every
+            # fuse_* invocation).  Deterministic per-row derivation — the
+            # same amortization contract as the import itself.
+            for k in SUMMARY_LAYER_KEYS:
+                L[k] = (
+                    L[k]
+                    .select("*", u_geo_summary(F.col("geom_wkt")).alias("__s"))
+                    .select(
+                        "*",
+                        F.col("__s.cx").alias("cx"),
+                        F.col("__s.cy").alias("cy"),
+                        F.col("__s.npts").alias("npts"),
+                        F.col("__s.gtype").alias("gtype"),
+                    )
+                    .drop("__s")
                 )
-                .drop("__s")
-            )
-        tmp = f"{base}.tmp.{os.getpid()}"
-        from fagi_gis_spark.partitioning import ensure_min_parallelism
+            tmp = f"{base}.tmp.{os.getpid()}"
+            from fagi_gis_spark.partitioning import ensure_min_parallelism
 
-        for k in MATERIALIZED_LAYER_KEYS:
-            # write each layer at >= default parallelism: a layer that
-            # derives straight from the (unsplittable, single-row-group)
-            # orders scan would otherwise land as 1-3 files and every
-            # downstream join streams it through 1-3 tasks (guide §2 —
-            # scan parallelism is set at WRITE time for stored layers)
-            ensure_min_parallelism(L[k]).write.mode("overwrite").parquet(
-                os.path.join(tmp, k)
+            for k in MATERIALIZED_LAYER_KEYS:
+                # write each layer at >= default parallelism: a layer that
+                # derives straight from the (unsplittable, single-row-group)
+                # orders scan would otherwise land as 1-3 files and every
+                # downstream join streams it through 1-3 tasks (guide §2 —
+                # scan parallelism is set at WRITE time for stored layers)
+                ensure_min_parallelism(L[k]).write.mode("overwrite").parquet(
+                    os.path.join(tmp, k)
+                )
+            try:
+                os.rename(tmp, base)
+            except OSError:  # lost a concurrent race: the winner's is equal
+                shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            # register the lazy views spark_layers would have provided
+            spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+                "orders"
             )
-        try:
-            os.rename(tmp, base)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            shutil.rmtree(tmp, ignore_errors=True)
-    else:
-        # register the lazy views spark_layers would have provided
-        spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
-            "orders"
-        )
-        spark.sql(f"SELECT * FROM ({poi_base_sql()}) t").createOrReplaceTempView(
-            "poi_base"
-        )
-    out = {
-        k: spark.read.parquet(os.path.join(base, k)) for k in MATERIALIZED_LAYER_KEYS
-    }
-    for k in SUMMARY_LAYER_KEYS:
-        # classic 5-column view under the original key (parquet column
-        # pruning makes the projection free), full typed frame under
-        # "<k>_sum" for the fusion/scoring family
-        out[f"{k}_sum"] = out[k]
-        out[k] = out[k].select("subject", "lon", "lat", "geom_wkt", "k")
-    _SESSION_LAYERS[memo_key] = dict(out)
-    return out
+            spark.sql(f"SELECT * FROM ({poi_base_sql()}) t").createOrReplaceTempView(
+                "poi_base"
+            )
+        out = {
+            k: spark.read.parquet(os.path.join(base, k)) for k in MATERIALIZED_LAYER_KEYS
+        }
+        for k in SUMMARY_LAYER_KEYS:
+            # classic 5-column view under the original key (parquet column
+            # pruning makes the projection free), full typed frame under
+            # "<k>_sum" for the fusion/scoring family
+            out[f"{k}_sum"] = out[k]
+            out[k] = out[k].select("subject", "lon", "lat", "geom_wkt", "k")
+        return out
+
+    return dict(session_memo(spark, ("layers", base), _import))
 
 
 def oracle_ctes() -> str:

@@ -837,6 +837,128 @@ def test_materialized_layers_equal_fresh_derivation(spark, tmp_path):
     assert again["poi_a"].count() == mat["poi_a"].count()
 
 
+def _fuse_cases():
+    from fagi_gis_spark.operators.fusion import TRANSFORMATIONS, FusionParams
+
+    cases = [pytest.param(t, None, id=t) for t in sorted(TRANSFORMATIONS)]
+    cases.append(
+        pytest.param(
+            "shift_a_to_b",
+            FusionParams(rotate_deg=30.0, metric_rotation=True),
+            id="shift_a_to_b-metric_rotation",
+        )
+    )
+    return cases
+
+
+@pytest.mark.parametrize("transformation,params", _fuse_cases())
+def test_summary_sources_fuse_identically(spark, transformation, params):
+    """Pair-summary contract: the stored import-time summary columns and
+    the summary linked_pairs derives itself for a plain layer feed every
+    fusion transformation identically (same rows, same values)."""
+    from fagi_gis_spark.operators.dedup_precedence import precedence_dedup
+    from fagi_gis_spark.operators.fusion import fuse_all
+    from fagi_gis_spark.sources.layers import materialized_layers, spark_layers
+
+    mat = materialized_layers(spark, SF)
+    fresh = spark_layers(spark, SF)
+    fresh["poi_a"] = precedence_dedup(fresh["poi_a_raw"])
+    stored = fuse_all(
+        mat["links"], mat["poi_a_sum"], mat["poi_b_sum"], transformation, params
+    ).toPandas()
+    derived = fuse_all(
+        fresh["links"], fresh["poi_a"], fresh["poi_b"], transformation, params
+    ).toPandas()
+    assert len(stored) > 0
+
+    def ordered(df):
+        return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(ordered(stored), ordered(derived))
+
+
+def test_fuse_without_summary_columns_fails_analysis(spark):
+    """A pair table that did not come from linked_pairs has no summary
+    columns: the shift kernel's destination centroid cannot resolve, and
+    Spark's analyzer rejects the plan instead of re-parsing both WKTs."""
+    from pyspark.errors import AnalysisException
+
+    from fagi_gis_spark.operators.fusion import fuse
+
+    pairs = spark.createDataFrame(
+        [("a:0", "b:0", "POINT (0 0)", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")],
+        ["subject_a", "subject_b", "wkt_a", "wkt_b"],
+    )
+    with pytest.raises(AnalysisException):
+        fuse(pairs, "shift_a_to_b")
+
+
+def test_with_scores_semantics(spark):
+    """with_scores pins the SURVEY §2.3 scoring rules on real linked pairs:
+    keep/most-points/concatenation score 1.0; shifts score
+    sqrt((t - d) / t) on POINT->POLYGON pairs within the threshold and 0
+    elsewhere; threshold -1 leaves only the type gate; avg_points is gated
+    on POINT/POINT; anything else scores 0.0.  The shift-positive pair
+    set equals the oracle-backed scores_quantized one."""
+    import numpy as np
+
+    from fagi_gis_spark.operators.fusion import (
+        TRANSFORMATIONS,
+        linked_pairs,
+        scores_quantized,
+        with_scores,
+    )
+    from fagi_gis_spark.registry import layers
+
+    L = layers(spark, SF)
+    pairs = linked_pairs(L["links"], L["poi_a_sum"], L["poi_b_sum"])
+    key = ["subject_a", "subject_b"]
+
+    def scored(t, threshold_m=500.0):
+        return (
+            with_scores(pairs, t, threshold_m=threshold_m)
+            .select(*key, "gta", "gtb", "dist_m", "score")
+            .toPandas()
+            .sort_values(key)
+            .reset_index(drop=True)
+        )
+
+    for t in ("keep_a", "keep_b", "keep_both", "most_points", "concatenation"):
+        assert (scored(t).score == 1.0).all(), t
+
+    t_m = 500.0
+    for t in ("shift_a_to_b", "shift_b_to_a", "most_points_translate"):
+        s = scored(t, t_m)
+        type_gate = (s.gta == "POINT") & (s.gtb == "POLYGON")
+        within = type_gate & (s.dist_m <= t_m)
+        assert within.any() and (~within).any(), t  # both branches exercised
+        assert (s.score[~within] == 0.0).all(), t
+        expected = np.sqrt((t_m - s.dist_m[within]) / t_m)
+        np.testing.assert_allclose(s.score[within], expected, rtol=1e-12, atol=0)
+        assert ((s.score > 0) == (within & (s.dist_m < t_m))).all(), t
+
+        gate_only = scored(t, -1.0)
+        assert (gate_only.score == np.where(type_gate, 1.0, 0.0)).all(), t
+
+    s = scored("avg_points")
+    both_points = (s.gta == "POINT") & (s.gtb == "POINT")
+    assert both_points.any()
+    assert (s.score == np.where(both_points, 1.0, 0.0)).all()
+
+    scored_names = {
+        "keep_a", "keep_b", "keep_both", "most_points", "concatenation",
+        "shift_a_to_b", "shift_b_to_a", "most_points_translate", "avg_points",
+    }
+    for t in sorted(set(TRANSFORMATIONS) - scored_names):
+        assert (scored(t).score == 0.0).all(), t
+
+    shift = scored("shift_a_to_b", t_m)
+    positive = set(map(tuple, shift[shift.score > 0][key].itertuples(index=False)))
+    q = scores_quantized(pairs, threshold_m=t_m).filter("score > 0").select(*key)
+    assert positive == set(map(tuple, q.toPandas().itertuples(index=False)))
+    assert positive
+
+
 def test_incremental_minhash_equals_full_batch(spark):
     """Day-2 dedup contract: a new batch deduped against itself + the
     persisted corpus index must emit EXACTLY the full-batch LSH pairs

@@ -127,7 +127,9 @@ def test_svm_learns_separable_actions(spark):
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, SF)
-    pairs = linked_pairs(L["links"], L["poi_a"], L["poi_b"]).limit(400)
+    pairs = linked_pairs(
+        L["links"], L["poi_a"], L["poi_b"], feature_primitives=True
+    ).limit(400)
     feats = pair_features(pairs)
     # synthetic ground truth: action 1 iff either geometry is a POINT
     # (BooleanVector slot 3 = any-side Point bit)

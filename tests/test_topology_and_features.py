@@ -448,7 +448,9 @@ def test_pair_tag_features_concat(spark):
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, "/root/testdata/sf0.001")
-    out = pair_tag_features(linked_pairs(L["links"], L["poi_a"], L["poi_b"])).limit(50).toPandas()
+    out = pair_tag_features(
+        linked_pairs(L["links"], L["poi_a"], L["poi_b"], feature_primitives=True)
+    ).limit(50).toPandas()
     assert len(out) == 50
     assert all(len(fv) == 2 * N_TAG_FEATURES for fv in out.fv)
 
@@ -561,7 +563,7 @@ def test_pair_features_with_owl_slice(spark):
 
     L = layers(spark, "/root/testdata/sf0.001")
     out = pair_features(
-        linked_pairs(L["links"], L["poi_a"], L["poi_b"]),
+        linked_pairs(L["links"], L["poi_a"], L["poi_b"], feature_primitives=True),
         L["triples_a"], L["triples_b"],
     ).limit(30).toPandas()
     assert all(len(fv) == N_FEATURES_OWL for fv in out.fv)
@@ -659,7 +661,7 @@ def test_pair_features_spark_fast_path_matches_slow_udf(spark):
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, "/root/testdata/sf0.001")
-    pairs = linked_pairs(L["links"], L["poi_a"], L["poi_b"])
+    pairs = linked_pairs(L["links"], L["poi_a"], L["poi_b"], feature_primitives=True)
     fast = pair_features(pairs).toPandas().set_index(["subject_a", "subject_b"])
     slow = (
         pairs.select(

@@ -24,9 +24,11 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 JOB = r"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from fagi_gis_spark.session import get_spark
 from pyspark.sql import functions as F
 
@@ -70,7 +72,7 @@ print(json.dumps({"cores": cores, "n": n, "sec": round(dt, 2),
 
 def run_level(cores: int, n: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", JOB, str(cores), str(n)],
+        [sys.executable, "-c", JOB, str(cores), str(n), REPO],
         capture_output=True, text=True, timeout=3000,
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")]
@@ -81,7 +83,7 @@ def run_level(cores: int, n: int) -> dict:
 
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 600_000
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BENCH/BASELINE.md"
+    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "BENCH", "BASELINE.md")
     results = {}
     for cores in (2, 8, 32):
         results[cores] = run_level(cores, n)

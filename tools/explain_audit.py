@@ -3,7 +3,10 @@ the plan-quality audit: scan pruning (ReadSchema), predicate pushdown
 (PushedFilters), broadcast vs sort-merge choices, WholeStageCodegen spans,
 AQE nodes. Run at sf0.01 (plans, not timings).
 
-Usage: python tools/explain_audit.py [sf_dir] [out_md]
+Usage: python tools/explain_audit.py [sf_dir] [out_md] [query ...]
+
+Named queries restrict (or extend) the audit: an ``AUDIT`` entry keeps its
+description, any other registry query uses its own name as the heading.
 """
 
 from __future__ import annotations
@@ -72,6 +75,9 @@ AUDIT = [
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PLANS.md")
+    named = sys.argv[3:]
+    descs = dict(AUDIT)
+    audit = [(n, descs.get(n)) for n in named] if named else AUDIT
 
     from fagi_gis_spark import registry
     from fagi_gis_spark.session import get_spark
@@ -88,12 +94,13 @@ def main():
         "`WholeStageCodegen` spans cover the relational pipeline; AQE",
         "(`AdaptiveSparkPlan`) is active everywhere.\n",
     ]
-    for name, desc in AUDIT:
+    for name, desc in audit:
         df = qs[name](spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        sections.append(f"## {name} — {desc}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        heading = f"{name} — {desc}" if desc else name
+        sections.append(f"## {heading}\n\n```\n{buf.getvalue().strip()}\n```\n")
     with open(out_md, "w") as f:
         f.write("\n".join(sections))
     print(f"wrote {out_md}")

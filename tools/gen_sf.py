@@ -4,7 +4,7 @@ The grading driver generates its own large-SF tables (TESTDATA.md: seed=42,
 TPC-H-ish star schema + documents/embeddings/events); that directory is not
 persisted between rounds.  This tool rebuilds a *structurally faithful*
 stand-in so optimization work can be measured at driver scale (sf1.0 =
-1.5M orders) with bench.py / bench_extra.py:
+1.5M orders) with bench.py (``bench.run(names=...)`` times chosen queries):
 
 * ``orders.o_orderkey`` is 0..N-1 — exactly the driver's keys — so every
   derived POI layer (sources/layers.py hashes o_orderkey onto the lattice)
