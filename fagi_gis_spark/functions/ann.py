@@ -1,13 +1,18 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
-* ``cosine_topk`` — brute-force exact top-k, all-JVM (zip_with/aggregate);
-  the correctness baseline. With ``quantize`` set, embeddings are scaled
-  to integers first so dot products are order-independent and exact —
-  that variant is DuckDB-oracle-checkable bit-for-bit.
-* ``lsh_topk``    — random-hyperplane LSH: signatures via one Arrow batch
-  pass, candidates bucket-joined, exact re-rank inside buckets. The scale
-  path: shuffle bounded by bucket width, no cross join.
+Exact (integer-quantized, so every path and the DuckDB oracle agree
+bit-for-bit): ``cosine_topk`` ships the reference matrix to workers as a
+side input (``fagi_gis_spark.sideinput``) and scans the queries once,
+switching to a block-partitioned cogroup matmul above
+``_ANN_BROADCAST_MAX_REFS``; ``cosine_near_dup_pairs(blocking="exact")``
+thresholds the same cogroup kernel.
+
+Approximate (candidates first, exact re-rank after): ``lsh_topk`` and
+``cosine_near_dup_pairs`` bucket-join random-hyperplane signatures on
+ids only (shuffle bounded by bucket width, no cross join); ``ivf_topk``
+probes KMeans cells; ``pq_topk`` scores product-quantized codes by ADC.
+Their small bounded arrays (centroids, codebooks) ride in the UDF
+closure.
 """
 
 from __future__ import annotations
@@ -26,55 +31,6 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFram
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
-def cosine_topk(
-    emb: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int = 1000,
-    queries: DataFrame | None = None,
-    impl: str = "blocked",
-    n_blocks: int = 32,
-) -> DataFrame:
-    """Exact cosine top-k neighbors for every vector (excluding self).
-    Integer-quantized: cos = dot_q / sqrt(n_a * n_b) over exact BIGINTs,
-    so both impls (and the DuckDB oracle) agree bit-for-bit.
-
-    impl="blocked" (default): block-partitioned exact matmul — the
-    reference set is hash-split into ``n_blocks`` row blocks, queries
-    replicate to every block, a cogrouped Arrow kernel does one integer
-    matmul + tie-safe per-block top-k per (query batch, block), and a
-    final window merges the global top-k. NOTHING is collected to the
-    driver, so "exact" survives reference sets far beyond one machine's
-    memory: per-task working set is |block| x dim, and n_blocks scales
-    with the data. (Per-block top-k is globally sufficient: any global
-    top-k neighbor ranks within top-k of its own block under the same
-    (cos desc, id asc) order.) impl="sql": pure Catalyst expressions
-    (self-join + window), kept as the plan-level baseline."""
-    if impl in ("blocked", "numpy"):  # "numpy" kept as a back-compat alias
-        return _cosine_topk_blocked(emb, k, id_col, vec_col, quantize, queries, n_blocks)
-    base = _quantized(emb, id_col, vec_col, quantize)
-    norms = base.withColumn("n", _dot(F.col("v"), F.col("v")))
-    q = norms if queries is None else _quantized(queries, id_col, vec_col, quantize).withColumn(
-        "n", _dot(F.col("v"), F.col("v"))
-    )
-    l = q.select(F.col("vid").alias("vec_id"), F.col("v").alias("va"), F.col("n").alias("na"))
-    r = norms.select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    pairs = l.crossJoin(r).filter(F.col("vec_id") != F.col("neighbor_id"))
-    cos = _dot(F.col("va"), F.col("vb")).cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos_sim", "rank")
-    )
 
 
 def _round_half_away(x: np.ndarray) -> np.ndarray:
@@ -144,9 +100,10 @@ def _block_topk(
     return _rows_topk(qids, cos, rids, k, "cos_sim")
 
 
-#: broadcast-reference cutoff for the exact top-k: reference matrices up
-#: to this many rows ship to every task as one quantized int64 numpy
-#: matrix (500k x 64 dims x 8 B = 256 MB).  Below it the query side is
+#: side-input reference cutoff for the exact top-k: reference matrices
+#: up to this many rows ship once to every worker, through
+#: fagi_gis_spark.sideinput, as one quantized int64 numpy matrix (500k x
+#: 64 dims x 8 B = 256 MB).  Below it the query side is
 #: scanned ONCE with the whole reference in task memory — no 32x query
 #: replication, no cogroup shuffle, no merge window; above it the blocked
 #: cogroup path keeps per-task memory bounded by |block| x dim.  The same
@@ -163,8 +120,9 @@ def _cosine_topk_broadcast(
     quantize: int,
     queries: DataFrame | None,
 ) -> DataFrame:
-    """Exact top-k with the full quantized reference broadcast: one
-    mapInPandas pass over the query side, zero shuffles/windows."""
+    """Exact top-k with the full quantized reference shipped as a side
+    input: one mapInPandas pass over the query side, zero
+    shuffles/windows."""
     from fagi_gis_spark.sideinput import read_arrays, write_arrays
 
     ref_pdf = (
@@ -176,10 +134,10 @@ def _cosine_topk_broadcast(
     src = queries if queries is not None else emb
     # worker-cached side-input file, not a Python broadcast (see
     # fagi_gis_spark.sideinput — broadcasts re-unpickle per task)
-    ref_path = write_arrays("ann_ref", rids=rids, R=R)
+    side = write_arrays(emb.sparkSession, rids=rids, R=R)
 
     def run(batches):
-        z = read_arrays(ref_path)
+        z = read_arrays(side)
         rids_b, R_b = z["rids"], z["R"]
         if R_b.size == 0:
             return
@@ -211,17 +169,32 @@ def _cosine_topk_broadcast(
     ).mapInPandas(run, schema="vec_id long, neighbor_id long, cos_sim double, rank int")
 
 
-def _cosine_topk_blocked(
+def cosine_topk(
     emb: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    quantize: int,
-    queries: DataFrame | None,
-    n_blocks: int,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    quantize: int = 1000,
+    queries: DataFrame | None = None,
+    n_blocks: int = 32,
 ) -> DataFrame:
-    # physical-strategy switch: small reference sets broadcast (one query
-    # scan, no replication/shuffle/window); large ones use block cogroup
+    """Exact cosine top-k neighbors for every vector (excluding self).
+    Integer-quantized: cos = dot_q / sqrt(n_a * n_b) over exact BIGINTs,
+    so both physical strategies (and the DuckDB oracle) agree
+    bit-for-bit.
+
+    Up to ``_ANN_BROADCAST_MAX_REFS`` reference rows, the quantized
+    reference matrix ships to workers as a side input and the query side
+    is scanned once (``_cosine_topk_broadcast``).  Above it: a
+    block-partitioned exact matmul — the reference set is hash-split
+    into ``n_blocks`` row blocks, queries replicate to every block, a
+    cogrouped Arrow kernel does one integer matmul + tie-safe per-block
+    top-k per (query batch, block), and a final window merges the global
+    top-k. NOTHING is collected to the driver, so "exact" survives
+    reference sets far beyond one machine's memory: per-task working set
+    is |block| x dim, and n_blocks scales with the data. (Per-block
+    top-k is globally sufficient: any global top-k neighbor ranks within
+    top-k of its own block under the same (cos desc, id asc) order.)"""
     try:
         n_ref = emb.count()
     except Exception:  # pragma: no cover — unplannable frame
@@ -280,7 +253,7 @@ def ivf_topk(
     assigns each vector to a cell; queries probe their ``n_probe`` nearest
     centroids and re-rank exactly (integer dot products) inside those
     cells. The second scale path next to LSH: shuffle bounded by cell
-    population, centroids broadcast."""
+    population; the (n_cells, dim) centroids ride in the UDF closure."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -289,13 +262,11 @@ def ivf_topk(
     ).withColumn("features", array_to_vector(F.col("embedding")))
     km = KMeans(k=n_cells, seed=seed, maxIter=20).fit(vec)
     centers = np.vstack([np.asarray(c) for c in km.clusterCenters()])
-    b = emb.sparkSession.sparkContext.broadcast(centers)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def u_probe_cells(v: pd.Series) -> pd.Series:
-        C = b.value
         m = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
-        d = ((m[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        d = ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
         order = np.argsort(d, axis=1)[:, :n_probe]
         return pd.Series(order.astype(np.int32).tolist())
 
@@ -392,7 +363,6 @@ def pq_topk(
     integer kernel as ``cosine_topk``): output becomes (vec_id,
     neighbor_id, cos_sim, rank) with exact scores, and recall is set by
     the shortlist rather than raw code resolution."""
-    spark = emb.sparkSession
     base = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
 
     # bounded deterministic fit sample: pure hash gate, NO limit() — an
@@ -411,13 +381,12 @@ def pq_topk(
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
+    # (m, n_centroids, dim/m) codebooks ride in the UDF closures
     books = _pq_fit_codebooks(X, m, n_centroids, kmeans_iters, seed)
-    bb = spark.sparkContext.broadcast(books)
     sub = dim // m
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def u_encode(v: pd.Series) -> pd.Series:
-        B = bb.value
         M = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
         nrm = np.linalg.norm(M, axis=1, keepdims=True)
         M = M / np.where(nrm == 0, 1.0, nrm)
@@ -426,7 +395,7 @@ def pq_topk(
             Mj = M[:, j * sub : (j + 1) * sub]
             # matrix form, not the (batch, nc, sub) difference tensor
             codes[:, j] = (
-                -2.0 * (Mj @ B[j].T) + (B[j] * B[j]).sum(axis=1)[None, :]
+                -2.0 * (Mj @ books[j].T) + (books[j] * books[j]).sum(axis=1)[None, :]
             ).argmin(axis=1)
         return pd.Series(codes.tolist())
 
@@ -450,7 +419,6 @@ def pq_topk(
                     "pq_score": pd.Series([], dtype="float64"),
                 }
             )
-        B = bb.value
         Q = np.vstack([np.asarray(x, dtype=np.float64) for x in left["qv"]])
         nrm = np.linalg.norm(Q, axis=1, keepdims=True)
         Q = Q / np.where(nrm == 0, 1.0, nrm)
@@ -459,7 +427,7 @@ def pq_topk(
         # then one table lookup per (query, ref, subspace)
         scores = np.zeros((len(Q), len(codes)))
         for j in range(m):
-            T_j = Q[:, j * sub : (j + 1) * sub] @ B[j].T
+            T_j = Q[:, j * sub : (j + 1) * sub] @ books[j].T
             scores += T_j[:, codes[:, j]]
         return _rows_topk(
             left["qid"].to_numpy("int64"), scores, right["vid"].to_numpy("int64"), k_adc, "pq_score"

@@ -157,44 +157,15 @@ def _bucket_candidates(buckets: DataFrame) -> DataFrame:
     )
 
 
-#: broadcast-verify cutoff: signature matrices up to this many rows are
-#: shipped to every task as one numpy array (n_docs * n_perm * 8 bytes;
-#: 2M docs x 64 perms = 1 GiB).  Above it, verification falls back to
-#: the join + column-expression path, whose shuffle is bounded by the
-#: candidate count — the physical-strategy switch is the same kind of
-#: decision as broadcast-vs-sort-merge, and both paths compute the
-#: identical (agreement / n_perm) value.
+#: side-input verify cutoff: signature matrices up to this many rows
+#: ship to every worker once, through fagi_gis_spark.sideinput, as numpy
+#: arrays (n_docs * n_perm * 9 bytes for the int64 matrix plus its uint8
+#: screen; 2M docs x 64 perms = 1.1 GiB).  Above it, verification falls
+#: back to the join + column-expression path, whose shuffle is bounded
+#: by the candidate count — the physical-strategy switch is the same
+#: kind of decision as broadcast-vs-sort-merge, and both paths compute
+#: the identical (agreement / n_perm) value.
 _VERIFY_BROADCAST_MAX_DOCS = 2_000_000
-
-#: worker-side cache of decoded verify side inputs (pd.Index + uint8
-#: screening view are derived once per worker, not per batch)
-_SIG_SIDEINPUT_CACHE: dict = {}
-
-
-def _write_sig_sideinput(ids: np.ndarray, sig_mat: np.ndarray) -> str:
-    """Dump the (ids, signature-matrix) side input once — see
-    fagi_gis_spark.sideinput for the pattern and why it replaces a
-    Python broadcast."""
-    from fagi_gis_spark.sideinput import write_arrays
-
-    return write_arrays("minhash_sigs", ids=ids, sig=sig_mat)
-
-
-def _load_sig_sideinput(path: str):
-    """Worker-side load (once per worker process): returns
-    (pd.Index ids, int64 matrix, uint8 screening view)."""
-    hit = _SIG_SIDEINPUT_CACHE.get(path)
-    if hit is not None:
-        return hit
-    from fagi_gis_spark.sideinput import read_arrays
-
-    z = read_arrays(path)
-    ids = pd.Index(z["ids"])
-    m = z["sig"]
-    lo = (m & np.int64(0xFF)).astype(np.uint8)
-    _SIG_SIDEINPUT_CACHE.clear()  # one matrix per worker is plenty
-    _SIG_SIDEINPUT_CACHE[path] = (ids, m, lo)
-    return _SIG_SIDEINPUT_CACHE[path]
 
 
 def minhash_lsh_pairs(
@@ -205,18 +176,21 @@ def minhash_lsh_pairs(
     Output: (doc_a, doc_b, jaccard_est) with doc_a < doc_b.
 
     Verification strategy (guide §4.2 — hand whole batches to vectorized
-    native code): when the signature table fits the broadcast budget, the
-    (n_docs, n_perm) int64 matrix is broadcast once and candidate pairs
-    are verified by one vectorized numpy gather + compare per Arrow batch
-    of id pairs — only the two ids per pair ever cross a shuffle or the
-    Python boundary.  The JVM zip_with expression evaluated the same
-    agreement at ~30 ns/slot with two array allocations per pair
-    (measured 11 s for 71M candidates at sf1.0); the numpy kernel does
-    the identical count at memory bandwidth.  Candidates are verified
-    pre-distinct (duplicate (band-collision) pairs recompute the same
-    deterministic estimate; survivors are ~0.3% of candidates, so the
-    distinct shrinks by 350x) — output is identical because
-    ``jaccard_est`` is a pure function of the pair."""
+    native code): when the signature table fits the side-input budget,
+    the driver collects it once and ships, through
+    ``fagi_gis_spark.sideinput``, the ids sorted ascending, the
+    (n_docs, n_perm) int64 matrix in the same row order and its uint8
+    screen.  Candidate pairs are then verified by ``np.searchsorted`` row
+    lookups plus one vectorized gather + compare per Arrow batch of id
+    pairs — only the two ids per pair ever cross a shuffle or the Python
+    boundary.  The JVM zip_with expression evaluated the same agreement
+    at ~30 ns/slot with two array allocations per pair (measured 11 s for
+    71M candidates at sf1.0); the numpy kernel does the identical count
+    at memory bandwidth.  Candidates are verified pre-distinct (duplicate
+    (band-collision) pairs recompute the same deterministic estimate;
+    survivors are ~0.3% of candidates, so the distinct shrinks by 350x)
+    — output is identical because ``jaccard_est`` is a pure function of
+    the pair."""
     n_perm = bands * rows_per_band
     # signatures feed the bucket branch and verification; persist so the
     # Arrow-batched UDF runs once (at real scale this is a materialized
@@ -224,35 +198,42 @@ def minhash_lsh_pairs(
     sigs = sigs.persist()
     n_docs = sigs.count()
     if n_docs <= _VERIFY_BROADCAST_MAX_DOCS:
-        import pandas as pd  # noqa: F811 (module-level import shadowed for clarity)
+        from fagi_gis_spark.sideinput import read_arrays, write_arrays
 
         mat = sigs.toPandas()
-        ids = pd.Index(mat["doc_id"])
-        sig_mat = np.vstack(
-            [np.asarray(v, dtype=np.int64) for v in mat["sig"]]
-        ) if len(mat) else np.empty((0, n_perm), dtype=np.int64)
-        # Side-input FILE, not a Spark broadcast: accessing a python
-        # broadcast from mapInPandas re-ships/unpickles the value far
-        # too often (measured +15 s wall at sf1.0 for a 29 MB matrix
-        # just touching b.value).  Instead the matrix is written once
-        # (driver-side, atomic rename) and each REUSED python worker
-        # loads it once into a module-level cache keyed by file
-        # identity (guide §4.5 — heavyweight init once per worker).
-        # At real scale this is exactly the stored signature table on
-        # shared storage.
-        sig_path = _write_sig_sideinput(mat["doc_id"].to_numpy(), sig_mat)
+        ids = mat["doc_id"].to_numpy()
+        if ids.dtype == object:  # string ids: fixed-width unicode, never pickled
+            ids = ids.astype(str)
+        order = np.argsort(ids, kind="stable")
+        sig_mat = (
+            np.vstack([np.asarray(v, dtype=np.int64) for v in mat["sig"]])[order]
+            if len(mat)
+            else np.empty((0, n_perm), dtype=np.int64)
+        )
+        # Side-input file, not a Python broadcast (see
+        # fagi_gis_spark.sideinput): the driver ships everything the
+        # kernel needs, so workers derive nothing and a REUSED worker
+        # loads the arrays once.  Every candidate id comes from these
+        # same signatures, so each searchsorted lookup finds its id.
+        side = write_arrays(
+            sigs.sparkSession,
+            ids=ids[order],
+            sig=sig_mat,
+            lo=(sig_mat & np.int64(0xFF)).astype(np.uint8),
+        )
         thr = float(jaccard_threshold)
         fperm = float(n_perm)
         # smallest agreement count that can reach the threshold
         need = int(np.ceil(thr * n_perm - 1e-9))
 
         def verify(batches):
-            idx, m, lo = _load_sig_sideinput(sig_path)
+            z = read_arrays(side)
+            idx, m, lo = z["ids"], z["sig"], z["lo"]
             for pdf in batches:
                 if not len(pdf):
                     continue
-                ia = idx.get_indexer(pdf["doc_a"])
-                ib = idx.get_indexer(pdf["doc_b"])
+                ia = np.searchsorted(idx, pdf["doc_a"].to_numpy(idx.dtype))
+                ib = np.searchsorted(idx, pdf["doc_b"].to_numpy(idx.dtype))
                 # 8-bit screen: equal slots stay equal under truncation,
                 # so agreement on the uint8 view is an UPPER BOUND on
                 # exact agreement — bound-failing pairs are exactly

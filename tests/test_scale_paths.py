@@ -1392,3 +1392,54 @@ def test_stream_incremental_cosine_matches_batch(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_side_input_ships_through_spark_files(spark):
+    """Driver-built side inputs travel by ``SparkContext.addFile``: the
+    worker closure carries a bare, content-hashed file name that resolves
+    under the context's SparkFiles root (deleted by Spark at ``stop()``),
+    a ``mapInPandas`` worker reads the arrays back, and the side-input
+    kernels (MinHash verify, exact ANN) write nothing to ``/tmp``."""
+    import glob
+    import os
+
+    import numpy as np
+    from pyspark import SparkFiles
+
+    from fagi_gis_spark.registry import queries
+    from fagi_gis_spark.sideinput import write_arrays
+
+    ids = np.array(["a", "bb", "ccc"])
+    mat = np.arange(12, dtype=np.int64).reshape(3, 4)
+    name = write_arrays(spark, ids=ids, mat=mat)
+    assert os.sep not in name
+    path = os.path.join(SparkFiles.getRootDirectory(), name)
+    assert os.path.isfile(path)
+    assert write_arrays(spark, ids=ids.copy(), mat=mat.copy()) == name
+
+    def read_back(batches):
+        from fagi_gis_spark.sideinput import read_arrays
+
+        z = read_arrays(name)
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"],
+                    "label": z["ids"][pdf["id"].to_numpy()],
+                    "row_sum": z["mat"][pdf["id"].to_numpy()].sum(axis=1),
+                }
+            )
+
+    got = (
+        spark.range(3, numPartitions=2)
+        .mapInPandas(read_back, schema="id long, label string, row_sum long")
+        .toPandas()
+        .sort_values("id")
+    )
+    assert got["label"].tolist() == ids.tolist()
+    assert got["row_sum"].tolist() == mat.sum(axis=1).tolist()
+
+    before = set(glob.glob("/tmp/spark_graft_side_*"))
+    for q in ("dedup_minhash_lsh", "ann_cosine_topk"):
+        assert queries()[q](spark, SF).count() > 0
+    assert set(glob.glob("/tmp/spark_graft_side_*")) == before

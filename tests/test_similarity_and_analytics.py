@@ -35,32 +35,63 @@ def test_fuzzy_jaccard_reference_semantics():
     assert fuzzy_token_jaccard("cafe plaza", "museum station") == 0.0
 
 
-def test_minhash_estimates_jaccard(spark):
+_MINHASH_TEXTS = {
+    0: "the quick brown fox jumps over the lazy dog in the park today",
+    1: "the quick brown fox jumps over the lazy dog in the park tonight",  # near-dup of 0
+    2: "completely different content about spark dataframes and shuffles",
+    3: "the quick brown fox jumps over the lazy dog in the park today",  # exact dup of 0
+}
+
+
+def _minhash_pairs(spark, id_type) -> dict:
     import pandas as pd
 
-    from fagi_gis_spark.functions.dedup import (
-        _shingle_hashes,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
+    from fagi_gis_spark.functions.dedup import minhash_lsh_pairs, minhash_signatures
 
-    texts = {
-        0: "the quick brown fox jumps over the lazy dog in the park today",
-        1: "the quick brown fox jumps over the lazy dog in the park tonight",  # near-dup of 0
-        2: "completely different content about spark dataframes and shuffles",
-        3: "the quick brown fox jumps over the lazy dog in the park today",  # exact dup of 0
-    }
-    docs = spark.createDataFrame(pd.DataFrame({"doc_id": texts.keys(), "text": texts.values()}))
-    pairs = {
-        (r.doc_a, r.doc_b): r.jaccard_est
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [id_type(i) for i in _MINHASH_TEXTS],
+                "text": _MINHASH_TEXTS.values(),
+            }
+        )
+    )
+    return {
+        (int(r.doc_a), int(r.doc_b)): r.jaccard_est
         for r in minhash_lsh_pairs(minhash_signatures(docs), jaccard_threshold=0.3).collect()
     }
+
+
+@pytest.fixture(scope="module")
+def minhash_join_pairs(spark):
+    """Reference estimates: int ids through the signature-join verify."""
+    from fagi_gis_spark.functions import dedup
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_VERIFY_BROADCAST_MAX_DOCS", 0)
+        return _minhash_pairs(spark, int)
+
+
+@pytest.mark.parametrize("verify", ["sideinput", "join"])
+@pytest.mark.parametrize("id_type", [int, str], ids=["int", "str"])
+def test_minhash_estimates_jaccard(spark, monkeypatch, minhash_join_pairs, id_type, verify):
+    """Both verify strategies (worker side input below the cutoff, the
+    signature join above it) give the same estimates for int and string
+    doc ids — string ids ship as fixed-width numpy arrays, never as
+    pickled object arrays."""
+    from fagi_gis_spark.functions import dedup
+    from fagi_gis_spark.functions.dedup import _shingle_hashes
+
+    if verify == "join":
+        monkeypatch.setattr(dedup, "_VERIFY_BROADCAST_MAX_DOCS", 0)
+    pairs = _minhash_pairs(spark, id_type)
     assert pairs[(0, 3)] == 1.0  # exact dup
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.5  # near dup found
     assert not any(2 in p for p in pairs)  # unrelated not paired
+    assert pairs == minhash_join_pairs
 
     # estimator sanity vs true shingle jaccard
-    s0, s1 = (set(_shingle_hashes(texts[i]).tolist()) for i in (0, 1))
+    s0, s1 = (set(_shingle_hashes(_MINHASH_TEXTS[i]).tolist()) for i in (0, 1))
     true_j = len(s0 & s1) / len(s0 | s1)
     assert abs(pairs[(0, 1)] - true_j) < 0.25
 

@@ -30,7 +30,7 @@ AUDIT = [
     ("tile_assign", "WebMercator tile assignment (pure column math)"),
     ("pip_assign", "point-in-polygon join (broadcast index, mapInPandas)"),
     ("dedup_exact", "exact dedup (partial agg -> exchange -> final agg)"),
-    ("ann_cosine_topk", "exact ANN (block-partitioned cogroup matmul, no driver collect)"),
+    ("ann_cosine_topk", "exact ANN (SparkFiles reference side input, one mapInPandas query scan)"),
     ("dedup_embedding_cosine", "embedding near-dup pairs (same blocked cogroup kernel)"),
     ("events_topk_users", "top-k per group (agg + window)"),
     ("dedup_incremental_minhash", "day-2 dedup vs stored bucketed LSH index (corpus side exchange-free)"),
