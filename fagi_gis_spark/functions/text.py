@@ -1,8 +1,8 @@
 """Text analysis for large-scale training-data pipelines over ``documents``:
 token counting, quality scoring, language-ID heuristic, fingerprinting.
 
-All hot-path pieces are JVM column expressions; only the rolling-hash
-fingerprint drops to an Arrow-batched pandas UDF.
+All hot-path pieces are JVM column expressions; only sequence packing
+drops to pandas, one group per ``applyInPandas`` call.
 """
 
 from __future__ import annotations
@@ -96,23 +96,6 @@ def fingerprint_md5(text: Column) -> Column:
     identical in Spark and DuckDB (both emit hex md5)."""
     norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
     return F.md5(norm)
-
-
-@F.pandas_udf(T.LongType())
-def u_rolling_fingerprint(text: pd.Series) -> pd.Series:
-    """64-bit polynomial rolling hash (Rabin-Karp style, base 1000003) of
-    the normalized text — an order-sensitive fingerprint complementary to
-    md5, computed vectorized per Arrow batch."""
-    out = np.zeros(len(text), dtype=np.uint64)
-    base = np.uint64(1000003)
-    mask = np.uint64(0xFFFFFFFFFFFFFFFF)
-    for i, s in enumerate(text):
-        h = np.uint64(1469598103934665603)
-        if s:
-            for ch in " ".join(s.lower().split()).encode("utf-8"):
-                h = ((h * base) & mask) ^ np.uint64(ch)
-        out[i] = h
-    return pd.Series(out.astype(np.int64))
 
 
 def pack_documents(

@@ -10,8 +10,6 @@ plus proper haversine for reporting.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 from fagi_gis_spark.geometry.wkt import Geom, all_coords
@@ -133,12 +131,6 @@ def bbox(g: Geom | None) -> tuple[float, float, float, float] | None:
     if len(c) == 0:
         return None
     return (float(c[:, 0].min()), float(c[:, 1].min()), float(c[:, 0].max()), float(c[:, 1].max()))
-
-
-def euclid_deg(x1: float, y1: float, x2: float, y2: float) -> float:
-    """Planar degree distance — the metric the reference's radius search uses
-    (radius_deg = meters/111195, FindLinkServlet.java:197)."""
-    return math.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
 
 
 def haversine_m(lon1, lat1, lon2, lat2):

@@ -201,32 +201,3 @@ def cell_id_sql(lon_expr: str, lat_expr: str, z: int) -> str:
         f" + {tile_y_sql(lat_expr, z)})"
     )
 
-
-# -------------------------------------------------------------- tile extents
-def tile_bounds(z: int, x: int, y: int) -> tuple[float, float, float, float]:
-    """(min_lon, min_lat, max_lon, max_lat) of a tile."""
-    n = float(2**z)
-
-    def lon(xx):
-        return xx / n * 360.0 - 180.0
-
-    def lat(yy):
-        t = math.pi * (1.0 - 2.0 * yy / n)
-        return math.degrees(math.atan(math.sinh(t)))
-
-    return (lon(x), lat(y + 1), lon(x + 1), lat(y))
-
-
-def meters_per_tile(z: int, lat_deg: float = 51.0) -> float:
-    """Approximate tile edge length in meters at a latitude."""
-    return 40075016.686 * math.cos(math.radians(lat_deg)) / (2**z)
-
-
-def res_for_radius(radius_m: float, lat_deg: float = 51.0) -> int:
-    """Finest resolution whose tile edge still covers ``radius_m`` — so a
-    3x3 neighborhood (ring 1) is a complete candidate set for a radius
-    probe. Clamped to [MIN_RES, MAX_RES]."""
-    z = MAX_RES
-    while z > MIN_RES and meters_per_tile(z, lat_deg) < radius_m:
-        z -= 1
-    return z

@@ -84,20 +84,11 @@ def metadata_keep_from_spec(
     dominant: str = "a",
 ):
     """metadata_keep accepting the reference wire format: the chosen
-    side's alternatives become an OR filter over expanded chain keys."""
-    from pyspark.sql import functions as F
-
-    from fagi_gis_spark.operators.metadata import _dominant_subject, expand_chains
+    side's alternatives are all kept, as a list of chain keys."""
+    from fagi_gis_spark.operators.metadata import metadata_keep
 
     parsed = parse_chain_pair(spec) if isinstance(spec, str) else spec
     keys = parsed.left_chain_keys() if side == "a" else parsed.right_chain_keys()
     if new_pred is None:
         new_pred = "_".join(keys[0].split(","))
-    sub_key = "sub_a" if side == "a" else "sub_b"
-    dom = _dominant_subject(links, dominant)
-    chains = expand_chains(triples).filter(F.col("chain").isin(keys))
-    return dom.join(chains, dom[sub_key] == chains.subject, "inner").select(
-        F.col("dom_subject").alias("subject"),
-        F.concat(F.lit(dom_onto), F.lit(new_pred)).alias("predicate"),
-        "object",
-    )
+    return metadata_keep(links, triples, side, keys, dom_onto, new_pred, dominant)

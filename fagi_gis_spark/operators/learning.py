@@ -264,19 +264,6 @@ def u_pair_features(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(_FEAT_SCHEMA)
-def u_pair_features_owl(
-    wkt_a: pd.Series, wkt_b: pd.Series, owl_a: pd.Series, owl_b: pd.Series
-) -> pd.Series:
-    """Geometry features ++ OWL class-count slice (the full BooleanVector
-    driver list: createGeometryFeatures + createOWLFeatures)."""
-    out = []
-    for a_s, b_s, oa, ob in zip(wkt_a, wkt_b, owl_a, owl_b):
-        geo = pair_feature_vector(parse_wkt(a_s), parse_wkt(b_s))
-        out.append(np.concatenate([geo, owl_feature_slice(oa, ob)]).tolist())
-    return pd.Series(out)
-
-
 def pair_features(
     pairs: DataFrame, triples_a: DataFrame | None = None, triples_b: DataFrame | None = None
 ) -> DataFrame:

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fagi_gis_spark.geometry.measures import area, npoints
-from fagi_gis_spark.geometry.wkt import Geom, parse_wkt
+from fagi_gis_spark.geometry.wkt import Geom
 from fagi_gis_spark.operators.learning import _edge_bin, _edge_stats, _is_rectangle
 
 _NPTS_EDGES = [10, 20, 30, 40, 50, 75, 100, 150, 200, 300, 500, 1000]  # +else = 13
@@ -65,7 +65,7 @@ _TYPE_SLOTS = {"LINESTRING": 0, "POLYGON": 1, "LINEARRING": 2, "POINT": 3}
 
 def tag_feature_vector(g: Geom | None) -> np.ndarray:
     """One geometry's dense TagFeatures slice (plain-python kernel,
-    shared by the Arrow UDF and the pytest differential oracle)."""
+    the pytest differential oracle for tag_feature_matrix)."""
     v = np.zeros(N_TAG_FEATURES, dtype=np.float64)
     if g is None:
         return v
@@ -88,11 +88,6 @@ def tag_feature_vector(g: Geom | None) -> np.ndarray:
     else:
         v[67 + 1 + _edge_bin(nv, _VAR_EDGES)] = 1.0  # NaN/else slot = 104
     return v
-
-
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
-def u_tag_features(wkt: pd.Series) -> pd.Series:
-    return pd.Series([tag_feature_vector(parse_wkt(s)).tolist() for s in wkt])
 
 
 def tag_feature_matrix(p: pd.DataFrame) -> np.ndarray:

@@ -303,36 +303,6 @@ def decode_pixels(data: bytes) -> np.ndarray:
     )
 
 
-def decode_pixels_rgb(data: bytes) -> np.ndarray:
-    """Decode an image payload to (h, w, 3) RGB: color JPEGs decode
-    natively (YCbCr 4:2:0, fancy upsampling), color BMP/GIF/TIFF decode
-    to their stored RGB; gray payloads replicate the single channel —
-    the typed color surface for multimodal ops."""
-    data = bytes(data)
-    px = None
-    if data[:2] == b"\xff\xd8":
-        from fagi_gis_spark.sources.jpeg import decode_jpeg
-
-        px = decode_jpeg(data)
-    elif data[:2] == b"BM":
-        from fagi_gis_spark.sources.bmp import decode_bmp
-
-        px = decode_bmp(data)
-    elif data[:6] in (b"GIF87a", b"GIF89a"):
-        from fagi_gis_spark.sources.gif import decode_gif
-
-        px = decode_gif(data)
-    elif data[:4] in (b"II*\x00", b"MM\x00*"):
-        from fagi_gis_spark.sources.tiff import decode_tiff
-
-        px = decode_tiff(data)
-    if px is None:
-        px = decode_pixels(data)
-    if px.ndim == 3:
-        return px
-    return np.repeat(px[..., None], 3, axis=-1)
-
-
 def try_decode_pixels(data: bytes) -> np.ndarray | None:
     """decode_pixels, but None for still-stubbed containers AND for
     malformed payloads inside a supported container (truncated entropy

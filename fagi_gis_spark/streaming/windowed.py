@@ -30,16 +30,6 @@ def windowed_event_counts(
     )
 
 
-def geotag_stream(stream: DataFrame, cell_res: int = 9) -> DataFrame:
-    """Streaming ingest of input_hint image records: geotag + cell encode
-    are pure column expressions, so the same operators apply unchanged to
-    a readStream source — this is the streaming front door of the tiling
-    pipeline."""
-    from fagi_gis_spark.operators.geotag import geotag_images
-
-    return geotag_images(stream, cell_res=cell_res)
-
-
 def start_memory_sink(df: DataFrame, name: str, output_mode: str = "complete"):
     """Test/debug sink: drive with processAllAvailable()."""
     return (

@@ -236,23 +236,122 @@ def test_parse_chain_pair_reference_format():
     assert fused_predicate_name("addr,street=>address") == "addr_street"
 
 
-def test_metadata_keep_from_spec_roundtrip(spark):
+_A_ADDR_STREET = "http://a.example/addr,http://a.example/street"
+_A_NAME = "http://a.example/name"
+
+
+@pytest.mark.parametrize(
+    "left",
+    [[_A_ADDR_STREET], [_A_ADDR_STREET, _A_NAME]],
+    ids=["one_chain", "two_chains"],
+)
+def test_metadata_keep_from_spec_roundtrip(spark, left):
+    """A spec side with alternatives keeps the union of the single-chain
+    metadata_keep results."""
     from fagi_gis_spark.operators.chain_config import metadata_keep_from_spec
     from fagi_gis_spark.operators.metadata import metadata_keep
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, "/root/testdata/sf0.001")
-    spec = "http://a.example/addr,http://a.example/street=>http://b.example/address,http://b.example/street"
+    spec = "|".join(left) + "=>http://b.example/address,http://b.example/street"
     via_spec = metadata_keep_from_spec(
         L["links"], L["triples_a"], "a", spec, "http://a.example/", "addr"
-    ).toPandas()
-    direct = metadata_keep(
-        L["links"], L["triples_a"], "a",
-        "http://a.example/addr,http://a.example/street", "http://a.example/", "addr",
-    ).toPandas()
-    key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
-    assert key(via_spec) == key(direct)
-    assert len(direct) > 0
+    ).collect()
+    per_chain = [
+        metadata_keep(
+            L["links"], L["triples_a"], "a", chain, "http://a.example/", "addr"
+        ).collect()
+        for chain in left
+    ]
+    assert all(per_chain)
+    direct = [r for rows in per_chain for r in rows]
+    assert sorted(map(tuple, via_spec)) == sorted(map(tuple, direct))
+
+
+# subject -> blank-node chains exercising every expand_chains edge case
+_CHAIN_TRIPLES = [
+    # s1: depth-6 leaf (kept) and, via _:e -> _:f, a depth-7 leaf (cut)
+    ("s1", "p", "_:a"), ("_:a", "q", "_:b"), ("_:b", "r", "_:c"),
+    ("_:c", "s", "_:d"), ("_:d", "t", "_:e"), ("_:e", "u", "leaf6"),
+    ("_:e", "u2", "_:f"), ("_:f", "g", "leaf7"),
+    ("_:a", "q", None),  # null object under a blank node
+    ("s3", "p", "_:dangle"),  # dangling blank node: dropped
+    ("s4", "loop", "_:L"), ("_:L", "self", "_:L"), ("_:L", "v", "lv"),  # self-loop
+    ("s5", "two", "_:T"), ("_:T", "x", "1"), ("_:T", "y", "2"),  # two predicates
+    ("s6", "n", None),  # null object
+    ("s7", "uri", "http://u"), ("http://u", "k", "notme"),  # URI is not traversed
+]
+
+
+def _walk_chains(triples):
+    """Pure-Python reference for expand_chains: follow blank nodes from
+    every triple up to MAX_METADATA_DEPTH hops, keep non-blank leaves."""
+    from fagi_gis_spark.operators.metadata import MAX_METADATA_DEPTH
+
+    out = {}
+    for s, p, o in triples:
+        out.setdefault(s, []).append((p, o))
+    rows = []
+
+    def walk(root, chain, o, depth):
+        if o is not None and not o.startswith("_:"):
+            rows.append((root, ",".join(chain), o, depth))
+        elif o is not None and depth < MAX_METADATA_DEPTH:
+            for p2, o2 in out.get(o, []):
+                walk(root, chain + [p2], o2, depth + 1)
+
+    for s, p, o in triples:
+        walk(s, [p], o, 1)
+    return sorted(rows)
+
+
+def _chain_frame(spark):
+    return spark.createDataFrame(
+        _CHAIN_TRIPLES, "subject string, predicate string, object string"
+    )
+
+
+def test_expand_chains_matches_python_walker(spark):
+    from fagi_gis_spark.operators.metadata import expand_chains
+
+    got = sorted(map(tuple, expand_chains(_chain_frame(spark)).collect()))
+    want = _walk_chains(_CHAIN_TRIPLES)
+    assert got == want
+    assert ("s1", "p,q,r,s,t,u", "leaf6", 6) in got
+    assert not any(r[2] == "leaf7" and r[0] == "s1" for r in got)
+    assert not any(r[0] in ("s3", "s6") for r in got)
+    assert ("s7", "uri", "http://u", 1) in got
+    assert {r[1] for r in got if r[0] == "s5"} == {"two,x", "two,y"}
+
+
+def test_metadata_family_builds_without_jobs(spark):
+    """Operators build lazy plans: constructing the metadata frames (and
+    expand_chains itself) must not launch a Spark job."""
+    import uuid
+
+    from fagi_gis_spark.operators.metadata import expand_chains
+    from fagi_gis_spark.registry import layers, queries
+    from tests.conftest import SF_TINY as sf
+
+    layers(spark, sf)  # warm the stored-layer import and its memo
+    chains = _chain_frame(spark)
+    q = queries()
+    sc = spark.sparkContext
+    group = f"metadata-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "metadata build")
+    try:
+        for name in (
+            "metadata_keep_a",
+            "metadata_keep_both",
+            "metadata_keep_concat_a",
+            "metadata_concatenation",
+            "metadata_flattened",
+        ):
+            q[name](spark, sf)
+        expand_chains(chains)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 # ---------------------------------------------------------------------------
