@@ -771,13 +771,9 @@ def build_cosine_index(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_buckets: int = 16,
-    mode: str = "errorifexists",
 ) -> None:
-    """Persist the embedding-cosine day-2 index — the fourth quadrant of
-    the incremental-dedup matrix (exact digests / MinHash-Jaccard /
-    banded-hamming / embedding-cosine all share the same shape): the
-    corpus's hyperplane bucket rows land in ``{table}_buckets``
+    """Persist the embedding-cosine day-2 index — the same shape as the
+    MinHash index (``dedup.build_minhash_index``): the corpus's hyperplane bucket rows land in ``{table}_buckets``
     (storage-bucketed by ``bucket``, so a new batch's candidate join is
     exchange-free on the corpus side) and the quantized vectors in
     ``{table}_vecs`` (bucketed by id, so the exact verify re-attach is
@@ -785,49 +781,46 @@ def build_cosine_index(
     HERE, against the corpus size) persists in ``{table}_meta`` —
     day-2 batches inherit it instead of re-deriving against a
     different n."""
-    from fagi_gis_spark.functions.dedup import _write_index_meta
+    from fagi_gis_spark.functions.dedup import _INDEX_BUCKETS, _write_index_meta
 
     spark = emb.sparkSession
     have = {
         part: spark.catalog.tableExists(f"{table}_{part}")
         for part in ("buckets", "vecs", "meta")
     }
-    if mode == "errorifexists":
-        if all(have.values()):
-            return  # complete index: nothing to do, no count() job
-        if have["buckets"] and not have["meta"]:
-            # a crashed build left buckets without their layout record:
-            # auto bits would re-resolve against TODAY'S corpus size and
-            # could mismatch the stored keys — exactly the silent recall
-            # loss the meta guard exists to prevent
-            raise RuntimeError(
-                f"index {table} is partial (buckets without meta) — drop "
-                f"{table}_buckets/{table}_vecs and rebuild"
-            )
+    if all(have.values()):
+        return  # complete index: nothing to do, no count() job
+    if have["buckets"] and not have["meta"]:
+        # a crashed build left buckets without their layout record:
+        # auto bits would re-resolve against TODAY'S corpus size and
+        # could mismatch the stored keys — exactly the silent recall
+        # loss the meta guard exists to prevent
+        raise RuntimeError(
+            f"index {table} is partial (buckets without meta) — drop "
+            f"{table}_buckets/{table}_vecs and rebuild"
+        )
     if bits_per_table == "auto":
         import math
 
         n_rows = emb.count()
         bits_per_table = min(16, max(4, math.ceil(math.log2(max(n_rows, 2) / 24.0))))
     base = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_buckets")):
+    if not have["buckets"]:
         sig = hyperplane_signatures(
             base, n_tables=n_tables, bits_per_table=bits_per_table, dim=dim, seed=seed
         )
         (
             sig.select("bucket", "vec_id")
-            .write.bucketBy(n_buckets, "bucket")
+            .write.bucketBy(_INDEX_BUCKETS, "bucket")
             .sortBy("bucket")
-            .mode(mode)
             .saveAsTable(f"{table}_buckets")
         )
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_vecs")):
+    if not have["vecs"]:
         (
             _quantized(base, "vec_id", "embedding", quantize)
             .select(F.col("vid").alias("vec_id"), F.col("v").alias("qvec"))
-            .write.bucketBy(n_buckets, "vec_id")
+            .write.bucketBy(_INDEX_BUCKETS, "vec_id")
             .sortBy("vec_id")
-            .mode(mode)
             .saveAsTable(f"{table}_vecs")
         )
     _write_index_meta(
@@ -840,7 +833,6 @@ def build_cosine_index(
             "quantize": quantize,
             "seed": seed,
         },
-        mode,
     )
 
 

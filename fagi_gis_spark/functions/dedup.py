@@ -33,12 +33,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def exact_dedup_keep(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The kept rows after exact dedup (first id per digest)."""
-    w = Window.partitionBy(fingerprint_md5(F.col(text_col))).orderBy(F.col(id_col))
-    return docs.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
-
-
 def _shingle_hashes(text: str, n: int = 5) -> np.ndarray:
     """Character n-gram 64-bit hashes (FNV-1a), vectorized-ish."""
     s = " ".join((text or "").lower().split())
@@ -122,12 +116,8 @@ def minhash_signatures(
     return docs.select(F.col(id_col).alias("doc_id"), u_minhash(F.col(text_col)).alias("sig"))
 
 
-def _band_buckets(
-    sigs: DataFrame, bands: int, rows_per_band: int, carry: tuple = ()
-) -> DataFrame:
-    """Explode MinHash signatures into (doc_id, band, bucket) LSH keys.
-    ``carry`` keeps extra columns alongside (the streaming day-2 path
-    carries ``sig`` so verification needs no stream-stream self-join)."""
+def _band_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """Explode MinHash signatures into (doc_id, band, bucket) LSH keys."""
     band_structs = F.array(
         *[
             F.struct(
@@ -137,8 +127,8 @@ def _band_buckets(
             for i in range(bands)
         ]
     )
-    return sigs.select("doc_id", *carry, F.explode(band_structs).alias("b")).select(
-        "doc_id", *carry, F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
+    return sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
+        "doc_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
     )
 
 
@@ -354,26 +344,23 @@ def _sig_agreement(sig_a, sig_b, n_perm: int):
     return agree / F.lit(float(n_perm))
 
 
-def _write_index_meta(spark, meta_table: str, layout: dict, mode: str) -> None:
+def _write_index_meta(spark, meta_table: str, layout: dict) -> None:
     """Persist the band layout an index was built with (single-row
     table), so queries can refuse a mismatched layout instead of
-    silently losing recall."""
+    silently losing recall.  An existing meta table is kept."""
     import os
 
-    if mode == "errorifexists":
-        if spark.catalog.tableExists(meta_table):
-            return
-        # a meta DIR from a previous session (in-memory catalog gone,
-        # warehouse dir persists) counts as existing — the registry
-        # re-registers it at query time
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        if os.path.isdir(os.path.join(wh, meta_table.lower())):
-            return
+    if spark.catalog.tableExists(meta_table):
+        return
+    # a meta DIR from a previous session (in-memory catalog gone,
+    # warehouse dir persists) counts as existing — the registry
+    # re-registers it at query time
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    if os.path.isdir(os.path.join(wh, meta_table.lower())):
+        return
     import pandas as pd
 
-    spark.createDataFrame(pd.DataFrame([layout])).write.mode(
-        "overwrite" if mode != "errorifexists" else "errorifexists"
-    ).saveAsTable(meta_table)
+    spark.createDataFrame(pd.DataFrame([layout])).write.saveAsTable(meta_table)
 
 
 def _check_index_layout(spark, meta_table: str, expected: dict) -> None:
@@ -395,13 +382,13 @@ def _check_index_layout(spark, meta_table: str, expected: dict) -> None:
             )
 
 
+#: storage buckets of every persisted dedup index table (the registry
+#: re-registers index dirs with the same ``INTO 16 BUCKETS`` clause)
+_INDEX_BUCKETS = 16
+
+
 def build_minhash_index(
-    sigs: DataFrame,
-    table: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    n_buckets: int = 16,
-    mode: str = "errorifexists",
+    sigs: DataFrame, table: str, bands: int = 16, rows_per_band: int = 4
 ) -> None:
     """Persist a corpus's MinHash-LSH index as two storage-bucketed
     tables so later batches dedup against it WITHOUT rescanning corpus
@@ -414,109 +401,19 @@ def build_minhash_index(
     - ``<table>_sigs`` (doc_id, sig), ``bucketBy(doc_id)`` — the
       verification join on doc_id likewise skips the corpus exchange.
 
-    The index is append-compatible: a verified new batch's rows can be
-    inserted into both tables to fold it into the corpus.  With the
-    default ``errorifexists`` mode, already-existing tables are skipped
-    (self-healing after a partial create: only the missing one is
-    written)."""
+    Already-existing tables are skipped (self-healing after a partial
+    create: only the missing one is written)."""
     spark = sigs.sparkSession
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_buckets")):
+    if not spark.catalog.tableExists(f"{table}_buckets"):
         (
             _band_buckets(sigs, bands, rows_per_band)
-            .write.bucketBy(n_buckets, "band", "bucket")
+            .write.bucketBy(_INDEX_BUCKETS, "band", "bucket")
             .sortBy("band", "bucket")
-            .mode(mode)
             .saveAsTable(f"{table}_buckets")
         )
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_sigs")):
-        sigs.write.bucketBy(n_buckets, "doc_id").mode(mode).saveAsTable(f"{table}_sigs")
-    _write_index_meta(
-        spark, f"{table}_meta", {"bands": bands, "rows_per_band": rows_per_band}, mode
-    )
-
-
-def build_digest_index(
-    docs: DataFrame,
-    table: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-    mode: str = "errorifexists",
-) -> None:
-    """Persist the EXACT-dedup day-2 index: (doc_id, digest) bucketed by
-    digest, so a new batch's membership probe joins the stored corpus
-    digests exchange-free (the exact-family twin of
-    ``build_minhash_index``; at 100 TB this is the digest store every
-    ingest batch checks before admission)."""
-    spark = docs.sparkSession
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_digests")):
-        (
-            docs.select(
-                F.col(id_col).alias("doc_id"),
-                fingerprint_md5(F.col(text_col)).alias("digest"),
-            )
-            .write.bucketBy(n_buckets, "digest")
-            .sortBy("digest")
-            .mode(mode)
-            .saveAsTable(f"{table}_digests")
-        )
-
-
-def incremental_exact_dups(
-    new_docs: DataFrame, table: str, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact duplicates of a NEW batch against itself and the stored
-    digest index (``build_digest_index``) — corpus text never rescanned,
-    corpus side of the digest join exchange-free.  Output (doc_a, doc_b,
-    digest, pair_type) with doc_a < doc_b, pair_type in {'new_new',
-    'new_corpus'}; equals the full-batch digest self-join restricted to
-    pairs touching a new doc."""
-    spark = new_docs.sparkSession
-    nd = new_docs.select(
-        F.col(id_col).alias("doc_id"), fingerprint_md5(F.col(text_col)).alias("digest")
-    ).persist()
-    corpus = spark.table(f"{table}_digests")
-    nn = (
-        nd.select("digest", F.col("doc_id").alias("doc_a"))
-        .join(nd.select("digest", F.col("doc_id").alias("doc_b")), "digest")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "digest", F.lit("new_new").alias("pair_type"))
-    )
-    nc = (
-        nd.select("digest", F.col("doc_id").alias("doc_n"))
-        .join(corpus.select("digest", F.col("doc_id").alias("doc_c")), "digest")
-        # re-ingested ids (retried batch already folded in) are not pairs
-        .filter(F.col("doc_n") != F.col("doc_c"))
-        .select(
-            F.least("doc_n", "doc_c").alias("doc_a"),
-            F.greatest("doc_n", "doc_c").alias("doc_b"),
-            "digest",
-            F.lit("new_corpus").alias("pair_type"),
-        )
-    )
-    return nn.unionByName(nc)
-
-
-def append_to_minhash_index(
-    sigs: DataFrame, table: str, bands: int = 16, rows_per_band: int = 4
-) -> None:
-    """Fold a (deduped) batch into an existing corpus index: bucketed
-    appends into both tables (``insertInto`` routes rows into the
-    tables' existing bucket layout, so later reads stay exchange-free).
-    Day-3 then runs ``incremental_minhash_pairs`` against the grown
-    index unchanged."""
-    spark = sigs.sparkSession
-    (
-        _band_buckets(sigs, bands, rows_per_band)
-        .select(*spark.table(f"{table}_buckets").columns)
-        .write.mode("append")
-        .insertInto(f"{table}_buckets")
-    )
-    (
-        sigs.select(*spark.table(f"{table}_sigs").columns)
-        .write.mode("append")
-        .insertInto(f"{table}_sigs")
-    )
+    if not spark.catalog.tableExists(f"{table}_sigs"):
+        sigs.write.bucketBy(_INDEX_BUCKETS, "doc_id").saveAsTable(f"{table}_sigs")
+    _write_index_meta(spark, f"{table}_meta", {"bands": bands, "rows_per_band": rows_per_band})
 
 
 def incremental_minhash_pairs(
@@ -740,8 +637,7 @@ def simhash_band_layout(max_hamming: int) -> list[tuple[int, int]]:
 
 def _hamming_bands(sigs: DataFrame, max_hamming: int) -> DataFrame:
     """Explode 64-bit signatures into the complete banded-hamming keys
-    (doc_id, simhash, blk, key) per ``simhash_band_layout`` — shared by
-    the in-batch join and the persisted day-2 index."""
+    (doc_id, simhash, blk, key) per ``simhash_band_layout``."""
 
     def band_key(off: int, width: int):
         shifted = F.shiftrightunsigned(F.col("simhash"), off)
@@ -761,80 +657,6 @@ def _hamming_bands(sigs: DataFrame, max_hamming: int) -> DataFrame:
     return sigs.select("doc_id", "simhash", F.explode(blocks).alias("b")).select(
         "doc_id", "simhash", F.col("b.blk").alias("blk"), F.col("b.key").alias("key")
     )
-
-
-def build_hamming_index(
-    sigs: DataFrame,
-    table: str,
-    max_hamming: int = 3,
-    n_buckets: int = 16,
-    mode: str = "errorifexists",
-) -> None:
-    """Persist the banded-hamming day-2 index (text SimHash or image
-    pHash — any 64-bit signature in a ``(doc_id, simhash)`` frame):
-    band rows bucketed by (blk, key), so a new batch's membership probe
-    joins the stored corpus bands exchange-free.  Band layout derives
-    from ``max_hamming`` (pigeonhole-complete recall), so the index is
-    valid for queries at the SAME threshold it was built for."""
-    spark = sigs.sparkSession
-    if not (mode == "errorifexists" and spark.catalog.tableExists(f"{table}_bands")):
-        (
-            _hamming_bands(sigs, max_hamming)
-            .write.bucketBy(n_buckets, "blk", "key")
-            .sortBy("blk", "key")
-            .mode(mode)
-            .saveAsTable(f"{table}_bands")
-        )
-    _write_index_meta(spark, f"{table}_meta", {"max_hamming": max_hamming}, mode)
-
-
-def incremental_hamming_pairs(
-    new_sigs: DataFrame, table: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs (hamming <= max_hamming) of a NEW batch against
-    itself and a stored ``build_hamming_index`` corpus — the
-    banded-hamming family's day-2 operation (works unchanged for image
-    pHash via the same (doc_id, simhash) frame).  Corpus side of the
-    band join is exchange-free; the exact popcount refine runs on the
-    signatures the band rows already carry.  Output (doc_a, doc_b,
-    hamming, pair_type); equals the full-batch ``simhash_near_pairs``
-    restricted to pairs touching a new doc."""
-    spark = new_sigs.sparkSession
-    _check_index_layout(spark, f"{table}_meta", {"max_hamming": max_hamming})
-    nn = simhash_near_pairs(new_sigs, max_hamming=max_hamming).withColumn(
-        "pair_type", F.lit("new_new")
-    )
-    nb = _hamming_bands(new_sigs, max_hamming)
-    corpus = spark.table(f"{table}_bands")
-    ham = F.bit_count(F.col("h_n").bitwiseXOR(F.col("h_c")))
-    nc = (
-        nb.select("blk", "key", F.col("doc_id").alias("doc_n"), F.col("simhash").alias("h_n"))
-        .join(
-            corpus.select(
-                "blk", "key", F.col("doc_id").alias("doc_c"), F.col("simhash").alias("h_c")
-            ),
-            ["blk", "key"],
-        )
-        # re-ingested ids (retried batch already folded in) are not pairs
-        .filter(F.col("doc_n") != F.col("doc_c"))
-        # dedup on the CANONICAL pair: a re-ingested pair whose both
-        # members are in the batch AND the index arrives in both
-        # directions — directed dedup would keep both rows
-        .select(
-            F.least("doc_n", "doc_c").alias("doc_a"),
-            F.greatest("doc_n", "doc_c").alias("doc_b"),
-            F.col("h_n"),
-            F.col("h_c"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        # ...and such pairs are already reported as new_new by the
-        # batch-internal branch; the corpus echo would be a duplicate
-        .join(nn.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming", F.lit("new_corpus").alias("pair_type"))
-    )
-    return nn.unionByName(nc)
 
 
 def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:

@@ -16,7 +16,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,13 +104,3 @@ def u_fuzzy_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
 @F.pandas_udf(T.DoubleType())
 def u_jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([jaro_winkler(x or "", y or "") for x, y in zip(a, b)], dtype="float64")
-
-
-def token_jaccard_cols(a: Column, b: Column) -> Column:
-    """Exact-token Jaccard as pure JVM column algebra (whitespace tokens).
-    The oracle-checkable fast path; DuckDB mirrors it with list functions."""
-    ta = F.array_distinct(F.split(F.trim(a), r"\s+"))
-    tb = F.array_distinct(F.split(F.trim(b), r"\s+"))
-    inter = F.size(F.array_intersect(ta, tb)).cast("double")
-    union = F.size(F.array_union(ta, tb)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))

@@ -1,11 +1,11 @@
-"""Geometry measures: npoints, centroid, bbox, distances.
+"""Geometry measures: npoints, centroid, area, bbox, and the degree->meter
+factor planar distances use.
 
 Semantics mirror the PostGIS/JTS functions the reference calls
 (`SURVEY.md §2.8`): ``ST_NPoints``, ``ST_Centroid`` (dimension-weighted:
 areal > lineal > puntal), ``ST_X/Y``, bbox, planar degree distance with
 the reference's quick degree↔meter factor 111195
-(/root/reference/fagi-gis/src/main/java/gr/athenainnovation/imis/fusion/gis/utils/Constants.java:79-80),
-plus proper haversine for reporting.
+(FAGI-gis ``src/main/java/gr/athenainnovation/imis/fusion/gis/utils/Constants.java:79-80``).
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from fagi_gis_spark.geometry.wkt import Geom, all_coords
 
 # degree->meter quick factor, identical to the reference's Constants.java:79-80
 DEG_TO_M = 111195.0
-EARTH_R_M = 6371008.8
 
 
 def npoints(g: Geom | None) -> int:
@@ -131,12 +130,3 @@ def bbox(g: Geom | None) -> tuple[float, float, float, float] | None:
     if len(c) == 0:
         return None
     return (float(c[:, 0].min()), float(c[:, 1].min()), float(c[:, 0].max()), float(c[:, 1].max()))
-
-
-def haversine_m(lon1, lat1, lon2, lat2):
-    """Vectorized haversine distance in meters (numpy arrays or scalars)."""
-    lon1, lat1, lon2, lat2 = (np.radians(np.asarray(v, dtype=np.float64)) for v in (lon1, lat1, lon2, lat2))
-    dlon = lon2 - lon1
-    dlat = lat2 - lat1
-    a = np.sin(dlat / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2.0) ** 2
-    return 2.0 * EARTH_R_M * np.arcsin(np.sqrt(a))

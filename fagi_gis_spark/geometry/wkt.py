@@ -37,20 +37,6 @@ _TYPES = (
     "POINT",
 )
 
-# FAGI geometry-type precedence: lower wins the one-geometry-per-subject
-# dedup (/root/reference/.../utils/Constants.java:85-95, applied
-# core/Importer.java:306-379). NONE (no geometry) = 6.
-PRECEDENCE = {
-    "MULTIPOLYGON": 0,
-    "POLYGON": 1,
-    "MULTILINESTRING": 2,
-    "LINESTRING": 3,
-    "MULTIPOINT": 4,
-    "POINT": 5,
-    "GEOMETRYCOLLECTION": 5,  # not produced at import time in the reference
-}
-
-
 class Geom(NamedTuple):
     gtype: str
     data: object  # see module docstring
@@ -59,7 +45,6 @@ class Geom(NamedTuple):
         return f"Geom({format_wkt(self)})"
 
 
-_WS = re.compile(r"\s+")
 _NUM = re.compile(r"[-+]?\d*\.?\d+(?:[eE][-+]?\d+)?")
 
 

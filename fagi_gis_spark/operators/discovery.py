@@ -23,11 +23,8 @@ from pyspark.sql import functions as F
 from fagi_gis_spark.functions.similarity import u_fuzzy_jaccard
 from fagi_gis_spark.operators.spatial_join import bbox_filter, radius_join
 
-#: reference thresholds (BatchFindLinkServlet.java:712-713, FindLinkServlet.java:401)
+#: reference batch accept threshold (BatchFindLinkServlet.java:712-713)
 JACCARD_ACCEPT_BATCH = 0.2
-JACCARD_ACCEPT_SINGLE = 0.8
-#: bbox-extent sanity filter: skip huge geometries (FindLinkServlet.java:197-199)
-MAX_EXTENT_DEG = 0.01
 
 
 def _literal_ok(col):
@@ -111,9 +108,8 @@ def discover_links(
         lits_a = lits_a.select("l_key", _toks(F.col("lit_a")).alias("__ta"))
     cand = cand.join(_prefer_build_side(lits_a), "l_key", "inner")
 
-    # D4: Jaccard scoring — in exact mode over the pre-split arrays (the
-    # same array_distinct(split(...)) expressions token_jaccard_cols
-    # builds inline, hoisted to the literal tables above)
+    # D4: Jaccard scoring — in exact mode over the array_distinct(split(...))
+    # token arrays pre-split on the literal tables above
     if mode == "exact":
         inter = F.size(F.array_intersect(F.col("__ta"), F.col("__tb"))).cast("double")
         union = F.size(F.array_union(F.col("__ta"), F.col("__tb"))).cast("double")

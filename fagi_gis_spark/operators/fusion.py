@@ -61,15 +61,6 @@ TRANSFORMATIONS = {
     "scale_a": 14,
     "scale_b": 15,
 }
-ACTIVE = (
-    "keep_a",
-    "keep_b",
-    "keep_both",
-    "most_points",
-    "concatenation",
-    "shift_a_to_b",
-    "shift_b_to_a",
-)
 
 
 @dataclass

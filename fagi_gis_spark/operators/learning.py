@@ -88,8 +88,6 @@ _ANGLE_EDGES = [-math.pi / 4, 0.0, math.pi / 4]  # + else = 4
 
 N_FEATURES = 8 + 20 + 21 + 21 + 32 + 21 + 7 + 11 + 5 + 4 + 25  # = 175
 N_OWL_FEATURES = 20  # createOWLFeatures (BooleanVector.java:765-806)
-N_FEATURES_OWL = N_FEATURES + N_OWL_FEATURES  # = 195
-
 
 def _pct_bin(pct: float, start: float, n: int) -> int | None:
     """First i in [0,n) with pct < step, where step ACCUMULATES by 0.1

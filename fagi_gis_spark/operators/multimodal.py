@@ -7,10 +7,8 @@ metadata (the input_hint shape); the operators below are Arrow-batched
 partition flow — is identical for any codec. PNG, JPEG (baseline +
 progressive, gray + color), BMP, GIF and baseline TIFF all decode for
 real (sources/{png,jpeg,bmp,gif,tiff}.py — from-scratch codecs);
-WebP/audio/video decode remains a deliberate stub
-(`NotImplementedError` / deterministic fake) per the driver instruction —
-swapping in a real codec library changes only the kernel body, not the
-plan.
+WebP/audio/video payloads have no decoder here — swapping in a real
+codec library changes only the kernel body, not the plan.
 """
 
 from __future__ import annotations
@@ -20,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fagi_gis_spark.sources.images import decode_pixels, phash64, try_decode_pixels
+from fagi_gis_spark.sources.images import phash64, try_decode_pixels
 from fagi_gis_spark.sources.png import encode_png_gray
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -103,28 +101,6 @@ def resize_images(images: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFr
             "caption string, phash long"
         ),
     )
-
-
-def frame_sample(videos: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling — fully stubbed codec (no video libs in this
-    sandbox): the plumbing emits a deterministic fake frame per sampled
-    index so schema/partitioning/batch shape are real and tested. A real
-    deployment replaces `_fake_frame` with the actual demuxer."""
-
-    def _fake_frame(video_id: str, idx: int) -> bytes:
-        rng = np.random.default_rng(abs(hash((video_id, idx))) % (2**32))
-        return encode_png_gray(rng.integers(0, 256, size=(8, 8)).astype(np.uint8))
-
-    def op(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                n_frames = int(r.n_frames)
-                for idx in range(0, n_frames, every_n):
-                    rows.append((r.video_id, idx, _fake_frame(r.video_id, idx)))
-            yield pd.DataFrame(rows, columns=["video_id", "frame_idx", "frame_png"])
-
-    return videos.mapInPandas(op, schema="video_id string, frame_idx int, frame_png binary")
 
 
 def phash_variants(images: DataFrame) -> DataFrame:
@@ -491,11 +467,8 @@ def gif_frame_sample(images: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling over animated GIF payloads: decode every
     frame (sources/gif.decode_gif_frames — composited canvases honoring
     disposal/transparency), keep every ``every_n``-th, re-encode each
-    kept frame as PNG.  This is ``frame_sample``'s plumbing with a real
-    multi-frame codec behind it — the video demuxer remains the one
-    sanctioned stub; GIF animations exercise the full decode ->
-    sample -> re-encode arrow for real.  Non-GIF / corrupt payloads
-    skip (decode_ok idiom)."""
+    kept frame as PNG — the full decode -> sample -> re-encode arrow.
+    Non-GIF / corrupt payloads skip (decode_ok idiom)."""
     from fagi_gis_spark.sources.gif import decode_gif_frames
     from fagi_gis_spark.sources.images import _gray_of
 

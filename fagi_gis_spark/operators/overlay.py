@@ -1,18 +1,13 @@
-"""Polygon overlay: intersection-area join between two polygon layers.
+"""Polygon overlay: intersection-area join of footprints against zones.
 
-The classic vector-overlay conflation measure — "how much do the linked
+The classic vector-overlay conflation measure — "how much do the
 footprints actually overlap" — which the reference approximates with
 point distance only (FindLinkServlet radius probes); PostGIS users do
-``ST_Area(ST_Intersection(a, b))``.  Spark-first shape:
-
-  1. candidates from the SAME cell-bucketed ``radius_join`` every other
-     spatial query uses (ring-1 expansion, shared hot-cell salting) —
-     two overlapping footprints' centers are always within
-     ``radius_m`` once the layers' max half-extent is bounded, so the
-     cell join is a complete blocker;
-  2. one Arrow batch pass clips each candidate pair
-     (Sutherland–Hodgman, subject ring against a CONVEX clip ring) and
-     emits the intersection area on the integer micro-degree lattice.
+``ST_Area(ST_Intersection(a, b))``.  Spark-first shape: the small zone
+dimension broadcasts into every Arrow batch, each footprint's bbox
+screens the zones, and only the hits pay a Sutherland–Hodgman clip
+(subject ring against a CONVEX clip ring) that emits the intersection
+area on an integer lattice.
 
 Area parity contract: clipped vertices are quantized half-up
 (``floor(v * 1e6 + 0.5)``) to int64 micro-degrees BEFORE the shoelace
@@ -28,12 +23,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 __all__ = [
     "convex_clip",
     "quantized_twice_area",
-    "overlay_intersection_join",
     "overlay_zones_join",
 ]
 
@@ -99,61 +93,6 @@ def quantized_twice_area(ring: np.ndarray, scale: float = 1e6) -> int:
     q = np.floor(np.asarray(ring, dtype=np.float64) * scale + 0.5).astype(np.int64)
     x, y = q[:, 0], q[:, 1]
     return int(abs(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)))
-
-
-def overlay_intersection_join(
-    poly_a: DataFrame,
-    poly_b: DataFrame,
-    radius_m: float = 150.0,
-    hot_cells: "DataFrame | None | str" = "detect",
-) -> DataFrame:
-    """(node_a, node_b, area2_udeg2): every pair of polygons whose
-    centers are within ``radius_m`` AND whose footprints overlap with
-    positive area, with the intersection TWICE-area in micro-degree²
-    (integer).  Inputs need (subject, lon, lat, geom_wkt); rows whose
-    WKT is not a POLYGON are ignored.  The b-side ring is the clip side
-    and must be convex (Sutherland–Hodgman's contract) — non-convex
-    clip rings raise, they do not silently mis-clip.
-
-    Scale shape: one cell-bucketed radius join (all the salting /
-    ring-1 machinery shared with every other J5 query) + one Arrow
-    batch map over the candidate pairs; per-pair work is O(vertices),
-    nothing collects."""
-    from fagi_gis_spark.operators.spatial_join import radius_join
-
-    a = poly_a.filter(F.col("geom_wkt").startswith("POLYGON"))
-    b = poly_b.filter(F.col("geom_wkt").startswith("POLYGON"))
-    pairs = radius_join(a, b, radius_m, hot_cells=hot_cells).select("l_key", "r_key")
-    withwkt = (
-        pairs.join(
-            a.select(F.col("subject").alias("l_key"), F.col("geom_wkt").alias("wkt_a")),
-            "l_key",
-        )
-        .join(
-            b.select(F.col("subject").alias("r_key"), F.col("geom_wkt").alias("wkt_b")),
-            "r_key",
-        )
-    )
-
-    def op(batches):
-        from fagi_gis_spark.geometry.wkt import parse_wkt
-
-        for pdf in batches:
-            areas = np.zeros(len(pdf), dtype=np.int64)
-            for i, (wa, wb) in enumerate(zip(pdf["wkt_a"], pdf["wkt_b"])):
-                ga, gb = parse_wkt(wa), parse_wkt(wb)
-                ra = ga.data[0][:-1]  # exterior ring, drop closing vertex
-                rb = gb.data[0][:-1]
-                _assert_convex(rb)
-                areas[i] = quantized_twice_area(convex_clip(ra, rb))
-            out = pd.DataFrame(
-                {"node_a": pdf["l_key"], "node_b": pdf["r_key"], "area2_udeg2": areas}
-            )
-            yield out[out["area2_udeg2"] > 0]
-
-    return withwkt.mapInPandas(
-        op, schema="node_a string, node_b string, area2_udeg2 long"
-    )
 
 
 def overlay_zones_join(

@@ -1,11 +1,9 @@
 """Raster<->vector tile assignment + tile-partitioned sink — SURVEY.md §7 M6.
 
 Assigns every record its WebMercator z/x/y tiles (res 7..11, pure JVM
-column math — see index.tiles) and writes a tile-partitioned dataset so
-downstream map/raster consumers read one directory per tile. In
-production the sink is an Iceberg table partitioned by (z, x); this
-sandbox writes partitioned parquet through the same API shape (the
-Iceberg jars aren't present — gated import in pipeline.catalog).
+column math — see index.tiles) and writes a (z, x)-partitioned parquet
+dataset so downstream map/raster consumers read one directory per tile
+column.
 """
 
 from __future__ import annotations

@@ -1,2 +1,2 @@
-"""Pipeline plumbing: snapshot catalog (Iceberg-style), per-partition
-lineage, idempotent resume, and the end-to-end runner."""
+"""Pipeline plumbing: per-partition lineage, idempotent resume, and the
+end-to-end runner."""

@@ -1408,9 +1408,8 @@ def icetable_lifecycle(spark, sf_dir):
 
 @register("dedup_incremental_cosine")  # LSH recall has no SQL oracle: rows-only
 def dedup_incremental_cosine(spark, sf_dir):
-    """Day-2 EMBEDDING dedup — the fourth quadrant of the incremental
-    family (exact digest / MinHash / banded-hamming / embedding-cosine):
-    near-dup pairs of a new vector batch against itself and a PERSISTED
+    """Day-2 EMBEDDING dedup — the embedding twin of
+    ``dedup_incremental_minhash``: near-dup pairs of a new vector batch against itself and a PERSISTED
     hyperplane-bucket index (functions/ann.build_cosine_index).  Corpus
     vectors are never rescanned; both the candidate join (bucket) and
     the exact-verify re-attach (vec_id) read storage-bucketed tables
@@ -2190,9 +2189,8 @@ def _image_hex_rollup_oracle() -> str:
 
 @register("image_hex_rollup", _image_hex_rollup_oracle())
 def image_hex_rollup(spark, sf_dir):
-    """Batch twin of streaming.stream_image_hex_rollup (the image x
-    streaming composition, differential-tested streaming==batch in
-    pytest): pHash-seeded geotag -> aperture-7 hex cell -> counts.
+    """Image hex rollup: pHash-seeded geotag -> aperture-7 hex cell ->
+    counts.
     Whole pipeline is JVM column arithmetic.  ORACLE-BACKED since r5
     (VERDICT r4 ask #8): the generated corpus (id, phash) is written to
     a parquet both engines read, so DuckDB replays geotag pmods + the
@@ -2595,12 +2593,10 @@ def image_orientation_normalize(spark, sf_dir):
 
 @register("multimodal_frame_sample")  # codec-side decode: rows-only
 def multimodal_frame_sample(spark, sf_dir):
-    """REAL multi-frame sampling (the frame_sample plumbing with a real
-    codec behind it): a corpus of animated GIFs — 4 frames each, built
-    from the deterministic tiles — flows through gif_frame_sample
-    (decode all frames, keep every 2nd, re-encode PNG).  The video
-    demuxer remains the one sanctioned stub; GIF animations exercise
-    the full decode -> sample -> re-encode arrow for real.  Rows-only;
+    """REAL multi-frame sampling: a corpus of animated GIFs — 4 frames
+    each, built from the deterministic tiles — flows through
+    gif_frame_sample (decode all frames, keep every 2nd, re-encode PNG),
+    the full decode -> sample -> re-encode arrow.  Rows-only;
     the pytest twin checks sampled frames pixel-exact against
     driver-side decode, JDK ImageIO per-frame interop covers the
     codec."""
@@ -2988,8 +2984,7 @@ def _events(spark, sf_dir):
     "FROM events GROUP BY 1, 2",
 )
 def events_windowed_agg(spark, sf_dir):
-    """5-minute tumbling-window counts/sums — the batch twin of the
-    Structured Streaming windowed aggregation (tests/test_streaming)."""
+    """5-minute tumbling-window counts/sums."""
     e = _events(spark, sf_dir)
     win = F.floor(F.unix_timestamp("ts") / F.lit(300)).cast("long")
     return (

@@ -1,4 +1,5 @@
-"""Unit tests for the from-scratch geometry kernel (no Spark needed)."""
+"""Unit tests for the from-scratch geometry kernel (Spark only where an
+engine column expression or join is under test)."""
 
 import math
 
@@ -6,9 +7,9 @@ import numpy as np
 import pytest
 
 from fagi_gis_spark.geometry.affine import rotate_about, scale_about, translate
-from fagi_gis_spark.geometry.measures import area, bbox, centroid, haversine_m, npoints
+from fagi_gis_spark.geometry.measures import area, bbox, centroid, npoints
 from fagi_gis_spark.geometry.pip import PolygonIndex, points_in_polygon
-from fagi_gis_spark.geometry.wkt import PRECEDENCE, format_wkt, parse_wkt
+from fagi_gis_spark.geometry.wkt import format_wkt, parse_wkt
 
 SQ = "POLYGON ((0.000000 0.000000, 2.000000 0.000000, 2.000000 2.000000, 0.000000 2.000000, 0.000000 0.000000))"
 
@@ -87,9 +88,39 @@ def test_affine():
     assert b == pytest.approx((1.0, -1.0, 1.0, 1.0), abs=1e-12)
 
 
-def test_precedence_table():
-    assert PRECEDENCE["MULTIPOLYGON"] < PRECEDENCE["POLYGON"] < PRECEDENCE["MULTILINESTRING"]
-    assert PRECEDENCE["LINESTRING"] < PRECEDENCE["MULTIPOINT"] < PRECEDENCE["POINT"]
+def test_precedence_table(spark):
+    """The engine's geometry-type precedence (lower wins the
+    one-geometry-per-subject dedup) follows the reference order;
+    GEOMETRYCOLLECTION and unknown types rank last, with no geometry."""
+    from pyspark.sql import functions as F
+
+    from fagi_gis_spark.operators.dedup_precedence import precedence_col
+
+    wkts = [
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)))",
+        "POLYGON ((0 0, 1 0, 1 1, 0 0))",
+        "MULTILINESTRING ((0 0, 1 1))",
+        "LINESTRING (0 0, 1 1)",
+        "MULTIPOINT ((0 0))",
+        "POINT (0 0)",
+        "GEOMETRYCOLLECTION (POINT (0 0))",
+        "TRIANGLE ((0 0, 1 0, 1 1, 0 0))",
+    ]
+    df = spark.createDataFrame([(w,) for w in wkts], "geom_wkt string")
+    got = {
+        r.geom_wkt.split(" ")[0]: r.p
+        for r in df.select("geom_wkt", precedence_col(F.col("geom_wkt")).alias("p")).collect()
+    }
+    assert got == {
+        "MULTIPOLYGON": 0,
+        "POLYGON": 1,
+        "MULTILINESTRING": 2,
+        "LINESTRING": 3,
+        "MULTIPOINT": 4,
+        "POINT": 5,
+        "GEOMETRYCOLLECTION": 6,
+        "TRIANGLE": 6,
+    }
 
 
 def test_point_in_polygon():
@@ -118,12 +149,6 @@ def test_polygon_index():
     assert res[1] == ["p33"]
     assert res[2] == ["p21"]
     assert res[3] == []
-
-
-def test_haversine():
-    # 1 degree of longitude at the equator ~ 111.2 km
-    d = haversine_m(0.0, 0.0, 1.0, 0.0)
-    assert 110000 < float(d) < 112500
 
 
 def test_convex_clip_and_quantized_area():
@@ -231,46 +256,3 @@ def test_overlay_zones_join_matches_rect_closed_form(spark):
     assert len(expected) > 120  # straddles + overlap squares produce extras
 
 
-def test_overlay_intersection_join_pairs(spark):
-    """Footprint-x-footprint overlay: radius-join candidates + S-H clip
-    find exactly the overlapping pairs with closed-form areas."""
-    def sq(s, cx, cy, d):
-        return (
-            s,
-            cx,
-            cy,
-            f"POLYGON (({cx - d:.6f} {cy - d:.6f}, {cx + d:.6f} {cy - d:.6f}, "
-            f"{cx + d:.6f} {cy + d:.6f}, {cx - d:.6f} {cy + d:.6f}, "
-            f"{cx - d:.6f} {cy - d:.6f}))",
-        )
-
-    schema = "subject string, lon double, lat double, geom_wkt string"
-    a = spark.createDataFrame(
-        [
-            sq("a:0", 0.0, 50.0, 0.0001),
-            sq("a:1", 0.01, 50.01, 0.0002),
-            ("a:pt", 0.02, 50.02, "POINT (0.020000 50.020000)"),
-        ],
-        schema,
-    )
-    b = spark.createDataFrame(
-        [
-            sq("b:0", 0.00015, 50.00005, 0.0001),  # overlaps a:0
-            sq("b:1", 0.0105, 50.0105, 0.0001),    # disjoint from a:1 (gap)
-            sq("b:2", -0.00005, 49.99995, 0.00005),  # inside a:0
-        ],
-        schema,
-    )
-    from fagi_gis_spark.operators.overlay import overlay_intersection_join
-
-    got = {
-        (r.node_a, r.node_b): r.area2_udeg2
-        for r in overlay_intersection_join(a, b, radius_m=150.0).collect()
-    }
-    # a:0 [ -100,100]^2 udeg vs b:0 [50,250]x[-50,150]: w=50 h=150
-    # a:0 vs b:2 [-100,0]x[-100,0]: fully inside -> w=100 h=100... b:2 is
-    # [-100,0]x[-100,0] udeg around (-50,-50): w = 0-(-100)=100, h=100
-    assert got == {
-        ("a:0", "b:0"): 2 * 50 * 150,
-        ("a:0", "b:2"): 2 * 100 * 100,
-    }

@@ -1204,8 +1204,8 @@ def test_exif_zero_denominator_skips():
 
 def test_animated_gif_frames_and_real_frame_sampling(spark):
     """Animated GIF: multi-frame round-trip, transparency + disposal
-    compositing, JDK ImageIO per-frame interop, and gif_frame_sample —
-    frame_sample's plumbing backed by a REAL multi-frame codec."""
+    compositing, JDK ImageIO per-frame interop, and gif_frame_sample
+    frame sampling backed by a REAL multi-frame codec."""
     import pandas as pd
 
     from fagi_gis_spark.operators.multimodal import gif_frame_sample

@@ -1,9 +1,11 @@
 """Scale-path tests: salted skew join equivalence, bucketed co-located
-join (no Exchange), stateful streaming sessionization."""
+join (no Exchange), persisted day-2 dedup indexes."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import drop_tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -132,12 +134,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     GiST+CLUSTER physical ordering (SURVEY.md §4)."""
     from fagi_gis_spark.registry import layers
 
-    import shutil
-
     L = layers(spark, SF)
-    for t in ("poi_a_bkt", "links_bkt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
+    drop_tables(spark, "poi_a_bkt", "links_bkt")
     L["poi_a"].select("subject", "geom_wkt").write.bucketBy(8, "subject").sortBy(
         "subject"
     ).mode("overwrite").saveAsTable("poi_a_bkt")
@@ -152,39 +150,6 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         assert j.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-
-def test_stateful_streaming_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionizer: session counts per user match
-    the batch sessionization logic on the same rows."""
-    from fagi_gis_spark.streaming.stateful import sessionize_stream
-
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    src = str(tmp_path / "ev")
-    events.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # a session may emit several progress rows across batches; its final
-    # count is the max per (user, session)
-    got = spark.sql(
-        "SELECT user_id, sum(n) AS n FROM (SELECT user_id, session_id,"
-        " max(n_events) AS n FROM sess_out GROUP BY 1, 2) GROUP BY user_id"
-    ).toPandas()
-    # every event lands in exactly one session
-    expect = events.groupBy("user_id").agg(F.count("*").alias("n")).toPandas()
-    g = dict(zip(got.user_id, got.n))
-    e = dict(zip(expect.user_id, expect.n))
-    assert g == e
 
 
 @pytest.mark.parametrize("scheme", ["tile", "hex", "s2"])
@@ -645,16 +610,13 @@ def test_cell_bucketed_radius_join_build_side_no_exchange(spark, tmp_path):
     radius join's build side reads shuffle-free (bucketing provides the
     HashPartitioning): exactly one Exchange remains (probe side) in the
     sort-merge plan — the storage layout a 100TB deployment would use."""
-    import shutil
-
     from fagi_gis_spark.index.tiles import cell_id_col
     from fagi_gis_spark.operators.spatial_join import join_res_for_radius
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, SF)
     z = join_res_for_radius(150.0)
-    spark.sql("DROP TABLE IF EXISTS poi_b_cellbkt")
-    shutil.rmtree("spark-warehouse/poi_b_cellbkt", ignore_errors=True)
+    drop_tables(spark, "poi_b_cellbkt")
     (
         L["poi_b"]
         .select(
@@ -959,27 +921,32 @@ def test_with_scores_semantics(spark):
     assert positive
 
 
+def _fresh_minhash_index(spark, docs):
+    """(Re)build ``test_mh_idx`` over the docs with ``doc_id % 5 != 0`` —
+    from scratch, so a test never depends on suite order or on
+    warehouse dirs an earlier run left behind."""
+    from fagi_gis_spark.functions.dedup import build_minhash_index, minhash_signatures
+
+    drop_tables(spark, "test_mh_idx_buckets", "test_mh_idx_sigs", "test_mh_idx_meta")
+    build_minhash_index(
+        minhash_signatures(docs.filter(F.col("doc_id") % 5 != 0)), "test_mh_idx"
+    )
+
+
 def test_incremental_minhash_equals_full_batch(spark):
     """Day-2 dedup contract: a new batch deduped against itself + the
     persisted corpus index must emit EXACTLY the full-batch LSH pairs
     restricted to pairs touching a new doc (same jaccard_est values),
     with pair_type telling the two origins apart."""
-    import shutil
-
     from fagi_gis_spark.functions.dedup import (
-        build_minhash_index,
         incremental_minhash_pairs,
         minhash_lsh_pairs,
         minhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    for t in ("test_mh_idx_buckets", "test_mh_idx_sigs", "test_mh_idx_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    build_minhash_index(minhash_signatures(corpus), "test_mh_idx")
+    _fresh_minhash_index(spark, docs)
 
     inc = incremental_minhash_pairs(
         minhash_signatures(new), "test_mh_idx", jaccard_threshold=0.35
@@ -1013,14 +980,7 @@ def test_incremental_minhash_corpus_side_reads_buckets(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    # index tables exist from the preceding test (same session) or are
-    # rebuilt here
-    if not spark.catalog.tableExists("test_mh_idx_buckets"):
-        from fagi_gis_spark.functions.dedup import build_minhash_index
-
-        build_minhash_index(
-            minhash_signatures(docs.filter(F.col("doc_id") % 5 != 0)), "test_mh_idx"
-        )
+    _fresh_minhash_index(spark, docs)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         nb = _band_buckets(minhash_signatures(new), 16, 4)
@@ -1051,173 +1011,33 @@ def test_incremental_minhash_corpus_side_reads_buckets(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
-def test_minhash_index_append_grows_corpus(spark):
-    """Day-3 contract: after folding batch-1 into the index, batch-2's
-    incremental pairs against the grown index equal the full-batch LSH
-    pairs over (corpus ∪ batch1 ∪ batch2) restricted to pairs touching
-    batch-2 — i.e. append keeps the index exactly equivalent to a
-    from-scratch rebuild."""
-    import shutil
-
-    from fagi_gis_spark.functions.dedup import (
-        append_to_minhash_index,
-        build_minhash_index,
-        incremental_minhash_pairs,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") % 5 > 1)      # 60%
-    batch1 = docs.filter(F.col("doc_id") % 5 == 1)     # 20%
-    batch2 = docs.filter(F.col("doc_id") % 5 == 0)     # 20%
-    for t in ("test_mh_app_buckets", "test_mh_app_sigs", "test_mh_app_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    build_minhash_index(minhash_signatures(corpus), "test_mh_app")
-    append_to_minhash_index(minhash_signatures(batch1), "test_mh_app")
-
-    inc = incremental_minhash_pairs(
-        minhash_signatures(batch2), "test_mh_app", jaccard_threshold=0.35
-    )
-    got = {(r.doc_a, r.doc_b, r.jaccard_est) for r in inc.collect()}
-    full = minhash_lsh_pairs(
-        minhash_signatures(docs), jaccard_threshold=0.35
-    ).collect()
-    want = {
-        (r.doc_a, r.doc_b, r.jaccard_est)
-        for r in full
-        if r.doc_a % 5 == 0 or r.doc_b % 5 == 0
-    }
-    assert got == want and len(got) > 0
-
-
-def test_incremental_exact_dups_against_digest_index(spark):
-    """Exact-family day-2: a new batch's duplicates against itself and
-    the stored digest index equal the full digest self-join restricted
-    to new docs (fixture carries cross-set and in-batch dup texts)."""
-    import shutil
-
-    import pandas as pd
-
-    from fagi_gis_spark.functions.dedup import (
-        build_digest_index,
-        incremental_exact_dups,
-    )
-
-    rows = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4, 10, 11, 12, 13],
-            "text": [
-                "alpha beta", "unique one", "Alpha  Beta ", "unique two",
-                # new batch (>= 10): one corpus dup (normalized), one
-                # in-batch dup pair, one unique
-                "ALPHA\tbeta", "same same", "same  SAME", "nothing else",
-            ],
-        }
-    )
-    docs = spark.createDataFrame(rows)
-    corpus = docs.filter(F.col("doc_id") < 10)
-    new = docs.filter(F.col("doc_id") >= 10)
-    spark.sql("DROP TABLE IF EXISTS test_dg_idx_digests")
-    shutil.rmtree("spark-warehouse/test_dg_idx_digests", ignore_errors=True)
-    build_digest_index(corpus, "test_dg_idx")
-
-    got = {
-        (r.doc_a, r.doc_b, r.pair_type)
-        for r in incremental_exact_dups(new, "test_dg_idx").collect()
-    }
-    # doc 10 matches corpus docs 1 and 3 (same normalized digest);
-    # 11-12 are an in-batch pair; 13 matches nothing
-    assert got == {
-        (1, 10, "new_corpus"),
-        (3, 10, "new_corpus"),
-        (11, 12, "new_new"),
-    }
-
-
-def test_incremental_hamming_equals_full_batch(spark):
-    """Banded-hamming day-2 (the SimHash/pHash family): a new batch
-    against itself + the stored band index equals the full-batch
-    simhash_near_pairs restricted to pairs touching a new doc, with the
-    same exact hamming values."""
-    import shutil
-
-    from fagi_gis_spark.functions.dedup import (
-        build_hamming_index,
-        incremental_hamming_pairs,
-        simhash_near_pairs,
-        simhash_signatures,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = simhash_signatures(docs).persist()
-    corpus = sigs.filter(F.col("doc_id") % 5 != 0)
-    new = sigs.filter(F.col("doc_id") % 5 == 0)
-    for t in ("test_hm_idx_bands", "test_hm_idx_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    build_hamming_index(corpus, "test_hm_idx", max_hamming=6)
-
-    got = {
-        (r.doc_a, r.doc_b, r.hamming, r.pair_type)
-        for r in incremental_hamming_pairs(new, "test_hm_idx", max_hamming=6).collect()
-    }
-    full = simhash_near_pairs(sigs, max_hamming=6).collect()
-    want = {
-        (
-            r.doc_a,
-            r.doc_b,
-            r.hamming,
-            "new_new" if (r.doc_a % 5 == 0 and r.doc_b % 5 == 0) else "new_corpus",
-        )
-        for r in full
-        if r.doc_a % 5 == 0 or r.doc_b % 5 == 0
-    }
-    assert got == want and len(got) > 0
-    assert any(t == "new_corpus" for (_, _, _, t) in got)
-
-
 def test_index_layout_mismatch_raises(spark):
     """Querying a day-2 index with different banding parameters than it
     was built with must raise (a mismatched layout joins almost no
     corpus keys — silent recall loss), and re-ingested ids must not
     emit self-pairs."""
-    import shutil
-
-    import pytest as _pytest
-
     from fagi_gis_spark.functions.dedup import (
-        build_hamming_index,
-        incremental_hamming_pairs,
         incremental_minhash_pairs,
         minhash_signatures,
-        simhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = simhash_signatures(docs.filter(F.col("doc_id") < 100))
-    for t in ("test_lay_idx_bands", "test_lay_idx_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    build_hamming_index(sigs, "test_lay_idx", max_hamming=3)
-    with _pytest.raises(ValueError, match="max_hamming=3"):
-        incremental_hamming_pairs(sigs, "test_lay_idx", max_hamming=6).collect()
-    # re-ingesting the SAME ids yields no self-pairs
-    same = incremental_hamming_pairs(sigs, "test_lay_idx", max_hamming=3)
-    assert same.filter(F.col("doc_a") == F.col("doc_b")).count() == 0
-    # minhash layout guard (test_mh_idx built by the earlier test at the
-    # default 16x4 layout, or rebuilt here)
-    if not spark.catalog.tableExists("test_mh_idx_meta"):
-        from fagi_gis_spark.functions.dedup import build_minhash_index
-
-        build_minhash_index(
-            minhash_signatures(docs.filter(F.col("doc_id") % 5 != 0)), "test_mh_idx"
-        )
-    with _pytest.raises(ValueError, match="bands=16"):
+    _fresh_minhash_index(spark, docs)
+    with pytest.raises(ValueError, match="bands=16"):
         incremental_minhash_pairs(
             minhash_signatures(docs.limit(20)), "test_mh_idx", bands=8, rows_per_band=8
         ).collect()
+    # re-ingesting ids the index already holds yields no self-pairs and
+    # no pair twice (batch-internal and corpus echoes collapse)
+    again = docs.filter((F.col("doc_id") % 5 != 0) & (F.col("doc_id") < 100))
+    same = incremental_minhash_pairs(
+        minhash_signatures(again), "test_mh_idx", jaccard_threshold=0.35
+    ).persist()
+    try:
+        assert same.filter(F.col("doc_a") == F.col("doc_b")).count() == 0
+        assert same.count() == same.select("doc_a", "doc_b").distinct().count()
+    finally:
+        same.unpersist()
 
 
 def test_substring_dup_stats_matches_bruteforce(spark):
@@ -1296,8 +1116,6 @@ def test_incremental_cosine_equals_full_batch(spark):
     multiprobe covers both probe directions (flip adjacency is
     symmetric).  Layout comes from the index meta; mismatch impossible
     by construction (no caller-supplied layout)."""
-    import shutil
-
     from fagi_gis_spark.functions.ann import (
         build_cosine_index,
         cosine_near_dup_pairs,
@@ -1307,9 +1125,7 @@ def test_incremental_cosine_equals_full_batch(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
     new = emb.filter(F.col("vec_id") % 5 == 0)
-    for t in ("test_cs_idx_buckets", "test_cs_idx_vecs", "test_cs_idx_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
+    drop_tables(spark, "test_cs_idx_buckets", "test_cs_idx_vecs", "test_cs_idx_meta")
     build_cosine_index(corpus, "test_cs_idx", bits_per_table=6)
 
     thr = 0.3  # synthetic embeddings: neighbor cos ~0.29-0.4
@@ -1338,60 +1154,6 @@ def test_incremental_cosine_equals_full_batch(spark):
     # the corpus side of the candidate join reads pre-bucketed storage
     plan = incremental_cosine_pairs(new, "test_cs_idx", threshold=thr)._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount" in plan
-
-
-def test_stream_incremental_cosine_matches_batch(spark, tmp_path):
-    """Streaming day-2 for the embedding family: arriving vectors vs the
-    stored hyperplane-bucket index equal the batch incremental path's
-    new-corpus pairs exactly (same cos_sim) — the whole plan is
-    stateless stream-static joins plus one per-pair collapse."""
-    from fagi_gis_spark.functions.ann import (
-        build_cosine_index,
-        incremental_cosine_pairs,
-    )
-    from fagi_gis_spark.streaming.windowed import (
-        start_memory_sink,
-        stream_incremental_cosine,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    corpus = emb.filter(F.col("vec_id") % 5 != 0)
-    new = emb.filter(F.col("vec_id") % 5 == 0)
-    if not spark.catalog.tableExists("test_cs_idx_meta"):
-        # standalone run in a fresh session: stale warehouse dirs from a
-        # previous run are invisible to the in-memory catalog but block
-        # saveAsTable — clear them before building
-        import shutil
-
-        for t in ("test_cs_idx_buckets", "test_cs_idx_vecs", "test_cs_idx_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-        build_cosine_index(corpus, "test_cs_idx", bits_per_table=6)
-
-    src = str(tmp_path / "vec_stream_src")
-    new.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(new.schema).parquet(src)
-    out = stream_incremental_cosine(stream, "test_cs_idx", threshold=0.3)
-    q = start_memory_sink(out, "cs_day2_out", output_mode="complete")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.vec_n, r.vec_c, round(r.cos_sim, 12))
-        for r in spark.sql("SELECT * FROM cs_day2_out").collect()
-    }
-    want = {
-        (
-            r.id_a if r.id_a % 5 == 0 else r.id_b,
-            r.id_b if r.id_a % 5 == 0 else r.id_a,
-            round(r.cos_sim, 12),
-        )
-        for r in incremental_cosine_pairs(new, "test_cs_idx", threshold=0.3)
-        .filter(F.col("pair_type") == "new_corpus")
-        .collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_side_input_ships_through_spark_files(spark):

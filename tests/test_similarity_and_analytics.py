@@ -219,22 +219,6 @@ def test_ivf_recall_vs_exact(spark):
     assert recall > 0.5, f"IVF recall too low: {recall}"
 
 
-def test_catalog_merge_by_key(spark, tmp_path):
-    import pandas as pd
-
-    from fagi_gis_spark.pipeline.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    base = spark.createDataFrame(
-        pd.DataFrame({"subject": ["s1", "s2", "s3"], "val": [1, 2, 3]})
-    )
-    cat.write(base, "t")
-    updates = spark.createDataFrame(pd.DataFrame({"subject": ["s2", "s4"], "val": [20, 40]}))
-    cat.merge_by_key("t", updates, "subject")
-    got = {r.subject: r.val for r in cat.read("t").collect()}
-    assert got == {"s1": 1, "s2": 20, "s3": 3, "s4": 40}
-
-
 def test_displacement_coverage_is_real_intersects(spark):
     """Coverage must be the true ST_Intersects bit (GeoClusterer.
     calculateCoverage), not a distance proxy: near-but-disjoint polygons

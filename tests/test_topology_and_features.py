@@ -657,7 +657,7 @@ def test_owl_feature_slice_reference_bins():
 
 def test_pair_features_with_owl_slice(spark):
     from fagi_gis_spark.operators.fusion import linked_pairs
-    from fagi_gis_spark.operators.learning import N_FEATURES_OWL, pair_features
+    from fagi_gis_spark.operators.learning import N_FEATURES, N_OWL_FEATURES, pair_features
     from fagi_gis_spark.registry import layers
 
     L = layers(spark, "/root/testdata/sf0.001")
@@ -665,7 +665,7 @@ def test_pair_features_with_owl_slice(spark):
         linked_pairs(L["links"], L["poi_a"], L["poi_b"], feature_primitives=True),
         L["triples_a"], L["triples_b"],
     ).limit(30).toPandas()
-    assert all(len(fv) == N_FEATURES_OWL for fv in out.fv)
+    assert all(len(fv) == N_FEATURES + N_OWL_FEATURES for fv in out.fv)
     # both sides have exactly one rdf:type ({onto}Poi) -> pct 0 -> bin 10
     assert all(fv[175 + 10] == 1.0 for fv in out.fv)
 
