@@ -436,7 +436,6 @@ def incremental_minhash_pairs(
     spark = new_sigs.sparkSession
     _check_index_layout(spark, f"{table}_meta", {"bands": bands, "rows_per_band": rows_per_band})
     n_perm = bands * rows_per_band
-    new_sigs = new_sigs.persist()
     nb = _band_buckets(new_sigs, bands, rows_per_band)
     corpus_b = spark.table(f"{table}_buckets")
     corpus_s = spark.table(f"{table}_sigs")

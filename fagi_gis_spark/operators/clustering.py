@@ -7,8 +7,8 @@ features per linked pair = centroid-displacement length
 (calculateCoverage:326-354); min-max normalized (normalize:91-98,
 rangeChange:69-79); clustered with Weka EM (-I 100, optional -N k,
 cluster:100-253). Spark-first: features as columns over the J3 pair join,
-MLlib GaussianMixture (EM for mixtures; KMeans option mirrors the
-commented-out reference path GeoClusterer.java:227).
+clustered by the same diagonal-Gaussian EM (fit driver-side on a bounded
+sample, assignment as distributed column math).
 """
 
 from __future__ import annotations
@@ -153,7 +153,6 @@ def cluster_links(
     poi_a: DataFrame,
     poi_b: DataFrame,
     k: int = 4,
-    algo: str = "gmm",
     seed: int = 42,
     max_iter: int = 100,
     tol: float = 1e-6,
@@ -164,116 +163,88 @@ def cluster_links(
     (node_a, node_b, cluster_id) — the reference's ``cluster`` relation
     (schema.sql:92-95) that fuseCluster consumes.
 
-    The default ``algo="gmm"`` is the Weka-faithful diagonal EM
-    (``_diagonal_em``: variance floor, deterministic, numerically safe
-    by construction — see its docstring for why Spark's full-covariance
-    GaussianMixture intermittently hung on this feature family).  The
-    FIT runs driver-side over at most ``fit_sample_rows`` feature rows
+    The model is the Weka-faithful diagonal EM (``_diagonal_em``:
+    variance floor, deterministic, numerically safe by construction —
+    see its docstring for why Spark's full-covariance GaussianMixture
+    intermittently hung on this feature family).  The FIT runs
+    driver-side over at most ``fit_sample_rows`` feature rows
     (hash-gated deterministic sample; EM parameters need thousands of
     rows, not billions) — below the cap this matches the reference,
     which collects every displacement row into a single-node Weka
     Instances object (GeoClusterer.java:100-150).  The ASSIGNMENT is
     fully distributed: per-component diagonal log-densities are
     closed-form JVM column arithmetic and the cluster id is their
-    argmax, so no row leaves the executors — the 100x path.
-    ``algo="gmm_spark"`` / ``algo="kmeans"`` keep the MLlib paths for
-    comparison."""
-    from pyspark.ml.clustering import GaussianMixture, KMeans
-    from pyspark.ml.feature import VectorAssembler
+    argmax, so no row leaves the executors — the 100x path."""
+    import math
+
+    import numpy as np
 
     pairs = linked_pairs(links, poi_a, poi_b, feature_primitives=True)
     cols = ["dist_m", "dir_x", "dir_y", "coverage"]
     feats = normalize_min_max(displacement_features(pairs, metric_srid=metric_srid), cols)
 
-    if algo == "gmm":  # Weka EM analogue (diagonal, floored)
-        import math
-
-        import numpy as np
-
-        # FIT on a bounded deterministic sample (EM parameters need
-        # thousands of rows, not billions): one planning count, then a
-        # hash-gated filter — order-free and reproducible.  At test
-        # scales the "sample" is the whole table, matching the
-        # reference's collect-into-Weka fit exactly.
-        feats = feats.persist()
-        try:
-            n = feats.count()
-            fit = feats.select(*cols)
-            if n > fit_sample_rows:
-                frac_ppm = max(1, int(fit_sample_rows * 1_000_000 / n))
-                fit = feats.filter(
-                    F.pmod(
-                        F.xxhash64(F.col("subject_a"), F.col("subject_b")),
-                        F.lit(1_000_000),
-                    )
-                    < F.lit(frac_ppm)
-                ).select(*cols)
-            X = fit.toPandas()[cols].to_numpy(np.float64)
-            if len(X) < max(k, 2):
-                # Unlucky hash mask (or tiny frac_ppm at huge n) can
-                # undershoot the expected sample size; EM needs >= k
-                # rows or the closed-form parameters go NaN.  Fall back
-                # to the full table — bounded by fit_sample_rows anyway
-                # whenever this branch can trigger at sane n.
-                X = feats.select(*cols).limit(
-                    max(fit_sample_rows, k)
-                ).toPandas()[cols].to_numpy(np.float64)
-            if len(X) < k:
-                raise ValueError(
-                    f"cluster_links(gmm): only {len(X)} feature rows "
-                    f"available but k={k}; reduce k or supply more links"
-                )
-            _, (w, mu, var) = _diagonal_em(
-                X, k=k, seed=seed, max_iter=max_iter, tol=tol
-            )
-            # ASSIGNMENT fully distributed: per-component diagonal
-            # log-density is closed-form JVM column arithmetic (whole-
-            # stage codegen); cluster = argmax.  No row ever leaves the
-            # executors for assignment — this is the 100x path.
-            logps = []
-            for j in range(k):
-                terms = [F.lit(float(math.log(max(w[j], 1e-300))))]
-                for d, c in enumerate(cols):
-                    diff = F.col(c) - F.lit(float(mu[j, d]))
-                    terms.append(
-                        F.lit(-0.5)
-                        * (
-                            diff * diff / F.lit(float(var[j, d]))
-                            + F.lit(float(math.log(2.0 * math.pi * var[j, d])))
-                        )
-                    )
-                logp = terms[0]
-                for t in terms[1:]:
-                    logp = logp + t
-                logps.append(logp)
-            arr = F.array(*logps)
-            cluster = (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
-            return feats.select(
-                F.col("subject_a").alias("node_a"),
-                F.col("subject_b").alias("node_b"),
-                cluster.alias("cluster_id"),
-            ).localCheckpoint()
-        finally:
-            feats.unpersist()
-
-    va = VectorAssembler(inputCols=cols, outputCol="features")
-    vec = va.transform(feats).persist()
+    # FIT on a bounded deterministic sample (EM parameters need
+    # thousands of rows, not billions): one planning count, then a
+    # hash-gated filter — order-free and reproducible.  At test
+    # scales the "sample" is the whole table, matching the
+    # reference's collect-into-Weka fit exactly.
+    feats = feats.persist()
     try:
-        if algo == "gmm_spark":  # MLlib full-covariance GMM (see _diagonal_em
-            # docstring for its degeneracy hazard on binary features)
-            model = GaussianMixture(k=k, maxIter=max_iter, tol=max(tol, 0.01), seed=seed).fit(vec)
-        elif algo == "kmeans":  # the commented-out reference option
-            model = KMeans(k=k, maxIter=max_iter, seed=seed).fit(vec)
-        else:
-            raise ValueError(algo)
-        return (
-            model.transform(vec)
-            .select(
-                F.col("subject_a").alias("node_a"),
-                F.col("subject_b").alias("node_b"),
-                F.col("prediction").cast("int").alias("cluster_id"),
+        n = feats.count()
+        fit = feats.select(*cols)
+        if n > fit_sample_rows:
+            frac_ppm = max(1, int(fit_sample_rows * 1_000_000 / n))
+            fit = feats.filter(
+                F.pmod(
+                    F.xxhash64(F.col("subject_a"), F.col("subject_b")),
+                    F.lit(1_000_000),
+                )
+                < F.lit(frac_ppm)
+            ).select(*cols)
+        X = fit.toPandas()[cols].to_numpy(np.float64)
+        if len(X) < max(k, 2):
+            # Unlucky hash mask (or tiny frac_ppm at huge n) can
+            # undershoot the expected sample size; EM needs >= k
+            # rows or the closed-form parameters go NaN.  Fall back
+            # to the full table — bounded by fit_sample_rows anyway
+            # whenever this branch can trigger at sane n.
+            X = feats.select(*cols).limit(
+                max(fit_sample_rows, k)
+            ).toPandas()[cols].to_numpy(np.float64)
+        if len(X) < k:
+            raise ValueError(
+                f"cluster_links(gmm): only {len(X)} feature rows "
+                f"available but k={k}; reduce k or supply more links"
             )
-            .localCheckpoint()
+        _, (w, mu, var) = _diagonal_em(
+            X, k=k, seed=seed, max_iter=max_iter, tol=tol
         )
+        # ASSIGNMENT fully distributed: per-component diagonal
+        # log-density is closed-form JVM column arithmetic (whole-
+        # stage codegen); cluster = argmax.  No row ever leaves the
+        # executors for assignment — this is the 100x path.
+        logps = []
+        for j in range(k):
+            terms = [F.lit(float(math.log(max(w[j], 1e-300))))]
+            for d, c in enumerate(cols):
+                diff = F.col(c) - F.lit(float(mu[j, d]))
+                terms.append(
+                    F.lit(-0.5)
+                    * (
+                        diff * diff / F.lit(float(var[j, d]))
+                        + F.lit(float(math.log(2.0 * math.pi * var[j, d])))
+                    )
+                )
+            logp = terms[0]
+            for t in terms[1:]:
+                logp = logp + t
+            logps.append(logp)
+        arr = F.array(*logps)
+        cluster = (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
+        return feats.select(
+            F.col("subject_a").alias("node_a"),
+            F.col("subject_b").alias("node_b"),
+            cluster.alias("cluster_id"),
+        ).localCheckpoint()
     finally:
-        vec.unpersist()
+        feats.unpersist()

@@ -26,6 +26,21 @@ def geotag_cols(phash: Column) -> tuple[Column, Column]:
     return lon, lat
 
 
+def geotag_microdeg_sql(phash: str) -> tuple[str, str]:
+    """SQL twin of ``geotag_cols`` for the DuckDB oracles: the integer
+    micro-degree expressions (lon, lat above 50°) of the same lattice
+    point.  DuckDB's ``%`` follows the dividend's sign, so each pmod is
+    spelled ``((x % m) + m) % m``.  Callers keep their own float step
+    (``50.0 + lat / 1e6`` is not always the same double as
+    ``(50000000 + lat) / 1e6``)."""
+    lon = f"(((({phash} % 2000000) + 2000000) % 2000000) - 1000000)"
+    lat = (
+        f"(((((({phash} % 2147483647) + 2147483647) % 2147483647) * 2654435761) "
+        "% 2000000) + 2000000) % 2000000"
+    )
+    return lon, lat
+
+
 def geotag_images(
     images: DataFrame, cell_res: int = 9, cell_indexes: tuple[str, ...] = ()
 ) -> DataFrame:

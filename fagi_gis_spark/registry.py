@@ -17,6 +17,7 @@ Float-parity conventions (see sources/layers.py docstring):
 
 from __future__ import annotations
 
+import os as _os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +32,7 @@ from fagi_gis_spark.operators.fusion import (
     fused_centroids,
     linked_pairs,
 )
+from fagi_gis_spark.operators.geotag import geotag_microdeg_sql
 from fagi_gis_spark.operators.spatial_join import (
     HEX,
     S2,
@@ -41,6 +43,7 @@ from fagi_gis_spark.operators.spatial_join import (
 )
 from fagi_gis_spark.session import session_memo
 from fagi_gis_spark.sources.layers import (
+    StoredTable,
     admin_assign_oracle_sql,
     admin_polygons_pdf,
     materialized_layers,
@@ -1169,15 +1172,17 @@ def _minhash_index_table(sf_dir: str) -> str:
     return f"minhash_idx_{_index_table_tag(sf_dir, 'documents')}"
 
 
-def _ensure_index_tables(spark, specs: dict) -> bool:
-    """Re-register committed index dirs from a previous session (the
-    in-memory catalog does not survive sessions but the warehouse dirs
-    do; bucket ids live in file names, so bucketed reads work on the
-    re-registered external table).  Returns True when any table is
-    genuinely missing and must be BUILT.  Only a committed write
-    (job-level _SUCCESS marker) may be re-registered: a killed mid-write
-    run leaves partial files — stale uncommitted dirs are removed,
-    fresh ones (a concurrent writer) raise for a later retry."""
+def _ensure_index_tables(spark, specs: dict, build: Callable[[], None]) -> None:
+    """The one entry point of a stored index: re-register committed
+    index dirs from a previous session (the in-memory catalog does not
+    survive sessions but the warehouse dirs do; bucket ids live in file
+    names, so bucketed reads work on the re-registered external table),
+    then run ``build()`` when any table is genuinely missing.  Only a
+    committed write (job-level _SUCCESS marker) may be re-registered: a
+    killed mid-write run leaves partial files — stale uncommitted dirs
+    are removed, fresh ones (a concurrent writer) raise for a later
+    retry.  Index content is deterministic, so a build that fails
+    because a concurrent builder created the tables first is fine."""
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     need_build = False
     for t, (cols, cluster, sort) in specs.items():
@@ -1218,7 +1223,12 @@ def _ensure_index_tables(spark, specs: dict) -> bool:
 
                 shutil.rmtree(path, ignore_errors=True)
             need_build = True
-    return need_build
+    if need_build:
+        try:
+            build()
+        except Exception:
+            if not all(spark.catalog.tableExists(t) for t in specs):
+                raise
 
 
 @register(
@@ -1252,28 +1262,16 @@ def dedup_incremental_minhash(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     new = docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD == 0)
     tbl = _minhash_index_table(sf_dir)
-    # The in-memory catalog does not survive sessions but the warehouse
-    # directories do: a fresh session re-REGISTERS an existing index dir
-    # as an external bucketed table (the bucket ids live in the file
-    # names, so bucketed reads work unchanged); only truly missing
-    # tables are built.  Registration/creation is race-tolerant — the
-    # index content is deterministic, so a concurrent winner's is equal.
     specs = {
         f"{tbl}_buckets": ("doc_id BIGINT, band INT, bucket INT", "(band, bucket)", True),
         f"{tbl}_sigs": ("doc_id BIGINT, sig ARRAY<BIGINT>", "(doc_id)", False),
         # meta is written via pandas -> int64 columns; re-register as BIGINT
         f"{tbl}_meta": ("bands BIGINT, rows_per_band BIGINT", None, False),
     }
-    if _ensure_index_tables(spark, specs):
-        corpus = docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD != 0)
-        try:
-            build_minhash_index(minhash_signatures(corpus), tbl)
-        except Exception:
-            if not (
-                spark.catalog.tableExists(f"{tbl}_buckets")
-                and spark.catalog.tableExists(f"{tbl}_sigs")
-            ):
-                raise
+    corpus = docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD != 0)
+    _ensure_index_tables(
+        spark, specs, lambda: build_minhash_index(minhash_signatures(corpus), tbl)
+    )
     return incremental_minhash_pairs(
         minhash_signatures(new), tbl, jaccard_threshold=0.35
     )
@@ -1299,48 +1297,40 @@ def _documents_icetable(spark, sf_dir):
       v3 merge    updates  = doc_id % 7 == 0 with text || ' [rev2]'
                   (copy-on-write: only key-overlapping files rewritten)
 
-    Deterministic content keyed by the dataset identity; built in a
-    unique temp dir and atomically renamed into the warehouse, so a
-    concurrent builder's winner is byte-equivalent and the loser
-    discards (the same write-once contract as the persisted dedup
-    indexes)."""
-    import shutil
-    import uuid as _uuid
-
+    Deterministic content keyed by the dataset identity and this
+    lifecycle's source, stored once as a ``StoredTable``."""
     from fagi_gis_spark.sources.icetable import IceTable
 
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    base = _os.path.join(wh, f"icetable_docs_{_index_table_tag(sf_dir, 'documents')}")
-    if _os.path.exists(_os.path.join(base, "_COMMITTED")):
-        return IceTable(base)
-    docs = _docs(spark, sf_dir)
-    tmp = f"{base}.build-{_uuid.uuid4().hex}"
-    t = IceTable.create(tmp)
-    t.append(
-        docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD != 0).repartitionByRange(
-            8, "doc_id"
-        ),
-        stats_cols=["doc_id"],
+    def build(path: str) -> None:
+        docs = _docs(spark, sf_dir)
+        t = IceTable.create(path)
+        t.append(
+            docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD != 0).repartitionByRange(
+                8, "doc_id"
+            ),
+            stats_cols=["doc_id"],
+        )
+        t.append(
+            docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD == 0).repartitionByRange(
+                2, "doc_id"
+            ),
+            stats_cols=["doc_id"],
+        )
+        updates = (
+            t.read(spark)
+            .filter(F.col("doc_id") % _ICE_MERGE_MOD == 0)
+            .withColumn("text", F.concat(F.col("text"), F.lit(" [rev2]")))
+            .withColumn("n_chars", F.col("n_chars") + F.lit(7))
+        )
+        t.merge_by_key(spark, updates, "doc_id", stats_cols=["doc_id"])
+
+    return IceTable(
+        StoredTable(
+            f"icetable_docs_{_index_table_tag(sf_dir, 'documents')}",
+            ("fagi_gis_spark.sources.icetable", __name__),
+            build,
+        ).ensure()
     )
-    t.append(
-        docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD == 0).repartitionByRange(
-            2, "doc_id"
-        ),
-        stats_cols=["doc_id"],
-    )
-    updates = (
-        t.read(spark)
-        .filter(F.col("doc_id") % _ICE_MERGE_MOD == 0)
-        .withColumn("text", F.concat(F.col("text"), F.lit(" [rev2]")))
-        .withColumn("n_chars", F.col("n_chars") + F.lit(7))
-    )
-    t.merge_by_key(spark, updates, "doc_id", stats_cols=["doc_id"])
-    open(_os.path.join(tmp, "_COMMITTED"), "w").close()
-    try:
-        _os.rename(tmp, base)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race; winner is equal
-    return IceTable(base)
 
 
 _ICE_TEXT = (
@@ -1437,16 +1427,10 @@ def dedup_incremental_cosine(spark, sf_dir):
             False,
         ),
     }
-    if _ensure_index_tables(spark, specs):
-        corpus = emb.filter(F.col("vec_id") % _INCR_SPLIT_MOD != 0)
-        try:
-            build_cosine_index(corpus, tbl, bits_per_table=6)
-        except Exception:
-            if not (
-                spark.catalog.tableExists(f"{tbl}_buckets")
-                and spark.catalog.tableExists(f"{tbl}_vecs")
-            ):
-                raise
+    corpus = emb.filter(F.col("vec_id") % _INCR_SPLIT_MOD != 0)
+    _ensure_index_tables(
+        spark, specs, lambda: build_cosine_index(corpus, tbl, bits_per_table=6)
+    )
     return incremental_cosine_pairs(new, tbl, threshold=0.3)
 
 
@@ -1499,16 +1483,47 @@ WHERE ({BANDS})
 """
 
 
-def _simhash_oracle(max_hamming: int) -> str:
-    # band predicates generated from the SAME layout as the engine's
-    # simhash_near_pairs (bands = max_hamming + 1 -> complete recall)
+def _bands_sql(max_hamming: int) -> str:
+    """(a.vu, b.vu) agree on one band of the SAME layout as the engine's
+    simhash_near_pairs (bands = max_hamming + 1 -> complete recall)."""
     from fagi_gis_spark.functions.dedup import simhash_band_layout
 
-    conds = " OR ".join(
+    return " OR ".join(
         f"(a.vu >> {off}) % {1 << width} = (b.vu >> {off}) % {1 << width}"
         for off, width in simhash_band_layout(max_hamming)
     )
-    return _SIMHASH_ORACLE.replace("{BANDS}", conds).replace("{MAXH}", str(max_hamming))
+
+
+def _fp_pairs_sql(
+    src: str, key: str, fp: str, max_hamming: int, sigs: str = "s", hamming: bool = True
+) -> tuple[str, str]:
+    """Banded-hamming pairs over a stored signed-int64 fingerprint column
+    ``fp`` of ``src``: returns the ``sigs`` CTE (unsigned reinterpret)
+    and the pair SELECT over it (``<key stem>_a < <key stem>_b``, plus
+    the ``hamming`` distance when asked)."""
+    a, b = (key.removesuffix("_id") + side for side in ("_a", "_b"))
+    dist = ",\n       CAST(bit_count(xor(a.vu, b.vu)) AS INTEGER) AS hamming"
+    cte = (
+        f"{sigs} AS (\n"
+        f"  SELECT {key},\n"
+        f"    CAST((CAST({fp} AS HUGEINT) + 18446744073709551616)\n"
+        "         % 18446744073709551616 AS UBIGINT) AS vu\n"
+        f"  FROM {src}\n"
+        ")"
+    )
+    pairs = (
+        f"SELECT a.{key} AS {a}, b.{key} AS {b}{dist if hamming else ''}\n"
+        f"FROM {sigs} a JOIN {sigs} b ON a.{key} < b.{key}\n"
+        f"WHERE ({_bands_sql(max_hamming)})\n"
+        f"  AND bit_count(xor(a.vu, b.vu)) <= {max_hamming}"
+    )
+    return cte, pairs
+
+
+def _simhash_oracle(max_hamming: int) -> str:
+    return _SIMHASH_ORACLE.replace("{BANDS}", _bands_sql(max_hamming)).replace(
+        "{MAXH}", str(max_hamming)
+    )
 
 
 @register("dedup_simhash", _simhash_oracle(8))
@@ -1864,6 +1879,44 @@ def hex_rollup(spark, sf_dir):
     )
 
 
+def _write_corpus(path: str) -> None:
+    from fagi_gis_spark.sources.images import generate_images
+
+    spark = SparkSession.active()
+    generate_images(spark, 1000, partitions=8).write.parquet(path)
+
+
+#: the input_hint image table (image_id, bytes, w, h, fmt, caption,
+#: phash): the generated 1000-image corpus, stored once and read by every
+#: image query and image oracle, keyed by the generator and codec source
+_CORPUS = StoredTable(
+    "images_1000",
+    (
+        "fagi_gis_spark.sources.images",
+        "fagi_gis_spark.sources.png",
+        "fagi_gis_spark.sources.jpeg",
+        "fagi_gis_spark.sources.exif",
+    ),
+    _write_corpus,
+)
+
+
+def _images(spark) -> DataFrame:
+    from fagi_gis_spark.sources.images import IMAGES_SCHEMA
+
+    return spark.read.schema(IMAGES_SCHEMA).parquet(_CORPUS.ensure())
+
+
+#: DuckDB's view of the stored corpus
+_CORPUS_SQL = f"read_parquet('{_CORPUS.path}/*.parquet')"
+
+_SHARD_SPLIT_MOD = 5  # day-2 shard batch: images whose phash pmod 5 == 0
+
+#: the stored shard plan's tables carry the corpus key, so a new corpus
+#: never reads a stale plan
+_IMAGE_SHARD_IDX = f"image_shard_idx_{_CORPUS.key}"
+
+
 @register("image_phash_neardup")  # DCT pHash: codec-side, rows-only
 def image_phash_neardup(spark, sf_dir):
     """Perceptual near-duplicate detection over the input_hint image
@@ -1873,9 +1926,8 @@ def image_phash_neardup(spark, sf_dir):
     oracle (pHash needs the PNG/JPEG decode + DCT); the pytest twin checks
     banding == brute-force hamming pairs and variant recall."""
     from fagi_gis_spark.operators.multimodal import phash_neardup_pairs
-    from fagi_gis_spark.sources.images import generate_images
 
-    return phash_neardup_pairs(generate_images(spark, 1000, partitions=8))
+    return phash_neardup_pairs(_images(spark))
 
 
 @register("image_caption_fusion")  # composition over generated images: rows-only
@@ -1888,11 +1940,8 @@ def image_caption_fusion(spark, sf_dir):
     semantics).  Exercises the full image-payload conflation flow the
     north star describes; rows-only (pHash side has no SQL oracle)."""
     from fagi_gis_spark.operators.multimodal import phash_neardup_pairs
-    from fagi_gis_spark.sources.images import generate_images
 
-    # persist: the generated corpus (per-row JPEG/PNG encode + pHash)
-    # feeds several lineage branches; unpersisted it regenerates per branch
-    imgs = generate_images(spark, 1000, partitions=8).persist()
+    imgs = _images(spark)
     links = phash_neardup_pairs(imgs).select("image_a", "image_b")
     cap = imgs.select("image_id", "caption")
     cap_v = cap.select(
@@ -1933,12 +1982,8 @@ def image_clean_corpus(spark, sf_dir):
         phash_neardup_pairs,
         quality_stats,
     )
-    from fagi_gis_spark.sources.images import generate_images
 
-    # persist the GENERATOR output (the expensive side: JPEG entropy
-    # encode + EXIF embed per row) — persisting the union instead would
-    # fill the cache by running the generator once per union branch
-    base = generate_images(spark, 1000, partitions=8).persist()
+    base = _images(spark)
     # inject exact duplicates (every 10th image re-ingested under a new
     # id, bytes identical — the re-scrape case): the clean pipeline must
     # collapse each pair to ONE surviving row
@@ -1980,10 +2025,8 @@ def image_consensus_dedup(spark, sf_dir):
     hash/codec-side)."""
     from fagi_gis_spark.functions.dedup import simhash_near_pairs, simhash_signatures
     from fagi_gis_spark.operators.multimodal import phash_neardup_pairs
-    from fagi_gis_spark.sources.images import generate_images
 
-    # persist: four lineage branches consume the generated corpus
-    imgs = generate_images(spark, 1000, partitions=8).persist()
+    imgs = _images(spark)
     pixel = phash_neardup_pairs(imgs, max_hamming=6).select(
         "image_a", "image_b", F.lit(True).alias("pixel_hit")
     )
@@ -2007,74 +2050,28 @@ def image_consensus_dedup(spark, sf_dir):
     )
 
 
-import os as _os
-
-_IMAGES_ORACLE_PATH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "spark-warehouse",
-    "images_oracle_1000",
-)
-
-
-def _ensure_images_oracle(spark) -> "DataFrame":
-    """(image_id, phash) of the 1000-row generated corpus, shared by
-    every image oracle: write-once, atomic (temp dir + rename) — the
-    corpus is deterministic, so a hit can't change output, and a
-    concurrent bench sweep / driver gate never sees a half-written
-    directory (mode=overwrite deleted files mid-write while DuckDB
-    globbed them)."""
-    from fagi_gis_spark.sources.images import generate_images
-
-    if not _os.path.isdir(_IMAGES_ORACLE_PATH):
-        import shutil as _shutil
-
-        imgs = generate_images(spark, 1000, partitions=8).select("image_id", "phash")
-        tmp = f"{_IMAGES_ORACLE_PATH}.tmp.{_os.getpid()}"
-        imgs.write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, _IMAGES_ORACLE_PATH)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_IMAGES_ORACLE_PATH)
-
-
-_IMAGES_ORACLE_V2_PATH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "spark-warehouse",
-    "images_oracle_1000_sig",
-)
-
-
-def _ensure_images_oracle_v2(spark) -> "DataFrame":
-    """(image_id, phash, caption) of the generated corpus PLUS its
+def _write_image_features(path: str) -> None:
+    """(image_id, phash, caption) of the stored corpus PLUS its
     decoded-and-requantized variants ("v:" ids, codec-derived pHash,
     source caption) — the feature-store shape a production dedup re-run
-    reads (hashes already extracted at ingest; no re-decode).  Written
-    once, atomically (same contract as _ensure_images_oracle)."""
+    reads (hashes already extracted at ingest; no re-decode)."""
     from fagi_gis_spark.operators.multimodal import phash_variants
-    from fagi_gis_spark.sources.images import generate_images
 
-    if not _os.path.isdir(_IMAGES_ORACLE_V2_PATH):
-        import shutil as _shutil
+    base = _images(SparkSession.active())
+    var = (
+        phash_variants(base)
+        .withColumn("src", F.expr("substring(image_id, 3)"))
+        .join(base.select(F.col("image_id").alias("src"), "caption"), "src")
+        .select("image_id", "phash", "caption")
+    )
+    base.select("image_id", "phash", "caption").unionByName(var).write.parquet(path)
 
-        base = generate_images(spark, 1000, partitions=8).persist()
-        var = (
-            phash_variants(base)
-            .withColumn("src", F.expr("substring(image_id, 3)"))
-            .join(
-                base.select(F.col("image_id").alias("src"), "caption"), "src"
-            )
-            .select("image_id", "phash", "caption")
-        )
-        out = base.select("image_id", "phash", "caption").unionByName(var)
-        tmp = f"{_IMAGES_ORACLE_V2_PATH}.tmp.{_os.getpid()}"
-        out.write.mode("overwrite").parquet(tmp)
-        base.unpersist()
-        try:
-            _os.rename(tmp, _IMAGES_ORACLE_V2_PATH)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_IMAGES_ORACLE_V2_PATH)
+
+_IMAGE_FEATURES = StoredTable(
+    f"image_features-{_CORPUS.key}",
+    ("fagi_gis_spark.operators.multimodal", __name__),
+    _write_image_features,
+)
 
 
 def _image_consensus_stored_oracle() -> str:
@@ -2083,30 +2080,15 @@ def _image_consensus_stored_oracle() -> str:
     persisted pHash (unsigned reinterpret, the engine's exact
     max_hamming+1 band layout), caption channel = the closed-form FNV-1a
     SimHash oracle retargeted from `documents` to the same parquet."""
-    from fagi_gis_spark.functions.dedup import simhash_band_layout
-
-    src = f"read_parquet('{_IMAGES_ORACLE_V2_PATH}/*.parquet')"
-    pix_conds = " OR ".join(
-        f"(a.vu >> {off}) % {1 << width} = (b.vu >> {off}) % {1 << width}"
-        for off, width in simhash_band_layout(6)
-    )
+    src = f"read_parquet('{_IMAGE_FEATURES.path}/*.parquet')"
+    pix_s, pix = _fp_pairs_sql(src, "image_id", "phash", 6, sigs="pix_s", hamming=False)
     cap_sql = _simhash_oracle(8).replace(
         "FROM documents",
         f"FROM (SELECT image_id AS doc_id, caption AS text FROM {src})",
     )
     return (
-        "WITH pix_s AS (\n"
-        "  SELECT image_id,\n"
-        "    CAST((CAST(phash AS HUGEINT) + 18446744073709551616)\n"
-        "         % 18446744073709551616 AS UBIGINT) AS vu\n"
-        f"  FROM {src}\n"
-        "),\n"
-        "pix AS (\n"
-        "  SELECT a.image_id AS image_a, b.image_id AS image_b\n"
-        "  FROM pix_s a JOIN pix_s b ON a.image_id < b.image_id\n"
-        f"  WHERE ({pix_conds})\n"
-        "    AND bit_count(xor(a.vu, b.vu)) <= 6\n"
-        "),\n"
+        f"WITH {pix_s},\n"
+        f"pix AS (\n{pix}\n),\n"
         "cap AS (\n"
         f"  SELECT doc_a AS image_a, doc_b AS image_b FROM ({cap_sql}) t\n"
         ")\n"
@@ -2134,7 +2116,7 @@ def image_consensus_stored(spark, sf_dir):
         simhash_signatures,
     )
 
-    imgs = _ensure_images_oracle_v2(spark)
+    imgs = spark.read.parquet(_IMAGE_FEATURES.ensure())
     pixel = simhash_near_pairs(
         imgs.select(
             F.col("image_id").alias("doc_id"), F.col("phash").alias("simhash")
@@ -2170,15 +2152,11 @@ def _image_hex_rollup_oracle() -> str:
     half-up hex assignment (hex_cell_sql — one rounding rule, r5)."""
     from fagi_gis_spark.index.hexgrid import hex_cell_sql
 
-    lon = "((((phash % 2000000) + 2000000) % 2000000) - 1000000) / 1e6"
-    mixed = (
-        "((((((phash % 2147483647) + 2147483647) % 2147483647) * 2654435761) "
-        "% 2000000) + 2000000) % 2000000"
-    )
+    lon_md, lat_m = geotag_microdeg_sql("phash")
     src = (
         "SELECT image_id, "
-        f"{lon} AS lon, 50.0 + ({mixed}) / 1e6 AS lat "
-        f"FROM read_parquet('{_IMAGES_ORACLE_PATH}/*.parquet')"
+        f"{lon_md} / 1e6 AS lon, 50.0 + ({lat_m}) / 1e6 AS lat "
+        f"FROM {_CORPUS_SQL}"
     )
     cells = hex_cell_sql(src, "image_id", "lon", "lat", 9)
     return (
@@ -2192,14 +2170,13 @@ def image_hex_rollup(spark, sf_dir):
     """Image hex rollup: pHash-seeded geotag -> aperture-7 hex cell ->
     counts.
     Whole pipeline is JVM column arithmetic.  ORACLE-BACKED since r5
-    (VERDICT r4 ask #8): the generated corpus (id, phash) is written to
-    a parquet both engines read, so DuckDB replays geotag pmods + the
-    unified half-up hex assignment end-to-end."""
+    (VERDICT r4 ask #8): the stored corpus is a parquet both engines
+    read, so DuckDB replays geotag pmods + the unified half-up hex
+    assignment end-to-end."""
     from fagi_gis_spark.operators.geotag import geotag_cols
 
-    imgs = _ensure_images_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
-    geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
+    geo = _images(spark).withColumn("lon", lon).withColumn("lat", lat)
     return (
         geo.withColumn("cell_hex7", hex_cell_col(F.col("lon"), F.col("lat"), 9))
         .groupBy("cell_hex7")
@@ -2207,55 +2184,42 @@ def image_hex_rollup(spark, sf_dir):
     )
 
 
-_IMAGES_SHARD_PATH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "spark-warehouse",
-    "images_oracle_1000_nbytes",
-)
-
-
-def _ensure_images_shard_oracle(spark) -> "DataFrame":
-    """(image_id, phash, nbytes) of the generated corpus — the shard
-    planner's input shape (ids + stored feature + real encoded byte
-    size; bytes themselves never move through the planner).  Write-once,
-    atomic (same contract as _ensure_images_oracle)."""
-    from fagi_gis_spark.sources.images import generate_images
-
-    if not _os.path.isdir(_IMAGES_SHARD_PATH):
-        import shutil as _shutil
-
-        imgs = generate_images(spark, 1000, partitions=8).select(
-            "image_id", "phash", F.length("bytes").cast("long").alias("nbytes")
-        )
-        tmp = f"{_IMAGES_SHARD_PATH}.tmp.{_os.getpid()}"
-        imgs.write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, _IMAGES_SHARD_PATH)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_IMAGES_SHARD_PATH)
-
-
-def _image_shard_pack_oracle(res: int = 4, budget: int = 8192) -> str:
+def _image_shard_pack_oracle(incremental: bool = False, budget: int = 8192) -> str:
     """DuckDB replay of the whole shard plan: geotag pmods from the
-    stored phash, the shared half-up hex assignment at the shard cell
-    resolution, then the greedy byte-budget reset-scan per cell as a
+    stored phash, the shared half-up hex assignment at the res-4 shard
+    cell, then the greedy byte-budget reset-scan per cell as a
     recursive CTE over the image_id-ordered row number — the same
     closed-form shape that certifies doc_pack_sequences, here keyed by
-    the spatial cell and fed by REAL encoded file sizes."""
+    the spatial cell and fed by REAL encoded file sizes.
+
+    ``incremental`` adds the phase column of
+    image_shard_pack_incremental, whose plan must EQUAL this full
+    repack: a cell is 'repacked' iff it contains a new image, 'carried'
+    otherwise, so the value hash is sensitive to the carry/repack
+    classification too."""
     from fagi_gis_spark.index.hexgrid import hex_cell_sql
 
-    lon = "((((phash % 2000000) + 2000000) % 2000000) - 1000000) / 1e6"
-    mixed = (
-        "((((((phash % 2147483647) + 2147483647) % 2147483647) * 2654435761) "
-        "% 2000000) + 2000000) % 2000000"
-    )
+    lon_md, lat_m = geotag_microdeg_sql("phash")
+    extra = ", phash" if incremental else ""
     src = (
-        "SELECT image_id, nbytes, "
-        f"{lon} AS lon, 50.0 + ({mixed}) / 1e6 AS lat "
-        f"FROM read_parquet('{_IMAGES_SHARD_PATH}/*.parquet')"
+        f"SELECT image_id, octet_length(bytes) AS nbytes{extra}, "
+        f"{lon_md} / 1e6 AS lon, 50.0 + ({lat_m}) / 1e6 AS lat "
+        f"FROM {_CORPUS_SQL}"
     )
-    cells = hex_cell_sql(src, "image_id, nbytes", "lon", "lat", res)
+    cells = hex_cell_sql(src, f"image_id, nbytes{extra}", "lon", "lat", 4)
+    m = _SHARD_SPLIT_MOD
+    is_new = f"((phash % {m}) + {m}) % {m} = 0"
+    newcells = (
+        f"newcells AS (SELECT DISTINCT cell_id FROM __hex_out WHERE {is_new}),\n"
+        if incremental
+        else ""
+    )
+    phase = (
+        ",\n  CASE WHEN cell_id IN (SELECT cell_id FROM newcells)\n"
+        "       THEN 'repacked' ELSE 'carried' END AS phase\n"
+        if incremental
+        else " "
+    )
     return (
         f"WITH RECURSIVE {cells.lstrip()},\n"
         "t AS (\n"
@@ -2263,6 +2227,7 @@ def _image_shard_pack_oracle(res: int = 4, budget: int = 8192) -> str:
         "    row_number() OVER (PARTITION BY cell_id ORDER BY image_id) AS rn\n"
         "  FROM __hex_out\n"
         "),\n"
+        f"{newcells}"
         "packed AS (\n"
         "  SELECT cell_id, rn, image_id, nbytes,\n"
         "    CAST(0 AS BIGINT) AS shard_id, nbytes AS fill\n"
@@ -2275,7 +2240,7 @@ def _image_shard_pack_oracle(res: int = 4, budget: int = 8192) -> str:
         " ELSE t.nbytes END\n"
         "  FROM packed p JOIN t ON t.cell_id = p.cell_id AND t.rn = p.rn + 1\n"
         ")\n"
-        "SELECT cell_id AS cell_hex7, image_id, nbytes, shard_id FROM packed"
+        f"SELECT cell_id AS cell_hex7, image_id, nbytes, shard_id{phase}FROM packed"
     )
 
 
@@ -2290,18 +2255,41 @@ def image_shard_pack(spark, sf_dir):
     parallelizes over cells (one Arrow batch each), and the per-task
     bound at 10^12 images is the densest cell, never the corpus.
     ORACLE-BACKED end-to-end: DuckDB replays geotag + half-up hex +
-    the reset-scan recursive CTE from the same stored
-    (image_id, phash, nbytes) parquet."""
+    the reset-scan recursive CTE from the same stored corpus."""
     from fagi_gis_spark.operators.geotag import geotag_cols
     from fagi_gis_spark.operators.multimodal import shard_pack
 
-    imgs = _ensure_images_shard_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
-    geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
+    geo = _images(spark).withColumn("lon", lon).withColumn("lat", lat)
     cells = geo.select(
-        hex_cell_col(F.col("lon"), F.col("lat"), 4).alias("cell_hex7"), "image_id", "nbytes"
+        hex_cell_col(F.col("lon"), F.col("lat"), 4).alias("cell_hex7"),
+        "image_id",
+        F.length("bytes").cast("long").alias("nbytes"),
     )
     return shard_pack(cells, budget_bytes=8192)
+
+
+def _exif_meta_ctes() -> str:
+    """The EXIF oracles' shared WITH entries: ``__meta`` (each image's
+    id integer ``i`` and its EXIF geotag in micro-degrees, replayed from
+    the stored phash) and its res-9 hex cells ``__hex_out``."""
+    from fagi_gis_spark.index.hexgrid import hex_cell_sql
+
+    lon_md, lat_m = geotag_microdeg_sql("phash")
+    src = (
+        "SELECT image_id, CAST(SUBSTR(image_id, 5, 8) AS INT) AS i, "
+        f"(50000000 + {lat_m}) AS lat_microdeg, {lon_md} AS lon_microdeg "
+        f"FROM {_CORPUS_SQL}"
+    )
+    cells = hex_cell_sql(
+        "SELECT image_id, lon_microdeg / 1e6 AS lon, lat_microdeg / 1e6 AS lat "
+        "FROM __meta",
+        "image_id",
+        "lon",
+        "lat",
+        9,
+    )
+    return f"__meta AS ({src}),\n{cells.lstrip()}"
 
 
 def _image_exif_geotag_oracle() -> str:
@@ -2313,29 +2301,8 @@ def _image_exif_geotag_oracle() -> str:
     of them by parsing the TIFF payload out of the bytes.  A transposed
     rational, wrong byte order, off-by-one IFD offset, or a broken sign
     (S/W refs) mismatches the value hash immediately."""
-    from fagi_gis_spark.index.hexgrid import hex_cell_sql
-
-    lon_md = "((((phash % 2000000) + 2000000) % 2000000) - 1000000)"
-    lat_md = (
-        "(50000000 + ((((((phash % 2147483647) + 2147483647) % 2147483647) "
-        "* 2654435761) % 2000000) + 2000000) % 2000000)"
-    )
-    src = (
-        "SELECT image_id, CAST(SUBSTR(image_id, 5, 8) AS INT) AS i, "
-        f"{lat_md} AS lat_microdeg, {lon_md} AS lon_microdeg "
-        f"FROM read_parquet('{_IMAGES_ORACLE_PATH}/*.parquet')"
-    )
-    cells = hex_cell_sql(
-        "SELECT image_id, lon_microdeg / 1e6 AS lon, lat_microdeg / 1e6 AS lat "
-        "FROM __meta",
-        "image_id",
-        "lon",
-        "lat",
-        9,
-    )
     return (
-        f"WITH __meta AS ({src}),\n"
-        f"{cells.lstrip()}\n"
+        f"WITH {_exif_meta_ctes()}\n"
         "SELECT m.image_id, m.lat_microdeg, m.lon_microdeg,\n"
         "       CAST(1 + m.i % 8 AS INT) AS orientation,\n"
         "       printf('2023:%02d:%02d %02d:%02d:%02d',\n"
@@ -2361,10 +2328,8 @@ def image_exif_geotag(spark, sf_dir):
     VirtuosoImporter.java); here the coordinate rides inside the image
     payload, as a real image+caption corpus would deliver it."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.sources.images import generate_images
 
-    _ensure_images_oracle(spark)  # the oracle replays from (id, phash)
-    parsed = exif_geotags(generate_images(spark, 1000, partitions=8))
+    parsed = exif_geotags(_images(spark))
     lon = F.col("lon_microdeg") / F.lit(1e6)
     lat = F.col("lat_microdeg") / F.lit(1e6)
     return parsed.withColumn("cell_hex7", hex_cell_col(lon, lat, 9))
@@ -2381,20 +2346,16 @@ def image_quality_filter(spark, sf_dir):
     kernel on hand-computed fixtures (flat / checkerboard / half-half)
     and cross-checks the Spark run against driver-side numpy."""
     from fagi_gis_spark.operators.multimodal import quality_stats
-    from fagi_gis_spark.sources.images import generate_images
 
-    return quality_stats(generate_images(spark, 1000, partitions=8))
+    return quality_stats(_images(spark))
 
 
 def _image_exif_tile_assign_oracle() -> str:
-    lon_md = "((((phash % 2000000) + 2000000) % 2000000) - 1000000)"
-    lat_md = (
-        "(50000000 + ((((((phash % 2147483647) + 2147483647) % 2147483647) "
-        "* 2654435761) % 2000000) + 2000000) % 2000000)"
-    )
+    lon_md, lat_m = geotag_microdeg_sql("phash")
+    lat_md = f"(50000000 + {lat_m})"
     src = (
         f"SELECT image_id, {lon_md} / 1e6 AS lon, {lat_md} / 1e6 AS lat "
-        f"FROM read_parquet('{_IMAGES_ORACLE_PATH}/*.parquet')"
+        f"FROM {_CORPUS_SQL}"
     )
     selects = []
     for z in range(tiles.MIN_RES, tiles.MAX_RES + 1):
@@ -2415,10 +2376,8 @@ def image_exif_tile_assign(spark, sf_dir):
     ever seeing the bytes, so the binary parse is value-checked end to
     end at all five zoom levels."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.sources.images import generate_images
 
-    _ensure_images_oracle(spark)
-    parsed = exif_geotags(generate_images(spark, 1000, partitions=8))
+    parsed = exif_geotags(_images(spark))
     lon = F.col("lon_microdeg") / F.lit(1e6)
     lat = F.col("lat_microdeg") / F.lit(1e6)
     parts = [
@@ -2437,11 +2396,8 @@ def image_exif_tile_assign(spark, sf_dir):
 def _image_exif_poi_join_oracle() -> str:
     from fagi_gis_spark.sources.layers import oracle_ctes
 
-    lon_md = "((((phash % 2000000) + 2000000) % 2000000) - 1000000)"
-    lat_md = (
-        "(50000000 + ((((((phash % 2147483647) + 2147483647) % 2147483647) "
-        "* 2654435761) % 2000000) + 2000000) % 2000000)"
-    )
+    lon_md, lat_m = geotag_microdeg_sql("phash")
+    lat_md = f"(50000000 + {lat_m})"
     dist = (
         "sqrt((i.lon - b.lon) * (i.lon - b.lon) + "
         "(i.lat - b.lat) * (i.lat - b.lat)) * 111195.0"
@@ -2450,7 +2406,7 @@ def _image_exif_poi_join_oracle() -> str:
         f"WITH {oracle_ctes()},\n"
         "__img AS (\n"
         f"  SELECT image_id, {lon_md} / 1e6 AS lon, {lat_md} / 1e6 AS lat\n"
-        f"  FROM read_parquet('{_IMAGES_ORACLE_PATH}/*.parquet')\n"
+        f"  FROM {_CORPUS_SQL}\n"
         ")\n"
         "SELECT i.image_id, b.subject AS poi,\n"
         f"       round({dist}, 4) AS dist_m_r\n"
@@ -2470,10 +2426,8 @@ def image_exif_poi_join(spark, sf_dir):
     side); the oracle replays the probe coordinates from (id, phash)
     and the full cross-distance filter in SQL."""
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.sources.images import generate_images
 
-    _ensure_images_oracle(spark)
-    parsed = exif_geotags(generate_images(spark, 1000, partitions=8))
+    parsed = exif_geotags(_images(spark))
     probe = parsed.select(
         "image_id",
         (F.col("lon_microdeg") / F.lit(1e6)).alias("lon"),
@@ -2495,18 +2449,6 @@ def image_exif_poi_join(spark, sf_dir):
 
 
 def _image_burst_dedup_oracle() -> str:
-    from fagi_gis_spark.index.hexgrid import hex_cell_sql
-
-    lon_md = "((((phash % 2000000) + 2000000) % 2000000) - 1000000)"
-    lat_md = (
-        "(50000000 + ((((((phash % 2147483647) + 2147483647) % 2147483647) "
-        "* 2654435761) % 2000000) + 2000000) % 2000000)"
-    )
-    src = (
-        "SELECT image_id, CAST(SUBSTR(image_id, 5, 8) AS INT) AS i, "
-        f"{lat_md} AS lat_microdeg, {lon_md} AS lon_microdeg "
-        f"FROM read_parquet('{_IMAGES_ORACLE_PATH}/*.parquet')"
-    )
     # the same calendar-free fixed-radix key as operators/geotag.
     # exif_time_key (year included), computed directly from the id's
     # integer (the generator's datetime formula: year pinned to 2023,
@@ -2516,17 +2458,8 @@ def _image_burst_dedup_oracle() -> str:
         "+ (1 + i % 28) - 1) * 24 "
         "+ i % 24) * 60 + i % 60) * 60 + (i * 7) % 60)"
     )
-    cells = hex_cell_sql(
-        "SELECT image_id, lon_microdeg / 1e6 AS lon, lat_microdeg / 1e6 AS lat "
-        "FROM __meta",
-        "image_id",
-        "lon",
-        "lat",
-        9,
-    )
     return (
-        f"WITH __meta AS ({src}),\n"
-        f"{cells.lstrip()},\n"
+        f"WITH {_exif_meta_ctes()},\n"
         "__g AS (\n"
         f"  SELECT m.image_id, h.cell_id AS cell_hex7, CAST({ts} AS BIGINT) AS ts_key\n"
         "  FROM __meta m JOIN __hex_out h USING (image_id)\n"
@@ -2563,10 +2496,8 @@ def image_burst_dedup(spark, sf_dir):
     from (id, phash) arithmetic without seeing the binary."""
     from fagi_gis_spark.operators.geotag import burst_groups
     from fagi_gis_spark.operators.multimodal import exif_geotags
-    from fagi_gis_spark.sources.images import generate_images
 
-    _ensure_images_oracle(spark)
-    parsed = exif_geotags(generate_images(spark, 1000, partitions=8))
+    parsed = exif_geotags(_images(spark))
     return burst_groups(parsed, res=9, gap_s=300)
 
 
@@ -2582,9 +2513,8 @@ def image_orientation_normalize(spark, sf_dir):
     recovery for all 8 orientations and pHash collapse of rotated
     duplicates."""
     from fagi_gis_spark.operators.multimodal import orientation_normalize
-    from fagi_gis_spark.sources.images import generate_images
 
-    up = orientation_normalize(generate_images(spark, 1000, partitions=8))
+    up = orientation_normalize(_images(spark))
     return up.groupBy("orientation").agg(
         F.count("*").alias("n"),
         F.count_distinct(F.col("phash_upright")).alias("n_distinct_phash"),
@@ -2669,12 +2599,6 @@ def multimodal_audio_stats(spark, sf_dir):
     )
 
 
-_AUDIO_FP_PATH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "spark-warehouse",
-    "audio_fp_500",
-)
-
 #: the perturbed re-ingests measure hamming 3-10 from their source
 #: clip; 10 is the smallest threshold with COMPLETE re-ingest recall
 #: (the 13 unrelated pairs also landing <= 10 at 500 clips are the
@@ -2682,51 +2606,46 @@ _AUDIO_FP_PATH = _os.path.join(
 _AUDIO_FP_MAXH = 10
 
 
-def _ensure_audio_fp(spark) -> "DataFrame":
+def _write_audio_fp(path: str) -> None:
     """(clip_id, fp) of the 500-clip corpus + its 100 perturbed "v:"
-    re-ingests, fingerprinted once (decode + FFT side) and persisted
-    atomically — the stored-feature shape audio dedup re-runs read,
-    and the parquet both engines replay (same contract as
-    _ensure_images_oracle_v2)."""
+    re-ingests, fingerprinted once (decode + FFT side) — the
+    stored-feature shape audio dedup re-runs read, and the parquet both
+    engines replay."""
     from fagi_gis_spark.operators.multimodal import audio_fingerprint
     from fagi_gis_spark.sources.wav import generate_clips
 
-    if not _os.path.isdir(_AUDIO_FP_PATH):
-        import shutil as _shutil
-
-        fp = audio_fingerprint(generate_clips(spark, 500, partitions=8, variant_every=5))
-        tmp = f"{_AUDIO_FP_PATH}.tmp.{_os.getpid()}"
-        fp.write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, _AUDIO_FP_PATH)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_AUDIO_FP_PATH)
+    clips = generate_clips(SparkSession.active(), 500, partitions=8, variant_every=5)
+    audio_fingerprint(clips).write.parquet(path)
 
 
-def _audio_fp_oracle() -> str:
-    from fagi_gis_spark.functions.dedup import simhash_band_layout
+_AUDIO_FP = StoredTable(
+    "audio_fp_500",
+    ("fagi_gis_spark.operators.multimodal", "fagi_gis_spark.sources.wav"),
+    _write_audio_fp,
+)
 
-    conds = " OR ".join(
-        f"(a.vu >> {off}) % {1 << width} = (b.vu >> {off}) % {1 << width}"
-        for off, width in simhash_band_layout(_AUDIO_FP_MAXH)
+
+def _fp_oracle(table: StoredTable, max_hamming: int) -> str:
+    """DuckDB replay of ``_fp_neardup``: banding + popcount, bit-exact."""
+    cte, pairs = _fp_pairs_sql(
+        f"read_parquet('{table.path}/*.parquet')", "clip_id", "fp", max_hamming
     )
-    return (
-        "WITH s AS (\n"
-        "  SELECT clip_id,\n"
-        "    CAST((CAST(fp AS HUGEINT) + 18446744073709551616)\n"
-        "         % 18446744073709551616 AS UBIGINT) AS vu\n"
-        f"  FROM read_parquet('{_AUDIO_FP_PATH}/*.parquet')\n"
-        ")\n"
-        "SELECT a.clip_id AS clip_a, b.clip_id AS clip_b,\n"
-        "       CAST(bit_count(xor(a.vu, b.vu)) AS INTEGER) AS hamming\n"
-        "FROM s a JOIN s b ON a.clip_id < b.clip_id\n"
-        f"WHERE ({conds})\n"
-        f"  AND bit_count(xor(a.vu, b.vu)) <= {_AUDIO_FP_MAXH}"
-    )
+    return f"WITH {cte}\n{pairs}"
 
 
-@register("audio_fp_neardup", _audio_fp_oracle())
+def _fp_neardup(spark, table: StoredTable, max_hamming: int) -> DataFrame:
+    """Near-dup clip pairs from a stored (clip_id, fp) fingerprint table:
+    the banded hamming join every payload shares."""
+    from fagi_gis_spark.functions.dedup import simhash_near_pairs
+
+    fp = spark.read.parquet(table.ensure())
+    return simhash_near_pairs(
+        fp.select(F.col("clip_id").alias("doc_id"), F.col("fp").alias("simhash")),
+        max_hamming=max_hamming,
+    ).withColumnsRenamed({"doc_a": "clip_a", "doc_b": "clip_b"})
+
+
+@register("audio_fp_neardup", _fp_oracle(_AUDIO_FP, _AUDIO_FP_MAXH))
 def audio_fp_neardup(spark, sf_dir):
     """Audio near-duplicate pairs from stored Haitsma-Kalker
     fingerprints (operators/multimodal.audio_fingerprint: 64 energy-
@@ -2737,20 +2656,8 @@ def audio_fp_neardup(spark, sf_dir):
     threshold-10 join finds ALL 100 re-ingests (plus a 13-pair
     unrelated precision tail — asserted exactly in pytest); the DuckDB
     oracle replays the banding + popcount bit-exactly."""
-    from fagi_gis_spark.functions.dedup import simhash_near_pairs
+    return _fp_neardup(spark, _AUDIO_FP, _AUDIO_FP_MAXH)
 
-    fp = _ensure_audio_fp(spark)
-    return simhash_near_pairs(
-        fp.select(F.col("clip_id").alias("doc_id"), F.col("fp").alias("simhash")),
-        max_hamming=_AUDIO_FP_MAXH,
-    ).withColumnsRenamed({"doc_a": "clip_a", "doc_b": "clip_b"})
-
-
-_VIDEO_FP_PATH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "spark-warehouse",
-    "video_fp_400",
-)
 
 #: the re-ingested edits (frame requant <= 5, frame trim <= 13) measure
 #: hamming <= 13 from their source clip at 400 animations; 13 is the
@@ -2760,54 +2667,31 @@ _VIDEO_FP_PATH = _os.path.join(
 _VIDEO_FP_MAXH = 13
 
 
-def _ensure_video_fp(spark) -> "DataFrame":
+def _write_video_fp(path: str) -> None:
     """(clip_id, fp) of the 400-animation GIF corpus + its 80 "v:"
     re-ingested edits (requantized frames / trimmed last frame),
     fingerprinted once (real GIF decode + per-frame pHash + per-bit
-    majority fold) and persisted atomically — the stored-feature shape
-    video dedup re-runs read, and the parquet both engines replay
-    (same contract as _ensure_audio_fp)."""
+    majority fold) — the stored-feature shape video dedup re-runs read,
+    and the parquet both engines replay."""
     from fagi_gis_spark.operators.multimodal import video_fingerprint
     from fagi_gis_spark.sources.gif import generate_animations
 
-    if not _os.path.isdir(_VIDEO_FP_PATH):
-        import shutil as _shutil
-
-        fp = video_fingerprint(
-            generate_animations(spark, 400, partitions=8, variant_every=5)
-        )
-        tmp = f"{_VIDEO_FP_PATH}.tmp.{_os.getpid()}"
-        fp.write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, _VIDEO_FP_PATH)
-        except OSError:  # lost a concurrent race: the winner's is equal
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_VIDEO_FP_PATH)
+    anims = generate_animations(SparkSession.active(), 400, partitions=8, variant_every=5)
+    video_fingerprint(anims).write.parquet(path)
 
 
-def _video_fp_oracle() -> str:
-    from fagi_gis_spark.functions.dedup import simhash_band_layout
-
-    conds = " OR ".join(
-        f"(a.vu >> {off}) % {1 << width} = (b.vu >> {off}) % {1 << width}"
-        for off, width in simhash_band_layout(_VIDEO_FP_MAXH)
-    )
-    return (
-        "WITH s AS (\n"
-        "  SELECT clip_id,\n"
-        "    CAST((CAST(fp AS HUGEINT) + 18446744073709551616)\n"
-        "         % 18446744073709551616 AS UBIGINT) AS vu\n"
-        f"  FROM read_parquet('{_VIDEO_FP_PATH}/*.parquet')\n"
-        ")\n"
-        "SELECT a.clip_id AS clip_a, b.clip_id AS clip_b,\n"
-        "       CAST(bit_count(xor(a.vu, b.vu)) AS INTEGER) AS hamming\n"
-        "FROM s a JOIN s b ON a.clip_id < b.clip_id\n"
-        f"WHERE ({conds})\n"
-        f"  AND bit_count(xor(a.vu, b.vu)) <= {_VIDEO_FP_MAXH}"
-    )
+_VIDEO_FP = StoredTable(
+    "video_fp_400",
+    (
+        "fagi_gis_spark.operators.multimodal",
+        "fagi_gis_spark.sources.gif",
+        "fagi_gis_spark.sources.images",
+    ),
+    _write_video_fp,
+)
 
 
-@register("video_fp_neardup", _video_fp_oracle())
+@register("video_fp_neardup", _fp_oracle(_VIDEO_FP, _VIDEO_FP_MAXH))
 def video_fp_neardup(spark, sf_dir):
     """Video near-duplicate pairs from stored clip fingerprints
     (operators/multimodal.video_fingerprint: per-frame perceptual pHash
@@ -2820,13 +2704,7 @@ def video_fp_neardup(spark, sf_dir):
     (plus a 2-pair unrelated precision tail); the DuckDB oracle replays
     the banding + popcount bit-exactly.  Completes the modality sweep:
     one near-dup machinery, four feature extractors."""
-    from fagi_gis_spark.functions.dedup import simhash_near_pairs
-
-    fp = _ensure_video_fp(spark)
-    return simhash_near_pairs(
-        fp.select(F.col("clip_id").alias("doc_id"), F.col("fp").alias("simhash")),
-        max_hamming=_VIDEO_FP_MAXH,
-    ).withColumnsRenamed({"doc_a": "clip_a", "doc_b": "clip_b"})
+    return _fp_neardup(spark, _VIDEO_FP, _VIDEO_FP_MAXH)
 
 
 @register("multimodal_format_ingest")  # codec-side decode: rows-only
@@ -4443,7 +4321,7 @@ def clean_corpus(spark, sf_dir):
     from fagi_gis_spark.functions.text import quality_score
 
     docs = _docs(spark, sf_dir)
-    kept = quality_score(docs).filter(F.col("quality") >= 70).persist()
+    kept = quality_score(docs).filter(F.col("quality") >= 70)
     edges = ngram_jaccard_pairs(
         kept.select("doc_id", "text"), threshold=0.5, blocking="lenband"
     )
@@ -4643,11 +4521,7 @@ def _image_spatial_split_oracle(
 
     n = 1 << z
     side = 1 << shift
-    lon = "((((phash % 2000000) + 2000000) % 2000000) - 1000000) / 1e6"
-    mixed = (
-        "((((((phash % 2147483647) + 2147483647) % 2147483647) * 2654435761) "
-        "% 2000000) + 2000000) % 2000000"
-    )
+    lon_md, lat_m = geotag_microdeg_sql("phash")
     span = list(range(-1, side + 1))
     edge = {-1, side}
     offs = ", ".join(
@@ -4658,8 +4532,8 @@ def _image_spatial_split_oracle(
     return (
         "WITH g AS (\n"
         "  SELECT image_id, "
-        f"{lon} AS lon, 50.0 + ({mixed}) / 1e6 AS lat\n"
-        f"  FROM read_parquet('{_IMAGES_SHARD_PATH}/*.parquet')\n"
+        f"{lon_md} / 1e6 AS lon, 50.0 + ({lat_m}) / 1e6 AS lat\n"
+        f"  FROM {_CORPUS_SQL}\n"
         "),\n"
         f"c AS (SELECT image_id, {tx} AS tx, {ty} AS ty FROM g),\n"
         "s AS (\n"
@@ -4699,9 +4573,8 @@ def image_spatial_split(spark, sf_dir):
     ORACLE-BACKED end-to-end from the stored (image_id, phash) corpus."""
     from fagi_gis_spark.operators.geotag import geotag_cols, spatial_split
 
-    imgs = _ensure_images_shard_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
-    g = imgs.select("image_id", lon.alias("lon"), lat.alias("lat"))
+    g = _images(spark).select("image_id", lon.alias("lon"), lat.alias("lat"))
     return spatial_split(g, z=11, block_shift=2)
 
 
@@ -4736,56 +4609,6 @@ def quadkey_cells(spark, sf_dir):
     )
 
 
-_SHARD_SPLIT_MOD = 5  # day-2 shard batch: images whose phash pmod 5 == 0
-
-
-def _image_shard_pack_incr_oracle(
-    z_res: int = 4, budget: int = 8192, n_buckets: int = 10
-) -> str:
-    """Same closed-form full-repack replay as _image_shard_pack_oracle —
-    the incremental plan must EQUAL the full repack exactly — plus the
-    phase column: a cell is 'repacked' iff it contains a new image,
-    'carried' otherwise, so the value hash is sensitive to the
-    carry/repack classification too."""
-    from fagi_gis_spark.index.hexgrid import hex_cell_sql
-
-    lon = "((((phash % 2000000) + 2000000) % 2000000) - 1000000) / 1e6"
-    mixed = (
-        "((((((phash % 2147483647) + 2147483647) % 2147483647) * 2654435761) "
-        "% 2000000) + 2000000) % 2000000"
-    )
-    src = (
-        "SELECT image_id, nbytes, phash, "
-        f"{lon} AS lon, 50.0 + ({mixed}) / 1e6 AS lat "
-        f"FROM read_parquet('{_IMAGES_SHARD_PATH}/*.parquet')"
-    )
-    cells = hex_cell_sql(src, "image_id, nbytes, phash", "lon", "lat", z_res)
-    is_new = f"((phash % {_SHARD_SPLIT_MOD}) + {_SHARD_SPLIT_MOD}) % {_SHARD_SPLIT_MOD} = 0"
-    return (
-        f"WITH RECURSIVE {cells.lstrip()},\n"
-        "t AS (\n"
-        "  SELECT cell_id, image_id, CAST(nbytes AS BIGINT) AS nbytes,\n"
-        "    row_number() OVER (PARTITION BY cell_id ORDER BY image_id) AS rn\n"
-        "  FROM __hex_out\n"
-        "),\n"
-        f"newcells AS (SELECT DISTINCT cell_id FROM __hex_out WHERE {is_new}),\n"
-        "packed AS (\n"
-        "  SELECT cell_id, rn, image_id, nbytes,\n"
-        "    CAST(0 AS BIGINT) AS shard_id, nbytes AS fill\n"
-        "  FROM t WHERE rn = 1\n"
-        "  UNION ALL\n"
-        "  SELECT t.cell_id, t.rn, t.image_id, t.nbytes,\n"
-        f"    CASE WHEN p.fill + t.nbytes <= {budget} THEN p.shard_id"
-        " ELSE p.shard_id + 1 END,\n"
-        f"    CASE WHEN p.fill + t.nbytes <= {budget} THEN p.fill + t.nbytes"
-        " ELSE t.nbytes END\n"
-        "  FROM packed p JOIN t ON t.cell_id = p.cell_id AND t.rn = p.rn + 1\n"
-        ")\n"
-        "SELECT cell_id AS cell_hex7, image_id, nbytes, shard_id,\n"
-        "  CASE WHEN cell_id IN (SELECT cell_id FROM newcells)\n"
-        "       THEN 'repacked' ELSE 'carried' END AS phase\n"
-        "FROM packed"
-    )
 
 
 def _image_shard_cells(spark) -> "DataFrame":
@@ -4793,18 +4616,17 @@ def _image_shard_cells(spark) -> "DataFrame":
     geotag + res-4 hex assignment both shard-pack queries run."""
     from fagi_gis_spark.operators.geotag import geotag_cols
 
-    imgs = _ensure_images_shard_oracle(spark)
     lon, lat = geotag_cols(F.col("phash"))
-    geo = imgs.withColumn("lon", lon).withColumn("lat", lat)
+    geo = _images(spark).withColumn("lon", lon).withColumn("lat", lat)
     return geo.select(
         hex_cell_col(F.col("lon"), F.col("lat"), 4).alias("cell_hex7"),
         "image_id",
-        F.col("nbytes").cast("long").alias("nbytes"),
+        F.length("bytes").cast("long").alias("nbytes"),
         (F.pmod(F.col("phash"), F.lit(_SHARD_SPLIT_MOD)) == 0).alias("is_new"),
     )
 
 
-@register("image_shard_pack_incremental", _image_shard_pack_incr_oracle())
+@register("image_shard_pack_incremental", _image_shard_pack_oracle(incremental=True))
 def image_shard_pack_incremental(spark, sf_dir):
     """Day-2 shard maintenance — the shard-layout member of the
     incremental family (exact digest / MinHash / banded-hamming /
@@ -4823,7 +4645,7 @@ def image_shard_pack_incremental(spark, sf_dir):
     from fagi_gis_spark.operators.multimodal import shard_pack
 
     cells = _image_shard_cells(spark)
-    tbl = "image_shard_idx"
+    tbl = _IMAGE_SHARD_IDX
     specs = {
         f"{tbl}_cells": (
             "cell_hex7 BIGINT, image_id STRING, nbytes BIGINT",
@@ -4836,29 +4658,26 @@ def image_shard_pack_incremental(spark, sf_dir):
             False,
         ),
     }
-    if _ensure_index_tables(spark, specs):
-        day1 = cells.filter(~F.col("is_new")).drop("is_new")
-        try:
-            if not spark.catalog.tableExists(f"{tbl}_cells"):
-                (
-                    day1.write.bucketBy(16, "cell_hex7")
-                    .sortBy("cell_hex7")
-                    .mode("errorifexists")
-                    .saveAsTable(f"{tbl}_cells")
-                )
-            if not spark.catalog.tableExists(f"{tbl}_plan"):
-                (
-                    shard_pack(spark.table(f"{tbl}_cells"), 8192)
-                    .write.bucketBy(16, "cell_hex7")
-                    .mode("errorifexists")
-                    .saveAsTable(f"{tbl}_plan")
-                )
-        except Exception:
-            if not (
-                spark.catalog.tableExists(f"{tbl}_cells")
-                and spark.catalog.tableExists(f"{tbl}_plan")
-            ):
-                raise
+
+    def build() -> None:
+        if not spark.catalog.tableExists(f"{tbl}_cells"):
+            (
+                cells.filter(~F.col("is_new"))
+                .drop("is_new")
+                .write.bucketBy(16, "cell_hex7")
+                .sortBy("cell_hex7")
+                .mode("errorifexists")
+                .saveAsTable(f"{tbl}_cells")
+            )
+        if not spark.catalog.tableExists(f"{tbl}_plan"):
+            (
+                shard_pack(spark.table(f"{tbl}_cells"), 8192)
+                .write.bucketBy(16, "cell_hex7")
+                .mode("errorifexists")
+                .saveAsTable(f"{tbl}_plan")
+            )
+
+    _ensure_index_tables(spark, specs, build)
     new = cells.filter(F.col("is_new")).drop("is_new")
     touched = new.select("cell_hex7").distinct()
     repacked = shard_pack(

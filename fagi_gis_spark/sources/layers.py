@@ -27,8 +27,10 @@ Layout of the synthetic world (FIXTURES.md §2-§4):
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -296,25 +298,76 @@ MATERIALIZED_LAYER_KEYS = (
 SUMMARY_LAYER_KEYS = ("poi_a", "poi_b")
 
 
+#: modules whose source decides the stored layers (geo_udfs/wkt feed
+#: the stored summary columns — any edit re-keys the import)
+_LAYER_MODULES = (
+    __name__,
+    "fagi_gis_spark.operators.dedup_precedence",
+    "fagi_gis_spark.functions.geo_udfs",
+    "fagi_gis_spark.geometry.wkt",
+)
+
+
 def _layers_cache_tag(sf_dir: str) -> str:
-    """Cache key for a materialized import: input identity (path + the
-    orders.parquet file stats) x layer-definition identity (source text
-    of this module and the precedence dedup — any edit invalidates)."""
-    import fagi_gis_spark.operators.dedup_precedence as _dp
-
-    import fagi_gis_spark.functions.geo_udfs as _gu
-    import fagi_gis_spark.geometry.wkt as _wk
-
+    """Input identity of a materialized import: the sf dir's path + the
+    orders.parquet file stats."""
     h = hashlib.sha1()
     orders = os.path.join(sf_dir, "orders.parquet")
     h.update(os.path.abspath(sf_dir).encode())
     st = os.stat(orders)
     h.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
-    # geo_udfs/wkt feed the stored summary columns — any edit invalidates
-    for mod_file in (__file__, _dp.__file__, _gu.__file__, _wk.__file__):
-        with open(mod_file, "rb") as f:
-            h.update(f.read())
     return f"{os.path.basename(sf_dir.rstrip('/'))}-{h.hexdigest()[:12]}"
+
+
+class StoredTable:
+    """A write-once stored table, the engine's one import-once mechanism.
+
+    ``path`` is the layer-cache root (``root``, else
+    ``$SPARK_GRAFT_LAYER_CACHE``, else ``~/.cache/spark_graft_layers``)
+    plus ``name`` plus ``key``, a hash of the source text of the named
+    ``modules`` — the modules that decide the content, so an edit to any
+    of them re-keys the table and a stale copy is never read.
+    ``ensure()`` returns the path, first running ``build(dir)`` into
+    ``<path>.tmp.<pid>`` and renaming it into place when the path is
+    absent.  Content is deterministic and the rename atomic: a reader
+    sees a whole table or none, and a concurrent writer that loses the
+    race deletes its (equal) copy.  A query and its DuckDB oracle read
+    the same ``StoredTable`` value, so they cannot disagree on the path.
+    """
+
+    def __init__(
+        self,
+        name: str,
+        modules: tuple[str, ...],
+        build: Callable[[str], None],
+        root: str | None = None,
+    ):
+        h = hashlib.sha1()
+        for m in modules:
+            with open(importlib.util.find_spec(m).origin, "rb") as f:
+                h.update(f.read())
+        self.key = h.hexdigest()[:12]
+        # default under ~/.cache, not /tmp: hosts that sweep /tmp would
+        # silently charge a full re-import to whichever query runs next
+        # (observed as 2-3x one-off inflation of an unrelated query)
+        root = root or os.environ.get(
+            "SPARK_GRAFT_LAYER_CACHE",
+            os.path.join(os.path.expanduser("~"), ".cache", "spark_graft_layers"),
+        )
+        self.path = os.path.join(root, f"{name}-{self.key}")
+        self._build = build
+
+    def ensure(self) -> str:
+        if not os.path.isdir(self.path):
+            os.makedirs(os.path.dirname(self.path), exist_ok=True)
+            tmp = f"{self.path}.tmp.{os.getpid()}"
+            shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's leftovers
+            self._build(tmp)
+            try:
+                os.rename(tmp, self.path)
+            except OSError:  # lost a concurrent race: the winner's is equal
+                shutil.rmtree(tmp, ignore_errors=True)
+        return self.path
 
 
 def materialized_layers(
@@ -324,82 +377,68 @@ def materialized_layers(
     dataset into PostGIS tables ONCE (core/Importer.java) and every query
     afterwards reads the tables; deriving the layers per query — orders
     scan, WKT synthesis, the precedence-dedup window shuffle — charges
-    that import to every downstream operator.  This materializes the
-    import to parquet under ``cache_root`` (default
-    ``$SPARK_GRAFT_LAYER_CACHE`` or ``/tmp/spark_graft_layers``), keyed
-    by input identity + layer-definition source hash, and returns
+    that import to every downstream operator.  This stores the import
+    as one ``StoredTable`` (under ``cache_root`` when given), keyed by
+    input identity + layer-definition source hash, and returns
     DataFrames reading the stored tables.  Deterministic content, so a
     cache hit can never change any query's output — the same
     amortization contract as the hot-cell memo.
 
-    The write is atomic (temp dir + ``os.rename``), so a concurrent
-    first call in another session either wins the rename or reads the
-    winner's tables.  The ``orders``/``poi_base`` temp views are still
-    registered (lazy) for queries that phrase themselves in SQL.  The
-    returned DataFrames are memoized per (session, cache dir) through
+    The ``orders``/``poi_base`` temp views are still registered (lazy)
+    for queries that phrase themselves in SQL.  The returned DataFrames
+    are memoized per (session, stored path) through
     ``session.session_memo``: repeated calls in one session skip the
     parquet schema-discovery jobs and the view re-registration; each call
     returns a fresh ``dict``.
     """
-    from fagi_gis_spark.operators.dedup_precedence import precedence_dedup
 
-    # default under ~/.cache, not /tmp: this sandbox's /tmp is swept
-    # periodically, and losing the import mid-suite silently charges a
-    # full re-import to whichever query runs next (observed as 2-3x
-    # one-off inflation of an unrelated query's wall time)
-    root = cache_root or os.environ.get(
-        "SPARK_GRAFT_LAYER_CACHE",
-        os.path.join(os.path.expanduser("~"), ".cache", "spark_graft_layers"),
-    )
-    os.makedirs(root, exist_ok=True)
-    base = os.path.join(root, _layers_cache_tag(sf_dir))
+    built = []
+
+    def _write(tmp: str) -> None:
+        from pyspark.sql import functions as F
+
+        from fagi_gis_spark.functions.geo_udfs import u_geo_summary
+        from fagi_gis_spark.operators.dedup_precedence import precedence_dedup
+        from fagi_gis_spark.partitioning import ensure_min_parallelism
+
+        built.append(tmp)
+        L = spark_layers(spark, sf_dir)  # also registers the orders/poi_base views
+        L["poi_a"] = precedence_dedup(L["poi_a_raw"])
+        # ingest-time geometry summary (cx/cy/npts/gtype): the reference
+        # Importer parses each WKT ONCE into typed PostGIS columns at
+        # import; storing the parse here means the whole fusion/scoring
+        # family reads typed columns and never re-parses per query (the
+        # r5 tree re-ran the summary UDF over both layers on every
+        # fuse_* invocation).  Deterministic per-row derivation — the
+        # same amortization contract as the import itself.
+        for k in SUMMARY_LAYER_KEYS:
+            L[k] = (
+                L[k]
+                .select("*", u_geo_summary(F.col("geom_wkt")).alias("__s"))
+                .select(
+                    "*",
+                    F.col("__s.cx").alias("cx"),
+                    F.col("__s.cy").alias("cy"),
+                    F.col("__s.npts").alias("npts"),
+                    F.col("__s.gtype").alias("gtype"),
+                )
+                .drop("__s")
+            )
+        for k in MATERIALIZED_LAYER_KEYS:
+            # write each layer at >= default parallelism: a layer that
+            # derives straight from the (unsplittable, single-row-group)
+            # orders scan would otherwise land as 1-3 files and every
+            # downstream join streams it through 1-3 tasks (guide §2 —
+            # scan parallelism is set at WRITE time for stored layers)
+            ensure_min_parallelism(L[k]).write.mode("overwrite").parquet(
+                os.path.join(tmp, k)
+            )
+
+    stored = StoredTable(_layers_cache_tag(sf_dir), _LAYER_MODULES, _write, cache_root)
 
     def _import() -> dict[str, DataFrame]:
-        if not os.path.isdir(base):
-            from pyspark.sql import functions as F
-
-            from fagi_gis_spark.functions.geo_udfs import u_geo_summary
-
-            L = spark_layers(spark, sf_dir)
-            L["poi_a"] = precedence_dedup(L["poi_a_raw"])
-            # ingest-time geometry summary (cx/cy/npts/gtype): the reference
-            # Importer parses each WKT ONCE into typed PostGIS columns at
-            # import; storing the parse here means the whole fusion/scoring
-            # family reads typed columns and never re-parses per query (the
-            # r5 tree re-ran the summary UDF over both layers on every
-            # fuse_* invocation).  Deterministic per-row derivation — the
-            # same amortization contract as the import itself.
-            for k in SUMMARY_LAYER_KEYS:
-                L[k] = (
-                    L[k]
-                    .select("*", u_geo_summary(F.col("geom_wkt")).alias("__s"))
-                    .select(
-                        "*",
-                        F.col("__s.cx").alias("cx"),
-                        F.col("__s.cy").alias("cy"),
-                        F.col("__s.npts").alias("npts"),
-                        F.col("__s.gtype").alias("gtype"),
-                    )
-                    .drop("__s")
-                )
-            tmp = f"{base}.tmp.{os.getpid()}"
-            from fagi_gis_spark.partitioning import ensure_min_parallelism
-
-            for k in MATERIALIZED_LAYER_KEYS:
-                # write each layer at >= default parallelism: a layer that
-                # derives straight from the (unsplittable, single-row-group)
-                # orders scan would otherwise land as 1-3 files and every
-                # downstream join streams it through 1-3 tasks (guide §2 —
-                # scan parallelism is set at WRITE time for stored layers)
-                ensure_min_parallelism(L[k]).write.mode("overwrite").parquet(
-                    os.path.join(tmp, k)
-                )
-            try:
-                os.rename(tmp, base)
-            except OSError:  # lost a concurrent race: the winner's is equal
-                shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # register the lazy views spark_layers would have provided
+        base = stored.ensure()
+        if not built:  # a hit: register the lazy views spark_layers provides
             spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
                 "orders"
             )
@@ -417,7 +456,7 @@ def materialized_layers(
             out[k] = out[k].select("subject", "lon", "lat", "geom_wkt", "k")
         return out
 
-    return dict(session_memo(spark, ("layers", base), _import))
+    return dict(session_memo(spark, ("layers", stored.path), _import))
 
 
 def oracle_ctes() -> str:

@@ -1585,10 +1585,40 @@ def test_shard_pack_incremental_equals_full_and_groups_without_exchange(spark):
 
     # exchange-free grouping over the stored bucketed features table
     plan = (
-        shard_pack(spark.table("image_shard_idx_cells"), 8192)
+        shard_pack(spark.table(f"{registry._IMAGE_SHARD_IDX}_cells"), 8192)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "FlatMapGroupsInPandas" in plan
     assert "Exchange" not in plan, plan
+
+
+def test_stored_corpus_equals_generator(spark):
+    """The stored image corpus is the generator's 1000-image table row
+    for row, bytes included."""
+    import pandas as pd
+
+    from fagi_gis_spark import registry
+    from fagi_gis_spark.sources.images import generate_images
+
+    def rows(df):
+        return df.toPandas().sort_values("image_id").reset_index(drop=True)
+
+    stored = rows(registry._images(spark))
+    fresh = rows(generate_images(spark, 1000, partitions=8))
+    assert len(stored) == 1000
+    pd.testing.assert_frame_equal(stored, fresh)
+
+
+def test_image_compositions_leave_no_cached_data(spark):
+    """The image compositions read the stored corpus and cache nothing:
+    running them leaves the session's persistent RDDs as they were."""
+    from fagi_gis_spark import registry
+
+    q = registry.queries()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for name in ("image_caption_fusion", "image_clean_corpus", "image_consensus_dedup"):
+        q[name](spark, None).write.format("noop").mode("overwrite").save()
+    assert jsc.getPersistentRDDs().size() == before

@@ -799,6 +799,73 @@ def test_materialized_layers_equal_fresh_derivation(spark, tmp_path):
     assert again["poi_a"].count() == mat["poi_a"].count()
 
 
+def test_stored_table_second_call_launches_no_job(spark, tmp_path):
+    """A stored table is built once: the second ensure() finds the path
+    and launches no Spark job."""
+    import uuid
+
+    from fagi_gis_spark.sources.layers import StoredTable
+
+    builds = []
+
+    def build(d):
+        builds.append(d)
+        spark.range(10).write.parquet(d)
+
+    t = StoredTable("ids", ("fagi_gis_spark.sources.layers",), build, str(tmp_path))
+    assert t.ensure() == t.path and spark.read.parquet(t.path).count() == 10
+    sc = spark.sparkContext
+    group = f"stored-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second ensure")
+    try:
+        assert t.ensure() == t.path
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(builds) == 1
+
+
+def test_stored_table_key_follows_module_source(tmp_path, monkeypatch):
+    """Editing one named module's source re-keys the stored table."""
+    import importlib
+
+    from fagi_gis_spark.sources.layers import StoredTable
+
+    src = tmp_path / "stored_key_probe.py"
+    src.write_text("SCALE = 1\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    importlib.invalidate_caches()
+    mods = ("fagi_gis_spark.sources.layers", "stored_key_probe")
+
+    def key():
+        return StoredTable("t", mods, lambda d: None, str(tmp_path))
+
+    before = key()
+    assert key().path == before.path
+    src.write_text("SCALE = 2\n")
+    after = key()
+    assert after.key != before.key and after.path != before.path
+
+
+def test_stored_table_losing_writer_removes_its_copy(tmp_path):
+    """A writer whose rename loses to a concurrent winner deletes its
+    temp directory and returns the winner's path."""
+    import os
+
+    from fagi_gis_spark.sources.layers import StoredTable
+
+    def build(d):
+        os.makedirs(d)
+        open(os.path.join(d, "mine"), "w").close()
+        os.makedirs(t.path)  # a concurrent writer renames first
+        open(os.path.join(t.path, "winner"), "w").close()
+
+    t = StoredTable("race", ("fagi_gis_spark.sources.layers",), build, str(tmp_path))
+    assert t.ensure() == t.path
+    assert os.listdir(t.path) == ["winner"]
+    assert os.listdir(tmp_path) == [os.path.basename(t.path)]
+
+
 def _fuse_cases():
     from fagi_gis_spark.operators.fusion import TRANSFORMATIONS, FusionParams
 
