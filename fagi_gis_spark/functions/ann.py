@@ -3,9 +3,9 @@
 Exact (integer-quantized, so every path and the DuckDB oracle agree
 bit-for-bit): ``cosine_topk`` ships the reference matrix to workers as a
 side input (``fagi_gis_spark.sideinput``) and scans the queries once,
-switching to a block-partitioned cogroup matmul above
+switching to the blocked cogroup kernel above
 ``_ANN_BROADCAST_MAX_REFS``; ``cosine_near_dup_pairs(blocking="exact")``
-thresholds the same cogroup kernel.
+thresholds the same blocked matmul.
 
 Approximate (candidates first, exact re-rank after): ``lsh_topk`` and
 ``cosine_near_dup_pairs`` bucket-join random-hyperplane signatures on
@@ -13,9 +13,20 @@ ids only (shuffle bounded by bucket width, no cross join); ``ivf_topk``
 probes KMeans cells; ``pq_topk`` scores product-quantized codes by ADC.
 Their small bounded arrays (centroids, codebooks) ride in the UDF
 closure.
+
+Every path scores with one rule, written once here: round to BIGINT at
+``quantize``, then ``dot / sqrt(n_a * n_b)``.  ``_quantized`` (JVM) and
+``_qmatrix`` (numpy) quantize; ``_cos`` and its numpy twin
+``_cos_matrix`` score; ``_with_cos`` re-attaches vectors to id pairs;
+``_topk`` keeps each query's (score desc, neighbor id asc) top-k;
+``_blocked`` is the one block-partitioned cogroup harness;
+``_auto_bits`` and ``_probe_bucket`` fix the LSH layout and its
+hamming-1 multiprobe.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -24,24 +35,75 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
-    q = F.transform(F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long"))
-    return df.select(F.col(id_col).alias("vid"), q.alias("v"))
-
-
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def _round_half_away(x: np.ndarray) -> np.ndarray:
-    """Match Spark round()/DuckDB round(): ties away from zero (np.rint
-    would round ties to even)."""
-    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
+def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int, *keep) -> DataFrame:
+    """(vid, v, *keep, n): the vector rounded to BIGINT at ``scale`` and
+    its exact integer squared norm."""
+    v = F.transform(F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long"))
+    return df.select(F.col(id_col).alias("vid"), v.alias("v"), *keep).withColumn(
+        "n", _dot(F.col("v"), F.col("v"))
+    )
+
+
+def _cos(va: str, na: str, vb: str, nb: str):
+    """Exact cosine of two quantized vectors given their integer norms."""
+    return _dot(F.col(va), F.col(vb)).cast("double") / F.sqrt(
+        F.col(na).cast("double") * F.col(nb).cast("double")
+    )
+
+
+def _with_cos(pairs: DataFrame, a: str, b: str, vecs_a: DataFrame, vecs_b: DataFrame) -> DataFrame:
+    """Re-attach ``_quantized`` vectors to the id pairs in columns ``a``
+    and ``b`` and add their ``cos_sim``."""
+    va = vecs_a.select(F.col("vid").alias(a), F.col("v").alias("__va"), F.col("n").alias("__na"))
+    vb = vecs_b.select(F.col("vid").alias(b), F.col("v").alias("__vb"), F.col("n").alias("__nb"))
+    return (
+        pairs.join(va, a)
+        .join(vb, b)
+        .withColumn("cos_sim", _cos("__va", "__na", "__vb", "__nb"))
+        .drop("__va", "__na", "__vb", "__nb")
+    )
+
+
+def _topk(df: DataFrame, score: str, k: int) -> DataFrame:
+    """Each vec_id's top-k rows by (score desc, neighbor id asc)."""
+    w = Window.partitionBy("vec_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("vec_id", "neighbor_id", score, "rank")
+    )
+
+
+def _matrix(col: "pd.Series") -> np.ndarray:
+    return np.vstack([np.asarray(v, dtype=np.float64) for v in col])
+
+
+def _unit_rows(col: "pd.Series") -> np.ndarray:
+    """L2-normalized float rows (zero vectors stay zero)."""
+    M = _matrix(col)
+    nrm = np.linalg.norm(M, axis=1, keepdims=True)
+    return M / np.where(nrm == 0, 1.0, nrm)
 
 
 def _qmatrix(col: "pd.Series", quantize: int) -> np.ndarray:
-    return _round_half_away(
-        np.vstack([np.asarray(v, dtype=np.float64) for v in col]) * quantize
+    """numpy twin of ``_quantized``.  Rounds ties away from zero, like
+    Spark round() and DuckDB round() (np.rint would round them to even)."""
+    x = _matrix(col) * quantize
+    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
+
+
+def _cos_matrix(Q: np.ndarray, R: np.ndarray, rn: np.ndarray | None = None) -> np.ndarray:
+    """numpy twin of ``_cos``: (queries x refs) cosines of quantized
+    int64 matrices; ``rn`` passes precomputed reference norms."""
+    qn = (Q * Q).sum(axis=1)
+    if rn is None:
+        rn = (R * R).sum(axis=1)
+    return (Q @ R.T).astype(np.float64) / np.sqrt(
+        qn[:, None].astype(np.float64) * rn[None, :].astype(np.float64)
     )
 
 
@@ -49,65 +111,83 @@ def _rows_topk(
     qids: np.ndarray, scores: np.ndarray, rids: np.ndarray, k: int, score_name: str
 ) -> pd.DataFrame:
     """Tie-safe per-row top-k of a (queries x refs) score matrix (score
-    desc, neighbor id asc), self pairs excluded.  Shared by the exact
-    blocked kernel and the PQ/ADC kernel.
+    desc, neighbor id asc), self pairs excluded; both sides non-empty.
 
     Fully vectorized (guide §4.2 — no per-row Python loop): refs are
     pre-sorted by id ascending ONCE, then one STABLE argsort of the
     negated score matrix along axis=1 yields exactly (score desc,
     neighbor id asc) — stability makes equal scores keep the ascending-id
-    column order, which is the identical tie rule the previous per-row
-    lexsort implemented.  Self pairs are masked to -inf (they sort last
-    and are dropped by the validity mask)."""
-    n_q, n_ref = scores.shape
-    if n_q == 0 or n_ref == 0:
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                score_name: pd.Series([], dtype="float64"),
-            }
-        )
+    column order.  Self pairs are masked to -inf (they sort last and are
+    dropped by the validity mask)."""
     order = np.argsort(rids, kind="stable")
     rids_s = rids[order]
     sc = scores[:, order]  # column copy — safe to mutate
     sc[rids_s[None, :] == qids[:, None]] = -np.inf  # exclude self
-    kk = min(k, n_ref)
+    kk = min(k, scores.shape[1])
     idx = np.argsort(-sc, axis=1, kind="stable")[:, :kk]
     top = np.take_along_axis(sc, idx, axis=1)
     valid = (top > -np.inf).ravel()
     return pd.DataFrame(
         {
-            "vec_id": pd.Series(
-                np.repeat(qids, kk)[valid], dtype="int64"
-            ),
+            "vec_id": pd.Series(np.repeat(qids, kk)[valid], dtype="int64"),
             "neighbor_id": pd.Series(rids_s[idx].ravel()[valid], dtype="int64"),
             score_name: pd.Series(top.ravel()[valid], dtype="float64"),
         }
     )
 
 
-def _block_topk(
-    qids: np.ndarray, Q: np.ndarray, rids: np.ndarray, R: np.ndarray, k: int
-) -> pd.DataFrame:
-    """Exact tie-safe per-block top-k (cos desc, neighbor id asc), self
-    pairs excluded. Shared by the blocked top-k kernel."""
-    qn = (Q * Q).sum(axis=1)
-    rn = (R * R).sum(axis=1)
-    cos = (Q @ R.T).astype(np.float64) / np.sqrt(
-        qn[:, None].astype(np.float64) * rn[None, :].astype(np.float64)
+def _blocked(queries: DataFrame, refs: DataFrame, n_blocks: int, kernel, schema: str) -> DataFrame:
+    """Block-partitioned cogroup: ``refs`` (vid, ...) hash-split into
+    ``n_blocks`` row blocks by crc32 of the id, ``queries`` (qid, qv)
+    replicated to every block, and ``kernel(queries_pdf, refs_pdf)``
+    run once per (query batch, block) that has rows on both sides.
+    Per-task memory is bounded by |block| x dim; nothing is collected to
+    the driver."""
+    fields = (f.split() for f in schema.split(","))
+    empty = pd.DataFrame({n: pd.Series([], dtype="float64" if t == "double" else "int64") for n, t in fields})
+
+    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return empty
+        return kernel(left, right)
+
+    q = queries.withColumn("block", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
+    r = refs.withColumn(
+        "block", F.pmod(F.crc32(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int")
     )
-    return _rows_topk(qids, cos, rids, k, "cos_sim")
+    return q.groupBy("block").cogroup(r.groupBy("block")).applyInPandas(run, schema=schema)
 
 
-#: side-input reference cutoff for the exact top-k: reference matrices
-#: up to this many rows ship once to every worker, through
-#: fagi_gis_spark.sideinput, as one quantized int64 numpy matrix (500k x
-#: 64 dims x 8 B = 256 MB).  Below it the query side is
-#: scanned ONCE with the whole reference in task memory — no 32x query
-#: replication, no cogroup shuffle, no merge window; above it the blocked
-#: cogroup path keeps per-task memory bounded by |block| x dim.  The same
-#: physical-strategy switch as broadcast-vs-shuffle joins (guide §3.1) —
+def _auto_bits(bits_per_table: int | str, emb: DataFrame) -> int:
+    """Resolve ``bits_per_table="auto"``: clamp(ceil(log2(n/24)), 4, 16)
+    from one count, which holds per-bucket width roughly constant as the
+    corpus grows."""
+    if bits_per_table != "auto":
+        return bits_per_table
+    return min(16, max(4, math.ceil(math.log2(max(emb.count(), 2) / 24.0))))
+
+
+def _probe_bucket(bits: int, multiprobe: int):
+    """The bucket column a probe side joins on: its own bucket and, with
+    ``multiprobe``, the ``bits`` buckets at hamming distance 1.  The key
+    is table * 2^bits + sig, so flipping signature bit i is a XOR on the
+    packed key (the table prefix is untouched)."""
+    if not multiprobe:
+        return F.col("bucket")
+    return F.explode(
+        F.array(
+            F.col("bucket"),
+            *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(bits)],
+        )
+    )
+
+
+#: side-input reference cutoff for the exact top-k: up to this many rows
+#: the reference ships once to every worker (fagi_gis_spark.sideinput) as
+#: one quantized int64 matrix (500k x 64 dims x 8 B = 256 MB) and the
+#: query side is scanned ONCE — no 32x query replication, no cogroup
+#: shuffle, no merge window; above it ``_blocked`` bounds per-task memory
+#: by |block| x dim.  The broadcast-vs-shuffle join switch (guide §3.1):
 #: both paths compute identical integer dot products and tie order.
 _ANN_BROADCAST_MAX_REFS = 500_000
 
@@ -125,10 +205,7 @@ def _cosine_topk_broadcast(
     shuffles/windows."""
     from fagi_gis_spark.sideinput import read_arrays, write_arrays
 
-    ref_pdf = (
-        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-        .toPandas()
-    )
+    ref_pdf = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).toPandas()
     rids = ref_pdf["vid"].to_numpy("int64")
     R = _qmatrix(ref_pdf["v"], quantize) if len(ref_pdf) else np.empty((0, 0), np.int64)
     src = queries if queries is not None else emb
@@ -150,15 +227,8 @@ def _cosine_topk_broadcast(
         for pdf in batches:
             for s in range(0, len(pdf), q_slice):
                 part = pdf.iloc[s : s + q_slice]
-                if not len(part):
-                    continue
-                qids = part["qid"].to_numpy("int64")
-                Q = _qmatrix(part["qv"], quantize)
-                qn = (Q * Q).sum(axis=1)
-                cos = (Q @ R_b.T).astype(np.float64) / np.sqrt(
-                    qn[:, None].astype(np.float64) * rn[None, :].astype(np.float64)
-                )
-                out = _rows_topk(qids, cos, rids_b, k, "cos_sim")
+                cos = _cos_matrix(_qmatrix(part["qv"], quantize), R_b, rn)
+                out = _rows_topk(part["qid"].to_numpy("int64"), cos, rids_b, k, "cos_sim")
                 # _rows_topk emits per query in (cos desc, neighbor id
                 # asc) order — identical to the merge window's rank rule
                 out["rank"] = out.groupby("vec_id").cumcount() + 1
@@ -185,58 +255,32 @@ def cosine_topk(
 
     Up to ``_ANN_BROADCAST_MAX_REFS`` reference rows, the quantized
     reference matrix ships to workers as a side input and the query side
-    is scanned once (``_cosine_topk_broadcast``).  Above it: a
-    block-partitioned exact matmul — the reference set is hash-split
-    into ``n_blocks`` row blocks, queries replicate to every block, a
-    cogrouped Arrow kernel does one integer matmul + tie-safe per-block
+    is scanned once (``_cosine_topk_broadcast``).  Above it: the
+    ``_blocked`` exact matmul — one integer matmul + tie-safe per-block
     top-k per (query batch, block), and a final window merges the global
     top-k. NOTHING is collected to the driver, so "exact" survives
     reference sets far beyond one machine's memory: per-task working set
     is |block| x dim, and n_blocks scales with the data. (Per-block
     top-k is globally sufficient: any global top-k neighbor ranks within
     top-k of its own block under the same (cos desc, id asc) order.)"""
-    try:
-        n_ref = emb.count()
-    except Exception:  # pragma: no cover — unplannable frame
-        n_ref = None
-    if n_ref is not None and n_ref <= _ANN_BROADCAST_MAX_REFS:
+    if emb.count() <= _ANN_BROADCAST_MAX_REFS:
         return _cosine_topk_broadcast(emb, k, id_col, vec_col, quantize, queries)
-    ref = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).withColumn(
-        "block", F.pmod(F.crc32(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int")
-    )
     src = queries if queries is not None else emb
-    q = src.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")).withColumn(
-        "block", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    )
 
-    def blk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cos_sim": pd.Series([], dtype="float64"),
-                }
-            )
-        return _block_topk(
-            left["qid"].to_numpy("int64"),
-            _qmatrix(left["qv"], quantize),
-            right["vid"].to_numpy("int64"),
-            _qmatrix(right["v"], quantize),
-            k,
+    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        cos = _cos_matrix(_qmatrix(left["qv"], quantize), _qmatrix(right["v"], quantize))
+        return _rows_topk(
+            left["qid"].to_numpy("int64"), cos, right["vid"].to_numpy("int64"), k, "cos_sim"
         )
 
-    per_block = (
-        q.groupBy("block")
-        .cogroup(ref.groupBy("block"))
-        .applyInPandas(blk, schema="vec_id long, neighbor_id long, cos_sim double")
+    per_block = _blocked(
+        src.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
+        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")),
+        n_blocks,
+        kernel,
+        "vec_id long, neighbor_id long, cos_sim double",
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        per_block.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _topk(per_block, "cos_sim", k)
 
 
 def ivf_topk(
@@ -261,39 +305,33 @@ def ivf_topk(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     ).withColumn("features", array_to_vector(F.col("embedding")))
     km = KMeans(k=n_cells, seed=seed, maxIter=20).fit(vec)
-    centers = np.vstack([np.asarray(c) for c in km.clusterCenters()])
+    centers = _matrix(km.clusterCenters())
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def u_probe_cells(v: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
+        m = _matrix(v)
         d = ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
         order = np.argsort(d, axis=1)[:, :n_probe]
         return pd.Series(order.astype(np.int32).tolist())
 
-    base = vec.withColumn(
-        "v", F.transform("embedding", lambda x: F.round(x.cast("double") * quantize).cast("long"))
-    ).withColumn("n", _dot(F.col("v"), F.col("v")))
+    base = _quantized(vec, "vec_id", "embedding", quantize, "embedding", "features")
     build = km.transform(base).select(
         F.col("prediction").alias("cell"),
-        F.col("vec_id").alias("neighbor_id"),
+        F.col("vid").alias("neighbor_id"),
         F.col("v").alias("vb"),
         F.col("n").alias("nb"),
     )
     probe = base.select(
-        "vec_id", F.col("v").alias("va"), F.col("n").alias("na"),
+        F.col("vid").alias("vec_id"), F.col("v").alias("va"), F.col("n").alias("na"),
         F.explode(u_probe_cells(F.col("embedding"))).alias("cell"),
     )
     pairs = probe.join(build, "cell").filter(F.col("vec_id") != F.col("neighbor_id"))
-    cos = _dot(F.col("va"), F.col("vb")).cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("cos_sim", cos)
-        .dropDuplicates(["vec_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos_sim", "rank")
+    return _topk(
+        pairs.withColumn("cos_sim", _cos("va", "na", "vb", "nb")).dropDuplicates(
+            ["vec_id", "neighbor_id"]
+        ),
+        "cos_sim",
+        k,
     )
 
 
@@ -351,7 +389,7 @@ def pq_topk(
     the diagonal-EM fit); every vector encodes DISTRIBUTED to ``m``
     uint8 codes (dim=64 float32 = 256 B -> 8 B, 32x), and queries score
     candidates by ADC (per-query distance tables + code lookups) inside
-    the same blocked cogroup harness as the exact path — the CODES are
+    the same ``_blocked`` harness as the exact path — the CODES are
     the only per-row payload shuffled, so the candidate scan moves 32x
     less data than exact at the cost of quantization error (recall
     gate in pytest).  Returns (vec_id, neighbor_id, pq_score, rank);
@@ -375,9 +413,7 @@ def pq_topk(
     samp = base.filter(
         F.pmod(F.xxhash64(F.col("vid")), F.lit(1_000_000)) < ppm
     ).toPandas()
-    X = np.vstack([np.asarray(v, dtype=np.float64) for v in samp["v"]])
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    X = X / np.where(norms == 0, 1.0, norms)
+    X = _unit_rows(samp["v"])
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -387,9 +423,7 @@ def pq_topk(
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def u_encode(v: pd.Series) -> pd.Series:
-        M = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        M = M / np.where(nrm == 0, 1.0, nrm)
+        M = _unit_rows(v)
         codes = np.empty((len(M), m), dtype=np.int32)
         for j in range(m):
             Mj = M[:, j * sub : (j + 1) * sub]
@@ -399,29 +433,10 @@ def pq_topk(
             ).argmin(axis=1)
         return pd.Series(codes.tolist())
 
-    ref = base.select(
-        "vid",
-        u_encode(F.col("v")).alias("codes"),
-        F.pmod(F.crc32(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int").alias("block"),
-    )
-    q = base.select(F.col("vid").alias("qid"), F.col("v").alias("qv")).withColumn(
-        "block", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    )
-
     k_adc = max(k, rerank)
 
-    def blk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "pq_score": pd.Series([], dtype="float64"),
-                }
-            )
-        Q = np.vstack([np.asarray(x, dtype=np.float64) for x in left["qv"]])
-        nrm = np.linalg.norm(Q, axis=1, keepdims=True)
-        Q = Q / np.where(nrm == 0, 1.0, nrm)
+    def adc(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        Q = _unit_rows(left["qv"])
         codes = np.vstack([np.asarray(c, dtype=np.int32) for c in right["codes"]])
         # ADC: per-subspace inner-product tables (B_q x n_centroids),
         # then one table lookup per (query, ref, subspace)
@@ -433,39 +448,24 @@ def pq_topk(
             left["qid"].to_numpy("int64"), scores, right["vid"].to_numpy("int64"), k_adc, "pq_score"
         )
 
-    per_block = (
-        q.groupBy("block")
-        .cogroup(ref.groupBy("block"))
-        .applyInPandas(blk, schema="vec_id long, neighbor_id long, pq_score double")
+    per_block = _blocked(
+        base.select(F.col("vid").alias("qid"), F.col("v").alias("qv")),
+        base.select("vid", u_encode(F.col("v")).alias("codes")),
+        n_blocks,
+        adc,
+        "vec_id long, neighbor_id long, pq_score double",
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id").asc())
-    adc = (
-        per_block.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_adc)
-        .select("vec_id", "neighbor_id", "pq_score", "rank")
-    )
+    shortlist = _topk(per_block, "pq_score", k_adc)
     if not rerank:
-        return adc
+        return shortlist
     # ADC+R: exact integer-cosine re-rank of the shortlist (ids only up
     # to here; vectors re-attach now, so the exact kernel touches r
     # candidates per query instead of n)
-    qv = _quantized(base, "vid", "v", quantize).withColumn("n", _dot(F.col("v"), F.col("v")))
-    va = qv.select(F.col("vid").alias("vec_id"), F.col("v").alias("va"), F.col("n").alias("na"))
-    vb = qv.select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    cos = _dot(F.col("va"), F.col("vb")).cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        adc.drop("rank", "pq_score")
-        .join(va, "vec_id")
-        .join(vb, "neighbor_id")
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos_sim", "rank")
+    qv = _quantized(base, "vid", "v", quantize)
+    return _topk(
+        _with_cos(shortlist.drop("rank", "pq_score"), "vec_id", "neighbor_id", qv, qv),
+        "cos_sim",
+        k,
     )
 
 
@@ -502,16 +502,15 @@ def cosine_near_dup_pairs(
     verify).
 
     ``blocking="exact"`` (the oracle/baseline path): exact quantized
-    cosine via the same block-partitioned cogroup matmul as
-    ``cosine_topk`` — the table is hash-split into ``n_blocks`` row
-    blocks, rows replicate to every block as queries, and each (query
-    batch, block) task emits only (id_a < id_b, cos_sim) at or above
-    the threshold.  Nothing is collected to the driver and nothing near
-    n^2 ever leaves a kernel; each pair lands in exactly one block (the
-    one owning id_b), so no dedup pass is needed.  Oracle-checkable
-    (integer-exact dot products), complete by construction — and
-    inherently O(n^2) FLOPs, which is why it is the small-n baseline,
-    not the scale default."""
+    cosine via the same ``_blocked`` matmul as ``cosine_topk`` — rows
+    replicate to every block as queries, and each (query batch, block)
+    task emits only (id_a < id_b, cos_sim) at or above the threshold.
+    Nothing is collected to the driver and nothing near n^2 ever leaves
+    a kernel; each pair lands in exactly one block (the one owning
+    id_b), so no dedup pass is needed.  Oracle-checkable (integer-exact
+    dot products), complete by construction — and inherently O(n^2)
+    FLOPs, which is why it is the small-n baseline, not the scale
+    default."""
     if blocking == "lsh":
         return _cosine_near_dup_lsh(
             emb, threshold, quantize, id_col, vec_col,
@@ -519,34 +518,12 @@ def cosine_near_dup_pairs(
         )
     if blocking != "exact":
         raise ValueError(f"blocking must be 'lsh' or 'exact', got {blocking!r}")
-    ref = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).withColumn(
-        "block", F.pmod(F.crc32(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int")
-    )
-    q = emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")).withColumn(
-        "block", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    )
 
-    def blk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "cos_sim": pd.Series([], dtype="float64"),
-            }
-        )
-        if len(left) == 0 or len(right) == 0:
-            return empty
+    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         qids = left["qid"].to_numpy("int64")
         rids = right["vid"].to_numpy("int64")
-        Q = _qmatrix(left["qv"], quantize)
-        R = _qmatrix(right["v"], quantize)
-        qn = (Q * Q).sum(axis=1)
-        rn = (R * R).sum(axis=1)
-        cos = (Q @ R.T).astype(np.float64) / np.sqrt(
-            qn[:, None].astype(np.float64) * rn[None, :].astype(np.float64)
-        )
-        hit = (cos >= threshold) & (qids[:, None] < rids[None, :])
-        qi, ri = np.nonzero(hit)
+        cos = _cos_matrix(_qmatrix(left["qv"], quantize), _qmatrix(right["v"], quantize))
+        qi, ri = np.nonzero((cos >= threshold) & (qids[:, None] < rids[None, :]))
         return pd.DataFrame(
             {
                 "id_a": pd.Series(qids[qi], dtype="int64"),
@@ -555,10 +532,12 @@ def cosine_near_dup_pairs(
             }
         )
 
-    return (
-        q.groupBy("block")
-        .cogroup(ref.groupBy("block"))
-        .applyInPandas(blk, schema="id_a long, id_b long, cos_sim double")
+    return _blocked(
+        emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
+        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")),
+        n_blocks,
+        kernel,
+        "id_a long, id_b long, cos_sim double",
     )
 
 
@@ -578,52 +557,21 @@ def _cosine_near_dup_lsh(
     The bucket join carries IDS ONLY; quantized vectors re-attach after
     the undirected pair dedup, and the verify cosine is the identical
     integer-dot / sqrt formula the exact path computes."""
-    if bits_per_table == "auto":
-        import math
-
-        n_rows = emb.count()
-        bits_per_table = min(16, max(4, math.ceil(math.log2(max(n_rows, 2) / 24.0))))
-    base = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    bits = _auto_bits(bits_per_table, emb)
     sig = hyperplane_signatures(
-        base, n_tables=n_tables, bits_per_table=bits_per_table, dim=dim, seed=seed
+        emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
+        id_col=id_col, vec_col=vec_col, seed=seed,
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(bits_per_table)
-            ],
-        )
-        l = sig.select(F.explode(probes).alias("bucket"), F.col("vec_id"))
-    else:
-        l = sig.select("bucket", "vec_id")
-    r = sig.select("bucket", F.col("vec_id").alias("id_b"))
     cand = (
-        l.join(r, "bucket")
-        .filter(F.col("vec_id") < F.col("id_b"))
-        .select(F.col("vec_id").alias("id_a"), "id_b")
+        sig.select(_probe_bucket(bits, multiprobe).alias("bucket"), F.col("vec_id").alias("id_a"))
+        .join(sig.select("bucket", F.col("vec_id").alias("id_b")), "bucket")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # same _quantized helper as the exact path: the emitted cos_sim must
-    # stay bit-identical between blockings, so ONE quantization rule
-    vecs = (
-        _quantized(base, "vec_id", "embedding", quantize)
-        .select(F.col("vid").alias("__vid"), F.col("v").alias("__v"))
-        .withColumn("__n", _dot(F.col("__v"), F.col("__v")))
-    )
-    cand = cand.join(
-        vecs.select(F.col("__vid").alias("id_a"), F.col("__v").alias("va"), F.col("__n").alias("na")),
-        "id_a",
-    ).join(
-        vecs.select(F.col("__vid").alias("id_b"), F.col("__v").alias("vb"), F.col("__n").alias("nb")),
-        "id_b",
-    )
-    cos = _dot(F.col("va"), F.col("vb")).cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
+    vecs = _quantized(emb, id_col, vec_col, quantize)
     return (
-        cand.withColumn("cos_sim", cos)
+        _with_cos(cand, "id_a", "id_b", vecs, vecs)
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -648,7 +596,7 @@ def hyperplane_signatures(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def u_sigs(vec: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vec])  # (n, dim)
+        m = _matrix(vec)  # (n, dim)
         out = np.empty((m.shape[0], planes.shape[0]), dtype=np.int64)
         for t in range(planes.shape[0]):
             bits = (m @ planes[t].T) > 0  # (n, bits)
@@ -695,70 +643,28 @@ def lsh_topk(
     from one planning count (the AQE-statistics analog, like hex
     auto-res) — candidate volume then scales ~linearly in n instead of
     quadratically, which is the 100x scale path.  Measured honestly at
-    the test scales, though: the blocked brute-force matmul
-    (``cosine_topk``) still wins sf0.1 (n=2000: 2.0s exact vs 7.7s
-    LSH at recall 0.96) — a few megabytes of integer matmul beat any
-    shuffle-join candidate machinery; LSH's crossover sits where the
-    n^2 pair volume stops fitting per-task working sets (n in the
-    millions), exactly where brute force stops being runnable.  So LSH
-    is the *scale escape hatch*, not the small-n fast path — which is
-    why the headline bench keeps ``ann_cosine_topk`` and this stays
-    recall-gated in pytest.  ``multiprobe=0`` restores single-probe."""
-    if bits_per_table == "auto":
-        import math
-
-        n_rows = emb.count()
-        bits_per_table = min(16, max(4, math.ceil(math.log2(max(n_rows, 2) / 24.0))))
-    sig = hyperplane_signatures(emb, n_tables=n_tables, bits_per_table=bits_per_table, dim=dim)
-
+    the test scales, though: exact ``cosine_topk`` still wins sf0.1
+    (n=2000: 2.0s exact vs 7.7s LSH at recall 0.96); LSH's crossover
+    sits where the n^2 pair volume stops fitting per-task working sets
+    (n in the millions).  So LSH is the *scale escape hatch*, not the
+    small-n fast path — the headline bench keeps ``ann_cosine_topk``
+    and this stays recall-gated in pytest.  ``multiprobe=0`` restores
+    single-probe."""
+    bits = _auto_bits(bits_per_table, emb)
+    sig = hyperplane_signatures(emb, n_tables=n_tables, bits_per_table=bits, dim=dim)
     # candidate generation carries IDS ONLY — the dim-length quantized
     # vectors join back after the pair dedup (carrying 64-long arrays
     # through the exploded bucket join was the dominant cost: measured
     # 39s -> ~8s at sf0.1)
-    if multiprobe:
-        # bucket = table * 2^bits + sig: flipping signature bit i is a
-        # XOR on the packed key (the table prefix is untouched)
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(bits_per_table)
-            ],
-        )
-        l = sig.select(F.explode(probes).alias("bucket"), F.col("vec_id"))
-    else:
-        l = sig.select("bucket", "vec_id")
-    r = sig.select("bucket", F.col("vec_id").alias("neighbor_id"))
     pairs = (
-        l.join(r, "bucket")
+        sig.select(_probe_bucket(bits, multiprobe).alias("bucket"), "vec_id")
+        .join(sig.select("bucket", F.col("vec_id").alias("neighbor_id")), "bucket")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
         .dropDuplicates(["vec_id", "neighbor_id"])
     )
-    vecs = emb.select(
-        F.col("vec_id").alias("__vid"),
-        F.transform("embedding", lambda x: F.round(x.cast("double") * quantize).cast("long")).alias("__v"),
-    ).withColumn("__n", _dot(F.col("__v"), F.col("__v")))
-    pairs = (
-        pairs.join(
-            vecs.select(F.col("__vid").alias("vec_id"), F.col("__v").alias("va"), F.col("__n").alias("na")),
-            "vec_id",
-        )
-        .join(
-            vecs.select(F.col("__vid").alias("neighbor_id"), F.col("__v").alias("vb"), F.col("__n").alias("nb")),
-            "neighbor_id",
-        )
-    )
-    cos = _dot(F.col("va"), F.col("vb")).cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos_sim", "rank")
-    )
+    vecs = _quantized(emb, "vec_id", "embedding", quantize)
+    return _topk(_with_cos(pairs, "vec_id", "neighbor_id", vecs, vecs), "cos_sim", k)
 
 
 def build_cosine_index(
@@ -799,15 +705,11 @@ def build_cosine_index(
             f"index {table} is partial (buckets without meta) — drop "
             f"{table}_buckets/{table}_vecs and rebuild"
         )
-    if bits_per_table == "auto":
-        import math
-
-        n_rows = emb.count()
-        bits_per_table = min(16, max(4, math.ceil(math.log2(max(n_rows, 2) / 24.0))))
-    base = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    bits = _auto_bits(bits_per_table, emb)
     if not have["buckets"]:
         sig = hyperplane_signatures(
-            base, n_tables=n_tables, bits_per_table=bits_per_table, dim=dim, seed=seed
+            emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
+            id_col=id_col, vec_col=vec_col, seed=seed,
         )
         (
             sig.select("bucket", "vec_id")
@@ -817,7 +719,7 @@ def build_cosine_index(
         )
     if not have["vecs"]:
         (
-            _quantized(base, "vec_id", "embedding", quantize)
+            _quantized(emb, id_col, vec_col, quantize)
             .select(F.col("vid").alias("vec_id"), F.col("v").alias("qvec"))
             .write.bucketBy(_INDEX_BUCKETS, "vec_id")
             .sortBy("vec_id")
@@ -828,7 +730,7 @@ def build_cosine_index(
         f"{table}_meta",
         {
             "n_tables": n_tables,
-            "bits_per_table": int(bits_per_table),
+            "bits_per_table": int(bits),
             "dim": dim,
             "quantize": quantize,
             "seed": seed,
@@ -874,23 +776,16 @@ def incremental_cosine_pairs(
         seed=seed,
     ).withColumn("pair_type", F.lit("new_new"))
 
-    base = new_emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     sig = hyperplane_signatures(
-        base, n_tables=n_tables, bits_per_table=bits, dim=dim, seed=seed
+        new_emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
+        id_col=id_col, vec_col=vec_col, seed=seed,
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(bits)],
-        )
-        l = sig.select(F.explode(probes).alias("bucket"), F.col("vec_id").alias("id_n"))
-    else:
-        l = sig.select("bucket", F.col("vec_id").alias("id_n"))
     corpus = spark.table(f"{table}_buckets").select(
         "bucket", F.col("vec_id").alias("id_c")
     )
     cand = (
-        l.join(corpus, "bucket")
+        sig.select(_probe_bucket(bits, multiprobe).alias("bucket"), F.col("vec_id").alias("id_n"))
+        .join(corpus, "bucket")
         # a retried batch whose ids already folded into the index must
         # not emit self-pairs
         .filter(F.col("id_n") != F.col("id_c"))
@@ -911,22 +806,13 @@ def incremental_cosine_pairs(
         )
         .select("id_n", "id_c")
     )
-    new_vecs = (
-        _quantized(base, "vec_id", "embedding", quantize)
-        .select(F.col("vid").alias("id_n"), F.col("v").alias("vn"))
-        .withColumn("nn2", _dot(F.col("vn"), F.col("vn")))
-    )
     corpus_vecs = (
         spark.table(f"{table}_vecs")
-        .select(F.col("vec_id").alias("id_c"), F.col("qvec").alias("vc"))
-        .withColumn("nc2", _dot(F.col("vc"), F.col("vc")))
-    )
-    cand = cand.join(new_vecs, "id_n").join(corpus_vecs, "id_c")
-    cos = _dot(F.col("vn"), F.col("vc")).cast("double") / F.sqrt(
-        F.col("nn2").cast("double") * F.col("nc2").cast("double")
+        .select(F.col("vec_id").alias("vid"), F.col("qvec").alias("v"))
+        .withColumn("n", _dot(F.col("v"), F.col("v")))
     )
     nc = (
-        cand.withColumn("cos_sim", cos)
+        _with_cos(cand, "id_n", "id_c", _quantized(new_emb, id_col, vec_col, quantize), corpus_vecs)
         .filter(F.col("cos_sim") >= F.lit(threshold))
         .select(
             F.least("id_n", "id_c").alias("id_a"),

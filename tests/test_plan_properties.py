@@ -15,9 +15,13 @@ def test_exact_ann_strategy_switch(spark, monkeypatch):
     under the broadcast cutoff the reference matrix ships to tasks and
     the query side is scanned once (MapInPandas, no cogroup, no
     exchange); above it the block-partitioned cogroup kernel bounds
-    per-task memory.  Neither path collects results to the driver."""
+    per-task memory.  Neither path collects results to the driver, and
+    both return identical frames."""
+    import pandas as pd
+
     from fagi_gis_spark.functions import ann
     from fagi_gis_spark.registry import queries
+    from tests.conftest import normalize
 
     plan = _plan(queries()["ann_cosine_topk"](spark, SF))
     assert "MapInPandas" in plan  # broadcast-reference kernel
@@ -27,9 +31,16 @@ def test_exact_ann_strategy_switch(spark, monkeypatch):
     assert "hashpartitioning" not in plan
     assert "Window" not in plan
 
+    side = queries()["ann_cosine_topk"](spark, SF).toPandas()
     monkeypatch.setattr(ann, "_ANN_BROADCAST_MAX_REFS", 0)
-    blocked = _plan(queries()["ann_cosine_topk"](spark, SF))
+    blocked_df = queries()["ann_cosine_topk"](spark, SF)
+    blocked = _plan(blocked_df)
     assert "FlatMapCoGroupsInPandas" in blocked  # block-partitioned kernel
+    # both strategies emit the same rows, scores and ranks, bit for bit
+    pd.testing.assert_frame_equal(
+        normalize(side), normalize(blocked_df.toPandas()), check_exact=True
+    )
+    assert len(side) > 0
 
     near = _plan(queries()["dedup_embedding_cosine"](spark, SF))
     assert "FlatMapCoGroupsInPandas" in near

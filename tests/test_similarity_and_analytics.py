@@ -113,6 +113,19 @@ def test_simhash_hamming(spark):
     assert (0, 2) not in pairs
 
 
+def _assert_exact_scores(exact, approx):
+    """Every (vec_id, neighbor_id) pair an approximate path shares with
+    ``cosine_topk`` carries a bit-identical cos_sim: the re-rank is the
+    exact quantized cosine, not a second copy of it."""
+    ex_score = {
+        (t.vec_id, t.neighbor_id): t.cos_sim for t in exact.itertuples(index=False)
+    }
+    shared = [t for t in approx.itertuples(index=False) if (t.vec_id, t.neighbor_id) in ex_score]
+    assert shared
+    for t in shared:
+        assert t.cos_sim == ex_score[(t.vec_id, t.neighbor_id)], t
+
+
 def test_ann_lsh_recall_vs_exact(spark):
     from fagi_gis_spark.functions.ann import cosine_topk, lsh_topk
 
@@ -125,6 +138,7 @@ def test_ann_lsh_recall_vs_exact(spark):
     # multi-probe (hamming-1 buckets) holds recall >= 0.8 on this
     # near-uniform corpus where single-probe 16x6 sat near 0.4
     assert recall >= 0.8, f"LSH recall too low: {recall}"
+    _assert_exact_scores(exact, approx)
 
 
 def test_cluster_links_assigns_all(spark):
@@ -217,6 +231,7 @@ def test_ivf_recall_vs_exact(spark):
     a = set(map(tuple, approx[["vec_id", "neighbor_id"]].itertuples(index=False)))
     recall = len(e & a) / len(e)
     assert recall > 0.5, f"IVF recall too low: {recall}"
+    _assert_exact_scores(exact, approx)
 
 
 def test_displacement_coverage_is_real_intersects(spark):
@@ -342,7 +357,16 @@ def test_near_dup_lsh_candidate_volume_sublinear(spark):
         # until n ~ 10^5) — the scaling LAW is the same, this setting
         # just exits the saturated regime at a size pytest can afford.
         return _cosine_near_dup_lsh(
-            emb_df(n), -1.0, 1000, "vec_id", "embedding", 4, "auto", 64, 0, 42
+            emb_df(n),
+            threshold=-1.0,
+            quantize=1000,
+            id_col="vec_id",
+            vec_col="embedding",
+            n_tables=4,
+            bits_per_table="auto",
+            dim=64,
+            multiprobe=0,
+            seed=42,
         ).count()
 
     c1, c2 = cand_count(3000), cand_count(6000)
@@ -370,13 +394,7 @@ def test_pq_recall_vs_exact_and_rerank_scores(spark):
     r = set(map(tuple, rr[["vec_id", "neighbor_id"]].itertuples(index=False)))
     recall = len(e & r) / len(e)
     assert recall >= 0.8, f"ADC+R recall too low: {recall}"
-    ex_score = {
-        (t.vec_id, t.neighbor_id): t.cos_sim for t in exact.itertuples(index=False)
-    }
-    for t in rr.itertuples(index=False):
-        key = (t.vec_id, t.neighbor_id)
-        if key in ex_score:
-            assert t.cos_sim == ex_score[key]
+    _assert_exact_scores(exact, rr)
 
 
 def test_pq_codes_are_m_bytes(spark):
