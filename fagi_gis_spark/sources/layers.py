@@ -31,7 +31,10 @@ import importlib.util
 import os
 import shutil
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from fagi_gis_spark.session import session_memo
@@ -329,9 +332,11 @@ class StoredTable:
     of them re-keys the table and a stale copy is never read.
     ``ensure()`` returns the path, first running ``build(dir)`` into
     ``<path>.tmp.<pid>`` and renaming it into place when the path is
-    absent.  Content is deterministic and the rename atomic: a reader
-    sees a whole table or none, and a concurrent writer that loses the
-    race deletes its (equal) copy.  A query and its DuckDB oracle read
+    absent; a ``build`` that raises has its temp dir removed and the
+    error re-raised, so a failed import leaves nothing behind.  Content
+    is deterministic and the rename atomic: a reader sees a whole table
+    or none, and a concurrent writer that loses the race deletes its
+    (equal) copy.  A query and its DuckDB oracle read
     the same ``StoredTable`` value, so they cannot disagree on the path.
     """
 
@@ -362,12 +367,41 @@ class StoredTable:
             os.makedirs(os.path.dirname(self.path), exist_ok=True)
             tmp = f"{self.path}.tmp.{os.getpid()}"
             shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's leftovers
-            self._build(tmp)
+            try:
+                self._build(tmp)
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
             try:
                 os.rename(tmp, self.path)
             except OSError:  # lost a concurrent race: the winner's is equal
                 shutil.rmtree(tmp, ignore_errors=True)
         return self.path
+
+
+def _per_layer(spark: SparkSession, task: Callable[[str], object]) -> dict:
+    """``{k: task(k)}`` for every key of ``MATERIALIZED_LAYER_KEYS``,
+    each call on its own pool thread so the layers' Spark jobs run
+    concurrently.  Returns once every call has ended; the first error
+    is re-raised after the calls still running have finished.
+
+    Every task gets its own ``inheritable_thread_target`` wrapper: the
+    wrapper clones the caller's local properties (job group, job
+    description) and session tags when it is made, and each thread
+    running it installs that clone.  Without it the jobs lose the
+    caller's group and description; with one wrapper shared by all tasks, concurrent SQL
+    executions share one ``Properties`` object and overwrite each
+    other's ``spark.sql.execution.id``."""
+    keys = MATERIALIZED_LAYER_KEYS
+    with ThreadPoolExecutor(len(keys)) as ex:
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(partial(task, k))) for k in keys
+        ]
+        try:
+            return {k: f.result() for k, f in zip(keys, futures)}
+        except BaseException:
+            ex.shutdown(cancel_futures=True)
+            raise
 
 
 def materialized_layers(
@@ -383,6 +417,13 @@ def materialized_layers(
     DataFrames reading the stored tables.  Deterministic content, so a
     cache hit can never change any query's output — the same
     amortization contract as the hot-cell memo.
+
+    The seven layer writes, and after them the seven read-backs, run as
+    concurrent Spark jobs, one wrapped task per layer (``_per_layer``),
+    as the reference imports datasets A and B on two importer threads
+    (FusionGISCLI.java:264-292).  Each layer is a small job dominated
+    by fixed per-job cost, so run one after another they leave cores
+    idle.
 
     The ``orders``/``poi_base`` temp views are still registered (lazy)
     for queries that phrase themselves in SQL.  The returned DataFrames
@@ -424,7 +465,8 @@ def materialized_layers(
                 )
                 .drop("__s")
             )
-        for k in MATERIALIZED_LAYER_KEYS:
+
+        def write(k: str) -> None:
             # write each layer at >= default parallelism: a layer that
             # derives straight from the (unsplittable, single-row-group)
             # orders scan would otherwise land as 1-3 files and every
@@ -433,6 +475,8 @@ def materialized_layers(
             ensure_min_parallelism(L[k]).write.mode("overwrite").parquet(
                 os.path.join(tmp, k)
             )
+
+        _per_layer(spark, write)
 
     stored = StoredTable(_layers_cache_tag(sf_dir), _LAYER_MODULES, _write, cache_root)
 
@@ -445,9 +489,7 @@ def materialized_layers(
             spark.sql(f"SELECT * FROM ({poi_base_sql()}) t").createOrReplaceTempView(
                 "poi_base"
             )
-        out = {
-            k: spark.read.parquet(os.path.join(base, k)) for k in MATERIALIZED_LAYER_KEYS
-        }
+        out = _per_layer(spark, lambda k: spark.read.parquet(os.path.join(base, k)))
         for k in SUMMARY_LAYER_KEYS:
             # classic 5-column view under the original key (parquet column
             # pruning makes the projection free), full typed frame under

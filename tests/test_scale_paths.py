@@ -793,10 +793,96 @@ def test_materialized_layers_equal_fresh_derivation(spark, tmp_path):
         assert fresh[k].exceptAll(mat[k]).isEmpty(), k
 
     (base,) = [d for d in os.listdir(root) if not d.endswith(".tmp")]
+    # the write-time parallelism floor: the passes scan each stored layer
+    # with one task per part file
+    floor = spark.sparkContext.defaultParallelism
+    for k in MATERIALIZED_LAYER_KEYS:
+        parts = [
+            f
+            for f in os.listdir(os.path.join(root, base, k))
+            if f.startswith("part-") and f.endswith(".parquet")
+        ]
+        assert len(parts) >= floor, (k, len(parts))
     mtime = os.path.getmtime(os.path.join(root, base))
     again = materialized_layers(spark, SF, cache_root=root)
     assert os.path.getmtime(os.path.join(root, base)) == mtime  # no rewrite
     assert again["poi_a"].count() == mat["poi_a"].count()
+
+
+def test_layer_import_jobs_keep_caller_group_and_description(spark, tmp_path):
+    """The import's concurrent layer jobs run under the caller's job
+    group and description: the group holds at least the seven write
+    jobs, and the SQL status store records at least seven executions
+    under the description, of which exactly two (the poi_a and poi_b
+    writes, with the geometry summary) run a Python node."""
+    import uuid
+
+    from fagi_gis_spark.sources.layers import MATERIALIZED_LAYER_KEYS, materialized_layers
+    from perfbench.sparkmetrics import StatusStore
+
+    sc = spark.sparkContext
+    store = StatusStore(spark)
+    since = store.count()
+    group = f"layer-import-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)  # the description is the group id too
+    try:
+        materialized_layers(spark, SF, cache_root=str(tmp_path / "layer_cache"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    n = len(MATERIALIZED_LAYER_KEYS)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= n
+    plans = store.plans(since, group)
+    assert len(plans) >= n
+    python = [p for p in plans if any(a == "ArrowEvalPython" for a, _ in p.nodes.values())]
+    assert len(python) == 2
+
+
+def test_stored_table_failed_build_leaves_nothing(tmp_path):
+    """A build that raises has its temp dir removed: ensure() re-raises
+    the build's error and the layer-cache root is left empty."""
+    import os
+
+    from fagi_gis_spark.sources.layers import StoredTable
+
+    class BuildFailed(Exception):
+        pass
+
+    def build(d):
+        os.makedirs(d)
+        open(os.path.join(d, "part-0"), "w").close()
+        raise BuildFailed
+
+    root = tmp_path / "layer_cache"
+    t = StoredTable("broken", ("fagi_gis_spark.sources.layers",), build, str(root))
+    with pytest.raises(BuildFailed):
+        t.ensure()
+    assert os.listdir(root) == []
+
+
+def test_per_layer_error_waits_for_running_tasks(spark):
+    """When one layer task raises, the import re-raises its error only
+    after every other task has ended, so a failed build's temp dir is
+    removed with no write still in flight."""
+    import time
+
+    from fagi_gis_spark.sources.layers import MATERIALIZED_LAYER_KEYS, _per_layer
+
+    class WriteFailed(Exception):
+        pass
+
+    first, *rest = MATERIALIZED_LAYER_KEYS
+    ended = []
+
+    def task(k):
+        if k == first:
+            raise WriteFailed
+        time.sleep(0.5)
+        ended.append(k)
+
+    with pytest.raises(WriteFailed):
+        _per_layer(spark, task)
+    assert sorted(ended) == sorted(rest)
 
 
 def test_stored_table_second_call_launches_no_job(spark, tmp_path):
