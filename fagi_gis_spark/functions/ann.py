@@ -26,13 +26,17 @@ hamming-1 multiprobe.
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from fagi_gis_spark.sources.layers import read_bucketed, write_bucketed
 
 
 def _dot(a, b):
@@ -669,7 +673,7 @@ def lsh_topk(
 
 def build_cosine_index(
     emb: DataFrame,
-    table: str,
+    path: str,
     n_tables: int = 16,
     bits_per_table: int | str = "auto",
     dim: int = 64,
@@ -678,79 +682,51 @@ def build_cosine_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist the embedding-cosine day-2 index — the same shape as the
-    MinHash index (``dedup.build_minhash_index``): the corpus's hyperplane bucket rows land in ``{table}_buckets``
-    (storage-bucketed by ``bucket``, so a new batch's candidate join is
-    exchange-free on the corpus side) and the quantized vectors in
-    ``{table}_vecs`` (bucketed by id, so the exact verify re-attach is
-    exchange-free too).  The resolved LSH layout (auto bits resolve
-    HERE, against the corpus size) persists in ``{table}_meta`` —
-    day-2 batches inherit it instead of re-deriving against a
-    different n."""
-    from fagi_gis_spark.functions.dedup import _INDEX_BUCKETS, _write_index_meta
-
-    spark = emb.sparkSession
-    have = {
-        part: spark.catalog.tableExists(f"{table}_{part}")
-        for part in ("buckets", "vecs", "meta")
-    }
-    if all(have.values()):
-        return  # complete index: nothing to do, no count() job
-    if have["buckets"] and not have["meta"]:
-        # a crashed build left buckets without their layout record:
-        # auto bits would re-resolve against TODAY'S corpus size and
-        # could mismatch the stored keys — exactly the silent recall
-        # loss the meta guard exists to prevent
-        raise RuntimeError(
-            f"index {table} is partial (buckets without meta) — drop "
-            f"{table}_buckets/{table}_vecs and rebuild"
-        )
+    """Store the embedding-cosine day-2 index in the directory ``path``
+    (a ``StoredTable`` build dir) — the same shape as the MinHash index
+    (``dedup.build_minhash_index``): the corpus's hyperplane bucket rows
+    land in ``buckets/`` (``write_bucketed`` on ``bucket``, so a new
+    batch's candidate join is exchange-free on the corpus side) and the
+    quantized vectors in ``vecs/`` (bucketed by id, so the exact verify
+    re-attach is exchange-free too).  The resolved LSH layout (auto bits
+    resolve HERE, against the corpus size) goes to ``layout.json`` —
+    day-2 batches inherit it instead of re-deriving against a different
+    n."""
     bits = _auto_bits(bits_per_table, emb)
-    if not have["buckets"]:
-        sig = hyperplane_signatures(
-            emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
-            id_col=id_col, vec_col=vec_col, seed=seed,
-        )
-        (
-            sig.select("bucket", "vec_id")
-            .write.bucketBy(_INDEX_BUCKETS, "bucket")
-            .sortBy("bucket")
-            .saveAsTable(f"{table}_buckets")
-        )
-    if not have["vecs"]:
-        (
-            _quantized(emb, id_col, vec_col, quantize)
-            .select(F.col("vid").alias("vec_id"), F.col("v").alias("qvec"))
-            .write.bucketBy(_INDEX_BUCKETS, "vec_id")
-            .sortBy("vec_id")
-            .saveAsTable(f"{table}_vecs")
-        )
-    _write_index_meta(
-        spark,
-        f"{table}_meta",
-        {
-            "n_tables": n_tables,
-            "bits_per_table": int(bits),
-            "dim": dim,
-            "quantize": quantize,
-            "seed": seed,
-        },
+    sig = hyperplane_signatures(
+        emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
+        id_col=id_col, vec_col=vec_col, seed=seed,
     )
+    write_bucketed(
+        sig.select("bucket", "vec_id"), os.path.join(path, "buckets"), ["bucket"], sort=True
+    )
+    write_bucketed(
+        _quantized(emb, id_col, vec_col, quantize).select(
+            F.col("vid").alias("vec_id"), F.col("v").alias("qvec")
+        ),
+        os.path.join(path, "vecs"),
+        ["vec_id"],
+        sort=True,
+    )
+    layout = {"n_tables": n_tables, "bits_per_table": int(bits), "dim": dim,
+              "quantize": quantize, "seed": seed}
+    with open(os.path.join(path, "layout.json"), "w") as f:
+        json.dump(layout, f)
 
 
 def incremental_cosine_pairs(
     new_emb: DataFrame,
-    table: str,
+    path: str,
     threshold: float = 0.8,
     multiprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs (cos >= threshold) of a NEW batch against
-    itself and a stored ``build_cosine_index`` corpus.  The LSH layout
-    comes from the index meta (built-at layout, never re-derived), the
-    corpus side of the bucket join reads pre-bucketed storage
-    (exchange-free), and every candidate passes the SAME exact
+    itself and the ``build_cosine_index`` corpus stored at ``path``.  The
+    LSH layout comes from its ``layout.json`` (built-at layout, never
+    re-derived), the corpus side of the bucket join reads pre-bucketed
+    storage (exchange-free), and every candidate passes the SAME exact
     integer-quantized cosine verify as ``cosine_near_dup_pairs`` — so
     emitted cos_sim values are bit-identical to a full-batch run, and
     new-side multiprobe covers both probe directions (bucket-flip
@@ -758,9 +734,10 @@ def incremental_cosine_pairs(
     probe(corpus) would hit exact(new)).  Output (id_a, id_b, cos_sim,
     pair_type); cost scales with the batch, not the stored corpus."""
     spark = new_emb.sparkSession
-    meta = spark.table(f"{table}_meta").head()
-    n_tables, bits, dim = meta.n_tables, meta.bits_per_table, meta.dim
-    quantize, seed = meta.quantize, meta.seed
+    with open(os.path.join(path, "layout.json")) as f:
+        layout = json.load(f)
+    n_tables, bits, dim = layout["n_tables"], layout["bits_per_table"], layout["dim"]
+    quantize, seed = layout["quantize"], layout["seed"]
 
     nn = cosine_near_dup_pairs(
         new_emb,
@@ -780,7 +757,7 @@ def incremental_cosine_pairs(
         new_emb, n_tables=n_tables, bits_per_table=bits, dim=dim,
         id_col=id_col, vec_col=vec_col, seed=seed,
     )
-    corpus = spark.table(f"{table}_buckets").select(
+    corpus = read_bucketed(spark, os.path.join(path, "buckets")).select(
         "bucket", F.col("vec_id").alias("id_c")
     )
     cand = (
@@ -807,7 +784,7 @@ def incremental_cosine_pairs(
         .select("id_n", "id_c")
     )
     corpus_vecs = (
-        spark.table(f"{table}_vecs")
+        read_bucketed(spark, os.path.join(path, "vecs"))
         .select(F.col("vec_id").alias("vid"), F.col("qvec").alias("v"))
         .withColumn("n", _dot(F.col("v"), F.col("v")))
     )

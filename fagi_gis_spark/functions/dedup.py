@@ -10,6 +10,9 @@ materializes.
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -17,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fagi_gis_spark.functions.text import fingerprint_md5
+from fagi_gis_spark.sources.layers import read_bucketed, write_bucketed
 
 # deterministic MinHash permutation parameters (public Carter-Wegman form)
 _MERSENNE = (1 << 61) - 1
@@ -344,101 +348,69 @@ def _sig_agreement(sig_a, sig_b, n_perm: int):
     return agree / F.lit(float(n_perm))
 
 
-def _write_index_meta(spark, meta_table: str, layout: dict) -> None:
-    """Persist the band layout an index was built with (single-row
-    table), so queries can refuse a mismatched layout instead of
-    silently losing recall.  An existing meta table is kept."""
-    import os
-
-    if spark.catalog.tableExists(meta_table):
-        return
-    # a meta DIR from a previous session (in-memory catalog gone,
-    # warehouse dir persists) counts as existing — the registry
-    # re-registers it at query time
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    if os.path.isdir(os.path.join(wh, meta_table.lower())):
-        return
-    import pandas as pd
-
-    spark.createDataFrame(pd.DataFrame([layout])).write.saveAsTable(meta_table)
-
-
-def _check_index_layout(spark, meta_table: str, expected: dict) -> None:
-    """Refuse to query an index with different banding parameters than
-    it was built with — a mismatched layout joins almost no corpus keys
-    and silently drops real duplicates.  Skipped when the meta table is
-    not resolvable in this session (pre-meta index; the registry
-    re-registers meta alongside the data tables)."""
-    if not spark.catalog.tableExists(meta_table):
-        return
-    row = spark.table(meta_table).head()
+def _check_index_layout(path: str, expected: dict) -> None:
+    """Refuse to query the index at ``path`` with different parameters
+    than its ``layout.json`` records — a mismatched layout joins almost
+    no corpus keys and silently drops real duplicates."""
+    with open(os.path.join(path, "layout.json")) as f:
+        layout = json.load(f)
     for k, v in expected.items():
-        got = getattr(row, k)
-        if got != v:
+        if layout[k] != v:
             raise ValueError(
-                f"index {meta_table.removesuffix('_meta')} was built with "
-                f"{k}={got} but queried with {k}={v}; rebuild the index or "
-                f"query at the build layout"
+                f"index {path} was built with {k}={layout[k]} but queried "
+                f"with {k}={v}; rebuild the index or query at the build layout"
             )
 
 
-#: storage buckets of every persisted dedup index table (the registry
-#: re-registers index dirs with the same ``INTO 16 BUCKETS`` clause)
-_INDEX_BUCKETS = 16
-
-
 def build_minhash_index(
-    sigs: DataFrame, table: str, bands: int = 16, rows_per_band: int = 4
+    sigs: DataFrame, path: str, bands: int = 16, rows_per_band: int = 4
 ) -> None:
-    """Persist a corpus's MinHash-LSH index as two storage-bucketed
-    tables so later batches dedup against it WITHOUT rescanning corpus
-    text (the day-2 operation at corpus scale: the 100 TB corpus is
-    deduped once; every new crawl joins against the stored index):
+    """Store a corpus's MinHash-LSH index in the directory ``path`` (a
+    ``StoredTable`` build dir) so later batches dedup against it WITHOUT
+    rescanning corpus text (the day-2 operation at corpus scale: the
+    100 TB corpus is deduped once; every new crawl joins against the
+    stored index):
 
-    - ``<table>_buckets`` (doc_id, band, bucket), ``bucketBy(band,
-      bucket)`` + sorted — the candidate join on (band, bucket) reads
-      it with NO corpus-side exchange (only the new batch shuffles);
-    - ``<table>_sigs`` (doc_id, sig), ``bucketBy(doc_id)`` — the
-      verification join on doc_id likewise skips the corpus exchange.
-
-    Already-existing tables are skipped (self-healing after a partial
-    create: only the missing one is written)."""
-    spark = sigs.sparkSession
-    if not spark.catalog.tableExists(f"{table}_buckets"):
-        (
-            _band_buckets(sigs, bands, rows_per_band)
-            .write.bucketBy(_INDEX_BUCKETS, "band", "bucket")
-            .sortBy("band", "bucket")
-            .saveAsTable(f"{table}_buckets")
-        )
-    if not spark.catalog.tableExists(f"{table}_sigs"):
-        sigs.write.bucketBy(_INDEX_BUCKETS, "doc_id").saveAsTable(f"{table}_sigs")
-    _write_index_meta(spark, f"{table}_meta", {"bands": bands, "rows_per_band": rows_per_band})
+    - ``buckets/`` (doc_id, band, bucket), ``write_bucketed`` on (band,
+      bucket), sorted — the candidate join on (band, bucket) reads it
+      with NO corpus-side exchange (only the new batch shuffles);
+    - ``sigs/`` (doc_id, sig), bucketed on doc_id — the verification
+      join on doc_id likewise skips the corpus exchange;
+    - ``layout.json``, the band layout the index was built with."""
+    write_bucketed(
+        _band_buckets(sigs, bands, rows_per_band),
+        os.path.join(path, "buckets"),
+        ["band", "bucket"],
+        sort=True,
+    )
+    write_bucketed(sigs, os.path.join(path, "sigs"), ["doc_id"])
+    with open(os.path.join(path, "layout.json"), "w") as f:
+        json.dump({"bands": bands, "rows_per_band": rows_per_band}, f)
 
 
 def incremental_minhash_pairs(
     new_sigs: DataFrame,
-    table: str,
+    path: str,
     bands: int = 16,
     rows_per_band: int = 4,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-dup pairs of a NEW batch against itself AND a stored corpus
-    index (``build_minhash_index``), without touching corpus text: the
-    new batch's band buckets join the stored ``<table>_buckets`` on its
-    storage-bucket key and signatures verify against the stored
-    ``<table>_sigs`` — both corpus sides exchange-free, so cost scales
+    """Near-dup pairs of a NEW batch against itself AND the corpus index
+    stored at ``path`` (``build_minhash_index``), without touching corpus
+    text: the new batch's band buckets join the stored ``buckets/`` on
+    its storage-bucket key and signatures verify against the stored
+    ``sigs/`` — both corpus sides exchange-free, so cost scales
     with the BATCH, not the corpus.  Output ``(doc_a, doc_b,
     jaccard_est, pair_type)`` with ``doc_a < doc_b`` and ``pair_type``
     in {'new_new', 'new_corpus'}; equals the full-batch
     ``minhash_lsh_pairs`` over (corpus ∪ new) restricted to pairs
     touching a new doc (equivalence pytest-asserted)."""
     spark = new_sigs.sparkSession
-    _check_index_layout(spark, f"{table}_meta", {"bands": bands, "rows_per_band": rows_per_band})
+    _check_index_layout(path, {"bands": bands, "rows_per_band": rows_per_band})
     n_perm = bands * rows_per_band
     nb = _band_buckets(new_sigs, bands, rows_per_band)
-    corpus_b = spark.table(f"{table}_buckets")
-    corpus_s = spark.table(f"{table}_sigs")
+    corpus_b = read_bucketed(spark, os.path.join(path, "buckets"))
+    corpus_s = read_bucketed(spark, os.path.join(path, "sigs"))
 
     # new x new: exactly the standard in-batch LSH path (one pipeline to
     # keep in sync, not a copy)
@@ -446,8 +418,9 @@ def incremental_minhash_pairs(
         new_sigs, bands=bands, rows_per_band=rows_per_band, jaccard_threshold=jaccard_threshold
     ).withColumn("pair_type", F.lit("new_new"))
 
-    # new x corpus: candidates are ids only; the stored bucket table's
-    # bucketBy(band, bucket) means only the (small) new side shuffles.
+    # new x corpus: candidates are ids only; the stored buckets are
+    # storage-bucketed on (band, bucket), so only the (small) new side
+    # shuffles.
     # doc_n != doc_c guards re-ingested ids (a retried batch whose ids
     # were already folded into the index must not emit self-pairs)
     nc_cand = (

@@ -371,8 +371,9 @@ def radius_join_bucketed(
     """J5 against a PRE-BUCKETED build table — the 100 TB storage-aware
     variant: ``build_table`` must already carry
     (r_key, r_lon, r_lat, cell) with ``cell`` the tile id at
-    ``join_res_for_radius(radius_m)`` (written via
-    ``.write.bucketBy(n, "cell").sortBy("cell").saveAsTable(...)``).
+    ``join_res_for_radius(radius_m)`` (written with
+    ``sources.layers.write_bucketed(df, path, ["cell"], sort=True)`` and
+    read back with ``read_bucketed``).
     Joining on the STORED cell column lets Spark use the bucket
     HashPartitioning directly: the build side reads shuffle-free
     (SelectedBucketsCount in the plan, zero build-side Exchange); only

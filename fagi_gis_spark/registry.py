@@ -17,7 +17,6 @@ Float-parity conventions (see sources/layers.py docstring):
 
 from __future__ import annotations
 
-import os as _os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,8 +45,11 @@ from fagi_gis_spark.sources.layers import (
     StoredTable,
     admin_assign_oracle_sql,
     admin_polygons_pdf,
+    input_tag,
     materialized_layers,
     oracle_ctes,
+    read_bucketed,
+    write_bucketed,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1156,81 +1158,6 @@ def dedup_minhash_lsh(spark, sf_dir):
 _INCR_SPLIT_MOD = 5
 
 
-def _index_table_tag(sf_dir: str, dataset: str) -> str:
-    """Content key for a persisted corpus index: the source parquet's
-    identity (path + size + mtime), so a regenerated dataset can never
-    read a stale index."""
-    import hashlib
-    import os
-
-    p = f"{sf_dir.rstrip('/')}/{dataset}.parquet"
-    st = os.stat(p)
-    return hashlib.md5(f"{p}:{st.st_size}:{int(st.st_mtime)}".encode()).hexdigest()[:10]
-
-
-def _minhash_index_table(sf_dir: str) -> str:
-    return f"minhash_idx_{_index_table_tag(sf_dir, 'documents')}"
-
-
-def _ensure_index_tables(spark, specs: dict, build: Callable[[], None]) -> None:
-    """The one entry point of a stored index: re-register committed
-    index dirs from a previous session (the in-memory catalog does not
-    survive sessions but the warehouse dirs do; bucket ids live in file
-    names, so bucketed reads work on the re-registered external table),
-    then run ``build()`` when any table is genuinely missing.  Only a
-    committed write (job-level _SUCCESS marker) may be re-registered: a
-    killed mid-write run leaves partial files — stale uncommitted dirs
-    are removed, fresh ones (a concurrent writer) raise for a later
-    retry.  Index content is deterministic, so a build that fails
-    because a concurrent builder created the tables first is fine."""
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    need_build = False
-    for t, (cols, cluster, sort) in specs.items():
-        if spark.catalog.tableExists(t):
-            continue
-        path = _os.path.join(wh, t)
-        if _os.path.isdir(path) and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-            if cluster is None:
-                bucketing = ""
-            else:
-                sorted_by = f"SORTED BY {cluster} " if sort else ""
-                bucketing = f"CLUSTERED BY {cluster} {sorted_by}INTO 16 BUCKETS "
-            try:
-                spark.sql(
-                    f"CREATE TABLE {t} ({cols}) USING parquet "
-                    f"{bucketing}LOCATION '{path}'"
-                )
-            except Exception:
-                if not spark.catalog.tableExists(t):
-                    raise
-        else:
-            if _os.path.isdir(path):
-                newest = max(
-                    [e.stat().st_mtime for e in _os.scandir(path)] or [0],
-                    default=0,
-                )
-                newest = max(newest, _os.stat(path).st_mtime)
-                import time as _time
-
-                if _time.time() - newest < 600:
-                    raise RuntimeError(
-                        f"index path {path} has uncommitted recent writes "
-                        f"(possible concurrent build in progress); retry "
-                        f"after it commits, or remove the directory if it "
-                        f"is abandoned"
-                    )
-                import shutil
-
-                shutil.rmtree(path, ignore_errors=True)
-            need_build = True
-    if need_build:
-        try:
-            build()
-        except Exception:
-            if not all(spark.catalog.tableExists(t) for t in specs):
-                raise
-
-
 @register(
     "dedup_incremental_minhash",
     _minhash_oracle(
@@ -1243,16 +1170,18 @@ def _ensure_index_tables(spark, specs: dict, build: Callable[[], None]) -> None:
 )
 def dedup_incremental_minhash(spark, sf_dir):
     """Day-2 dedup at corpus scale: near-dup pairs of a NEW batch
-    against itself and a PERSISTED corpus MinHash-LSH index
-    (functions/dedup.build_minhash_index) — corpus text is never
-    rescanned, and the index tables are storage-bucketed by their join
-    keys so the corpus side of both the candidate join (band, bucket)
-    and the verification join (doc_id) is exchange-free.  Cost scales
-    with the batch, not the 100 TB corpus.  The index build is
-    write-once per dataset identity (deterministic content — a hit
-    cannot change output); the oracle replays the SAME closed-form
-    MinHash over the full document set restricted to pairs touching a
-    new doc, which the incremental plan must equal exactly."""
+    against itself and the corpus MinHash-LSH index
+    (functions/dedup.build_minhash_index), stored once as a
+    ``StoredTable`` directory keyed by the documents file's identity and
+    the dedup and registry source — corpus text is never rescanned, and
+    the index's ``buckets/`` and ``sigs/`` parts are storage-bucketed by
+    their join keys so the corpus side of both the candidate join
+    (band, bucket) and the verification join (doc_id) is exchange-free.
+    Cost scales with the batch, not the 100 TB corpus.  Deterministic
+    content — a stored index cannot change output; the oracle replays
+    the SAME closed-form MinHash over the full document set restricted
+    to pairs touching a new doc, which the incremental plan must equal
+    exactly."""
     from fagi_gis_spark.functions.dedup import (
         build_minhash_index,
         incremental_minhash_pairs,
@@ -1261,19 +1190,14 @@ def dedup_incremental_minhash(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     new = docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD == 0)
-    tbl = _minhash_index_table(sf_dir)
-    specs = {
-        f"{tbl}_buckets": ("doc_id BIGINT, band INT, bucket INT", "(band, bucket)", True),
-        f"{tbl}_sigs": ("doc_id BIGINT, sig ARRAY<BIGINT>", "(doc_id)", False),
-        # meta is written via pandas -> int64 columns; re-register as BIGINT
-        f"{tbl}_meta": ("bands BIGINT, rows_per_band BIGINT", None, False),
-    }
     corpus = docs.filter(F.col("doc_id") % _INCR_SPLIT_MOD != 0)
-    _ensure_index_tables(
-        spark, specs, lambda: build_minhash_index(minhash_signatures(corpus), tbl)
-    )
+    index = StoredTable(
+        f"minhash_idx_{input_tag(sf_dir, 'documents')}",
+        ("fagi_gis_spark.functions.dedup", __name__),
+        lambda path: build_minhash_index(minhash_signatures(corpus), path),
+    ).ensure()
     return incremental_minhash_pairs(
-        minhash_signatures(new), tbl, jaccard_threshold=0.35
+        minhash_signatures(new), index, jaccard_threshold=0.35
     )
 
 
@@ -1326,7 +1250,7 @@ def _documents_icetable(spark, sf_dir):
 
     return IceTable(
         StoredTable(
-            f"icetable_docs_{_index_table_tag(sf_dir, 'documents')}",
+            f"icetable_docs_{input_tag(sf_dir, 'documents')}",
             ("fagi_gis_spark.sources.icetable", __name__),
             build,
         ).ensure()
@@ -1399,39 +1323,31 @@ def icetable_lifecycle(spark, sf_dir):
 @register("dedup_incremental_cosine")  # LSH recall has no SQL oracle: rows-only
 def dedup_incremental_cosine(spark, sf_dir):
     """Day-2 EMBEDDING dedup — the embedding twin of
-    ``dedup_incremental_minhash``: near-dup pairs of a new vector batch against itself and a PERSISTED
-    hyperplane-bucket index (functions/ann.build_cosine_index).  Corpus
-    vectors are never rescanned; both the candidate join (bucket) and
-    the exact-verify re-attach (vec_id) read storage-bucketed tables
-    exchange-free, so cost scales with the batch.  Rows-only (LSH
-    candidate recall is not SQL-expressible); the pytest twin proves
-    incremental == full-batch cosine_near_dup_pairs restricted to pairs
-    touching a new vector, with bit-identical cos_sim."""
+    ``dedup_incremental_minhash``: near-dup pairs of a new vector batch
+    against itself and the corpus hyperplane-bucket index
+    (functions/ann.build_cosine_index), stored once as a ``StoredTable``
+    directory keyed by the embeddings file's identity and the ann and
+    registry source.  Corpus vectors are never rescanned; both the
+    candidate join (bucket) and the exact-verify re-attach (vec_id) read
+    the index's storage-bucketed parts exchange-free, so cost scales
+    with the batch.  Rows-only (LSH candidate recall is not
+    SQL-expressible); the pytest twin proves incremental == full-batch
+    cosine_near_dup_pairs restricted to pairs touching a new vector,
+    with bit-identical cos_sim."""
     from fagi_gis_spark.functions.ann import (
         build_cosine_index,
         incremental_cosine_pairs,
     )
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "embedding"
-    )
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     new = emb.filter(F.col("vec_id") % _INCR_SPLIT_MOD == 0)
-    tbl = f"cosine_idx_{_index_table_tag(sf_dir, 'embeddings')}"
-    specs = {
-        f"{tbl}_buckets": ("bucket BIGINT, vec_id BIGINT", "(bucket)", True),
-        f"{tbl}_vecs": ("vec_id BIGINT, qvec ARRAY<BIGINT>", "(vec_id)", True),
-        f"{tbl}_meta": (
-            "n_tables BIGINT, bits_per_table BIGINT, dim BIGINT, "
-            "quantize BIGINT, seed BIGINT",
-            None,
-            False,
-        ),
-    }
     corpus = emb.filter(F.col("vec_id") % _INCR_SPLIT_MOD != 0)
-    _ensure_index_tables(
-        spark, specs, lambda: build_cosine_index(corpus, tbl, bits_per_table=6)
-    )
-    return incremental_cosine_pairs(new, tbl, threshold=0.3)
+    index = StoredTable(
+        f"cosine_idx_{input_tag(sf_dir, 'embeddings')}",
+        ("fagi_gis_spark.functions.ann", __name__),
+        lambda path: build_cosine_index(corpus, path, bits_per_table=6),
+    ).ensure()
+    return incremental_cosine_pairs(new, index, threshold=0.3)
 
 
 _SIMHASH_ORACLE = r"""
@@ -1911,10 +1827,6 @@ def _images(spark) -> DataFrame:
 _CORPUS_SQL = f"read_parquet('{_CORPUS.path}/*.parquet')"
 
 _SHARD_SPLIT_MOD = 5  # day-2 shard batch: images whose phash pmod 5 == 0
-
-#: the stored shard plan's tables carry the corpus key, so a new corpus
-#: never reads a stale plan
-_IMAGE_SHARD_IDX = f"image_shard_idx_{_CORPUS.key}"
 
 
 @register("image_phash_neardup")  # DCT pHash: codec-side, rows-only
@@ -4626,68 +4538,57 @@ def _image_shard_cells(spark) -> "DataFrame":
     )
 
 
+def _write_shard_plan(path: str) -> None:
+    """The day-1 cells (without the image bytes) and their shard plan,
+    each cell-bucketed."""
+    from fagi_gis_spark.operators.multimodal import shard_pack
+
+    cells = _image_shard_cells(SparkSession.active())
+    day1 = cells.filter(~F.col("is_new")).drop("is_new")
+    write_bucketed(day1, f"{path}/cells", ["cell_hex7"], sort=True)
+    write_bucketed(shard_pack(day1, 8192), f"{path}/plan", ["cell_hex7"])
+
+
+#: the day-1 shard plan, named with the corpus key so a new corpus never
+#: reads a stale plan
+_SHARD_PLAN = StoredTable(
+    f"image_shard_idx_{_CORPUS.key}",
+    ("fagi_gis_spark.operators.multimodal", __name__),
+    _write_shard_plan,
+)
+
+
 @register("image_shard_pack_incremental", _image_shard_pack_oracle(incremental=True))
 def image_shard_pack_incremental(spark, sf_dir):
     """Day-2 shard maintenance — the shard-layout member of the
     incremental family (exact digest / MinHash / banded-hamming /
     embedding-cosine indexes, now the training-shard plan): a NEW image
-    batch updates a PERSISTED shard plan by repacking ONLY the cells it
+    batch updates a STORED shard plan by repacking ONLY the cells it
     touches; every untouched cell's shards carry over from the stored
     plan by reference (broadcast anti-join — never recomputed, never
     shuffled).  Day-1 features (ids + byte sizes, no image bytes) and
-    the day-1 plan persist as cell-bucketed tables, so the initial pack
-    groups WITHOUT an exchange and the repack's only shuffle is bounded
-    by touched cells + the batch — at 10^12 images the nightly cost is
-    the delta's neighborhoods, never the corpus.  Output == the full
-    repack bit-for-bit (greedy packing depends only on a cell's own
-    files), which is exactly what the oracle replays, phase column
-    included."""
+    the day-1 plan are stored once as the cell-bucketed ``cells/`` and
+    ``plan/`` parts of a ``StoredTable`` directory, named with the
+    corpus key and keyed by the shard-pack and registry source, so the
+    repack's only shuffle is bounded by touched cells + the batch — at
+    10^12 images the nightly cost is the delta's neighborhoods, never
+    the corpus.  Output == the full repack bit-for-bit (greedy packing
+    depends only on a cell's own files), which is exactly what the
+    oracle replays, phase column included."""
     from fagi_gis_spark.operators.multimodal import shard_pack
 
+    index = _SHARD_PLAN.ensure()
     cells = _image_shard_cells(spark)
-    tbl = _IMAGE_SHARD_IDX
-    specs = {
-        f"{tbl}_cells": (
-            "cell_hex7 BIGINT, image_id STRING, nbytes BIGINT",
-            "(cell_hex7)",
-            True,
-        ),
-        f"{tbl}_plan": (
-            "cell_hex7 BIGINT, image_id STRING, nbytes BIGINT, shard_id BIGINT",
-            "(cell_hex7)",
-            False,
-        ),
-    }
-
-    def build() -> None:
-        if not spark.catalog.tableExists(f"{tbl}_cells"):
-            (
-                cells.filter(~F.col("is_new"))
-                .drop("is_new")
-                .write.bucketBy(16, "cell_hex7")
-                .sortBy("cell_hex7")
-                .mode("errorifexists")
-                .saveAsTable(f"{tbl}_cells")
-            )
-        if not spark.catalog.tableExists(f"{tbl}_plan"):
-            (
-                shard_pack(spark.table(f"{tbl}_cells"), 8192)
-                .write.bucketBy(16, "cell_hex7")
-                .mode("errorifexists")
-                .saveAsTable(f"{tbl}_plan")
-            )
-
-    _ensure_index_tables(spark, specs, build)
     new = cells.filter(F.col("is_new")).drop("is_new")
     touched = new.select("cell_hex7").distinct()
     repacked = shard_pack(
-        spark.table(f"{tbl}_cells")
+        read_bucketed(spark, f"{index}/cells")
         .join(F.broadcast(touched), "cell_hex7", "semi")
         .unionByName(new),
         8192,
     ).withColumn("phase", F.lit("repacked"))
     carried = (
-        spark.table(f"{tbl}_plan")
+        read_bucketed(spark, f"{index}/plan")
         .join(F.broadcast(touched), "cell_hex7", "anti")
         .withColumn("phase", F.lit("carried"))
     )

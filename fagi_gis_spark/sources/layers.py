@@ -28,8 +28,10 @@ from __future__ import annotations
 
 import hashlib
 import importlib.util
+import json
 import os
 import shutil
+import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
@@ -311,13 +313,12 @@ _LAYER_MODULES = (
 )
 
 
-def _layers_cache_tag(sf_dir: str) -> str:
-    """Input identity of a materialized import: the sf dir's path + the
-    orders.parquet file stats."""
+def input_tag(sf_dir: str, table: str = "orders") -> str:
+    """Input identity of a stored table derived from ``{sf_dir}/{table}
+    .parquet``: the sf dir's path + that file's stats."""
     h = hashlib.sha1()
-    orders = os.path.join(sf_dir, "orders.parquet")
     h.update(os.path.abspath(sf_dir).encode())
-    st = os.stat(orders)
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
     h.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
     return f"{os.path.basename(sf_dir.rstrip('/'))}-{h.hexdigest()[:12]}"
 
@@ -377,6 +378,49 @@ class StoredTable:
             except OSError:  # lost a concurrent race: the winner's is equal
                 shutil.rmtree(tmp, ignore_errors=True)
         return self.path
+
+
+#: storage buckets of every bucketed stored directory (``write_bucketed``)
+_INDEX_BUCKETS = 16
+
+
+def write_bucketed(df: DataFrame, path: str, by: list[str], sort: bool = False) -> None:
+    """Write ``df`` to ``path`` as ``_INDEX_BUCKETS`` parquet storage
+    buckets on ``by`` (each bucket file sorted on ``by`` when ``sort``),
+    the storage format of the day-2 indexes inside a ``StoredTable``.
+    Spark writes bucket files only through a catalog table, so the write
+    goes through a throwaway external table whose entry is dropped
+    afterwards (dropping an external table keeps its files).  The schema
+    and bucket spec go to ``<path>/_bucketing.json`` (Spark skips
+    ``_``-prefixed files when it lists a table) for ``read_bucketed``."""
+    path = os.path.abspath(path)
+    name = f"stored_write_{uuid.uuid4().hex}"
+    w = df.write.bucketBy(_INDEX_BUCKETS, *by)
+    if sort:
+        w = w.sortBy(*by)
+    w.option("path", path).saveAsTable(name)
+    df.sparkSession.sql(f"DROP TABLE {name}")
+    with open(os.path.join(path, "_bucketing.json"), "w") as f:
+        json.dump({"ddl": df._jdf.schema().toDDL(), "by": list(by), "sort": sort}, f)
+
+
+def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
+    """The ``write_bucketed`` directory at ``path`` as a bucketed table:
+    an external catalog entry named after the path, registered from
+    ``_bucketing.json`` without a Spark job, so joins and groupings on
+    the bucket columns read the stored side without an exchange
+    (``SelectedBucketsCount`` in the scan)."""
+    path = os.path.abspath(path)
+    with open(os.path.join(path, "_bucketing.json")) as f:
+        spec = json.load(f)
+    cols = ", ".join(spec["by"])
+    sort = f"SORTED BY ({cols}) " if spec["sort"] else ""
+    name = f"stored_{hashlib.sha1(path.encode()).hexdigest()[:16]}"
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({spec['ddl']}) USING parquet "
+        f"CLUSTERED BY ({cols}) {sort}INTO {_INDEX_BUCKETS} BUCKETS LOCATION '{path}'"
+    )
+    return spark.table(name)
 
 
 def _per_layer(spark: SparkSession, task: Callable[[str], object]) -> dict:
@@ -478,7 +522,7 @@ def materialized_layers(
 
         _per_layer(spark, write)
 
-    stored = StoredTable(_layers_cache_tag(sf_dir), _LAYER_MODULES, _write, cache_root)
+    stored = StoredTable(input_tag(sf_dir), _LAYER_MODULES, _write, cache_root)
 
     def _import() -> dict[str, DataFrame]:
         base = stored.ensure()

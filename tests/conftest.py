@@ -37,20 +37,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def drop_tables(spark, *tables: str) -> None:
-    """Drop each table AND its warehouse directory.  A directory left by
-    an earlier session is invisible to the in-memory catalog, yet it
-    makes ``saveAsTable`` fail with LOCATION_ALREADY_EXISTS — so a test
-    that builds a table must clear both, not only the catalog entry."""
-    import os
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t.lower()), ignore_errors=True)
-
-
 def assert_frames_match(spark_df, duck_df: pd.DataFrame):
     """Order-insensitive comparison: columns, row count and values.
 

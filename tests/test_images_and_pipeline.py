@@ -1566,6 +1566,7 @@ def test_shard_pack_incremental_equals_full_and_groups_without_exchange(spark):
     distribution)."""
     from fagi_gis_spark import registry
     from fagi_gis_spark.operators.multimodal import shard_pack
+    from fagi_gis_spark.sources.layers import read_bucketed
 
     incr = registry.queries()["image_shard_pack_incremental"](spark, None).toPandas()
     full = registry.queries()["image_shard_pack"](spark, None).toPandas()
@@ -1585,7 +1586,7 @@ def test_shard_pack_incremental_equals_full_and_groups_without_exchange(spark):
 
     # exchange-free grouping over the stored bucketed features table
     plan = (
-        shard_pack(spark.table(f"{registry._IMAGE_SHARD_IDX}_cells"), 8192)
+        shard_pack(read_bucketed(spark, f"{registry._SHARD_PLAN.ensure()}/cells"), 8192)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

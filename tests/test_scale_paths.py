@@ -1,11 +1,11 @@
 """Scale-path tests: salted skew join equivalence, bucketed co-located
 join (no Exchange), persisted day-2 dedup indexes."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from tests.conftest import drop_tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -133,18 +133,23 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     contain no Exchange — the storage-level answer to the reference's
     GiST+CLUSTER physical ordering (SURVEY.md §4)."""
     from fagi_gis_spark.registry import layers
+    from fagi_gis_spark.sources.layers import read_bucketed, write_bucketed
 
     L = layers(spark, SF)
-    drop_tables(spark, "poi_a_bkt", "links_bkt")
-    L["poi_a"].select("subject", "geom_wkt").write.bucketBy(8, "subject").sortBy(
-        "subject"
-    ).mode("overwrite").saveAsTable("poi_a_bkt")
-    L["links"].withColumnRenamed("node_a", "subject").write.bucketBy(8, "subject").sortBy(
-        "subject"
-    ).mode("overwrite").saveAsTable("links_bkt")
+    write_bucketed(
+        L["poi_a"].select("subject", "geom_wkt"), str(tmp_path / "poi_a"), ["subject"], sort=True
+    )
+    write_bucketed(
+        L["links"].withColumnRenamed("node_a", "subject"),
+        str(tmp_path / "links"),
+        ["subject"],
+        sort=True,
+    )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = spark.table("links_bkt").join(spark.table("poi_a_bkt"), "subject")
+        j = read_bucketed(spark, str(tmp_path / "links")).join(
+            read_bucketed(spark, str(tmp_path / "poi_a")), "subject"
+        )
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:2000]
         assert j.count() > 0
@@ -613,29 +618,28 @@ def test_cell_bucketed_radius_join_build_side_no_exchange(spark, tmp_path):
     from fagi_gis_spark.index.tiles import cell_id_col
     from fagi_gis_spark.operators.spatial_join import join_res_for_radius
     from fagi_gis_spark.registry import layers
+    from fagi_gis_spark.sources.layers import read_bucketed, write_bucketed
 
     L = layers(spark, SF)
     z = join_res_for_radius(150.0)
-    drop_tables(spark, "poi_b_cellbkt")
-    (
+    write_bucketed(
         L["poi_b"]
         .select(
             F.col("subject").alias("r_key"),
             F.col("lon").alias("r_lon"),
             F.col("lat").alias("r_lat"),
         )
-        .withColumn("cell", cell_id_col(F.col("r_lon"), F.col("r_lat"), z))
-        .write.bucketBy(8, "cell")
-        .sortBy("cell")
-        .mode("overwrite")
-        .saveAsTable("poi_b_cellbkt")
+        .withColumn("cell", cell_id_col(F.col("r_lon"), F.col("r_lat"), z)),
+        str(tmp_path / "poi_b"),
+        ["cell"],
+        sort=True,
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         from fagi_gis_spark.operators.spatial_join import radius_join, radius_join_bucketed
 
         j = radius_join_bucketed(
-            L["poi_a"], spark.table("poi_b_cellbkt"), 150.0
+            L["poi_a"], read_bucketed(spark, str(tmp_path / "poi_b")), 150.0
         ).select("l_key", "r_key")
         rows = j.collect()
         assert len(rows) > 0  # executes THIS queryExecution (AQE final)
@@ -1074,19 +1078,17 @@ def test_with_scores_semantics(spark):
     assert positive
 
 
-def _fresh_minhash_index(spark, docs):
-    """(Re)build ``test_mh_idx`` over the docs with ``doc_id % 5 != 0`` —
-    from scratch, so a test never depends on suite order or on
-    warehouse dirs an earlier run left behind."""
+def _fresh_minhash_index(docs, tmp_path) -> str:
+    """Build a MinHash index over the docs with ``doc_id % 5 != 0`` into
+    a fresh directory under ``tmp_path`` and return its path."""
     from fagi_gis_spark.functions.dedup import build_minhash_index, minhash_signatures
 
-    drop_tables(spark, "test_mh_idx_buckets", "test_mh_idx_sigs", "test_mh_idx_meta")
-    build_minhash_index(
-        minhash_signatures(docs.filter(F.col("doc_id") % 5 != 0)), "test_mh_idx"
-    )
+    path = str(tmp_path / "mh_idx")
+    build_minhash_index(minhash_signatures(docs.filter(F.col("doc_id") % 5 != 0)), path)
+    return path
 
 
-def test_incremental_minhash_equals_full_batch(spark):
+def test_incremental_minhash_equals_full_batch(spark, tmp_path):
     """Day-2 dedup contract: a new batch deduped against itself + the
     persisted corpus index must emit EXACTLY the full-batch LSH pairs
     restricted to pairs touching a new doc (same jaccard_est values),
@@ -1099,10 +1101,10 @@ def test_incremental_minhash_equals_full_batch(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    _fresh_minhash_index(spark, docs)
+    index = _fresh_minhash_index(docs, tmp_path)
 
     inc = incremental_minhash_pairs(
-        minhash_signatures(new), "test_mh_idx", jaccard_threshold=0.35
+        minhash_signatures(new), index, jaccard_threshold=0.35
     )
     rows = inc.collect()
     full = minhash_lsh_pairs(
@@ -1121,7 +1123,7 @@ def test_incremental_minhash_equals_full_batch(spark):
     assert any(r.pair_type == "new_corpus" for r in rows)
 
 
-def test_incremental_minhash_corpus_side_reads_buckets(spark):
+def test_incremental_minhash_corpus_side_reads_buckets(spark, tmp_path):
     """The candidate join against the stored index must read the corpus
     side through its storage buckets: exactly one (band, bucket)
     exchange — the new batch aligning to the bucket layout.  A second
@@ -1130,17 +1132,18 @@ def test_incremental_minhash_corpus_side_reads_buckets(spark):
         _band_buckets,
         minhash_signatures,
     )
+    from fagi_gis_spark.sources.layers import read_bucketed
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    _fresh_minhash_index(spark, docs)
+    index = _fresh_minhash_index(docs, tmp_path)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         nb = _band_buckets(minhash_signatures(new), 16, 4)
         j = (
             nb.select("band", "bucket", F.col("doc_id").alias("doc_n"))
             .join(
-                spark.table("test_mh_idx_buckets").select(
+                read_bucketed(spark, f"{index}/buckets").select(
                     "band", "bucket", F.col("doc_id").alias("doc_c")
                 ),
                 ["band", "bucket"],
@@ -1164,7 +1167,7 @@ def test_incremental_minhash_corpus_side_reads_buckets(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
-def test_index_layout_mismatch_raises(spark):
+def test_index_layout_mismatch_raises(spark, tmp_path):
     """Querying a day-2 index with different banding parameters than it
     was built with must raise (a mismatched layout joins almost no
     corpus keys — silent recall loss), and re-ingested ids must not
@@ -1175,16 +1178,16 @@ def test_index_layout_mismatch_raises(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    _fresh_minhash_index(spark, docs)
+    index = _fresh_minhash_index(docs, tmp_path)
     with pytest.raises(ValueError, match="bands=16"):
         incremental_minhash_pairs(
-            minhash_signatures(docs.limit(20)), "test_mh_idx", bands=8, rows_per_band=8
+            minhash_signatures(docs.limit(20)), index, bands=8, rows_per_band=8
         ).collect()
     # re-ingesting ids the index already holds yields no self-pairs and
     # no pair twice (batch-internal and corpus echoes collapse)
     again = docs.filter((F.col("doc_id") % 5 != 0) & (F.col("doc_id") < 100))
     same = incremental_minhash_pairs(
-        minhash_signatures(again), "test_mh_idx", jaccard_threshold=0.35
+        minhash_signatures(again), index, jaccard_threshold=0.35
     ).persist()
     try:
         assert same.filter(F.col("doc_a") == F.col("doc_b")).count() == 0
@@ -1261,14 +1264,14 @@ def test_stratified_sample_partition_invariant(spark):
             assert kept.get(lang, 0) < n           # over-mean: downsampled
 
 
-def test_incremental_cosine_equals_full_batch(spark):
+def test_incremental_cosine_equals_full_batch(spark, tmp_path):
     """Embedding-cosine day-2 (the fourth incremental-dedup quadrant): a
     new batch against itself + the stored hyperplane-bucket index equals
     the full-batch cosine_near_dup_pairs(blocking='lsh') restricted to
     pairs touching a new vector, with bit-identical cos_sim — new-side
     multiprobe covers both probe directions (flip adjacency is
-    symmetric).  Layout comes from the index meta; mismatch impossible
-    by construction (no caller-supplied layout)."""
+    symmetric).  Layout comes from the index's layout.json; mismatch
+    impossible by construction (no caller-supplied layout)."""
     from fagi_gis_spark.functions.ann import (
         build_cosine_index,
         cosine_near_dup_pairs,
@@ -1278,13 +1281,13 @@ def test_incremental_cosine_equals_full_batch(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
     new = emb.filter(F.col("vec_id") % 5 == 0)
-    drop_tables(spark, "test_cs_idx_buckets", "test_cs_idx_vecs", "test_cs_idx_meta")
-    build_cosine_index(corpus, "test_cs_idx", bits_per_table=6)
+    index = str(tmp_path / "cs_idx")
+    build_cosine_index(corpus, index, bits_per_table=6)
 
     thr = 0.3  # synthetic embeddings: neighbor cos ~0.29-0.4
     got = {
         (r.id_a, r.id_b, round(r.cos_sim, 12), r.pair_type)
-        for r in incremental_cosine_pairs(new, "test_cs_idx", threshold=thr).collect()
+        for r in incremental_cosine_pairs(new, index, threshold=thr).collect()
     }
     full = cosine_near_dup_pairs(
         emb, threshold=thr, blocking="lsh", bits_per_table=6
@@ -1302,11 +1305,70 @@ def test_incremental_cosine_equals_full_batch(spark):
     assert got == want and len(got) > 0
     assert any(t == "new_corpus" for (_, _, _, t) in got)
     # re-ingesting ids already in the index emits no self-pairs
-    same = incremental_cosine_pairs(corpus.limit(20), "test_cs_idx", threshold=thr)
+    same = incremental_cosine_pairs(corpus.limit(20), index, threshold=thr)
     assert same.filter(F.col("id_a") == F.col("id_b")).count() == 0
     # the corpus side of the candidate join reads pre-bucketed storage
-    plan = incremental_cosine_pairs(new, "test_cs_idx", threshold=thr)._jdf.queryExecution().executedPlan().toString()
+    plan = incremental_cosine_pairs(new, index, threshold=thr)._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount" in plan
+
+
+def test_failed_index_build_leaves_nothing_and_next_call_rebuilds(
+    spark, tmp_path, monkeypatch
+):
+    """A day-2 index build that fails after writing a part leaves
+    nothing for that index under the layer-cache root, surfaces its own
+    error, and the next call rebuilds at once (no lock-out of the query
+    by the failed build's files)."""
+    from fagi_gis_spark.functions import dedup
+    from fagi_gis_spark.registry import queries
+    from fagi_gis_spark.sources.layers import write_bucketed
+
+    class BuildFailed(Exception):
+        pass
+
+    def broken(sigs, path, **kw):
+        write_bucketed(sigs.limit(1), os.path.join(path, "sigs"), ["doc_id"])
+        raise BuildFailed
+
+    root = tmp_path / "layer_cache"
+    monkeypatch.setenv("SPARK_GRAFT_LAYER_CACHE", str(root))
+    build = dedup.build_minhash_index
+    monkeypatch.setattr(dedup, "build_minhash_index", broken)
+    query = queries()["dedup_incremental_minhash"]
+    with pytest.raises(BuildFailed):
+        query(spark, SF)
+    assert os.listdir(root) == []
+    monkeypatch.setattr(dedup, "build_minhash_index", build)
+    assert len(query(spark, SF).collect()) > 0
+    assert [d.split("-")[0] for d in os.listdir(root)] == ["minhash_idx_sf0.001"]
+
+
+def test_day2_indexes_are_external_stored_tables(spark, tmp_path_factory):
+    """After the three day-2 queries run, every catalog table is an
+    external one over a stored directory under the layer-cache root or a
+    test's tmp dir: nothing is written to the session warehouse."""
+    from fagi_gis_spark import registry
+
+    for q in (
+        "dedup_incremental_minhash",
+        "dedup_incremental_cosine",
+        "image_shard_pack_incremental",
+    ):
+        assert registry.queries()[q](spark, SF).count() > 0
+    roots = (
+        os.path.dirname(registry._CORPUS.path),
+        str(tmp_path_factory.getbasetemp()),
+    )
+    tables = [t for t in spark.catalog.listTables() if not t.isTemporary]
+    assert tables
+    for t in tables:
+        assert t.tableType == "EXTERNAL", t
+        (loc,) = [
+            r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t.name}").collect()
+            if r.col_name == "Location"
+        ]
+        assert loc.removeprefix("file:").startswith(roots), (t.name, loc)
 
 
 def test_side_input_ships_through_spark_files(spark):
