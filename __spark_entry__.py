@@ -61,7 +61,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (see §8
-    coverage map; 133 queries / 107 DuckDB oracles as of round 5)."""
+    coverage map; 132 queries / 106 DuckDB oracles)."""
     from fagi_gis_spark import registry
 
     return registry.queries()

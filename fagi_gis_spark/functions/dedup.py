@@ -471,52 +471,23 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    block_col: str | None = None,
-    blocking: str = "minhash",
-    bands: int = 32,
-    rows_per_band: int = 2,
 ) -> DataFrame:
     """Exact word-token Jaccard between document pairs (verification is
     pure JVM column algebra over the token arrays).
 
-    Blocking (the scale lever — candidate generation must never approach
-    a cross join):
-
-    * ``block_col``       — caller-provided key column, used verbatim.
-    * ``blocking="minhash"`` (default) — candidates come from MinHash LSH
-      band buckets (ids only through the bucket join), then exact Jaccard
-      verifies each unique pair. Cross-length duplicates are found;
-      same-length non-duplicates do NOT collide. Candidate recall for a
-      true-Jaccard-j pair is 1-(1-j^rows)^bands (defaults: j=0.5 ->
-      0.99998) — document-level exactness on verified pairs, tunable
-      recall on candidate generation.
-    * ``blocking="lenband"`` — the closed-form token-count//8 band. Kept
-      because it is deterministic and DuckDB-expressible (the oracle
-      query); quadratic inside a band, so not the scale default.
+    Candidates come from the closed-form length band token-count//8, so
+    the candidate join is an equi-join, never a cross join, and the
+    blocking is deterministic and DuckDB-expressible (the oracle query
+    mirrors it).  It is quadratic inside a band and misses duplicates
+    whose token counts straddle a band edge; the corpus-scale near-dup
+    path is ``minhash_lsh_pairs``.
     """
     toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
     base = docs.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    base = base.withColumn("blk", F.floor(F.size("toks") / 8).cast("int"))
     inter = F.size(F.array_intersect("t_a", "t_b")).cast("double")
     union = F.size(F.array_union("t_a", "t_b")).cast("double")
     jac = F.when(union > 0, inter / union).otherwise(0.0)
-
-    if block_col is None and blocking == "minhash":
-        sigs = minhash_signatures(
-            docs, text_col=text_col, id_col=id_col, n_perm=bands * rows_per_band
-        ).persist()
-        cand = _bucket_candidates(_band_buckets(sigs, bands, rows_per_band))
-        t_a = base.select(F.col("id").alias("doc_a"), F.col("toks").alias("t_a"))
-        t_b = base.select(F.col("id").alias("doc_b"), F.col("toks").alias("t_b"))
-        return (
-            cand.join(t_a, "doc_a")
-            .join(t_b, "doc_b")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-
-    block = F.col(block_col) if block_col else F.floor(F.size("toks") / 8).cast("int")
-    base = base.withColumn("blk", block)
     l = base.select(F.col("blk"), F.col("id").alias("doc_a"), F.col("toks").alias("t_a"))
     r = base.select(F.col("blk"), F.col("id").alias("doc_b"), F.col("toks").alias("t_b"))
     return (
@@ -657,67 +628,6 @@ def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over the duplicate-pair graph — the step that
-    turns pairwise near-dup hits into dedup groups (component id = min
-    member id, the canonical survivor).
-
-    Distributed min-label propagation: every node starts labeled with its
-    own id; each round joins current labels across undirected edges and
-    keeps the per-node minimum; converged when a round changes nothing.
-    Rounds needed = graph diameter (duplicate clusters are shallow), each
-    round is one shuffle join + one aggregation; labels persist per round
-    so the fixpoint check does not re-execute the lineage. This is the
-    simple variant of the large-star/small-star map-reduce CC algorithm —
-    adequate because dedup components are small and shallow; for
-    adversarial diameters use ``connected_components_star`` (same output
-    contract, O(log n) rounds, oracle-verified in
-    ``dedup_components_star``)."""
-    # persist the input first: the undirected union reads the edge lineage
-    # twice (once per direction), and edge generation is usually the
-    # expensive part (a near-dup join)
-    edges = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).persist()
-    und = edges.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).distinct().persist()
-    labels = (
-        und.select(F.col("u").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    ).persist()
-
-    for _ in range(max_iter):
-        prop = (
-            und.join(labels, und.u == labels.id)
-            .select(F.col("v").alias("id"), F.col("lbl"))
-        )
-        new_labels = (
-            labels.select("id", "lbl")
-            .unionByName(prop)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-        ).persist()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    und.unpersist()
-    edges.unpersist()
-    return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("component_id"))
-
-
 def connected_components_star(
     edges: DataFrame,
     src_col: str = "doc_a",
@@ -725,12 +635,15 @@ def connected_components_star(
     max_iter: int = 50,
     return_rounds: bool = False,
 ) -> "DataFrame | tuple[DataFrame, int]":
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the diameter-robust escape hatch documented in
-    ``connected_components``: min-label propagation needs diameter
-    rounds (a 10k-node chain = 10k shuffles), star contraction
-    converges in O(log n) rounds on ANY topology.
+    """Connected components over the duplicate-pair graph, the step that
+    turns pairwise near-dup hits into dedup groups: one row
+    (doc_id, component_id = min member id, the canonical survivor) per
+    node that appears in an edge.
+
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) converges
+    in O(log n) rounds on ANY topology, where min-label propagation
+    would need diameter rounds (a 10k-node chain = 10k shuffles).
 
     large-star: every node u points its larger neighbors at
     m = min(neighbors(u) + {u}); small-star: every node points its
@@ -742,10 +655,7 @@ def connected_components_star(
     equal counts + an empty one-direction ``exceptAll`` proves set
     equality (a fingerprint collision alone can never terminate the
     loop early with wrong labels).  Each round's edges are
-    localCheckpoint-ed so the plan doesn't deepen (same per-round
-    materialization rule as the label-propagation variant).  Output
-    schema matches
-    ``connected_components``: (doc_id, component_id = min member);
+    localCheckpoint-ed so the plan doesn't deepen.
     ``return_rounds=True`` returns ``(labels, rounds)`` so callers and
     tests can assert the O(log n) round bound."""
     e = (

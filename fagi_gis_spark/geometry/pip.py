@@ -50,11 +50,11 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: Geom) -> np.ndarray:
 
 
 class PolygonIndex:
-    """Broadcast-friendly polygon set with a uniform-grid candidate index.
+    """Picklable polygon set with a uniform-grid candidate index.
 
     The polygon layer in this engine is the *small* join side (admin/tile
-    polygons): it is built once on the driver, broadcast to executors, and
-    probed per Arrow batch — the big point table never shuffles. This is
+    polygons): it is built once on the driver, shipped to executors in the
+    UDF closure, and probed per Arrow batch — the big point table never shuffles. This is
     the Spark-native replacement for the reference's server-side GiST index.
     """
 

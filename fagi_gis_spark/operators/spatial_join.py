@@ -23,9 +23,10 @@ Spark-first replacements:
                by every scheme: cells whose build-side count exceeds a
                threshold are split into ``N_SALT`` sub-keys; probe rows
                fan out only for hot cells.
-* PIP        -> polygon layer is the small side: built into a broadcast
-               grid index, probed per Arrow batch with vectorized ray
-               casting; the point table never shuffles.
+* PIP        -> polygon layer is the small side: built into a grid
+               index that ships in the UDF closure, probed per Arrow
+               batch with vectorized ray casting; the point table never
+               shuffles.
 """
 
 from __future__ import annotations
@@ -578,12 +579,11 @@ def knn_join(
     )
 
 
-def _broadcast_polygon_index(points: DataFrame, polygons_pdf: pd.DataFrame):
-    idx = PolygonIndex(
+def _polygon_index(polygons_pdf: pd.DataFrame) -> PolygonIndex:
+    return PolygonIndex(
         polygons_pdf["polygon_id"].tolist(),
         [parse_wkt(w) for w in polygons_pdf["geom_wkt"]],
     )
-    return points.sparkSession.sparkContext.broadcast(idx)
 
 
 def pip_join(
@@ -592,15 +592,16 @@ def pip_join(
     point_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
 ) -> DataFrame:
     """Point-in-polygon join. ``polygons_pdf`` (polygon_id, geom_wkt) is
-    the small dimension: parsed once, wrapped in a grid index, broadcast;
-    points are probed per Arrow batch (vectorized ray casting). Emits one
-    row per (point, containing polygon) — overlaps produce several rows.
+    the small dimension: parsed once on the driver, wrapped in a grid
+    index that ships in the UDF closure (``sideinput``'s rule for bounded
+    small side inputs); points are probed per Arrow batch (vectorized ray
+    casting) and never shuffle. Emits one row per (point, containing
+    polygon) — overlaps produce several rows.
     """
     pk, plon, plat = point_cols
-    bidx = _broadcast_polygon_index(points, polygons_pdf)
+    index = _polygon_index(polygons_pdf)
 
     def probe(batches):
-        index = bidx.value
         ids = np.asarray(index.ids, dtype=object)
         for pdf in batches:
             px = pdf["__lon"].to_numpy("float64")
@@ -625,7 +626,7 @@ def zonal_stats(
     polygon zone: point count + integer value sum/min/max), the engine's
     analog of PostGIS ``ST_Contains`` + GROUP BY over an admin layer.
 
-    Same broadcast-index shape as :func:`pip_join`, but the Arrow batch
+    Same closure-shipped index as :func:`pip_join`, but the Arrow batch
     emits PER-BATCH PARTIAL aggregates (one row per polygon touched by
     the batch) instead of one row per contained point — the shuffle is
     bounded by #polygons x #batches no matter how many points fall in a
@@ -638,10 +639,9 @@ def zonal_stats(
     zone drop out, overlapping zones each aggregate the point.
     """
     pk, plon, plat = point_cols
-    bidx = _broadcast_polygon_index(points, polygons_pdf)
+    index = _polygon_index(polygons_pdf)
 
     def probe(batches):
-        index = bidx.value
         ids = np.asarray(index.ids, dtype=object)
         for pdf in batches:
             px = pdf["__lon"].to_numpy("float64")

@@ -64,12 +64,13 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
         ),
         input_fingerprint(base_fp, "conflate"),
     )
+    fuse_fp = input_fingerprint(base_fp, "fuse", cfg.transformation, repr(cfg.params))
     fused = run_stage(
         spark, cfg.out_dir, "fuse",
         lambda: fuse_all(
             links.select("node_a", "node_b"), poi_a, poi_b, cfg.transformation, cfg.params
         ),
-        input_fingerprint(base_fp, "fuse", cfg.transformation),
+        fuse_fp,
     )
     tiled = run_stage(
         spark, cfg.out_dir, "tiles",
@@ -85,7 +86,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
                 "inner",
             )
         ),
-        input_fingerprint(base_fp, "tiles"),
+        input_fingerprint(fuse_fp, "tiles"),
         partition_by=["z"],
     )
     return {"poi_a": poi_a, "poi_b": poi_b, "links": links, "fused": fused, "tiles": tiled}

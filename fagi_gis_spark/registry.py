@@ -91,7 +91,6 @@ _GATE_DEMOTED = [
     "s2_rollup",
     "user_filter_links", "metadata_keep_both", "metadata_keep_concat_a",
     "events_windowed_agg", "knn_conflation",
-    "dedup_components",
     "hex_cells",
     "late_fetch_metadata",
     "fuse_avg_points",
@@ -1079,10 +1078,8 @@ def dedup_exact(spark, sf_dir):
 def dedup_ngram_jaccard(spark, sf_dir):
     from fagi_gis_spark.functions.dedup import ngram_jaccard_pairs
 
-    # lenband = the DuckDB-expressible closed-form blocking (the oracle
-    # mirrors it exactly); the engine default is blocking="minhash", which
-    # also finds cross-band duplicates (tests/test_dedup.py differential)
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5, blocking="lenband")
+    # the length-band blocking is closed-form, so the oracle mirrors it
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
 def _minhash_oracle(cand_pred: str = "", extra_cols: str = "") -> str:
@@ -4130,34 +4127,21 @@ _COMPONENTS_ORACLE = (
 )
 
 
-@register("dedup_components", _COMPONENTS_ORACLE)
-def dedup_components(spark, sf_dir):
-    """Duplicate-component clustering: pairwise near-dup hits -> dedup
-    groups via distributed min-label propagation
-    (functions.dedup.connected_components). Edges are the oracle-exact
-    lenband ngram-Jaccard pairs; the DuckDB oracle computes the same
-    components closed-form with a recursive transitive-closure CTE, so
-    the propagation loop (joins + min-agg per round, persist + fixpoint
-    check) is verified end-to-end, multi-hop chains included."""
-    from fagi_gis_spark.functions.dedup import connected_components, ngram_jaccard_pairs
-
-    edges = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5, blocking="lenband")
-    return connected_components(edges)
-
-
 @register("dedup_components_star", _COMPONENTS_ORACLE)
 def dedup_components_star(spark, sf_dir):
-    """Same dedup components via large-star/small-star contraction
-    (functions.dedup.connected_components_star, the O(log n)-round
-    diameter-robust variant) against the SAME recursive-CTE oracle —
-    the two CC physical strategies are output-identical through the
-    driver gate, mirroring the three-strategy J5 equivalence."""
+    """Duplicate-component clustering: pairwise near-dup hits -> dedup
+    groups via large-star/small-star contraction
+    (functions.dedup.connected_components_star, O(log n) rounds on any
+    topology). Edges are the oracle-exact lenband ngram-Jaccard pairs;
+    the DuckDB oracle computes the same components closed-form with a
+    recursive transitive-closure CTE, so the contraction loop is
+    verified end-to-end, multi-hop chains included."""
     from fagi_gis_spark.functions.dedup import (
         connected_components_star,
         ngram_jaccard_pairs,
     )
 
-    edges = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5, blocking="lenband")
+    edges = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
     return connected_components_star(edges)
 
 
@@ -4221,10 +4205,8 @@ def clean_corpus(spark, sf_dir):
 
     At 100 TB every stage is a shuffle-bounded DataFrame op: no stage
     collects, the CC loop is O(log n) rounds on ANY topology (star
-    contraction — label propagation needs diameter rounds; both
-    variants are output-identical and individually oracle-gated, this
-    pipeline uses the scale one), and the quality/token gates push
-    down to the scan of the kept columns."""
+    contraction), and the quality/token gates push down to the scan of
+    the kept columns."""
     from fagi_gis_spark.functions.dedup import (
         connected_components_star,
         dedup_survivors,
@@ -4234,9 +4216,7 @@ def clean_corpus(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     kept = quality_score(docs).filter(F.col("quality") >= 70)
-    edges = ngram_jaccard_pairs(
-        kept.select("doc_id", "text"), threshold=0.5, blocking="lenband"
-    )
+    edges = ngram_jaccard_pairs(kept.select("doc_id", "text"), threshold=0.5)
     survivors = dedup_survivors(kept, connected_components_star(edges))
     return survivors.filter(F.col("n_tokens") <= 80).select("doc_id", "n_tokens", "quality")
 

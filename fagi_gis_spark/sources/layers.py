@@ -223,7 +223,7 @@ OVERLAP_SQUARES = [  # (polygon_id, center_x, center_y, half_size)
 
 
 def admin_polygons_pdf():
-    """The small polygon dimension as pandas (driver-side, broadcastable)."""
+    """The small polygon dimension as pandas (driver-side)."""
     import pandas as pd
 
     rows = []

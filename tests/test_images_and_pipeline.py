@@ -241,6 +241,34 @@ def test_pipeline_lineage_and_resume(spark, tmp_path):
     assert lin.groupBy().sum("n_rows").collect()[0][0] == n_fused
 
 
+def test_pipeline_reruns_fuse_and_tiles_when_fusion_params_change(spark, tmp_path):
+    """A different ``shift_pct`` into the same out_dir must re-run the
+    stages it feeds (fuse, tiles) and resume the ones it does not."""
+    from fagi_gis_spark.operators.fusion import FusionParams
+    from fagi_gis_spark.pipeline.lineage import manifest_of
+    from fagi_gis_spark.pipeline.runner import PipelineConfig, run_pipeline
+
+    out = str(tmp_path / "run")
+    stages = ("ingest_a", "ingest_b", "conflate", "fuse", "tiles")
+
+    def run(shift_pct):
+        cfg = PipelineConfig(
+            sf_dir="/root/testdata/sf0.001", out_dir=out, transformation="shift_a_to_b",
+            params=FusionParams(shift_pct=shift_pct),
+        )
+        run_pipeline(spark, cfg)
+        return {s: manifest_of(out, s) for s in stages}
+
+    m25 = run(25.0)
+    m75 = run(75.0)
+    for s in ("ingest_a", "ingest_b", "conflate"):
+        assert m75[s]["committed_at"] == m25[s]["committed_at"], f"stage {s} re-ran"
+    for s in ("fuse", "tiles"):
+        assert m75[s]["committed_at"] != m25[s]["committed_at"], f"stage {s} resumed"
+    assert m75["fuse"]["rows"] == m25["fuse"]["rows"]
+    assert m75["fuse"]["checksum"] != m25["fuse"]["checksum"]
+
+
 def test_tile_partitioned_write(spark, tmp_path):
     from fagi_gis_spark.operators.tiling import assign_tiles, write_tiles
     from fagi_gis_spark.registry import layers

@@ -149,3 +149,17 @@ def test_no_def_is_reached_only_from_tests():
     )
     stale = sorted(k for k in KEEP if not any(fnmatch.fnmatchcase(q, k) for q in found))
     assert not stale, f"keep-list entries that match no unreached name: {stale}"
+
+
+def test_no_spark_broadcast_variables():
+    """Driver-built side inputs ship through ``sideinput`` (large arrays)
+    or the UDF closure (small ones).  A ``sparkContext.broadcast`` value
+    outlives the query that made it unless someone destroys it, and
+    nothing in the package does."""
+    hits = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p in sorted(PKG.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "sparkContext.broadcast(" in line
+    ]
+    assert not hits, f"explicit Spark broadcast variables: {hits}"

@@ -199,33 +199,6 @@ def test_radius_join_antimeridian_and_polar(spark, scheme):
     assert got_pairs == expect
 
 
-def test_ngram_jaccard_minhash_blocking_finds_cross_band_pairs(spark):
-    """The default (MinHash-bucket) blocking must find duplicate pairs
-    whose token counts straddle a length band — pairs the closed-form
-    lenband blocking structurally misses — and find at least every pair
-    lenband finds."""
-    from fagi_gis_spark.functions.dedup import ngram_jaccard_pairs
-
-    base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike november oscar"
-    docs = [
-        (1, base),                                  # 15 tokens -> band 1
-        (2, base + " papa quebec"),                 # 17 tokens -> band 2 (cross-band dup)
-        (3, base + " papa"),                        # 16 tokens -> band 2
-        (4, "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa oscar nov mike lima"),
-        (5, "one two three"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    lenband = ngram_jaccard_pairs(df, threshold=0.5, blocking="lenband").toPandas()
-    bucketed = ngram_jaccard_pairs(df, threshold=0.5, blocking="minhash").toPandas()
-    lb = {(a, b) for a, b, _ in lenband.itertuples(index=False)}
-    mk = {(a, b) for a, b, _ in bucketed.itertuples(index=False)}
-
-    assert (1, 2) not in lb          # cross-band: lenband structurally blind
-    assert (1, 2) in mk              # minhash blocking finds it
-    assert lb <= mk                  # and misses nothing lenband found
-
-
 def test_owl_class_triples(spark):
     """OWL class insertion (FuseLinkServlet.java:225-270): one typing
     triple per accepted row, one owl:Class + rdfs:label pair per distinct
@@ -270,9 +243,9 @@ def test_broadcast_pois_uses_broadcast_join_and_matches(spark):
 
 
 def test_connected_components_chains_cycles_isolated(spark):
-    """Min-label propagation must handle multi-hop chains, cycles and
+    """Connected components must handle multi-hop chains, cycles and
     separate components; survivors keep exactly one doc per component."""
-    from fagi_gis_spark.functions.dedup import connected_components, dedup_survivors
+    from fagi_gis_spark.functions.dedup import connected_components_star, dedup_survivors
 
     edges = spark.createDataFrame(
         [
@@ -282,7 +255,7 @@ def test_connected_components_chains_cycles_isolated(spark):
         ],
         "doc_a long, doc_b long",
     )
-    comp = connected_components(edges).toPandas()
+    comp = connected_components_star(edges).toPandas()
     got = dict(zip(comp.doc_id, comp.component_id))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
@@ -290,20 +263,16 @@ def test_connected_components_chains_cycles_isolated(spark):
         [(i, f"d{i}") for i in [1, 2, 3, 4, 5, 10, 11, 12, 20, 21, 99]],
         "doc_id long, text string",
     )
-    kept = dedup_survivors(docs, connected_components(edges)).toPandas()
+    kept = dedup_survivors(docs, connected_components_star(edges)).toPandas()
     assert sorted(kept.doc_id) == [1, 10, 20, 99]  # min per comp + untouched 99
 
 
 def test_connected_components_star_contraction(spark):
-    """Star contraction (large-star/small-star) is the diameter-robust
-    CC variant: a 10k-node path graph — the adversarial topology where
-    min-label propagation needs 10k rounds — converges in O(log n)
-    rounds with the correct single component, and on a mixed
-    chain/cycle/pair graph it matches label propagation exactly."""
-    from fagi_gis_spark.functions.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Star contraction (large-star/small-star) is diameter-robust: a
+    10k-node path graph — the adversarial topology where min-label
+    propagation needs 10k rounds — converges in O(log n) rounds with
+    the correct single component."""
+    from fagi_gis_spark.functions.dedup import connected_components_star
 
     n = 10_000
     path = spark.range(n - 1).selectExpr("id AS doc_a", "id + 1 AS doc_b")
@@ -314,16 +283,6 @@ def test_connected_components_star_contraction(spark):
     # diameter 10k, rounds logarithmic (log2(10k) ~ 13.3; alternating
     # stars need a small multiple of that)
     assert rounds <= 30, f"star contraction took {rounds} rounds"
-
-    mixed = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    star = connected_components_star(mixed).toPandas()
-    prop = connected_components(mixed).toPandas()
-    assert dict(zip(star.doc_id, star.component_id)) == dict(
-        zip(prop.doc_id, prop.component_id)
-    )
 
 
 def test_knn_adaptive_equals_bruteforce(spark):

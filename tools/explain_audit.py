@@ -28,7 +28,7 @@ AUDIT = [
     ("fuse_keep_a", "Keep-A fusion (links ⋈ A, J1)"),
     ("fuse_most_points", "most-points fusion (JVM CASE over layer-level summaries)"),
     ("tile_assign", "WebMercator tile assignment (pure column math)"),
-    ("pip_assign", "point-in-polygon join (broadcast index, mapInPandas)"),
+    ("pip_assign", "point-in-polygon join (closure-shipped index, mapInPandas)"),
     ("dedup_exact", "exact dedup (partial agg -> exchange -> final agg)"),
     ("ann_cosine_topk", "exact ANN (SparkFiles reference side input, one mapInPandas query scan)"),
     ("dedup_embedding_cosine", "embedding near-dup pairs (same blocked cogroup kernel)"),
@@ -54,7 +54,7 @@ AUDIT = [
     ("events_cell_trend", "Mann-Kendall trend (calendar-bounded per-cell pairwise join)"),
     ("events_stay_points", "stay points (sessionize window shape, one user_id shuffle)"),
     ("doc_pii_scrub", "PII redaction (pure JVM regexp, one scan, no shuffle)"),
-    ("zonal_stats", "zonal statistics (broadcast PIP, per-Arrow-batch partial combine)"),
+    ("zonal_stats", "zonal statistics (closure-shipped PIP index, per-Arrow-batch partial combine)"),
     ("ripleys_k", "Ripley's K (one salted self-join, per-radius conditional counts)"),
     ("events_local_morans_i", "Local Moran's I (neighbor equi-join + broadcast moments)"),
     ("kde_sites_150m", "quartic KDE at sites (radius-join pair stream + int-quantized agg)"),
