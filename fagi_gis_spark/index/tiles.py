@@ -146,26 +146,6 @@ def pack_cell_zxy(z: int, x: int, y: int) -> int:
     return z * _Z_MULT + x * _X_MULT + y
 
 
-def parent_cell_col(cell: Column, z_from: int, z_to: int) -> Column:
-    """Ancestor tile id at ``z_to`` for a cell id packed at ``z_from``
-    (z_to <= z_from), as pure JVM column arithmetic — quadtree nesting
-    makes the rollup EXACT: x' = x >> d, y' = y >> d.  Lets consumers
-    (e.g. per-round skew detection in ``knn_join_adaptive``) derive
-    coarser-resolution cell counts from one finest-resolution counts
-    pass instead of re-scanning the layer per resolution."""
-    if z_to > z_from:
-        raise ValueError(f"parent z {z_to} must be <= child z {z_from}")
-    d = z_from - z_to
-    rem = cell - F.lit(z_from * _Z_MULT).cast("long")
-    x = F.shiftright(rem, 27)
-    y = rem.bitwiseAND(F.lit(_X_MULT - 1).cast("long"))
-    return (
-        F.lit(z_to * _Z_MULT).cast("long")
-        + F.shiftright(x, d) * F.lit(_X_MULT).cast("long")
-        + F.shiftright(y, d)
-    )
-
-
 def cell_id_np(lon: np.ndarray, lat: np.ndarray, z: int) -> np.ndarray:
     x, y = tile_xy_np(lon, lat, z)
     return z * _Z_MULT + x * _X_MULT + y

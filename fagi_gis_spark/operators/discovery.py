@@ -50,7 +50,6 @@ def discover_links(
     mode: str = "exact",
     accept: float = JACCARD_ACCEPT_BATCH,
     bbox: tuple[float, float, float, float] | None = None,
-    salt_threshold: int | None = None,
 ) -> DataFrame:
     """D1-D6 as one pipeline. Returns
     (node_a, node_b, dist_m, jaccard) for accepted candidate links."""
@@ -65,9 +64,7 @@ def discover_links(
     # freq window below shuffle these rows, and the four coordinate
     # doubles (32 B/row over ~10M candidates at sf1.0) are never read
     # again (guide §2.3 — project before the exchange).
-    cand = radius_join(a, b, radius_m, salt_threshold=salt_threshold).select(
-        "l_key", "r_key", "dist_m"
-    )
+    cand = radius_join(a, b, radius_m).select("l_key", "r_key", "dist_m")
 
     # candidate literals (B side), literal-shape filtered.  In exact
     # mode each side's tokens are computed HERE, once per subject, not

@@ -20,9 +20,11 @@ Spark-first replacements:
                cross-face neighborhood, index/s2.py).  All three are
                output-identical, so the scheme is purely a cost choice.
 * skew       -> explicit salted hot-cell splitting (north rule), shared
-               by every scheme: cells whose build-side count exceeds a
-               threshold are split into ``N_SALT`` sub-keys; probe rows
-               fan out only for hot cells.
+               by every scheme: build cells holding more than
+               max(256, 8 x mean) rows split into ``N_SALT`` sub-keys;
+               probe rows fan out only for hot cells.  The hot set is
+               detected once per build layer and cell space
+               (``_hot_cells``) and memoized for the session.
 * PIP        -> polygon layer is the small side: built into a grid
                index that ships in the UDF closure, probed per Arrow
                batch with vectorized ray casting; the point table never
@@ -47,14 +49,8 @@ from fagi_gis_spark.geometry.wkt import parse_wkt
 from fagi_gis_spark.index import hexgrid
 from fagi_gis_spark.index.s2 import K_MIN_WIDTH_RAD
 from fagi_gis_spark.index.s2 import MAX_LEVEL as S2_MAX_LEVEL
-from fagi_gis_spark.index.tiles import (
-    _X_MULT,
-    _Z_MULT,
-    cell_id_col,
-    parent_cell_col,
-    tile_x_col,
-    tile_y_col,
-)
+from fagi_gis_spark.index.tiles import _X_MULT, _Z_MULT, cell_id_col, tile_x_col, tile_y_col
+from fagi_gis_spark.session import session_memo
 
 #: sub-keys per hot cell in the salted join
 N_SALT = 8
@@ -344,23 +340,19 @@ def radius_join(
     res: int | str | None = None,
     left_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
     right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    salt_threshold: int | str | None = "auto",
-    hot_cells: "DataFrame | None | str" = "detect",
 ) -> DataFrame:
     """J5 as one distributed join. Output: left keys + right keys + dist_m
     (planar degree distance x 111195 — identical numbers to the reference).
 
     ``cells`` picks the cell space (TILE / HEX / S2) and ``res`` its
     resolution (default: the scheme's completeness bound for
-    ``radius_m``; see ``CellScheme``).  ``salt_threshold`` and
-    ``hot_cells`` steer the shared hot-cell salting — see
-    ``_salted_cell_join``."""
+    ``radius_m``; see ``CellScheme``).  Hot build cells are salted by
+    the one rule in ``_hot_cells`` — see ``_salted_cell_join``."""
     r = _keyed(right, right_cols, "r")
     res = cells.resolve(radius_m, res, r)
     r = r.withColumn("cell", cells.build_cell(F.col("r_lon"), F.col("r_lat"), res))
     l = cells.explode_probe(_keyed(left, left_cols, "l"), res, radius_m)
-    joined = _salted_cell_join(l, r, salt_threshold, hot_cells)
-    return _refine_and_select(joined, radius_m)
+    return _refine_and_select(_salted_cell_join(l, r), radius_m)
 
 
 def radius_join_bucketed(
@@ -387,77 +379,31 @@ def radius_join_bucketed(
     return _refine_and_select(joined, radius_m)
 
 
-def cell_counts(build: DataFrame) -> DataFrame:
-    """One MATERIALIZED (cell, count) pass over a cell-keyed build
-    frame — the input to skew detection.  Eager ``localCheckpoint`` so
-    every consumer (threshold agg, hot filter, per-round rollups)
-    reuses the single scan instead of re-running it."""
-    return build.groupBy("cell").count().localCheckpoint()
+def _hot_cells(r: DataFrame) -> tuple[int, ...]:
+    """The one hot-cell rule: the ids of the build cells holding more than
+    max(256, 8 x mean) rows of ``r``, the keyed build side tagged with its
+    ``cell``; empty when the layer is uniform.
 
+    A uniform layer costs one action over ``groupBy(cell).count()``; a
+    skewed one costs a second to collect the ids.  Nothing is persisted.  The ids
+    are memoized for the session under ``r``'s semantic plan hash, which
+    covers the scan, the cell scheme and the resolution, so every later
+    join over the same build layer and cell space reads them without a
+    job.  Salting only steers placement: a stale entry or a hash
+    collision can change where rows go, never which rows come out."""
 
-def hot_cells_from_counts(
-    counts: DataFrame, salt_threshold: int | str = "auto"
-) -> DataFrame | None:
-    """Derive the hot-cell set from a PRECOMPUTED (cell, count) frame
-    (``cell_counts`` output, or a rollup of one).  ``"auto"`` uses the
-    max(256, 8x mean) rule; an int is an explicit row-count threshold.
-    Returns ``None`` for an empty hot set — the adaptive short-circuit:
-    on uniform data the whole salting apparatus is pure overhead, so
-    callers fall back to the plain cell join."""
-    if salt_threshold == "auto":
-        # uniform data pays one cheap aggregation and zero fan-out,
-        # skewed data is protected without tuning
-        thr_df = counts.agg(
-            F.greatest(F.lit(256.0), F.avg("count") * F.lit(8.0)).alias("__thr")
-        )
-        hot = (
-            counts.join(F.broadcast(thr_df))
-            .filter(F.col("count") > F.col("__thr"))
-            .select("cell", F.lit(True).alias("__hot"))
-        )
-    else:
-        hot = counts.filter(F.col("count") > salt_threshold).select(
-            "cell", F.lit(True).alias("__hot")
-        )
-    if hot.isEmpty():
-        return None
-    return hot
+    def detect() -> tuple[int, ...]:
+        counts = r.groupBy("cell").count()
+        stats = counts.agg(F.avg("count").alias("mean"), F.max("count").alias("top")).first()
+        if stats.top is None:
+            return ()
+        thr = max(256.0, 8.0 * stats.mean)
+        if stats.top <= thr:
+            return ()
+        hot = counts.filter((F.col("count") > thr) & F.col("cell").isNotNull()).select("cell")
+        return tuple(sorted(row.cell for row in hot.collect()))
 
-
-def detect_hot_cells(
-    build: DataFrame, salt_threshold: int | str | None = "auto"
-) -> DataFrame | None:
-    """Skew detection for a cell-keyed build frame: counts pass +
-    threshold rule.  Public so a SUITE (or a real pipeline) can detect
-    skew ONCE per (layer, cell space) and hand the result to every join
-    that shares the build side via ``hot_cells=...`` — instead of each
-    join re-running its own detection scan."""
-    if salt_threshold is None:
-        return None
-    return hot_cells_from_counts(cell_counts(build), salt_threshold)
-
-
-def build_hot_cells(
-    right: DataFrame,
-    radius_m: float,
-    cells: CellScheme = TILE,
-    right_cols: tuple[str, str, str] = ("subject", "lon", "lat"),
-    salt_threshold: int | str | None = "auto",
-    res: int | str | None = None,
-) -> DataFrame | None:
-    """The hot-cell skew-detection pass for a build layer in ``cells``'
-    cell space, at the SAME resolution ``radius_join`` would pick —
-    the shareable precomputation for its ``hot_cells=`` argument.  A
-    suite or pipeline running several radius joins / kNN queries
-    against one layer calls this once per scheme and passes the result
-    everywhere.  Returns ``None`` when the layer is uniform (empty hot
-    set)."""
-    r = _keyed(right, right_cols, "r")
-    res = cells.resolve(radius_m, res, r)
-    return detect_hot_cells(
-        r.select(cells.build_cell(F.col("r_lon"), F.col("r_lat"), res).alias("cell")),
-        salt_threshold,
-    )
+    return session_memo(r.sparkSession, ("hot_cells", r.semanticHash()), detect)
 
 
 def _prefer_build_side(r: DataFrame) -> DataFrame:
@@ -486,49 +432,21 @@ def _prefer_build_side(r: DataFrame) -> DataFrame:
     return r.hint("shuffle_hash")
 
 
-def _salted_cell_join(
-    l: DataFrame,
-    r: DataFrame,
-    salt_threshold: int | str | None,
-    hot_cells: "DataFrame | None | str" = "detect",
-) -> DataFrame:
+def _salted_cell_join(l: DataFrame, r: DataFrame) -> DataFrame:
     """Hot-cell salting for the cell-equi-join step of every scheme:
     ``l`` is the probe side already exploded to its candidate ``cell``
     ids, ``r`` the build side keyed by its single ``cell``.
 
-    Build-side cells above the threshold split into ``N_SALT`` sub-keys;
-    probe rows replicate only for those hot cells.  ``"auto"`` derives
-    the threshold (max(256, 8x mean)) from one materialized cell-count
-    pass; an empty hot set short-circuits to the plain cell join.  An
-    int is an explicit row-count threshold; ``None`` disables salting
-    (AQE skew-join remains the only protection).
-
-    ``hot_cells`` overrides detection: the default sentinel
-    ``"detect"`` runs ``detect_hot_cells`` here; a precomputed hot-cell
-    DataFrame (``(cell, __hot)``, e.g. from ``build_hot_cells``) or an
-    explicit ``None`` (caller already knows the data is uniform) skips
-    the counts pass entirely.  Salting never changes OUTPUT — only
-    placement — so a stale or approximate hot set degrades performance,
-    never correctness.
-
-    The counts pass is an eager ``localCheckpoint``: two Spark jobs run
-    at DataFrame-CONSTRUCTION time, and its blocks are unreplicated, so
-    an executor loss after materialization means resubmitting the query.
-    Accepted tradeoff: without it every downstream branch re-runs the
-    build-side scan (measured ~40% steady-state overhead at sf0.1).
-    Pass ``salt_threshold=None`` for a fully lazy plan."""
-    if isinstance(hot_cells, str):
-        if hot_cells != "detect":
-            raise ValueError(
-                f"hot_cells must be 'detect', None, or a (cell, __hot) "
-                f"DataFrame, got {hot_cells!r}"
-            )
-        hot = detect_hot_cells(r, salt_threshold)
-    else:
-        hot = hot_cells
-
-    if hot is None:
+    Build cells in ``_hot_cells(r)`` split into ``N_SALT`` sub-keys by
+    a hash of the build key; probe rows replicate only for those cells.
+    An empty hot set gives the plain cell join.  Salting never changes
+    OUTPUT, only placement."""
+    hot_ids = _hot_cells(r)
+    if not hot_ids:
         return l.join(_prefer_build_side(r), ["cell"], "inner")
+    hot = r.sparkSession.createDataFrame(
+        [(c, True) for c in hot_ids], "cell long, __hot boolean"
+    )
     r = (
         r.join(F.broadcast(hot), "cell", "left")
         .withColumn(
@@ -723,32 +641,14 @@ def knn_join_adaptive(
     ``knn_exhausted = true`` so callers can distinguish a genuine < k
     neighborhood bound from an exhausted search radius.
 
-    Each round's inner ``knn_join`` inherits ``**kwargs`` — including
-    the default-on auto salting.  For ``TILE`` (the default) the build
-    side is SCANNED FOR SKEW ONCE: cell counts materialize at round 0's
-    (finest) z, and every later round derives its counts by an exact
-    quadtree parent rollup over that tiny table (``parent_cell_col``),
-    so doubling the radius never re-reads the layer.  HEX/S2 ancestors
-    don't make this rollup exact, so they keep per-round detection.
+    Each round's inner ``knn_join`` inherits ``**kwargs``.  Its hot-cell
+    detection runs once per round resolution and build layer in a
+    session (``_hot_cells``); later calls read the memo.
     """
     if max_doublings < 1:
         raise ValueError("knn_join_adaptive requires max_doublings >= 1")
     lk = left_cols[0]
 
-    # One skew scan for all rounds (TILE): counts at the finest z, rolled
-    # up per round.  Only when the caller didn't already fix the
-    # resolution or supply a hot set themselves.
-    reuse_counts = (
-        kwargs.get("cells", TILE) is TILE
-        and kwargs.get("salt_threshold", "auto") is not None
-        and "hot_cells" not in kwargs
-        and "res" not in kwargs
-    )
-    z0 = join_res_for_radius(init_radius_m)
-    if reuse_counts:
-        _, rlon, rlat = right_cols
-        cell0 = cell_id_col(F.col(rlon), F.col(rlat), z0)
-        base_counts = cell_counts(right.select(cell0.alias("cell")))
     # localCheckpoint (eager) truncates lineage every round: the frontier
     # would otherwise accumulate one anti-join + one knn plan per round
     # and Catalyst re-optimizes the whole stack each iteration
@@ -757,23 +657,9 @@ def knn_join_adaptive(
     radius = init_radius_m
     last = None
     for _ in range(max_doublings):
-        round_kwargs = kwargs
-        if reuse_counts:
-            z_i = join_res_for_radius(radius)
-            counts_i = base_counts
-            if z_i != z0:
-                counts_i = base_counts.groupBy(
-                    parent_cell_col(F.col("cell"), z0, z_i).alias("cell")
-                ).agg(F.sum("count").alias("count"))
-            round_kwargs = dict(
-                kwargs,
-                hot_cells=hot_cells_from_counts(
-                    counts_i, kwargs.get("salt_threshold", "auto")
-                ),
-            )
         cand = knn_join(
             remaining, right, k, radius, left_cols=left_cols,
-            right_cols=right_cols, **round_kwargs
+            right_cols=right_cols, **kwargs
         ).localCheckpoint()
         last = cand
         # complete iff the k-th neighbor exists within this radius

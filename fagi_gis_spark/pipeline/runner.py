@@ -34,12 +34,11 @@ class PipelineConfig:
     transformation: str = "keep_a"
     radius_m: float = 150.0
     params: FusionParams = field(default_factory=FusionParams)
-    salt_threshold: int | str | None = "auto"
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFrame]:
     os.makedirs(cfg.out_dir, exist_ok=True)
-    base_fp = input_fingerprint(cfg.sf_dir, cfg.transformation, str(cfg.radius_m))
+    base_fp = input_fingerprint(cfg.sf_dir, str(cfg.radius_m))
 
     L = spark_layers(spark, cfg.sf_dir)
 
@@ -55,9 +54,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
     )
     links = run_stage(
         spark, cfg.out_dir, "conflate",
-        lambda: radius_join(
-            poi_a, poi_b, cfg.radius_m, salt_threshold=cfg.salt_threshold
-        ).select(
+        lambda: radius_join(poi_a, poi_b, cfg.radius_m).select(
             F.col("l_key").alias("node_a"),
             F.col("r_key").alias("node_b"),
             "dist_m", "l_lon", "l_lat",
@@ -103,11 +100,6 @@ def main():  # CLI-equivalent entry (reference §3.1: java -jar fagi-gis -c fusi
     ap.add_argument("--transformation", default="keep_a")
     ap.add_argument("--radius-m", type=float, default=150.0)
     ap.add_argument("--shift-pct", type=float, default=25.0)
-    def _salt(v: str):
-        return None if v == "none" else v if v == "auto" else int(v)
-
-    ap.add_argument("--salt-threshold", type=_salt, default="auto",
-                    help="'auto' (count-based), 'none', or an integer row threshold")
     ap.add_argument("--cores", default=None)
     args = ap.parse_args()
 
@@ -118,7 +110,6 @@ def main():  # CLI-equivalent entry (reference §3.1: java -jar fagi-gis -c fusi
         transformation=args.transformation,
         radius_m=args.radius_m,
         params=FusionParams(shift_pct=args.shift_pct),
-        salt_threshold=args.salt_threshold,
     )
     result = run_pipeline(spark, cfg)
     for stage, df in result.items():

@@ -37,10 +37,8 @@ from fagi_gis_spark.operators.spatial_join import (
     S2,
     TILE,
     CellScheme,
-    build_hot_cells,
     radius_join,
 )
-from fagi_gis_spark.session import session_memo
 from fagi_gis_spark.sources.layers import (
     StoredTable,
     admin_assign_oracle_sql,
@@ -138,30 +136,6 @@ def layers(spark: SparkSession, sf_dir: str):
     invocation.  Deterministic content; a cache hit cannot change any
     query's output."""
     return materialized_layers(spark, sf_dir)
-
-
-# One skew-detection pass per (session, dataset, cell scheme) for the
-# whole suite: without it each J5 query re-runs its own hot-cell counts
-# scan over the same build layer ON EVERY invocation (bench repeats each
-# query 5x).  Salting only steers placement — a cached hot set can never
-# change output — so the memo is pure amortization
-# (spatial_join.build_hot_cells).
-def _hot_for(
-    spark,
-    sf_dir: str,
-    cells: CellScheme,
-    build: DataFrame,
-    radius_m: float,
-    layer: str = "poi_b",
-):
-    # ``layer`` names the build side in the key — two queries sharing a
-    # (scheme, radius) but building on different layers must not read
-    # each other's hot sets
-    return session_memo(
-        spark,
-        ("hot_cells", sf_dir, cells.name, radius_m, layer),
-        lambda: build_hot_cells(build, radius_m, cells=cells),
-    )
 
 
 def _o(select: str) -> str:
@@ -499,10 +473,7 @@ _RADIUS_150M_ORACLE = _o(
 
 def _radius_join_150m(spark, sf_dir, cells: CellScheme):
     L = layers(spark, sf_dir)
-    out = radius_join(
-        L["poi_a"], L["poi_b"], 150.0, cells=cells,
-        hot_cells=_hot_for(spark, sf_dir, cells, L["poi_b"], 150.0),
-    )
+    out = radius_join(L["poi_a"], L["poi_b"], 150.0, cells=cells)
     return out.select(
         F.col("l_key").alias("node_a"),
         F.col("r_key").alias("node_b"),
@@ -549,10 +520,7 @@ def knn_conflation(spark, sf_dir):
     from fagi_gis_spark.operators.spatial_join import knn_join
 
     L = layers(spark, sf_dir)
-    out = knn_join(
-        L["poi_a"], L["poi_b"], k=3, radius_m=300.0,
-        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], 300.0),
-    )
+    out = knn_join(L["poi_a"], L["poi_b"], k=3, radius_m=300.0)
     return out.select(
         F.col("l_key").alias("node_a"),
         F.col("r_key").alias("node_b"),
@@ -2343,13 +2311,7 @@ def image_exif_poi_join(spark, sf_dir):
         (F.col("lat_microdeg") / F.lit(1e6)).alias("lat"),
     )
     L = layers(spark, sf_dir)
-    out = radius_join(
-        probe,
-        L["poi_a"],
-        1500.0,
-        left_cols=("image_id", "lon", "lat"),
-        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_a"], 1500.0, layer="poi_a"),
-    )
+    out = radius_join(probe, L["poi_a"], 1500.0, left_cols=("image_id", "lon", "lat"))
     return out.select(
         F.col("l_key").alias("image_id"),
         F.col("r_key").alias("poi"),
@@ -3375,10 +3337,7 @@ def kde_sites_150m(spark, sf_dir):
     from fagi_gis_spark.operators.interpolate import kde_at_sites
 
     L = layers(spark, sf_dir)
-    pairs = radius_join(
-        L["poi_a"], L["poi_b"], _INTERP_RADIUS_M,
-        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], _INTERP_RADIUS_M),
-    )
+    pairs = radius_join(L["poi_a"], L["poi_b"], _INTERP_RADIUS_M)
     return kde_at_sites(pairs, L["poi_b"], _INTERP_RADIUS_M)
 
 
@@ -3409,10 +3368,7 @@ def idw_sites_150m(spark, sf_dir):
     from fagi_gis_spark.operators.interpolate import idw_at_sites
 
     L = layers(spark, sf_dir)
-    pairs = radius_join(
-        L["poi_a"], L["poi_b"], _INTERP_RADIUS_M,
-        hot_cells=_hot_for(spark, sf_dir, TILE, L["poi_b"], _INTERP_RADIUS_M),
-    )
+    pairs = radius_join(L["poi_a"], L["poi_b"], _INTERP_RADIUS_M)
     vals = L["poi_a"].select(
         F.col("subject").alias("l_key"), (F.col("k") % 100).alias("v")
     )

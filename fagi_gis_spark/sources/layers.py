@@ -459,8 +459,7 @@ def materialized_layers(
     as one ``StoredTable`` (under ``cache_root`` when given), keyed by
     input identity + layer-definition source hash, and returns
     DataFrames reading the stored tables.  Deterministic content, so a
-    cache hit can never change any query's output — the same
-    amortization contract as the hot-cell memo.
+    cache hit can never change any query's output.
 
     The seven layer writes, and after them the seven read-backs, run as
     concurrent Spark jobs, one wrapped task per layer (``_per_layer``),

@@ -405,7 +405,7 @@ def _interp_fixture(spark):
     )
     from fagi_gis_spark.operators.spatial_join import radius_join
 
-    pairs = radius_join(donors, sites, 150.0, hot_cells=None)
+    pairs = radius_join(donors, sites, 150.0)
     return donors, sites, pairs
 
 

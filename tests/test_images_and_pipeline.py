@@ -241,9 +241,17 @@ def test_pipeline_lineage_and_resume(spark, tmp_path):
     assert lin.groupBy().sum("n_rows").collect()[0][0] == n_fused
 
 
-def test_pipeline_reruns_fuse_and_tiles_when_fusion_params_change(spark, tmp_path):
-    """A different ``shift_pct`` into the same out_dir must re-run the
-    stages it feeds (fuse, tiles) and resume the ones it does not."""
+@pytest.mark.parametrize(
+    "first, second",
+    [(("shift_a_to_b", 25.0), ("shift_a_to_b", 75.0)), (("keep_a", 25.0), ("keep_b", 25.0))],
+    ids=["shift_pct", "transformation"],
+)
+def test_pipeline_reruns_fuse_and_tiles_when_fusion_params_change(
+    spark, tmp_path, first, second
+):
+    """A different ``shift_pct`` or transformation into the same out_dir
+    must re-run the stages it feeds (fuse, tiles) and resume the ones it
+    does not (ingest_a, ingest_b, conflate)."""
     from fagi_gis_spark.operators.fusion import FusionParams
     from fagi_gis_spark.pipeline.lineage import manifest_of
     from fagi_gis_spark.pipeline.runner import PipelineConfig, run_pipeline
@@ -251,22 +259,22 @@ def test_pipeline_reruns_fuse_and_tiles_when_fusion_params_change(spark, tmp_pat
     out = str(tmp_path / "run")
     stages = ("ingest_a", "ingest_b", "conflate", "fuse", "tiles")
 
-    def run(shift_pct):
+    def run(transformation, shift_pct):
         cfg = PipelineConfig(
-            sf_dir="/root/testdata/sf0.001", out_dir=out, transformation="shift_a_to_b",
+            sf_dir="/root/testdata/sf0.001", out_dir=out, transformation=transformation,
             params=FusionParams(shift_pct=shift_pct),
         )
         run_pipeline(spark, cfg)
         return {s: manifest_of(out, s) for s in stages}
 
-    m25 = run(25.0)
-    m75 = run(75.0)
+    m1 = run(*first)
+    m2 = run(*second)
     for s in ("ingest_a", "ingest_b", "conflate"):
-        assert m75[s]["committed_at"] == m25[s]["committed_at"], f"stage {s} re-ran"
+        assert m2[s]["committed_at"] == m1[s]["committed_at"], f"stage {s} re-ran"
     for s in ("fuse", "tiles"):
-        assert m75[s]["committed_at"] != m25[s]["committed_at"], f"stage {s} resumed"
-    assert m75["fuse"]["rows"] == m25["fuse"]["rows"]
-    assert m75["fuse"]["checksum"] != m25["fuse"]["checksum"]
+        assert m2[s]["committed_at"] != m1[s]["committed_at"], f"stage {s} resumed"
+    assert m2["fuse"]["rows"] == m1["fuse"]["rows"]
+    assert m2["fuse"]["checksum"] != m1["fuse"]["checksum"]
 
 
 def test_tile_partitioned_write(spark, tmp_path):

@@ -10,13 +10,10 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_salted_radius_join_equals_unsalted(spark):
-    """Explicit hot-cell salting must be a pure physical optimization —
-    identical result set, including on heavily skewed input."""
-    from fagi_gis_spark.operators.spatial_join import radius_join
-
-    # skewed layer: 2000 points piled into one cell + a spread tail
-    n_hot, n_tail = 2000, 500
+def _skewed(spark, n_hot=2000, n_tail=500):
+    """A hot pile of ``n_hot`` points in one cell plus a spread tail of
+    ``n_tail``: the pile exceeds the max(256, 8 x mean) hot-cell rule at
+    a 50 m join."""
     hot = spark.range(n_hot).select(
         F.concat(F.lit("h"), F.col("id")).alias("subject"),
         (F.lit(0.1) + (F.col("id") % 50).cast("double") / 1e6).alias("lon"),
@@ -27,25 +24,41 @@ def test_salted_radius_join_equals_unsalted(spark):
         (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
         (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
     )
-    left = hot.unionByName(tail)
-    right = left.withColumn("lon", F.col("lon") + 0.00002).withColumnRenamed(
-        "subject", "subject"
-    )
+    return hot.unionByName(tail)
 
-    plain = radius_join(left, right, 50.0).select("l_key", "r_key").toPandas()
-    salted = radius_join(left, right, 50.0, salt_threshold=100).select(
-        "l_key", "r_key"
-    ).toPandas()
-    a = set(map(tuple, plain.itertuples(index=False)))
-    b = set(map(tuple, salted.itertuples(index=False)))
-    assert len(a) > n_hot  # the hot cell really collides
-    assert a == b
+
+def _brute_pairs(left, right, radius_m):
+    """Every (left key, right key) pair within ``radius_m`` by the
+    engine's planar-degree metric, computed on the driver."""
+    import numpy as np
+
+    a, b = left.toPandas(), right.toPandas()
+    dx = a["lon"].to_numpy()[:, None] - b["lon"].to_numpy()[None, :]
+    dy = a["lat"].to_numpy()[:, None] - b["lat"].to_numpy()[None, :]
+    ii, jj = np.nonzero(np.sqrt(dx * dx + dy * dy) * 111195.0 <= radius_m)
+    ka, kb = a["subject"].to_numpy(), b["subject"].to_numpy()
+    return set(zip(ka[ii], kb[jj]))
+
+
+def test_salted_radius_join_equals_unsalted(spark):
+    """Explicit hot-cell salting must be a pure physical optimization —
+    on heavily skewed input the salted join returns exactly the
+    brute-force pair set."""
+    from fagi_gis_spark.operators.spatial_join import radius_join
+
+    left = _skewed(spark)
+    right = left.withColumn("lon", F.col("lon") + 0.00002)
+    salted = radius_join(left, right, 50.0)
+    assert "salt" in salted._jdf.queryExecution().executedPlan().toString()
+    got = set(map(tuple, salted.select("l_key", "r_key").toPandas().itertuples(index=False)))
+    assert len(got) > 2000  # the hot cell really collides
+    assert got == _brute_pairs(left, right, 50.0)
 
 
 def test_auto_salting_is_adaptive(spark):
-    """auto mode must engage the salted two-key join ONLY when a hot cell
-    exists: uniform input short-circuits to the plain cell join (no salt
-    column in the executed plan), skewed input salts."""
+    """The hot-cell rule must engage the salted two-key join ONLY when a
+    hot cell exists: uniform input short-circuits to the plain cell join
+    (no salt column in the executed plan), skewed input salts."""
     from fagi_gis_spark.operators.spatial_join import radius_join
 
     uniform = spark.range(2000).select(
@@ -53,7 +66,7 @@ def test_auto_salting_is_adaptive(spark):
         (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
         (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
     )
-    # hot pile + spread tail: auto's threshold is 8x the MEAN cell count,
+    # hot pile + spread tail: the rule's threshold is 8x the MEAN cell count,
     # so a tail of singleton cells is needed for the pile to register as hot
     skewed = spark.range(3000).select(
         F.concat(F.lit("s"), F.col("id")).alias("subject"),
@@ -79,33 +92,101 @@ def test_auto_salting_is_adaptive(spark):
 def test_salting_shared_across_strategies(spark, strategy):
     """Hot-cell salting is wired into ALL three cell schemes: on a
     skewed fixture (one cell >10x the mean) each scheme's salted join
-    equals its unsalted join row-for-row, and the executed plan really
-    contains the salt key."""
+    returns exactly the brute-force pair set, and the executed plan
+    really contains the salt key."""
     from fagi_gis_spark.operators import spatial_join
     from fagi_gis_spark.operators.spatial_join import radius_join
 
     cells = getattr(spatial_join, strategy.upper())
-    # hot pile in one cell + singleton-cell tail so mean << max
-    left = spark.range(2000).select(
-        F.concat(F.lit("h"), F.col("id")).alias("subject"),
-        (F.lit(0.1) + (F.col("id") % 50).cast("double") / 1e6).alias("lon"),
-        (F.lit(50.5) + ((F.col("id") * 7) % 50).cast("double") / 1e6).alias("lat"),
-    ).unionByName(
-        spark.range(500).select(
-            F.concat(F.lit("t"), F.col("id")).alias("subject"),
-            (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
-            (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
-        )
-    )
+    left = _skewed(spark)
     right = left.withColumn("lon", F.col("lon") + 0.00002)
 
-    plain = radius_join(left, right, 50.0, cells=cells, salt_threshold=None)
-    salted = radius_join(left, right, 50.0, cells=cells, salt_threshold=100)
+    salted = radius_join(left, right, 50.0, cells=cells)
     assert "salt" in salted._jdf.queryExecution().executedPlan().toString()
-    a = set(map(tuple, plain.select("l_key", "r_key").toPandas().itertuples(index=False)))
-    b = set(map(tuple, salted.select("l_key", "r_key").toPandas().itertuples(index=False)))
-    assert len(a) > 2000  # the hot cell really collides
-    assert a == b
+    got = set(map(tuple, salted.select("l_key", "r_key").toPandas().itertuples(index=False)))
+    assert len(got) > 2000  # the hot cell really collides
+    assert got == _brute_pairs(left, right, 50.0)
+
+
+def _build_jobs(spark, build):
+    """Spark job ids launched while ``build()`` constructs a frame."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "frame build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("fixture", ["uniform", "skewed"])
+def test_radius_join_second_build_over_same_path_runs_no_jobs(spark, tmp_path, fixture):
+    """Hot-cell detection runs once per build layer and cell space: a
+    second radius_join over a separately built read of the same stored
+    build side finds the hot set in the session memo and launches no
+    Spark job while its frame is built."""
+    from fagi_gis_spark.operators.spatial_join import radius_join
+
+    df = _skewed(spark)
+    if fixture == "uniform":
+        df = df.filter(F.col("subject").startswith("t"))
+    path = str(tmp_path / "build")
+    df.write.parquet(path)
+    probe = df.withColumn("lon", F.col("lon") + 0.00001)
+
+    first = radius_join(probe, spark.read.parquet(path), 50.0)
+    second_read = spark.read.parquet(path)
+    assert _build_jobs(spark, lambda: radius_join(probe, second_read, 50.0)) == []
+    second = radius_join(probe, second_read, 50.0)
+    plan = second._jdf.queryExecution().executedPlan().toString()
+    assert ("salt" in plan) == (fixture == "skewed")
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
+@pytest.mark.parametrize("fixture", ["uniform", "skewed"])
+def test_radius_join_leaves_no_persistent_rdds(spark, fixture):
+    """Building and running a radius join caches nothing: hot-cell
+    detection persists and checkpoints no frame, on a uniform layer
+    (empty hot set) and on a skewed one."""
+    from fagi_gis_spark.operators.spatial_join import radius_join
+
+    df = _skewed(spark)
+    if fixture == "uniform":
+        df = df.filter(F.col("subject").startswith("t"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = radius_join(df, df.withColumn("lon", F.col("lon") + 0.00001), 50.0)
+    assert jsc.getPersistentRDDs().size() == before
+    assert out.count() > 0
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_spatial_queries_warm_build_without_jobs(spark):
+    """Every registry query over the radius join builds its frame
+    without a Spark job once the layers and the hot-cell memo are
+    warm (the rule test_metadata_family_builds_without_jobs guards for
+    the metadata family)."""
+    from fagi_gis_spark.registry import queries
+
+    names = (
+        "radius_join_150m",
+        "hex_radius_join_150m",
+        "s2_radius_join_150m",
+        "knn_conflation",
+        "discover_links_exact",
+        "image_exif_poi_join",
+        "kde_sites_150m",
+        "idw_sites_150m",
+        "ripleys_k",
+    )
+    q = queries()
+    for name in names:
+        q[name](spark, SF)  # cold build: imports the layers, detects hot cells
+    jobs = {name: _build_jobs(spark, lambda name=name: q[name](spark, SF)) for name in names}
+    assert jobs == {name: [] for name in names}
 
 
 def test_knn_join_strategy_kwarg_routing(spark):
@@ -121,7 +202,8 @@ def test_knn_join_strategy_kwarg_routing(spark):
     )
     base = knn_join(pts, pts, k=2, radius_m=100.0, exclude_self=True)
     routed = knn_join(
-        pts, pts, k=2, radius_m=100.0, exclude_self=True, cells=S2, salt_threshold=None
+        pts, pts, k=2, radius_m=100.0, exclude_self=True, cells=S2,
+        right_cols=("subject", "lon", "lat"),
     )
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, routed.collect()))
     with pytest.raises(TypeError, match="bogus_knob"):
@@ -647,70 +729,14 @@ def test_knn_join_strategy_equivalence(spark):
     assert len(results["tile"]) > 0
 
 
-def test_parent_cell_col_exact_rollup(spark):
-    """tiles.parent_cell_col is the EXACT quadtree ancestor: for any
-    point, rolling its finest-z cell id up to a coarser z equals
-    computing the cell id at that z directly (the invariant that lets
-    knn_join_adaptive reuse one counts pass across doubling rounds)."""
-    from fagi_gis_spark.index.tiles import cell_id_col, parent_cell_col
+def test_knn_adaptive_salted_matches_bruteforce(spark):
+    """knn_join_adaptive on a skewed fixture (every round salts its hot
+    pile) returns the brute-force top-k within the last round's radius:
+    the global top-k for finished probes, the best effort for exhausted
+    ones."""
+    import numpy as np
 
-    pts = spark.range(5000).select(
-        (F.lit(-179.9) + F.pmod(F.xxhash64("id"), F.lit(3_500_000)).cast("double") / 1e4).alias("lon"),
-        (F.lit(-84.0) + F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1_680_000)).cast("double") / 1e4).alias("lat"),
-    )
-    for z_from, z_to in [(14, 14), (14, 12), (14, 9), (16, 7)]:
-        mism = pts.select(
-            parent_cell_col(cell_id_col(F.col("lon"), F.col("lat"), z_from), z_from, z_to).alias("up"),
-            cell_id_col(F.col("lon"), F.col("lat"), z_to).alias("direct"),
-        ).filter(F.col("up") != F.col("direct"))
-        assert mism.isEmpty(), (z_from, z_to)
-
-
-def test_precomputed_hot_cells_matches_detection(spark):
-    """build_hot_cells run ONCE and passed via hot_cells= must produce
-    the same salted plan and identical rows as per-join detection — the
-    suite-level amortization contract (VERDICT r4 ask #1)."""
-    from fagi_gis_spark.operators.spatial_join import TILE, build_hot_cells, radius_join
-
-    left = spark.range(2000).select(
-        F.concat(F.lit("h"), F.col("id")).alias("subject"),
-        (F.lit(0.1) + (F.col("id") % 50).cast("double") / 1e6).alias("lon"),
-        (F.lit(50.5) + ((F.col("id") * 7) % 50).cast("double") / 1e6).alias("lat"),
-    ).unionByName(
-        spark.range(500).select(
-            F.concat(F.lit("t"), F.col("id")).alias("subject"),
-            (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
-            (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
-        )
-    )
-    right = left.withColumn("lon", F.col("lon") + 0.00002)
-
-    hot = build_hot_cells(right, 50.0, cells=TILE, salt_threshold=100)
-    assert hot is not None  # the pile really registers as hot
-    pre = radius_join(left, right, 50.0, salt_threshold=100, hot_cells=hot)
-    det = radius_join(left, right, 50.0, salt_threshold=100)
-    assert "salt" in pre._jdf.queryExecution().executedPlan().toString()
-    a = set(map(tuple, pre.select("l_key", "r_key").toPandas().itertuples(index=False)))
-    b = set(map(tuple, det.select("l_key", "r_key").toPandas().itertuples(index=False)))
-    assert a == b and len(a) > 2000
-
-    # uniform layer: detection returns None (empty hot set) and the
-    # explicit-None pass-through short-circuits to the plain join
-    uniform = spark.range(1500).select(
-        F.concat(F.lit("u"), F.col("id")).alias("subject"),
-        (F.lit(-0.9) + F.col("id").cast("double") * 31 / 1e6).alias("lon"),
-        (F.lit(51.0) + F.col("id").cast("double") * 17 / 1e6).alias("lat"),
-    )
-    assert build_hot_cells(uniform, 50.0, cells=TILE) is None
-    plain = radius_join(uniform, uniform, 50.0, hot_cells=None)
-    assert "salt" not in plain._jdf.queryExecution().executedPlan().toString()
-
-
-def test_knn_adaptive_counts_rollup_matches_unsalted(spark):
-    """knn_join_adaptive's one-scan skew reuse (finest-z counts + exact
-    parent rollup per doubling round) returns the same neighbor set as
-    a salting-free run on a skewed fixture."""
-    from fagi_gis_spark.operators.spatial_join import knn_join_adaptive
+    from fagi_gis_spark.operators.spatial_join import knn_join, knn_join_adaptive
 
     left = spark.range(1200).select(
         F.concat(F.lit("h"), F.col("id")).alias("subject"),
@@ -724,13 +750,23 @@ def test_knn_adaptive_counts_rollup_matches_unsalted(spark):
         )
     )
     right = left.withColumn("lon", F.col("lon") + 0.00002)
-    reused = knn_join_adaptive(left, right, k=2, init_radius_m=50.0, max_doublings=4)
-    plain = knn_join_adaptive(
-        left, right, k=2, init_radius_m=50.0, max_doublings=4, salt_threshold=None
-    )
-    a = {(r.l_key, r.r_key, r.knn_rank) for r in reused.collect()}
-    b = {(r.l_key, r.r_key, r.knn_rank) for r in plain.collect()}
-    assert a == b and len(a) > 1000
+    plan = knn_join(left, right, k=2, radius_m=50.0)._jdf.queryExecution().executedPlan()
+    assert "salt" in plan.toString()
+    got = knn_join_adaptive(left, right, k=2, init_radius_m=50.0, max_doublings=4)
+    got = {(r.l_key, r.r_key, r.knn_rank) for r in got.collect()}
+
+    a, b = left.toPandas(), right.toPandas()
+    dx = a["lon"].to_numpy()[:, None] - b["lon"].to_numpy()[None, :]
+    dy = a["lat"].to_numpy()[:, None] - b["lat"].to_numpy()[None, :]
+    d = np.sqrt(dx * dx + dy * dy) * 111195.0
+    kb = b["subject"].to_numpy()
+    expect = set()
+    for i, key in enumerate(a["subject"]):
+        near = np.nonzero(d[i] <= 400.0)[0]  # 50 m doubled three times
+        ranked = sorted(near, key=lambda j: (d[i, j], kb[j]))[:2]
+        expect |= {(key, kb[j], rank) for rank, j in enumerate(ranked, 1)}
+    assert len(got) > 1000
+    assert got == expect
 
 
 def test_materialized_layers_equal_fresh_derivation(spark, tmp_path):

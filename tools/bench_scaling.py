@@ -59,7 +59,7 @@ t0 = time.time()
 images = generate_images(spark, n, partitions=64).persist()
 images.count()
 a, b = image_poi_layers(images)
-conflated = radius_join(a, b, 150.0, salt_threshold=200_000)
+conflated = radius_join(a, b, 150.0)
 tiled = assign_tiles(conflated.select(
     F.col("l_key").alias("subject"), F.col("r_key").alias("match"),
     F.col("l_lon").alias("lon"), F.col("l_lat").alias("lat"), "dist_m"))

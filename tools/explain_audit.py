@@ -20,7 +20,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 AUDIT = [
-    ("radius_join_150m", "cell-bucketed radius join (ring-1 + plan-internal auto salting)"),
+    ("radius_join_150m", "cell-bucketed radius join (ring-1 + hot-cell salting)"),
     ("hex_radius_join_150m", "hex-bucketed radius join (7-cell gridDisk, all-JVM assignment)"),
     ("s2_radius_join_150m", "S2-bucketed radius join (9-cell wrap neighborhood, Arrow encode)"),
     ("s2_cells", "S2 cell encode (Arrow batch) + level-7 ancestor (JVM bit ops)"),
